@@ -10,8 +10,72 @@ shuffle, linear, spillable — same result set (SURVEY.md A3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
+    """Eagerly localCheckpoint one round's frame ``df`` with the named
+    ``metrics`` columns observed on the same job (no separate count
+    action) → (checkpoint, metric values).  The checkpoint truncates
+    lineage so plans do not snowball over rounds (the 2^k plan-growth
+    guard); pagerank, hits and label_propagation run fixed round counts
+    and checkpoint on their own measured schedules instead."""
+    obs = Observation()
+    if metrics:
+        df = df.observe(obs, *(c.alias(n) for n, c in metrics.items()))
+    out = df.localCheckpoint(eager=True)
+    return out, obs.get if metrics else {}
+
+
+class _Fixpoint:
+    """The round loop of the iterative graph and dedup operators.
+
+    Iterating runs at most ``max_rounds`` rounds; an operator leaves
+    the loop once it converges.  Running out of rounds raises
+    the one "no fixpoint" ``RuntimeError``: a run that returns has
+    PROVEN its round bound, so an unrolled fixed-round oracle replays
+    it exactly.
+
+    Round frames go through :meth:`checkpoint`, which releases the
+    checkpoints newer rounds have superseded, so hundreds of rounds
+    hold a bounded set of blocks: a checkpoint lives until two newer
+    ones exist (one k-core round's degrees and peeled edges; the
+    previous round that a convergence test compares against), and
+    :meth:`finish` keeps only the newest, the one the operator's
+    result reads.
+    """
+
+    def __init__(self, what: str, max_rounds: int):
+        self.what, self.max_rounds = what, max_rounds
+        self._live: list[DataFrame] = []
+
+    def __iter__(self):
+        yield from range(self.max_rounds)
+        self._keep(0)
+        raise RuntimeError(
+            f"{self.what}: no fixpoint within {self.max_rounds} rounds — "
+            "the unrolled-oracle contract would be violated; raise the "
+            "round bound (and the oracle unroll) for this input"
+        )
+
+    def checkpoint(self, df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
+        out, m = _checkpoint(df, **metrics)
+        self._live.append(out)
+        self._keep(2)
+        return out, m
+
+    def finish(self) -> None:
+        """Release every checkpoint but the newest."""
+        self._keep(1)
+
+    def _keep(self, n: int) -> None:
+        # DataFrame.unpersist() leaves a local checkpoint's blocks in
+        # place; unpersist the RDD under its LogicalRDD plan instead,
+        # non-blocking so no Spark job is added
+        while len(self._live) > n:
+            old = self._live.pop(0)
+            old._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def group_collect_edges(
@@ -42,7 +106,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an edge frame → (node, rank_scaled):
     ``rank_scaled`` is rank × |nodes| (≈1 for an average node) rounded to
@@ -53,20 +116,15 @@ def pagerank(
     ``(1−damping)/n`` — deterministic by construction (no convergence
     test, so an oracle can replay the same unrolled recurrence).
 
-    Scale shape per iteration with ``broadcast_ranks`` (default): the
-    node-sized share table broadcasts into the edge join, so the edge
-    frame — checkpointed once up front — NEVER shuffles; each round is
-    one map-side join pass plus a partial-agg sum on ``dst``.  Right
-    whenever nodes are dimension-sized relative to edges (entity/
-    co-occurrence graphs).  For web-graph scale where ranks outgrow the
-    broadcast budget, pass ``broadcast_ranks=False``: both sides then
-    hash-join on ``src`` (pre-partition the edge frame on ``src`` so the
-    layout is reused across rounds).  Either way ranks are
-    ``localCheckpoint``-ed per round so lineage stays flat instead of
-    doubling (the classic iterative-plan blowup), and the node count
-    rides a broadcast 1-row frame — no driver ``.count()`` in the plan
-    path.  Dangling nodes (no out-edges) keep teleport mass only; pass a
-    symmetrized edge frame when the graph is undirected.
+    Scale shape per iteration: the node-sized share table broadcasts
+    into the edge join, so the edge frame — checkpointed once up front —
+    NEVER shuffles; each round is one map-side join pass plus a
+    partial-agg sum on ``dst``.  Right whenever nodes are
+    dimension-sized relative to edges (entity/co-occurrence graphs).
+    The node count rides a broadcast 1-row frame — no driver
+    ``.count()`` in the plan path.  Dangling nodes (no out-edges) keep
+    teleport mass only; pass a symmetrized edge frame when the graph is
+    undirected.
     """
     # the edge frame and its degree table feed EVERY iteration — left
     # lazy, the upstream edge derivation (often a fact-table join) would
@@ -94,10 +152,8 @@ def pagerank(
             F.col("node").alias("src"),
             (F.col("rank") / F.col("__out")).alias("__share"),
         )
-        if broadcast_ranks:
-            shares = F.broadcast(shares)
         contribs = (
-            e.join(shares, "src")
+            e.join(F.broadcast(shares), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("__share").alias("__in"))
         )
@@ -182,7 +238,6 @@ def hits(
     iters: int = 5,
     src: str = "src",
     dst: str = "dst",
-    broadcast_scores: bool = True,
 ) -> DataFrame:
     """HITS hubs-and-authorities over a directed edge frame →
     ``(node, role 'hub'|'authority', score)``, L1-normalized per round.
@@ -197,15 +252,12 @@ def hits(
     never re-shuffles; each of the ``iters`` rounds is two map-side
     broadcast joins (score frames are node-dimension-sized) + two
     partial-agg sums, with the L1 total riding a broadcast 1-row frame
-    — no driver action anywhere.  Pass ``broadcast_scores=False`` for
-    web-graph scale where node frames outgrow the broadcast budget
-    (both sides then hash-join; pre-partition the edge frame on the
-    join key).  Fixed iteration count keeps it oracle-replayable.
+    — no driver action anywhere.  Fixed iteration count keeps it
+    oracle-replayable.
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).distinct().localCheckpoint(eager=True)
-    bc = F.broadcast if broadcast_scores else (lambda df: df)
     # Normalization is deferred to the END: h and a grow by ~mean-degree
     # per half-round (double overflow needs growth^(2·iters) > 1e308 —
     # not reachable at 5 rounds even on a degree-1000 graph), and the
@@ -225,12 +277,12 @@ def hits(
     # and is kept deliberately.
     for it in range(iters):
         auth = (
-            e.join(bc(hubs), e["src"] == hubs["node"])
+            e.join(F.broadcast(hubs), e["src"] == hubs["node"])
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("h").alias("a"))
         )
         hubs = (
-            e.join(bc(auth), e["dst"] == auth["node"])
+            e.join(F.broadcast(auth), e["dst"] == auth["node"])
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("a").alias("h"))
         )
@@ -274,28 +326,20 @@ def connected_components_star(
 
     Contract matches dedup_survivors: the pair endpoints are the FIRST
     TWO columns, any equatable id type; singletons (nodes absent from
-    ``pairs``) are the caller's join-back, and each round is
-    localCheckpointed so plans don't snowball.  Convergence is checked
-    EXACTLY (count equality + one-sided exceptAll emptiness ⇒ multiset
-    equality of the canonical edge sets), not by signature.
-
-    Fixpoint counts ride the checkpoint job as an ``observe`` metric
-    (CollectMetricsExec accumulator) instead of a separate ``count()``
-    action — one job per contraction round, not two; the count the
-    convergence test reads is of exactly the rows the checkpoint
-    materialized.  (r17; the exceptAll emptiness probe still runs as
-    its own job, but only on the one round where counts match.)
+    ``pairs``) are the caller's join-back.  Rounds run through
+    :class:`_Fixpoint`, which raises if ``max_iter`` rounds pass without
+    convergence.  Convergence is checked EXACTLY (the observed count
+    equality + one-sided exceptAll emptiness ⇒ multiset equality of
+    the canonical edge sets), not by signature; the exceptAll probe
+    runs as its own job, but only on the one round where counts match.
     """
-    from pyspark.sql import Observation
-
     a_col, b_col = pairs.columns[0], pairs.columns[1]
-    obs0 = Observation()
-    edges = (
+    fp = _Fixpoint("connected_components_star", max_iter)
+    edges, stats = fp.checkpoint(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -323,19 +367,18 @@ def connected_components_star(
         centers = m.select(F.col("u"), F.col("m").alias("v"))
         return nbrs.union(centers).distinct()
 
-    prev_n = obs0.get["n"]
-    for _ in range(max_iter):
-        obs = Observation()
-        new_edges = (
-            small_star(large_star(edges))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+    for _ in fp:
+        new_edges, new_stats = fp.checkpoint(
+            small_star(large_star(edges)), n=F.count(F.lit(1))
         )
-        n = obs.get["n"]
-        if n == prev_n and new_edges.exceptAll(edges).limit(1).count() == 0:
-            edges = new_edges
+        stable = (
+            new_stats["n"] == stats["n"]
+            and new_edges.exceptAll(edges).limit(1).count() == 0
+        )
+        edges, stats = new_edges, new_stats
+        if stable:
             break
-        edges, prev_n = new_edges, n
+    fp.finish()
 
     # fixpoint is a forest of stars: every edge is (node, component-min)
     nodes = edges.select(F.col("u").alias("node")).union(
@@ -365,42 +408,36 @@ def bfs_khop(
     the round count, which is what makes this the production reach
     query (k-hop neighborhoods, blast-radius, recommendation horizon)
     rather than full shortest paths: k is a small constant fixed by the
-    question.  Per-round localCheckpoint truncates lineage (each
-    round's frame feeds both the next join and the visited union — the
-    same 2^k plan-growth guard as connected_components_star's rounds
-    and mmr_rerank's greedy steps).  An empty frontier exits early, so
-    sparse seeds never pay for unreachable rounds.
+    question, so running out of hops returns normally.  An empty
+    frontier exits early, so sparse seeds never pay for unreachable
+    rounds.
 
     Scale shape: the frontier never exceeds the node set, dedup happens
     per round BEFORE the next expansion (a node reached twice expands
     once), and at 1000 executors each round is an ordinary partitioned
     hash join on node id."""
-    from pyspark.sql import Observation
-
-    visited = (
+    # the result is the union of every round's checkpoint, so none is
+    # released: the rounds run on _checkpoint alone, not _Fixpoint
+    visited, _ = _checkpoint(
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint()
     )
     frontier = visited.select("node")
     for d in range(1, k + 1):
         # nxt is the one genuinely multi-consumer frame per round (the
         # visited union, the next expansion, and every later round's
-        # anti-join read it) — checkpoint it eagerly; the emptiness
-        # probe rides the checkpoint job as an observe metric instead
-        # of a separate isEmpty() job on the materialized partitions
-        obs = Observation()
-        nxt = (
+        # anti-join read it) — checkpoint it; the emptiness probe rides
+        # the checkpoint job instead of a separate isEmpty() job
+        nxt, m = _checkpoint(
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(d))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            .withColumn("dist", F.lit(d)),
+            n=F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:
+        if m["n"] == 0:
             break
         # visited is a UNION of already-checkpointed rounds — re-reading
         # it is a cheap scan of materialized partitions, so its own
@@ -415,30 +452,30 @@ def kcore_membership(
     edges: DataFrame,
     k: int,
     max_rounds: int = 12,
-    canonical: bool = False,
     max_broadcast_nodes: int = 8_000_000,
 ) -> DataFrame:
     """k-CORE decomposition (membership for fixed k): iteratively peel
     nodes of degree < k until the remaining subgraph is stable — the
     maximal subgraph where every node keeps ≥ k in-subgraph neighbors
     (Seidman 1983), the standard dense-community / engagement-tier
-    extractor.  ``edges`` is directed rows; pass both orientations for
-    an undirected graph.  Returns (node, core_degree) — each surviving
-    node with its within-core degree (≥ k by construction, an
-    in-frame invariant the hash check pins).
+    extractor.  Returns (node, core_degree) — each surviving node with
+    its within-core degree (≥ k by construction, an in-frame invariant
+    the hash check pins).
 
-    Each peel round is one map-side-combinable degree agg + a
-    broadcast-sized semi-join on the survivor set, localCheckpointed
-    (the per-round lineage guard shared with star-CC/BFS/MMR).  The
-    loop EXITS on a certified fixpoint — zero nodes below degree k,
-    observed as a metric ON the degree checkpoint job itself (no
-    separate count action, and one round earlier than the old
-    node-count-stable test: when nothing is below k the peel keeps
-    everything, so the degree frame already IS the answer) — and
-    RAISES if ``max_rounds`` passes without convergence — the same
-    self-auditing contract as the DPP query: a run that returns has
-    PROVEN its round bound, so an unrolled fixed-round oracle is exact
-    whenever the query succeeds.
+    Edge contract: ``edges`` has ``src`` and ``dst`` columns and each
+    undirected edge appears ONCE, in either orientation — passing both
+    orientations would double every degree.
+
+    Each peel round is one degree agg — both endpoints exploded
+    map-side into one combiner-friendly agg (partial combine ships
+    counts, not rows) — and a survivor semi-join on each edge column.
+    The loop EXITS on a certified fixpoint — zero nodes below degree k,
+    observed as a metric ON the degree checkpoint job itself: when
+    nothing is below k the peel keeps everything, so the degree frame
+    already IS the answer — and RAISES if ``max_rounds`` passes without
+    convergence — the same self-auditing contract as the DPP query: a
+    run that returns has PROVEN its round bound, so an unrolled
+    fixed-round oracle is exact whenever the query succeeds.
 
     Scale shape: peeling is O(rounds) corpus passes where rounds is
     the peel DEPTH of the degree distribution (6 on the suite graph;
@@ -454,126 +491,33 @@ def kcore_membership(
     auto-sizing precedent.  Both paths are property-tested equal; the
     default threshold (~8M single-column ids ≈ tens of MB) tracks the
     practical broadcast comfort zone, not the 8 GB hard cap.
-
-    ``canonical=True`` takes each undirected edge ONCE (any
-    orientation) instead of both directions: degrees come from a
-    map-side explode of the two endpoints into one combiner-friendly
-    agg, and every per-round checkpoint carries HALF the rows.  Wall
-    time measures equivalent at suite scale (the explode costs what
-    the union saved), but the halved checkpoint/shuffle FOOTPRINT is
-    the form that matters when the edge frame is the memory budget —
-    property-tested equal to the doubled path.  Same fixpoint, same
-    core degrees.
     """
-    from pyspark.sql import Observation
-
-    if canonical:
-        return _kcore_canonical(edges, k, max_rounds, max_broadcast_nodes)
-    cur = edges.localCheckpoint()
-    for _ in range(max_rounds):
+    fp = _Fixpoint("kcore_membership", max_rounds)
+    cur, _ = fp.checkpoint(edges.select("src", "dst"))
+    for _ in fp:
         # ONE degree aggregation per round serves the fixpoint check,
-        # the broadcast size gate AND the survivor filter: the node
-        # count and the below-k count ride the checkpoint job as
-        # observe metrics (no separate count() action), and the
-        # below-k count detects the fixpoint ONE ROUND EARLIER than
-        # the old node-count-stable test — zero nodes below k means
-        # the peel would keep everything, so deg is already the
-        # answer (identical rows; the old form re-derived the same
-        # frame once more just to see the count hadn't moved)
-        obs = Observation()
-        deg = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("__d"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("__d") < k).cast("long")).alias("n_below"),
-            )
-            .localCheckpoint()
-        )
-        m = obs.get
-        n_nodes = m["n"]
-        if not m["n_below"]:  # None (empty frame) or 0: stable
-            return deg.select(
-                F.col("src").alias("node"),
-                F.col("__d").alias("core_degree"),
-            )
-        keep = deg.filter(F.col("__d") >= k).select("src")
-        # size gate: survivors ≤ n_nodes, observed above
-        bc = F.broadcast if n_nodes <= max_broadcast_nodes else (lambda d: d)
-        cur = (
-            cur.join(bc(keep), "src", "left_semi")
-            .join(
-                bc(keep.select(F.col("src").alias("dst"))), "dst", "left_semi"
-            )
-            .select("src", "dst")
-            .localCheckpoint()
-        )
-    raise RuntimeError(
-        f"kcore_membership: no fixpoint within {max_rounds} rounds — "
-        "the unrolled-oracle contract would be violated; raise "
-        "max_rounds (and the oracle unroll) for this graph"
-    )
-
-
-def _kcore_canonical(
-    edges: DataFrame,
-    k: int,
-    max_rounds: int,
-    max_broadcast_nodes: int = 8_000_000,
-) -> DataFrame:
-    """kcore_membership's half-frame path: one row per undirected edge.
-    Degree = explode both endpoints map-side into one agg (partial
-    combine ships counts, not rows); survivors filter both columns
-    (broadcast vs shuffled semi-join size-gated like the main path)."""
-    from pyspark.sql import Observation
-
-    cur = edges.select("src", "dst").localCheckpoint()
-    for _ in range(max_rounds):
-        # fixpoint + size-gate counts ride the checkpoint job as
-        # observe metrics; zero below-k nodes exits one round earlier
-        # with the identical frame (see the main path's comment)
-        obs = Observation()
-        deg = (
-            cur.select(
-                F.explode(F.array("src", "dst")).alias("node")
-            )
+        # the broadcast size gate AND the survivor filter
+        deg, m = fp.checkpoint(
+            cur.select(F.explode(F.array("src", "dst")).alias("node"))
             .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("__d"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("__d") < k).cast("long")).alias("n_below"),
-            )
-            .localCheckpoint()
+            .agg(F.count(F.lit(1)).alias("__d")),
+            n=F.count(F.lit(1)),
+            n_below=F.sum((F.col("__d") < k).cast("long")),
         )
-        m = obs.get
-        n_nodes = m["n"]
         if not m["n_below"]:  # None (empty frame) or 0: stable
-            return deg.select(
-                "node", F.col("__d").alias("core_degree")
-            )
+            fp.finish()
+            return deg.select("node", F.col("__d").alias("core_degree"))
         keep = deg.filter(F.col("__d") >= k).select("node")
-        bc = F.broadcast if n_nodes <= max_broadcast_nodes else (lambda d: d)
-        cur = (
-            cur.join(
-                bc(keep.select(F.col("node").alias("src"))),
-                "src",
-                "left_semi",
-            )
-            .join(
-                bc(keep.select(F.col("node").alias("dst"))),
-                "dst",
-                "left_semi",
-            )
+        # size gate: survivors ≤ n, observed above
+        bc = F.broadcast if m["n"] <= max_broadcast_nodes else (lambda d: d)
+        cur, _ = fp.checkpoint(
+            cur.join(bc(keep.select(F.col("node").alias("src"))), "src",
+                     "left_semi")
+            .join(bc(keep.select(F.col("node").alias("dst"))), "dst",
+                  "left_semi")
             .select("src", "dst")
-            .localCheckpoint()
         )
-    raise RuntimeError(
-        f"kcore_membership: no fixpoint within {max_rounds} rounds — "
-        "the unrolled-oracle contract would be violated; raise "
-        "max_rounds (and the oracle unroll) for this graph"
-    )
+    # unreachable: past max_rounds iterating fp raises
 
 
 def label_propagation(
@@ -603,10 +547,8 @@ def label_propagation(
 
     Scale shape: per round, ONE partitioned hash join (labels onto
     edge destinations), one (node, label) count agg, and one
-    node-PARTITIONED rank window — never a global window; lineage is
-    truncated per round with localCheckpoint, the iterative-operator
-    discipline pagerank/bfs/k-core established.  State = one label
-    row per node.
+    node-PARTITIONED rank window — never a global window.  State = one
+    label row per node.
 
     ``audit_churn=True`` adds a ``changed`` boolean — did this node's
     label change in the FINAL round — so a fixed ``rounds`` is

@@ -726,10 +726,11 @@ def dedup_survivors(
     Connected components by iterative min-label propagation: each round,
     every node takes the min of its own label and its neighbors' labels;
     converged when no label changes (the changed-count rides the
-    per-round checkpoint job as an ``observe`` metric — no extra action,
-    lineage cut with localCheckpoint so plans don't snowball).  Dup groups
-    in practice are tiny (pairs/triples), so this converges in 2-3 rounds;
-    ``max_iter`` bounds adversarial chains.  The cluster representative
+    per-round checkpoint job as an ``observe`` metric, through
+    ``graph._Fixpoint``).  Dup groups in practice are tiny
+    (pairs/triples), so this converges in 2-3 rounds; a chain that
+    needs more than ``max_iter`` rounds raises rather than return
+    unconverged labels.  The cluster representative
     (and survivor) is the minimum doc id — the same keep-smallest rule as
     :func:`dedup_exact`.
 
@@ -791,42 +792,46 @@ def dedup_survivors(
     # callers pass arbitrary two-column pair frames (minhash pairs use
     # doc_a/doc_b, entity resolution passes rid/crid) and both paths
     # must accept the same shape
+    from .graph import _Fixpoint
+
     a_col, b_col = pairs.columns[0], pairs.columns[1]
     edges = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
     edges = edges.cache()
 
-    from pyspark.sql import Observation
-
-    labels = df.select(F.col(id_col).alias("node")).withColumn(
-        "label", F.col("node")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
+    fp = _Fixpoint("dedup_survivors", max_iter)
+    labels, _ = fp.checkpoint(
+        df.select(F.col(id_col).alias("node")).withColumn(
+            "label", F.col("node")
         )
-        # the new label derives from the old label IN THE SAME ROW, so
-        # the convergence test is an in-frame comparison riding the
-        # checkpoint job as an observe metric — the old form re-joined
-        # new labels back onto old labels (a full extra join + agg job
-        # per round) to compute the same count (r17)
-        nlab = F.least(
-            F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-        )
-        obs = Observation()
-        new_labels = (
-            labels.join(neigh, labels["node"] == neigh["src"], "left")
-            .select(F.col("node"), nlab.alias("label"),
-                    (nlab != F.col("label")).cast("long").alias("__chg"))
-            .observe(obs, F.sum("__chg").alias("changed"))
-            .localCheckpoint()
-        )
-        labels = new_labels.select("node", "label")
-        if not obs.get["changed"]:  # None (empty) or 0
-            break
+    )
+    try:
+        for _ in fp:
+            neigh = (
+                edges.join(labels, edges["dst"] == labels["node"])
+                .groupBy("src")
+                .agg(F.min("label").alias("nlabel"))
+            )
+            # the new label derives from the old label IN THE SAME ROW,
+            # so the convergence test is an in-frame comparison riding
+            # the checkpoint job as an observe metric — the old form
+            # re-joined new labels back onto old labels (a full extra
+            # join + agg job per round) to compute the same count (r17)
+            nlab = F.least(
+                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
+            )
+            labels, m = fp.checkpoint(
+                labels.join(neigh, labels["node"] == neigh["src"], "left")
+                .select(F.col("node"), nlab.alias("label"),
+                        (nlab != F.col("label")).cast("long").alias("__chg")),
+                changed=F.sum("__chg"),
+            )
+            if not m["changed"]:  # None (empty) or 0
+                break
+    finally:
+        edges.unpersist()
+    fp.finish()
     return labels.select(
         F.col("node").alias(id_col),
         F.col("label").alias("cluster"),

@@ -14086,7 +14086,6 @@ def kcore_parts(spark, sf_dir):
         e.select(F.col("a").alias("src"), F.col("b").alias("dst")),
         k=80,
         max_rounds=12,
-        canonical=True,
     )
     return core.select(
         F.col("node").alias("part_id"),

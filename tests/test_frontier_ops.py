@@ -183,9 +183,7 @@ def test_kcore_hand_computed(spark):
     from elastic_asset_etl_poc_spark.operators.graph import kcore_membership
 
     und = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e")]
-    edges = spark.createDataFrame(
-        und + [(y, x) for x, y in und], ["src", "dst"]
-    )
+    edges = spark.createDataFrame(und, ["src", "dst"])
     got = {
         r["node"]: r["core_degree"]
         for r in kcore_membership(edges, k=2).collect()
@@ -202,46 +200,56 @@ def test_kcore_raises_past_round_bound(spark):
     from elastic_asset_etl_poc_spark.operators.graph import kcore_membership
 
     chain = [(str(i), str(i + 1)) for i in range(12)]
-    edges = spark.createDataFrame(
-        chain + [(y, x) for x, y in chain], ["src", "dst"]
-    )
+    edges = spark.createDataFrame(chain, ["src", "dst"])
     with _pytest.raises(RuntimeError, match="no fixpoint"):
         kcore_membership(edges, k=2, max_rounds=2)
+
+
+def test_kcore_releases_superseded_checkpoints(spark):
+    """A triangle with a 5-node pendant chain peels one chain node per
+    round at k=2 (5 peel rounds, then a 6th that finds the triangle
+    stable: 12 checkpoints): after the call at most two more RDDs are
+    persisted — the superseded rounds' local checkpoints are released,
+    not left to pile up per call."""
+    from elastic_asset_etl_poc_spark.operators.graph import kcore_membership
+
+    und = [("a", "b"), ("b", "c"), ("a", "c")] + [
+        (x, y) for x, y in zip("cdefg", "defgh")
+    ]
+    edges = spark.createDataFrame(und, ["src", "dst"])
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    got = {
+        r["node"]: r["core_degree"]
+        for r in kcore_membership(edges, k=2).collect()
+    }
+    assert got == {"a": 2, "b": 2, "c": 2}
+    assert jsc.getPersistentRDDs().size() - before <= 2
 
 
 def test_kcore_shuffled_semi_join_fallback_equals_broadcast(spark):
     """The size-gated survivor filter: max_broadcast_nodes=0 forces the
     shuffled semi-join fallback on EVERY round; results must equal the
-    broadcast path exactly, on both the doubled and canonical edge
-    layouts — and the fallback plan must actually drop the broadcast
-    (spot-checked via the final frame's round joins executing without
-    error; plan equality is not the contract, row equality is)."""
+    broadcast path exactly — and the fallback plan must actually drop
+    the broadcast (spot-checked via the final frame's round joins
+    executing without error; plan equality is not the contract, row
+    equality is)."""
     from elastic_asset_etl_poc_spark.operators.graph import kcore_membership
 
     und = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3), (4, 6), (6, 7)]
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in und] + [(b, a) for a, b in und], ["src", "dst"]
-    )
-    canon = spark.createDataFrame(und, ["src", "dst"])
+    edges = spark.createDataFrame(und, ["src", "dst"])
     want = {
         r["node"]: r["core_degree"]
         for r in kcore_membership(edges, k=2).collect()
     }
     assert want  # the 1-2-3 and 3-4-5 triangles survive
-    for kw in (
-        dict(),
-        dict(canonical=True),
-    ):
-        got = {
-            r["node"]: r["core_degree"]
-            for r in kcore_membership(
-                canon if kw.get("canonical") else edges,
-                k=2,
-                max_broadcast_nodes=0,
-                **kw,
-            ).collect()
-        }
-        assert got == want, f"fallback diverged for {kw}"
+    got = {
+        r["node"]: r["core_degree"]
+        for r in kcore_membership(
+            edges, k=2, max_broadcast_nodes=0
+        ).collect()
+    }
+    assert got == want, "fallback diverged"
 
 
 def test_label_propagation_finds_planted_communities(spark):
@@ -385,28 +393,18 @@ def test_kcore_stable_graph_converges_in_one_observed_round(spark):
     triangle at k=2) that is exactly TWO jobs — the edge checkpoint and
     the single degree checkpoint — where the old shape needed a count
     action per round plus one whole extra peel+recount round.  Pinned
-    via the job-group job count (deterministic for a fixed code path),
-    both layouts."""
+    via the job-group job count (deterministic for a fixed code path)."""
     from elastic_asset_etl_poc_spark.operators.graph import kcore_membership
 
     und = [("a", "b"), ("b", "c"), ("a", "c")]
-    edges = spark.createDataFrame(
-        und + [(y, x) for x, y in und], ["src", "dst"]
-    )
-    canon = spark.createDataFrame(und, ["src", "dst"])
+    edges = spark.createDataFrame(und, ["src", "dst"])
     sc = spark.sparkContext
-    for layout, frame in (("doubled", edges), ("canonical", canon)):
-        grp = f"kcore_stable_{layout}"
-        sc.setJobGroup(grp, grp)
-        got = {
-            r[0]: r[1]
-            for r in kcore_membership(
-                frame, k=2, canonical=(layout == "canonical")
-            ).collect()
-        }
-        sc.setJobGroup(None, None)
-        assert got == {"a": 2, "b": 2, "c": 2}, layout
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(grp))
-        # 2 checkpoint jobs + the result collect = 3; the pre-r17 shape
-        # was >= 7 (per-round count actions + the confirmation round)
-        assert n_jobs <= 4, (layout, n_jobs)
+    grp = "kcore_stable"
+    sc.setJobGroup(grp, grp)
+    got = {r[0]: r[1] for r in kcore_membership(edges, k=2).collect()}
+    sc.setJobGroup(None, None)
+    assert got == {"a": 2, "b": 2, "c": 2}
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(grp))
+    # 2 checkpoint jobs + the result collect = 3; the pre-r17 shape
+    # was >= 7 (per-round count actions + the confirmation round)
+    assert n_jobs <= 4, n_jobs

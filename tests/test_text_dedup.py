@@ -1,5 +1,6 @@
 """Dedup + text-analysis operator tests (literal frames + sf0.001)."""
 
+import pytest
 from conftest import SF_DIR
 
 from elastic_asset_etl_poc_spark.operators.neardup import (
@@ -172,6 +173,40 @@ def test_dedup_survivors_distributed_path(spark):
     assert out[1] == (1, True) and out[3] == (1, False)
     assert out[5] == (5, True) and out[6] == (5, False)
     assert out[4] == (4, True)
+
+
+def test_dedup_survivors_distributed_path_raises_past_max_iter(spark):
+    """A 13-node path needs 12 label hops plus a confirming round: with
+    the default max_iter=10 the distributed path must RAISE, not return
+    labels that have not reached node 0 yet."""
+    from elastic_asset_etl_poc_spark.operators.neardup import dedup_survivors
+
+    docs = spark.createDataFrame([(i,) for i in range(13)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        dedup_survivors(docs, pairs, driver_limit=0).collect()
+
+
+def test_dedup_survivors_distributed_path_releases_checkpoints(spark):
+    """The distributed path's per-round label checkpoints and its cached
+    edge frame are released: over a 6-round chain at most two more RDDs
+    stay persisted after the call."""
+    from elastic_asset_etl_poc_spark.operators.neardup import dedup_survivors
+
+    docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "doc_a long, doc_b long"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    out = {
+        r.doc_id: r.cluster
+        for r in dedup_survivors(docs, pairs, driver_limit=0).collect()
+    }
+    assert out == {i: 0 for i in range(6)}
+    assert jsc.getPersistentRDDs().size() - before <= 2
 
 
 def test_normalize_text(spark):
