@@ -60,3 +60,35 @@ def observed(
 
     obs = Observation(name)
     return df.observe(obs, *metrics), obs
+
+
+def checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
+    """Eagerly ``localCheckpoint`` ``df`` with the named ``metrics``
+    columns observed on the same job (no separate count action) →
+    (checkpoint, metric values).
+
+    One job materializes the frame and measures it, so whatever reads
+    the checkpoint afterwards never re-runs its plan, and sizing
+    figures (row counts, touched keys) cost no action of their own.
+    The iterative graph operators checkpoint their rounds through it,
+    which also truncates lineage so plans do not snowball over rounds;
+    the asset upsert materializes its batch through it.  Release the
+    result with :func:`release_checkpoint` once nothing reads it.
+    """
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    if metrics:
+        df = df.observe(obs, *(c.alias(n) for n, c in metrics.items()))
+    out = df.localCheckpoint(eager=True)
+    return out, obs.get if metrics else {}
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a local checkpoint made by :func:`checkpoint`.
+
+    ``DataFrame.unpersist()`` leaves a local checkpoint's blocks in
+    place; unpersist the RDD under its LogicalRDD plan instead,
+    non-blocking so no Spark job is added.
+    """
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)

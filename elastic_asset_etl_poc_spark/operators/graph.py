@@ -10,22 +10,10 @@ shuffle, linear, spillable — same result set (SURVEY.md A3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
-    """Eagerly localCheckpoint one round's frame ``df`` with the named
-    ``metrics`` columns observed on the same job (no separate count
-    action) → (checkpoint, metric values).  The checkpoint truncates
-    lineage so plans do not snowball over rounds (the 2^k plan-growth
-    guard); pagerank, hits and label_propagation run fixed round counts
-    and checkpoint on their own measured schedules instead."""
-    obs = Observation()
-    if metrics:
-        df = df.observe(obs, *(c.alias(n) for n, c in metrics.items()))
-    out = df.localCheckpoint(eager=True)
-    return out, obs.get if metrics else {}
+from ..observability import checkpoint, release_checkpoint
 
 
 class _Fixpoint:
@@ -43,7 +31,8 @@ class _Fixpoint:
     ones exist (one k-core round's degrees and peeled edges; the
     previous round that a convergence test compares against), and
     :meth:`finish` keeps only the newest, the one the operator's
-    result reads.
+    result reads.  pagerank, hits and label_propagation run fixed round
+    counts and checkpoint on their own measured schedules instead.
     """
 
     def __init__(self, what: str, max_rounds: int):
@@ -60,7 +49,7 @@ class _Fixpoint:
         )
 
     def checkpoint(self, df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
-        out, m = _checkpoint(df, **metrics)
+        out, m = checkpoint(df, **metrics)
         self._live.append(out)
         self._keep(2)
         return out, m
@@ -70,12 +59,8 @@ class _Fixpoint:
         self._keep(1)
 
     def _keep(self, n: int) -> None:
-        # DataFrame.unpersist() leaves a local checkpoint's blocks in
-        # place; unpersist the RDD under its LogicalRDD plan instead,
-        # non-blocking so no Spark job is added
         while len(self._live) > n:
-            old = self._live.pop(0)
-            old._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            release_checkpoint(self._live.pop(0))
 
 
 def group_collect_edges(
@@ -417,8 +402,8 @@ def bfs_khop(
     once), and at 1000 executors each round is an ordinary partitioned
     hash join on node id."""
     # the result is the union of every round's checkpoint, so none is
-    # released: the rounds run on _checkpoint alone, not _Fixpoint
-    visited, _ = _checkpoint(
+    # released: the rounds run on checkpoint alone, not _Fixpoint
+    visited, _ = checkpoint(
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0))
@@ -429,7 +414,7 @@ def bfs_khop(
         # visited union, the next expansion, and every later round's
         # anti-join read it) — checkpoint it; the emptiness probe rides
         # the checkpoint job instead of a separate isEmpty() job
-        nxt, m = _checkpoint(
+        nxt, m = checkpoint(
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
             .distinct()

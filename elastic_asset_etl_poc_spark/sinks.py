@@ -176,6 +176,36 @@ def upsert_assets(
     """Batch upsert: latest asset document wins per EAN, touching only the
     ``asset.type`` partitions present in the new batch.
 
+    The reference's write step is stubbed ("TBA", run.ts:12-15) but its
+    intended semantics are an ES bulk index keyed by document — each run
+    overwrites the asset with fresh state.  Batch phrasing:
+
+      * the schema-enforced batch is materialized ONCE, by an eager
+        ``localCheckpoint`` whose job also observes the batch's row
+        count and its set of ``asset.type`` values — the touched
+        partitions cost no action of their own, and the merge reads
+        the checkpoint, so the batch plan is evaluated once per upsert;
+      * an empty batch is a no-op: nothing is read or written, so an
+        empty first batch never leaves a store without a schema;
+      * when the store exists, only the touched partitions are read
+        back (an EAN is ``{type}:{id}``, so it can never migrate between
+        ``asset.type`` partitions) and checkpointed, so the overwrite
+        never reads the files it replaces;
+      * the batch (with the touched store rows, if any) keeps the newest
+        row per ``asset.ean`` (deterministic tiebreak on asset.type) and
+        is written with dynamic partition overwrite — one write path for
+        the first and every later upsert.  Untouched partitions' files
+        are never read or rewritten, so the run is O(touched
+        partitions), not O(store);
+      * both checkpoints are released after the write, so a long-lived
+        upsert loop holds no blocks between calls.
+
+    On a real deployment this maps 1:1 onto MERGE INTO against an
+    Iceberg/Delta table keyed on asset.ean; the parquet-path form here
+    is per-partition atomic (Spark commit protocol) but not
+    multi-partition transactional — a table format is the deployment
+    answer for that.
+
     ``verify=True`` closes the store-integrity loop: after the write the
     manifest sidecar is re-stamped (:func:`write_manifest`) and
     immediately re-verified (:func:`verify_manifest`) — a torn write,
@@ -183,68 +213,54 @@ def upsert_assets(
     instead of poisoning downstream readers.  Costs one extra
     distributed hash pass over the store; at 100 TB run it on the
     ingest cadence, not per micro-batch.
-
-    The reference's write step is stubbed ("TBA", run.ts:12-15) but its
-    intended semantics are an ES bulk index keyed by document — each run
-    overwrites the asset with fresh state.  Batch phrasing: read back only
-    the store partitions the batch touches (an EAN is ``{type}:{id}``, so
-    it can never migrate between ``asset.type`` partitions), union with
-    the batch, keep the newest row per ``asset.ean`` (deterministic
-    tiebreak on asset.type), and rewrite with dynamic partition overwrite —
-    untouched partitions' files are never read or rewritten, so the run
-    is O(touched partitions), not O(store).  On a real deployment this
-    maps 1:1 onto MERGE INTO against an Iceberg/Delta table keyed on
-    asset.ean; the parquet-path form here is per-partition atomic (Spark
-    commit protocol) but not multi-partition transactional — a table
-    format is the deployment answer for that.
     """
     from pyspark.sql.window import Window
 
-    def latest_per_ean(df: DataFrame) -> DataFrame:
+    from .observability import checkpoint, release_checkpoint
+
+    batch, seen = checkpoint(
+        enforce_asset_schema(new_assets),
+        rows=F.count(F.lit(1)),
+        types=F.collect_set(F.col("`asset.type`")),
+    )
+    live = [batch]
+    try:
+        if seen["rows"] == 0:
+            return
+        # Explicit existence probe — a bare try/except around the read
+        # would treat any transient read failure as "first write" and
+        # destroy the store.  The Hadoop FileSystem API resolves the
+        # path's own scheme (local, file:/, hdfs://, s3a://), so a store
+        # Spark can read is never mistaken for absent; real probe errors
+        # propagate.
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        if fs.exists(hpath):
+            # Partition-pruned read of just the touched types, checkpointed
+            # so the overwrite below does not read the files it replaces
+            # (Spark refuses a same-path read+overwrite otherwise).
+            existing, _ = checkpoint(
+                spark.read.parquet(path).filter(
+                    F.col("`asset.type`").isin(seen["types"])
+                )
+            )
+            live.append(existing)
+            batch = existing.unionByName(batch)
         w = Window.partitionBy(F.col("`asset.ean`")).orderBy(
             F.col("`@timestamp`").desc(), F.col("`asset.type`").desc()
         )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
+        (
+            batch.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("asset.type")
+            .parquet(path)
         )
-
-    new_assets = enforce_asset_schema(new_assets)
-    # Explicit existence probe — a bare try/except around the read would
-    # treat any transient read failure as "first write" and destroy the
-    # store.  The Hadoop FileSystem API resolves the path's own scheme
-    # (local, file:/, hdfs://, s3a://), so a store Spark can read is never
-    # mistaken for absent; real probe errors propagate.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    store_exists = fs.exists(hpath)
-    if not store_exists:
-        latest_per_ean(new_assets).write.mode("overwrite").partitionBy(
-            "asset.type"
-        ).parquet(path)
-        if verify:
-            _stamp_and_verify(spark, path)
-        return
-    touched = [
-        r[0] for r in new_assets.select(F.col("`asset.type`")).distinct().collect()
-    ]
-    # Partition-pruned read of just the touched types; localCheckpoint
-    # materializes them so the overwrite below doesn't read the files it
-    # is replacing (Spark refuses a same-path read+overwrite otherwise).
-    existing = (
-        spark.read.parquet(path)
-        .filter(F.col("`asset.type`").isin(touched))
-        .localCheckpoint()
-    )
-    latest = latest_per_ean(existing.unionByName(new_assets))
-    (
-        latest.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("asset.type")
-        .parquet(path)
-    )
+    finally:
+        for df in live:
+            release_checkpoint(df)
     if verify:
         _stamp_and_verify(spark, path)
 

@@ -6,8 +6,9 @@ dotted names fetched via the ES fields API (SURVEY.md §1.1,
 those fields deterministically onto the driver's ``events`` table; this
 module is the single source of truth for that mapping, expressed twice:
 
-  * :func:`signals_view` — Spark Column expressions (builtin functions only,
-    JVM-side, whole-stage-codegen friendly);
+  * :data:`SIGNAL_EXPRS` — Spark SQL expressions (builtin functions only,
+    JVM-side, whole-stage-codegen friendly), read by :func:`signals_view`
+    and by the streaming signal views;
   * :data:`SIGNALS_ORACLE_CTE` — the identical derivation as a DuckDB CTE
     used by every ``oracle_sql()`` entry.
 
@@ -58,9 +59,48 @@ SIGNAL_FIELDS: list[tuple[str, str]] = [
 ]
 
 
-def _tag(prefix: str, col, mod: int):
+#: the fixture's per-event integer ``k`` (``props->'$.k'``); the
+#: schema-based parse beats get_json_object ~20%, identical null semantics
+_K = "from_json(props, 'k INT').k"
+
+
+def _tag(prefix: str, col: str, mod: int) -> str:
     """NULL-propagating `{prefix}-{col % mod}` (matches `||` in the oracle)."""
-    return F.concat(F.lit(prefix + "-"), (col % mod).cast("string"))
+    return f"concat('{prefix}-', CAST({col} % {mod} AS STRING))"
+
+
+#: dotted signal field → its Spark SQL derivation over an events row, in
+#: output order.  One ``selectExpr`` over these strings is one JVM call
+#: per view (Column-built views cost ~100 py4j round trips each).
+SIGNAL_EXPRS: dict[str, str] = {
+    "@timestamp": "ts",
+    "event.id": "event_id",
+    "metricset.name": "event_type",
+    "service.name": _tag("svc", "user_id", 20),
+    "service.environment": _tag("env", _K, 3),
+    "container.id": f"CASE WHEN {_K} % 5 = 0 THEN {_tag('cont', 'user_id', 50)} END",
+    "kubernetes.pod.uid": (
+        f"CASE WHEN {_K} % 5 IN (0, 1) THEN {_tag('pod', 'user_id', 40)} END"
+    ),
+    "kubernetes.node.name": (
+        f"CASE WHEN {_K} % 5 IN (0, 1, 2) THEN {_tag('node', 'user_id', 10)} END"
+    ),
+    "host.name": f"CASE WHEN {_K} % 3 = 0 THEN {_tag('host', 'user_id', 25)} END",
+    "host.hostname": f"CASE WHEN {_K} % 7 <> 0 THEN {_tag('hh', 'user_id', 25)} END",
+    "cloud.provider": (
+        f"CASE WHEN {_K} % 4 = 0 THEN 'aws' WHEN {_K} % 4 = 1 THEN 'gcp' END"
+    ),
+    "orchestrator.cluster.name": (
+        f"CASE WHEN {_K} % 2 = 0 THEN {_tag('cluster', 'user_id', 3)} END"
+    ),
+}
+
+
+def signal_columns(*fields: str) -> list[str]:
+    """``selectExpr`` strings deriving the named signal fields (all of
+    :data:`SIGNAL_EXPRS` when none are named), aliased to their dotted
+    names."""
+    return [f"{SIGNAL_EXPRS[f]} AS `{f}`" for f in fields or SIGNAL_EXPRS]
 
 
 def signals_view(spark: SparkSession, sf_dir: str, ts_range=None) -> DataFrame:
@@ -70,23 +110,7 @@ def signals_view(spark: SparkSession, sf_dir: str, ts_range=None) -> DataFrame:
     the parquet scan (see registry.load_table pushdown note).
     """
     ev = load_table(spark, sf_dir, "events", ts_range=ts_range)
-    # schema-based parse beats get_json_object ~20%; identical null semantics
-    k = F.from_json(F.col("props"), "k INT").getField("k")
-    uid = F.col("user_id")
-    return ev.select(
-        F.col("ts").alias("@timestamp"),
-        F.col("event_id").alias("event.id"),
-        F.col("event_type").alias("metricset.name"),
-        _tag("svc", uid, 20).alias("service.name"),
-        _tag("env", k, 3).alias("service.environment"),
-        F.when(k % 5 == 0, _tag("cont", uid, 50)).alias("container.id"),
-        F.when((k % 5).isin(0, 1), _tag("pod", uid, 40)).alias("kubernetes.pod.uid"),
-        F.when((k % 5).isin(0, 1, 2), _tag("node", uid, 10)).alias("kubernetes.node.name"),
-        F.when(k % 3 == 0, _tag("host", uid, 25)).alias("host.name"),
-        F.when(k % 7 != 0, _tag("hh", uid, 25)).alias("host.hostname"),
-        F.when(k % 4 == 0, F.lit("aws")).when(k % 4 == 1, F.lit("gcp")).alias("cloud.provider"),
-        F.when(k % 2 == 0, _tag("cluster", uid, 3)).alias("orchestrator.cluster.name"),
-    )
+    return ev.selectExpr(*signal_columns())
 
 
 def signals_flat(spark: SparkSession, sf_dir: str) -> DataFrame:

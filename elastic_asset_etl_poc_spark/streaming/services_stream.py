@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.signals import SERVICE_SUMMARY_EVENT
+from ..sources.signals import SERVICE_SUMMARY_EVENT, signal_columns
 
 #: events.parquet layout; ts is µs-precision TIMESTAMP in the fixture and
 #: loads as TIMESTAMP_NTZ, exactly as the batch path (registry.load_table)
@@ -58,27 +58,42 @@ EVENTS_STREAM_SCHEMA_NS = T.StructType(
 )
 
 
-def stream_signals(spark: SparkSession, source_dir: str) -> DataFrame:
-    """File-source stream of signal documents (S1 as readStream).
-
-    ``maxFilesPerTrigger`` is the page-size analog (O3): each micro-batch
-    consumes a bounded file set, with offsets checkpointed like search_after.
-    """
-    ev = (
+def _events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """File-source stream of events rows; ``maxFilesPerTrigger`` is the
+    page-size analog (O3): each micro-batch consumes a bounded file set,
+    with offsets checkpointed like search_after."""
+    return (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
     )
-    k = F.from_json(F.col("props"), "k INT").getField("k")
-    uid = F.col("user_id")
-    tag = lambda p, c, m: F.concat(F.lit(p + "-"), (c % m).cast("string"))  # noqa: E731
-    return ev.select(
-        F.col("ts").cast("timestamp").alias("@timestamp"),
-        F.col("event_id").alias("event.id"),
-        F.col("event_type").alias("metricset.name"),
-        tag("svc", uid, 20).alias("service.name"),
-        tag("env", k, 3).alias("service.environment"),
+
+
+def _stream_signal_view(
+    spark: SparkSession, source_dir: str, *fields: str
+) -> DataFrame:
+    """The named signal fields over the events stream, derived by the
+    batch view's own expressions (sources.signals.SIGNAL_EXPRS);
+    ``@timestamp`` is cast to TIMESTAMP for the watermark."""
+    return (
+        _events_stream(spark, source_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .selectExpr(*signal_columns(*fields))
+    )
+
+
+def stream_signals(spark: SparkSession, source_dir: str) -> DataFrame:
+    """File-source stream of signal documents (S1 as readStream): the
+    fields service discovery and the windowed counts read."""
+    return _stream_signal_view(
+        spark,
+        source_dir,
+        "@timestamp",
+        "event.id",
+        "metricset.name",
+        "service.name",
+        "service.environment",
     )
 
 
@@ -235,26 +250,18 @@ def stream_service_parents(
 
 
 def stream_signals_full(spark: SparkSession, source_dir: str) -> DataFrame:
-    """Streaming signal view with the full parent-candidate field set
-    (matches sources.signals.signals_view's derivation)."""
-    ev = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-    k = F.from_json(F.col("props"), "k INT").getField("k")
-    uid = F.col("user_id")
-    tag = lambda p, c, m: F.concat(F.lit(p + "-"), (c % m).cast("string"))  # noqa: E731
-    return ev.select(
-        F.col("ts").cast("timestamp").alias("@timestamp"),
-        F.col("event_id").alias("event.id"),
-        F.col("event_type").alias("metricset.name"),
-        tag("svc", uid, 20).alias("service.name"),
-        F.when(k % 5 == 0, tag("cont", uid, 50)).alias("container.id"),
-        F.when((k % 5).isin(0, 1), tag("pod", uid, 40)).alias("kubernetes.pod.uid"),
-        F.when(k % 3 == 0, tag("host", uid, 25)).alias("host.name"),
-        F.when(k % 7 != 0, tag("hh", uid, 25)).alias("host.hostname"),
+    """Streaming signal view with the full parent-candidate field set."""
+    return _stream_signal_view(
+        spark,
+        source_dir,
+        "@timestamp",
+        "event.id",
+        "metricset.name",
+        "service.name",
+        "container.id",
+        "kubernetes.pod.uid",
+        "host.name",
+        "host.hostname",
     )
 
 
@@ -268,8 +275,7 @@ def run_foreach_batch_upsert(
     from ..sinks import upsert_assets
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # an empty micro-batch is a no-op inside upsert_assets
         upsert_assets(batch_df.sparkSession, store_path, batch_df)
 
     query = (
@@ -330,14 +336,9 @@ def stream_dedup_keys(
     only, because WHICH physical row arrives first is a scheduling
     artifact; the key set is the deterministic contract.
     """
-    ev = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
     return (
-        ev.select(
+        _events_stream(spark, source_dir)
+        .select(
             F.col("ts").cast("timestamp").alias("@timestamp"),
             "user_id",
             "event_type",

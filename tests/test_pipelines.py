@@ -1,6 +1,7 @@
 """Pipeline-level tests over the sf0.001 fixtures + graph invariants."""
 
 import datetime
+import os
 
 from conftest import SF_DIR
 
@@ -205,6 +206,102 @@ def test_upsert_assets_propagates_store_read_errors(spark, tmp_path):
     # the corrupt marker survived — nothing was overwritten
     with open(os.path.join(path, "part-00000.parquet")) as f:
         assert f.read() == "not a parquet file"
+
+
+def test_upsert_assets_empty_first_batch_is_a_noop(spark, tmp_path):
+    """An empty batch reads and writes nothing: an empty first upsert
+    followed by a non-empty one leaves the store the non-empty upsert
+    alone leaves (an empty first write used to leave a store with no
+    schema, which the next upsert could not read)."""
+    from elastic_asset_etl_poc_spark.sinks import upsert_assets
+
+    services, containers = collect_services(spark, SF_DIR)
+    batch = services.unionByName(containers)
+    alone = str(tmp_path / "alone")
+    after_empty = str(tmp_path / "after_empty")
+    upsert_assets(spark, alone, batch)
+    upsert_assets(spark, after_empty, batch.limit(0))
+    assert not os.path.exists(after_empty)
+    upsert_assets(spark, after_empty, batch)
+
+    def rows(path):
+        return sorted(map(repr, spark.read.parquet(path).collect()))
+
+    assert rows(after_empty) == rows(alone)
+    assert len(rows(alone)) == batch.count()
+
+
+def test_upsert_assets_evaluates_a_warm_batch_once(spark, tmp_path):
+    """On an existing store the batch's plan runs once: a Python UDF on
+    ``asset.type`` (a column the touched-partition set reads) tallies
+    exactly one call per batch row."""
+    from pyspark.sql import functions as F
+
+    from elastic_asset_etl_poc_spark.sinks import upsert_assets
+
+    services, containers = collect_services(spark, SF_DIR)
+    batch = services.unionByName(containers)
+    path = str(tmp_path / "assets_store")
+    upsert_assets(spark, path, batch)  # the store exists from here on
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def tally(asset_type):
+        calls.add(1)
+        return asset_type
+
+    counted = batch.withColumn(
+        "asset.type", F.udf(tally, "string")(F.col("`asset.type`"))
+    )
+    upsert_assets(spark, path, counted)
+    assert calls.value == batch.count()
+
+
+def test_upsert_assets_releases_its_checkpoints(spark, tmp_path):
+    """The batch and store checkpoints of an upsert are released when it
+    returns: over consecutive warm upserts no persisted RDD is left
+    behind, so a long-lived upsert loop holds no blocks between calls."""
+    from elastic_asset_etl_poc_spark.sinks import upsert_assets
+
+    services, containers = collect_services(spark, SF_DIR)
+    batch = services.unionByName(containers)
+    path = str(tmp_path / "assets_store")
+    upsert_assets(spark, path, batch)
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    start = persisted()
+    for _ in range(5):
+        before = persisted()
+        upsert_assets(spark, path, batch)
+        assert persisted() - before == set()
+    assert len(persisted()) <= len(start)
+
+
+def test_signals_view_matches_oracle_cte(spark):
+    """Every signal field of every sf0.01 event, NULLs included, equals
+    the DuckDB derivation the query oracles share."""
+    from oracle_check import duck_connect, normalize
+
+    from elastic_asset_etl_poc_spark.sources.signals import (
+        SIGNAL_FIELDS,
+        SIGNALS_ORACLE_CTE,
+        signals_flat,
+    )
+
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    got = signals_flat(spark, sf_dir)
+    assert got.columns == [flat for _, flat in SIGNAL_FIELDS]
+    cur = duck_connect(sf_dir).execute(
+        f"WITH {SIGNALS_ORACLE_CTE} SELECT * FROM signals"
+    )
+    want_cols = [d[0] for d in cur.description]
+    want = normalize(cur.fetchall(), want_cols)
+    assert want_cols == got.columns
+    assert len(want) == 10000
+    assert normalize(got.collect(), got.columns) == want
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):
