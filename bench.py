@@ -124,9 +124,10 @@ def main() -> None:
         # once per corpus; assign/scan/audit still run live each time)
         "embed_knn_ivfpq",
         "recall_ivfpq_lossless_vs_exact",
-        # _DIR_EDGES/_PR_EDGES (edge frame checkpointed once)
+        # _DIR_EDGES/_PR_EDGES (edge frame checkpointed once per session)
         "pagerank_cust_supp",
         "hits_cust_supp",
+        "bfs_khop_custsupp",
         # _ER_STANDING (standing clustering checkpointed once; the
         # fold-in is the production shape — full build priced live by
         # entity_clusters_parts)

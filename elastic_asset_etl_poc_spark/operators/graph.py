@@ -15,6 +15,14 @@ from pyspark.sql import functions as F
 
 from ..observability import checkpoint, release_checkpoint
 
+#: the node-set size up to which the graph operators broadcast a
+#: single-column node-id frame into a join (~8M ids ≈ tens of MB, the
+#: practical broadcast comfort zone, not the 8 GB hard cap); above it
+#: they fall back to a shuffled join.  ``kcore_membership`` gates its
+#: survivor semi-joins and ``bfs_khop`` its frontier and visited joins
+#: on observed row counts against it.
+MAX_BROADCAST_NODES = 8_000_000
+
 
 class _Fixpoint:
     """The round loop of the iterative graph and dedup operators.
@@ -399,26 +407,39 @@ def bfs_khop(
 
     Scale shape: the frontier never exceeds the node set, dedup happens
     per round BEFORE the next expansion (a node reached twice expands
-    once), and at 1000 executors each round is an ordinary partitioned
-    hash join on node id."""
+    once), and each round's two node-set joins are broadcast while
+    small, shuffled (hash-partitioned on node id) above the bound: the
+    frontier into the edge join and the visited set into the anti-join
+    each ride a broadcast while their OBSERVED row count (the seeds'
+    and every round's count ride the checkpoint jobs) is ≤
+    ``MAX_BROADCAST_NODES``.  A checkpoint's own planner estimate
+    cannot make that call: for a join-built frame it is the product of
+    the input sizes, so the planner would shuffle a frontier of a few
+    thousand nodes every round."""
     # the result is the union of every round's checkpoint, so none is
     # released: the rounds run on checkpoint alone, not _Fixpoint
-    visited, _ = checkpoint(
+    visited, m = checkpoint(
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
-        .withColumn("dist", F.lit(0))
+        .withColumn("dist", F.lit(0)),
+        n=F.count(F.lit(1)),
     )
-    frontier = visited.select("node")
+    frontier, n_frontier = visited.select("node"), m["n"]
+    n_visited = n_frontier
     for d in range(1, k + 1):
         # nxt is the one genuinely multi-consumer frame per round (the
         # visited union, the next expansion, and every later round's
         # anti-join read it) — checkpoint it; the emptiness probe rides
-        # the checkpoint job instead of a separate isEmpty() job
+        # the checkpoint job instead of a separate isEmpty() job.
+        # Round 1's frontier IS the visited set: joined on its own
+        # column (not a renamed one), both joins reuse one broadcast.
+        fr = _broadcast_if_small(frontier, n_frontier)
         nxt, m = checkpoint(
-            frontier.join(edges, frontier["node"] == edges["src"])
+            fr.join(edges, fr["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
+            .join(_broadcast_if_small(visited.select("node"), n_visited),
+                  "node", "left_anti")
             .withColumn("dist", F.lit(d)),
             n=F.count(F.lit(1)),
         )
@@ -429,15 +450,22 @@ def bfs_khop(
         # per-round localCheckpoint was a redundant copy job (one full
         # re-write of the growing frame per hop, removed r16)
         visited = visited.unionByName(nxt)
-        frontier = nxt.select("node")
+        frontier, n_frontier = nxt.select("node"), m["n"]
+        n_visited += n_frontier
     return visited
+
+
+def _broadcast_if_small(nodes: DataFrame, n: int) -> DataFrame:
+    """``nodes`` with a broadcast hint when its observed row count ``n``
+    is within ``MAX_BROADCAST_NODES``, unhinted (a shuffled join) above."""
+    return F.broadcast(nodes) if n <= MAX_BROADCAST_NODES else nodes
 
 
 def kcore_membership(
     edges: DataFrame,
     k: int,
     max_rounds: int = 12,
-    max_broadcast_nodes: int = 8_000_000,
+    max_broadcast_nodes: int = MAX_BROADCAST_NODES,
 ) -> DataFrame:
     """k-CORE decomposition (membership for fixed k): iteratively peel
     nodes of degree < k until the remaining subgraph is stable — the
@@ -474,8 +502,7 @@ def kcore_membership(
     larger core (a billion-node web graph) falls back to a shuffled
     semi-join instead of detonating the broadcast budget — the bloom
     auto-sizing precedent.  Both paths are property-tested equal; the
-    default threshold (~8M single-column ids ≈ tens of MB) tracks the
-    practical broadcast comfort zone, not the 8 GB hard cap.
+    default threshold is the module's ``MAX_BROADCAST_NODES``.
     """
     fp = _Fixpoint("kcore_membership", max_rounds)
     cur, _ = fp.checkpoint(edges.select("src", "dst"))

@@ -10,9 +10,11 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
     dynamic join-strategy switching replace hand-tuned shuffle counts.
   * ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; on a
     real cluster set it ~2-3× total cores and let AQE coalesce.
-  * nanosAsLong: the events fixture stores TIMESTAMP(NANOS) which the
-    vectorized Parquet reader rejects; we read ns as long and convert to
-    microsecond timestamps at the source boundary (sources/registry.py).
+  * nanosAsLong: an events file written as TIMESTAMP(NANOS), which the
+    vectorized Parquet reader rejects, is read as a ns long and converted
+    to microsecond timestamps at the source boundary
+    (sources/registry.py).  The fixture files at sf0.001/0.01/0.1 store
+    ``ts`` as TIMESTAMP(MICROS) and never take that branch.
   * Arrow enabled for any toPandas()/pandas-UDF path (extensions only —
     reference parity needs zero Python UDFs, SURVEY.md §2.10).
 """
@@ -41,7 +43,8 @@ def get_spark(
         # Determinism: UTC everywhere so Spark timestamps collect identically
         # to the DuckDB oracle's naive timestamps.
         .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet stores TIMESTAMP(NANOS); read as long, convert at source.
+        # a TIMESTAMP(NANOS) events file reads as long, converted at source
+        # (the fixture files store TIMESTAMP(MICROS) and read as timestamps).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # AQE: coalesce post-shuffle partitions, split skewed joins at runtime.
         .config("spark.sql.adaptive.enabled", "true")

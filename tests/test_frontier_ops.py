@@ -2,6 +2,7 @@
 bfs_khop, prefix_filter_pairs, pmi_cooccur."""
 
 import math
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -57,6 +58,127 @@ def test_bfs_khop_respects_bound(spark):
     seeds = spark.createDataFrame([("a",)], ["node"])
     got = {r["node"]: r["dist"] for r in bfs_khop(edges, seeds, k=1).collect()}
     assert got == {"a": 0, "b": 1}
+
+
+def _python_bfs(und, seeds, k):
+    adj = {}
+    for x, y in und:
+        adj.setdefault(x, set()).add(y)
+        adj.setdefault(y, set()).add(x)
+    dist = {s: 0 for s in seeds}
+    frontier = set(seeds)
+    for d in range(1, k + 1):
+        frontier = {y for x in frontier for y in adj.get(x, ())} - dist.keys()
+        dist.update((y, d) for y in frontier)
+    return dist
+
+
+def _random_graph():
+    import random
+
+    rng = random.Random(7)
+    nodes = [f"n{i}" for i in range(60)]
+    und = {tuple(rng.sample(nodes, 2)) for _ in range(80)}
+    return sorted(und), ["n0", "n1", "n2"], 3
+
+
+@pytest.mark.parametrize(
+    "und,seeds,k",
+    [
+        ([("a", "b"), ("b", "c"), ("c", "d"), ("a", "c")], ["a"], 10),
+        ([("a", "b"), ("b", "c")], ["a"], 1),
+        _random_graph(),
+    ],
+    ids=["shortcut", "bound", "random"],
+)
+def test_bfs_khop_shuffled_path_equals_broadcast(spark, monkeypatch, und, seeds, k):
+    """Bound 0 sends every frontier and visited join through the
+    shuffled path; it must equal the broadcast path and a Python BFS."""
+    from elastic_asset_etl_poc_spark.operators import graph
+
+    edges = spark.createDataFrame(und + [(y, x) for x, y in und], ["src", "dst"])
+    seed_df = spark.createDataFrame([(s,) for s in seeds], ["node"])
+
+    def reach():
+        return {r["node"]: r["dist"] for r in bfs_khop(edges, seed_df, k=k).collect()}
+
+    want = _python_bfs(und, seeds, k)
+    assert len(want) > len(seeds)
+    assert reach() == want
+    monkeypatch.setattr(graph, "MAX_BROADCAST_NODES", 0)
+    assert reach() == want
+
+
+def test_bfs_khop_custsupp_job_count(spark):
+    """A warm bfs_khop_custsupp call (the session's edge memo built)
+    runs 13 Spark jobs at sf0.001: both round joins broadcast their
+    observed-small node sets, and the query reads the shared
+    customer–supplier edges instead of building its own (23 jobs with
+    a private edge build per call and shuffled round joins)."""
+    from conftest import SF_DIR
+
+    from elastic_asset_etl_poc_spark import suite
+
+    fn = suite.queries()["bfs_khop_custsupp"]
+    want = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
+    sc = spark.sparkContext
+    grp = "bfs_khop_custsupp_warm"
+    sc.setJobGroup(grp, grp)
+    try:
+        got = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == want
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(grp))
+    assert n_jobs <= 13, n_jobs
+
+
+_SESSION_RESTART = """
+import os, sys
+tests = {tests!r}
+sys.path[:0] = [os.path.dirname(tests), tests]
+from elastic_asset_etl_poc_spark import suite
+from elastic_asset_etl_poc_spark.session import get_spark
+from oracle_check import duck_connect, normalize
+
+sf = {sf!r}
+con, qs, osql = duck_connect(sf), suite.queries(), suite.oracle_sql()
+for attempt in range(2):
+    spark = get_spark(master="local[2]")
+    for name in ("pagerank_cust_supp", "bfs_khop_custsupp"):
+        df = qs[name](spark, sf)
+        cur = con.execute(osql[name])
+        want = normalize(cur.fetchall(), [d[0] for d in cur.description])
+        assert normalize(df.collect(), df.columns) == want, (attempt, name)
+    spark.stop()
+print("ok")
+"""
+
+
+def test_edge_memo_survives_session_restart(tmp_path):
+    """pagerank_cust_supp and bfs_khop_custsupp read the memoized
+    customer–supplier edges; after the session is stopped and created
+    again both must rebuild them in the new session and still match
+    their oracles, not read a checkpoint of the dead session.  Runs in
+    a subprocess so the shared test session is untouched."""
+    import subprocess
+    import sys
+
+    from conftest import SF_DIR
+
+    script = tmp_path / "restart.py"
+    script.write_text(
+        _SESSION_RESTART.format(
+            tests=os.path.dirname(os.path.abspath(__file__)), sf=SF_DIR
+        )
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        capture_output=True, text=True, timeout=600,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "2g"},
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().endswith("ok")
 
 
 def test_prefix_filter_equals_exact_join(spark):

@@ -304,6 +304,45 @@ def test_signals_view_matches_oracle_cte(spark):
     assert normalize(got.collect(), got.columns) == want
 
 
+def test_asset_collectors_see_appended_event_files(spark, tmp_path):
+    """collect_services/collect_pods cache their collapsed top frames.
+    Events files landing in the events directory must show in the next
+    collect (the reader refreshes the path's caches when its stamp
+    changes), not be served from the cache of the earlier read."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    events = events.take(pc.sort_indices(events["ts"]))
+    half = events.num_rows // 2
+    d = tmp_path / "events.parquet"
+    d.mkdir()
+    pq.write_table(events.slice(0, half), str(d / "part-0.parquet"))
+    late = tmp_path / "part-1.parquet"  # the newest events, held out
+    pq.write_table(events.slice(half), str(late))
+
+    def collect():
+        out = []
+        for services_and_containers in (
+            collect_services(spark, str(tmp_path)),
+            collect_pods(spark, str(tmp_path)),
+        ):
+            for df in services_and_containers:
+                out.append(sorted(map(repr, df.collect())))
+        return out
+
+    try:
+        early = collect()
+        os.replace(late, d / "part-1.parquet")
+        after = collect()
+        spark.catalog.clearCache()
+        fresh = collect()
+    finally:
+        spark.catalog.clearCache()
+    assert early != fresh  # the held-out file changes the assets
+    assert after == fresh
+
+
 def test_compact_parquet_merges_small_files(spark, tmp_path):
     from elastic_asset_etl_poc_spark.sinks import compact_parquet
     from elastic_asset_etl_poc_spark.sources.registry import load_table
