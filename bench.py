@@ -9,7 +9,9 @@
 
 The stdout line is hard-capped (≤1500 bytes) so the driver's tail
 capture parses it; the FULL per-query map (median + cold + memoized
-names + full drift) is written to BENCH_FULL.json.
+names + full drift) is written to BENCH_FULL.json.  A query is listed
+as memoized when one of its runs served an entry of the per-session
+memo (``sources.registry.memo``).
 
 Each query is forced end-to-end with the noop sink (full materialization,
 no driver collect cost).  A tiny warmup query absorbs JVM/codegen start-up
@@ -60,7 +62,11 @@ def main() -> None:
     # warmup: JVM/codegen plus one cold read per table so the first timed
     # query doesn't absorb file-footer and page-cache costs
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from elastic_asset_etl_poc_spark.sources.registry import TABLES, load_table
+    from elastic_asset_etl_poc_spark.sources.registry import (
+        TABLES,
+        load_table,
+        memo_counts,
+    )
 
     for t in TABLES:
         try:
@@ -80,73 +86,13 @@ def main() -> None:
     # compare position-like-for-like; new queries change their own
     # neighborhood only.
     qs = dict(sorted(e.queries().items()))
-    # Serve-only disclosure: these queries consume a per-process memoized
-    # artifact (shared near-dup pair frame, PageRank/HITS edge checkpoint,
-    # PQ/SQ8 codebooks, minhash band stores, frozen BPE vocab), so their
-    # warm medians price SERVING, not the build.  The un-memoized build
-    # cost is carried by the cold column and by pretrain_pipeline_docs
-    # (pair build fused end-to-end).  Emitted in both JSON artifacts so
-    # the caveat travels with the numbers.
-    memoized = [
-        # _SHINGLE_FRAMES (shared capped shingle postings)
-        "rrf_fusion_docs",
-        "mmr_rerank_docs",
-        # _PAIR_FRAMES (shared jaccard/minhash pair build)
-        "jaccard_neardup_docs",
-        "minhash_neardup_docs",
-        "recall_minhash_vs_jaccard",
-        "dedup_survivors_docs",
-        "dedup_survivors_minhash",
-        "cluster_split_docs",
-        "audit_split_leakage",
-        "triangle_docs",
-        # _IVF_INCR_STORES (standing assignment store + frozen centroids)
-        "embed_knn_ivf_incr",
-        # _MUTUAL_IVF_CENTROIDS (coarse k-means trained once per corpus;
-        # probe/kernel/audit still run live each time)
-        "mutual_knn_ivf",
-        # _KMV_SS_FRAMES (shared (source, shingle) set frame built once;
-        # sketches, estimates, and audits still run live each time.
-        # kmv_incremental_sources is NOT here: it needs doc granularity
-        # for the standing/delta split and builds its own frame live)
-        "kmv_overlap_sources",
-        "stream_kmv_overlap_sources",
-        "kmv_containment_sources",
-        "kmv_candidates_sources",
-        # _MINHASH_STORES (parquet band/fingerprint stores built once)
-        "minhash_incremental_docs",
-        "recall_simhash_incremental_vs_full",
-        "recall_dhash_incremental_vs_full",
-        # _PQ_BOOKS (codebooks trained once)
-        "embed_knn_pq",
-        "recall_pq_lossless_vs_exact",
-        # _IVFPQ_INDEX (coarse centroids + residual codebooks trained
-        # once per corpus; assign/scan/audit still run live each time)
-        "embed_knn_ivfpq",
-        "recall_ivfpq_lossless_vs_exact",
-        # _DIR_EDGES/_PR_EDGES (edge frame checkpointed once per session)
-        "pagerank_cust_supp",
-        "hits_cust_supp",
-        "bfs_khop_custsupp",
-        # _ER_STANDING (standing clustering checkpointed once; the
-        # fold-in is the production shape — full build priced live by
-        # entity_clusters_parts)
-        "entity_clusters_incr_parts",
-        "stream_entity_clusters_parts",
-        # frozen BPE vocab (training priced by bpe_train_docs)
-        "bpe_tokenize_docs",
-        # _CLF_MODELS (model trained once on this query's first call;
-        # training priced live by train_classifier_docs).  NOTE: under
-        # the alphabetical bench order "calibration" runs BEFORE
-        # "train", so calibration's COLD sample absorbs the one-time
-        # memo build (the first _CLF_MODELS train), and
-        # train_classifier_docs' cold run is not a first-train in this
-        # process — its live-train cost shows in its warm medians,
-        # which retrain every run
-        "classifier_calibration_docs",
-        # _CLF_MODELS consumer like calibration (scores the memoized model)
-        "conformal_threshold_docs",
-    ]
+    # Serve-only disclosure: a query that served an entry of the
+    # session memo (sources.registry.memo: shared near-dup pair frames,
+    # edge checkpoints, codebooks, band stores, staged fixtures) in any
+    # run is listed here, so its warm median prices SERVING, not the
+    # build.  The build cost is carried by the cold column.  Emitted in
+    # both JSON artifacts so the caveat travels with the numbers.
+    memoized: list[str] = []
     # Host-load stamp (the r7 lesson: six >2× "regressions" on unchanged
     # code were a noisy host; numbers without load context are not
     # interpretable round-over-round).  loadavg is sampled after every
@@ -177,6 +123,7 @@ def main() -> None:
     # the lesser evil; the load stamp below makes it attributable.
     for name, fn in qs.items():
         samples: list[float] = []
+        served0 = memo_counts(spark)[1]
         for i in range(runs):
             t0 = time.perf_counter()
             try:
@@ -190,6 +137,8 @@ def main() -> None:
                 break
             finally:
                 spark.catalog.clearCache()
+        if memo_counts(spark)[1] > served0:
+            memoized.append(name)
         if samples:
             cold[name] = round(samples[0], 3)
             medians[name] = round(statistics.median(samples), 2)

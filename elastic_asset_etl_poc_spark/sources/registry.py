@@ -14,12 +14,20 @@ every downstream operator sees proper TimestampType.
 
 from __future__ import annotations
 
+import atexit
+from collections.abc import Callable, Hashable, Sequence
+from dataclasses import dataclass, field
 from datetime import datetime, timezone
 import os
+import shutil
+import tempfile
+from typing import Any
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..observability import release_checkpoint
 
 TABLES = (
     "region",
@@ -70,9 +78,9 @@ _RAW_FRAMES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 
 def _read_raw(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     stamp = _stamp(path)
-    per_session = _RAW_FRAMES.setdefault(spark, {})
+    per_session = {} if stamp is None else _RAW_FRAMES.setdefault(spark, {})
     held = per_session.get((path, fmt))
-    if held is not None and stamp is not None:
+    if held is not None:
         if held[0] == stamp:
             return held[1]
         # the files changed under this session: a cached frame over the
@@ -128,6 +136,101 @@ def table_identity(sf_dir: str, table: str) -> tuple | None:
     path, fmt = _table_path(sf_dir, table)
     stamp = _stamp(path)
     return None if stamp is None else (path, fmt, *stamp)
+
+
+@dataclass
+class _Memo:
+    """One session's memo: its entries, the temp dirs its builds made,
+    and how many calls built an entry and how many served one."""
+
+    entries: dict = field(default_factory=dict)
+    dirs: list = field(default_factory=list)
+    built: int = 0
+    served: int = 0
+
+
+#: per-session build-once artifacts of the query suite (checkpointed
+#: frames, trained centroids and codebooks, model rows, staged stores).
+#: Weakly keyed on the live SparkSession like ``_RAW_FRAMES``: a local
+#: checkpoint lives in its session's block manager, so a session stopped
+#: and created again builds afresh and never reads a dead session's
+#: frame.  Each entry is stamped with the ``table_identity`` of the
+#: tables it was built from, so a rewritten table is never served from
+#: an old build.
+_MEMOS: "weakref.WeakKeyDictionary[SparkSession, _Memo]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def memo(
+    spark: SparkSession,
+    kind: Hashable,
+    sf_dir: str,
+    tables: Sequence[str],
+    build: Callable[[], Any],
+) -> Any:
+    """``build()`` once per session, ``kind``, ``sf_dir`` and file
+    identity of ``tables``; later calls serve the stored value.
+
+    ``kind`` names the artifact and carries any build parameters.  When
+    one of ``tables`` is rewritten the next call rebuilds and releases
+    the superseded value.  A DataFrame the build returns, bare or in a
+    tuple, must be a local checkpoint: releasing frees its blocks.  A
+    directory it holds must come from :func:`memo_dir`."""
+    state = _MEMOS.setdefault(spark, _Memo())
+    key = (kind, sf_dir)
+    ident = tuple(table_identity(sf_dir, t) for t in tables)
+    held = state.entries.get(key)
+    if held is not None:
+        if held[0] == ident:
+            state.served += 1
+            return held[1]
+        del state.entries[key]
+        _release(state, held[1])
+    value = build()
+    state.entries[key] = (ident, value)
+    state.built += 1
+    return value
+
+
+def memo_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh temp directory for a memo build.  It is removed when its
+    entry is superseded, by :func:`clear`, or at the latest at exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    _MEMOS.setdefault(spark, _Memo()).dirs.append(path)
+    return path
+
+
+def memo_counts(spark: SparkSession) -> tuple[int, int]:
+    """(built, served) memo calls in this session so far.  Reads Python
+    counters only: no Spark job."""
+    state = _MEMOS.get(spark)
+    return (0, 0) if state is None else (state.built, state.served)
+
+
+def _release(state: _Memo, value: Any) -> None:
+    for part in value if isinstance(value, tuple) else (value,):
+        if isinstance(part, DataFrame):
+            release_checkpoint(part)
+        elif isinstance(part, str) and part in state.dirs:
+            state.dirs.remove(part)
+            shutil.rmtree(part, ignore_errors=True)
+
+
+def clear(spark: SparkSession) -> None:
+    """Drop the session's memo entries: release their checkpoints and
+    remove the memo's temp dirs, so the next call of each builds again.
+    The built/served counts are kept."""
+    state = _MEMOS.get(spark)
+    if state is None:
+        return
+    for _ident, value in state.entries.values():
+        _release(state, value)
+    state.entries.clear()
+    for path in state.dirs:
+        shutil.rmtree(path, ignore_errors=True)
+    state.dirs.clear()
 
 
 def load_table(

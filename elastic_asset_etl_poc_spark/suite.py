@@ -15,7 +15,6 @@ Conventions keeping Spark and the oracle hash-identical:
 from __future__ import annotations
 
 from collections.abc import Callable
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,7 +33,7 @@ from .plans.services import (
     batch_search_for_service_parents,
     batch_search_for_services,
 )
-from .sources.registry import load_table, table_identity, union_scan
+from .sources.registry import load_table, memo, memo_dir, union_scan
 from .sources.signals import SIGNALS_ORACLE_CTE, signals_view
 
 NOW_SQL = "TIMESTAMP '2024-01-31 00:00:00'"
@@ -667,16 +666,13 @@ jp AS (
 )"""
 
 
-#: per-(sf_dir, kind) near-dup pair frames at threshold 0.8, checkpointed
-#: once per process — seven suite queries consume the identical
-#: deterministic pair set (fixed shingle/signature seeds), and bench runs
-#: each 3×; same train-once rationale as _PR_EDGES / _PQ_BOOKS.
-_PAIR_FRAMES: dict = {}
-
-
 def _shared_pairs(spark, sf_dir: str, kind: str) -> DataFrame:
-    key = (sf_dir, kind)
-    if key not in _PAIR_FRAMES:
+    """Near-dup pair frame at threshold 0.8, checkpointed once per
+    session memo — seven suite queries consume the identical
+    deterministic pair set (fixed shingle/signature seeds), and bench
+    runs each 3×."""
+
+    def build():
         from .operators.neardup import prefix_filter_pairs
 
         docs = load_table(spark, sf_dir, "documents")
@@ -698,18 +694,17 @@ def _shared_pairs(spark, sf_dir: str, kind: str) -> DataFrame:
             if kind == "jaccard"
             else minhash_lsh_pairs
         )
-        _PAIR_FRAMES[key] = fn(docs, threshold=0.8).localCheckpoint(eager=True)
-    return _PAIR_FRAMES[key]
+        return fn(docs, threshold=0.8).localCheckpoint(eager=True)
 
-
-#: per-sf_dir capped 3-gram shingle postings, checkpointed once per
-#: process — rrf_fusion and mmr_rerank both consume the identical
-#: deterministic (doc_id, shingle) frame; same rationale as _PAIR_FRAMES.
-_SHINGLE_FRAMES: dict = {}
+    return memo(spark, ("pairs", kind), sf_dir, ["documents"], build)
 
 
 def _shared_shingles(spark, sf_dir: str) -> DataFrame:
-    if sf_dir not in _SHINGLE_FRAMES:
+    """Capped 3-gram shingle postings, checkpointed once per session
+    memo — rrf_fusion and mmr_rerank both consume the identical
+    deterministic (doc_id, shingle) frame."""
+
+    def build():
         from .operators.neardup import capped_sets, shingles
 
         docs = load_table(spark, sf_dir, "documents")
@@ -717,8 +712,9 @@ def _shared_shingles(spark, sf_dir: str) -> DataFrame:
         sh = sh.localCheckpoint(eager=True)
         if staging is not None:
             staging.unpersist()
-        _SHINGLE_FRAMES[sf_dir] = sh
-    return _SHINGLE_FRAMES[sf_dir]
+        return sh
+
+    return memo(spark, "shingles", sf_dir, ["documents"], build)
 
 
 @q(
@@ -752,29 +748,23 @@ def minhash_neardup_docs(spark, sf_dir):
     return _shared_pairs(spark, sf_dir, "minhash")
 
 
-#: per-sf_dir staged MinHash band store (corpus = doc_id % 5 != 0) — the
-#: store is built once per process like the streaming fixture staging;
-#: the incremental query never mutates it (update_store=False) so every
-#: invocation replays identically
-_MINHASH_STORES: dict = {}
-
-
 def _minhash_store(spark, sf_dir: str) -> str:
-    if sf_dir not in _MINHASH_STORES:
-        import atexit
-        import shutil
-        import tempfile
+    """Staged MinHash band store (corpus = doc_id % 5 != 0), built once
+    per session memo like the streaming fixture staging; the incremental
+    query never mutates it (update_store=False) so every invocation
+    replays identically."""
 
+    def build():
         from .operators.neardup import minhash_store_init
 
-        path = tempfile.mkdtemp(prefix="suite_mhstore_")
+        path = memo_dir(spark, "suite_mhstore_")
         corpus = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 5 != 0
         )
         minhash_store_init(corpus, path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _MINHASH_STORES[sf_dir] = path
-    return _MINHASH_STORES[sf_dir]
+        return path
+
+    return memo(spark, "minhash_store", sf_dir, ["documents"], build)
 
 
 @q(
@@ -816,10 +806,6 @@ def recall_simhash_incremental_vs_full(spark, sf_dir):
     boolean row so any drift in store layout, banding, or the
     pre-collapse bound breaks the driver hash (SimHash itself is
     xxhash64-based, so this in-plan equality IS its oracle)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .operators.neardup import (
         banded_hamming_pairs,
         simhash,
@@ -830,15 +816,16 @@ def recall_simhash_incremental_vs_full(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    key = ("simhash_store", sf_dir)
-    if key not in _MINHASH_STORES:
-        path = tempfile.mkdtemp(prefix="suite_shstore_")
+
+    def build():
+        path = memo_dir(spark, "suite_shstore_")
         simhash_store_init(corpus, path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _MINHASH_STORES[key] = path
-    inc = simhash_neardup_incremental(
-        batch, _MINHASH_STORES[key], max_hamming=3
-    ).select("doc_a", "doc_b", "hamming")
+        return path
+
+    store = memo(spark, "simhash_store", sf_dir, ["documents"], build)
+    inc = simhash_neardup_incremental(batch, store, max_hamming=3).select(
+        "doc_a", "doc_b", "hamming"
+    )
     full = banded_hamming_pairs(simhash(docs), max_hamming=3)
     bids = batch.select(F.col("doc_id").alias("__bid"))
     full_b = (
@@ -1936,18 +1923,17 @@ def multimodal_audio_segments(spark, sf_dir):
     return segment_audio_energy(synthetic_audio(spark, n=64))
 
 
-#: per-sf_dir trained IVF centroids — a static corpus trains ONCE per
-#: process (the intended ivf_train usage); without this the bench re-ran
-#: the count+collect+k-means train jobs on every invocation (r4: 2.8×).
-_IVF_CENTROIDS: dict = {}
-
-
 def _ivf_centroids(spark, sf_dir):
-    if sf_dir not in _IVF_CENTROIDS:
+    """Trained IVF centroids — a static corpus trains ONCE per session
+    memo (the intended ivf_train usage); without this the bench re-ran
+    the count+collect+k-means train jobs on every invocation (r4: 2.8×)."""
+
+    def build():
         from .operators.similarity import ivf_train
 
-        _IVF_CENTROIDS[sf_dir] = ivf_train(load_table(spark, sf_dir, "embeddings"))
-    return _IVF_CENTROIDS[sf_dir]
+        return ivf_train(load_table(spark, sf_dir, "embeddings"))
+
+    return memo(spark, "ivf_centroids", sf_dir, ["embeddings"], build)
 
 
 @q(
@@ -2757,23 +2743,21 @@ def pretrain_pipeline_docs(spark, sf_dir):
     )
 
 
-#: per-(sf_dir, config) trained PQ codebooks — same train-once rationale
-#: as _IVF_CENTROIDS (the lossless audit's 500-centroid k-means dominated
-#: its bench cost when re-trained per invocation)
-_PQ_BOOKS: dict = {}
+def _pq_books(spark, sf_dir, slice_below=None, **kw):
+    """PQ codebooks trained once per config and session memo (the
+    lossless audit's 500-centroid k-means dominated its bench cost when
+    re-trained per invocation)."""
 
-
-def _pq_books(spark, sf_dir, **kw):
-    key = (sf_dir, tuple(sorted(kw.items())))
-    if key not in _PQ_BOOKS:
+    def build():
         from .operators.similarity import pq_train
 
         emb = load_table(spark, sf_dir, "embeddings")
-        if "slice_below" in kw:
-            kw = dict(kw)
-            emb = emb.filter(F.col("vec_id") < kw.pop("slice_below"))
-        _PQ_BOOKS[key] = pq_train(emb, **kw)
-    return _PQ_BOOKS[key]
+        if slice_below is not None:
+            emb = emb.filter(F.col("vec_id") < slice_below)
+        return pq_train(emb, **kw)
+
+    kind = ("pq_books", slice_below, tuple(sorted(kw.items())))
+    return memo(spark, kind, sf_dir, ["embeddings"], build)
 
 
 @q(
@@ -2860,15 +2844,11 @@ def recall_pq_lossless_vs_exact(spark, sf_dir):
     )
 
 
-#: per-sf_dir IVF-PQ index (coarse centroids + residual codebooks),
-#: trained once per process — bench runs each query 3×; same
-#: train-once rationale as _PQ_BOOKS / _MUTUAL_IVF_CENTROIDS.
-_IVFPQ_INDEX: dict = {}
-
-
 def _ivfpq_index(spark, sf_dir, slice_below=None, **kw):
-    key = (sf_dir, slice_below, tuple(sorted(kw.items())))
-    if key not in _IVFPQ_INDEX:
+    """IVF-PQ index (coarse centroids + residual codebooks), trained
+    once per config and session memo — bench runs each query 3×."""
+
+    def build():
         from .operators.similarity import ivf_train, ivfpq_train
 
         emb = load_table(spark, sf_dir, "embeddings")
@@ -2882,8 +2862,10 @@ def _ivfpq_index(spark, sf_dir, slice_below=None, **kw):
             ksub=kw.get("ksub", 32),
             max_train_sample=kw.get("max_train_sample", 4096),
         )
-        _IVFPQ_INDEX[key] = (C, B)
-    return _IVFPQ_INDEX[key]
+        return C, B
+
+    kind = ("ivfpq_index", slice_below, tuple(sorted(kw.items())))
+    return memo(spark, kind, sf_dir, ["embeddings"], build)
 
 
 @q(
@@ -2990,31 +2972,24 @@ def recall_ivfpq_lossless_vs_exact(spark, sf_dir):
     )
 
 
-#: per-sf_dir INCREMENTAL IVF-PQ index: coarse centroids + residual
-#: codebooks trained on the 80% STANDING corpus only (frozen), standing
-#: assignments persisted to parquet — the embed_knn_ivf_incr store
-#: pattern extended with the PQ tier.  Evicted with the IVF family via
-#: evict_ivf_stores (owns a parquet tempdir like _IVF_INCR_STORES).
-_IVFPQ_INCR_STORES: dict = {}
-
-
 def _ivfpq_incr_store(spark, sf_dir: str):
-    if sf_dir not in _IVFPQ_INCR_STORES:
-        import atexit
-        import shutil
-        import tempfile
+    """INCREMENTAL IVF-PQ index: coarse centroids + residual codebooks
+    trained on the 80% STANDING corpus only (frozen), standing
+    assignments persisted to parquet — the embed_knn_ivf_incr store
+    pattern extended with the PQ tier."""
 
+    def build():
         from .operators.similarity import ivf_assign, ivf_train, ivfpq_train
 
         emb = load_table(spark, sf_dir, "embeddings")
         standing = emb.filter(F.col("vec_id") % 5 != 0)
         C = ivf_train(standing)
         B = ivfpq_train(standing, C)
-        path = tempfile.mkdtemp(prefix="suite_ivfpqstore_")
+        path = memo_dir(spark, "suite_ivfpqstore_")
         ivf_assign(standing, C).write.mode("overwrite").parquet(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _IVFPQ_INCR_STORES[sf_dir] = (C, B, path)
-    return _IVFPQ_INCR_STORES[sf_dir]
+        return C, B, path
+
+    return memo(spark, "ivfpq_incr_store", sf_dir, ["embeddings"], build)
 
 
 @q(
@@ -3161,35 +3136,18 @@ r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / nn.n AS rank FROM nodes CROSS JOIN nn)
     )
 
 
-#: customer-supplier edge frames, checkpointed once per live session,
-#: sf_dir and file identity of orders and lineitem — the orders x
-#: lineitem distinct join dominates repeat invocations (bench runs each
-#: query 3x; same train-once rationale as _PQ_BOOKS).  Weakly keyed on
-#: the session like sources.registry._RAW_FRAMES: a checkpoint lives in
-#: its session's block manager, so a session stopped and created again
-#: must rebuild, never read a dead session's frame.
-_DIR_EDGES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_PR_EDGES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _edges_key(sf_dir):
-    return (
-        sf_dir,
-        table_identity(sf_dir, "orders"),
-        table_identity(sf_dir, "lineitem"),
-    )
+#: the tables the customer-supplier edge frames are built from; the
+#: orders x lineitem distinct join dominates repeat invocations (bench
+#: runs each query 3x), so the frames are checkpointed once per session
+_EDGE_TABLES = ("orders", "lineitem")
 
 
 def _directed_edges(spark, sf_dir):
     """Distinct customer→supplier purchase edges (a = ``c<custkey>``,
     b = ``s<suppkey>``), checkpointed once per session — shared by
     pagerank (symmetrized) and HITS (directed)."""
-    memo, key = _DIR_EDGES.setdefault(spark, {}), _edges_key(sf_dir)
-    if key not in memo:
+
+    def build():
         o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
         eb = (
@@ -3200,21 +3158,23 @@ def _directed_edges(spark, sf_dir):
             )
             .distinct()
         )
-        memo[key] = eb.localCheckpoint(eager=True)
-    return memo[key]
+        return eb.localCheckpoint(eager=True)
+
+    return memo(spark, "directed_edges", sf_dir, _EDGE_TABLES, build)
 
 
 def _pr_edges(spark, sf_dir):
     """The customer↔supplier edges in both orientations (src, dst),
     checkpointed once per session — pagerank's and the BFS's graph."""
-    memo, key = _PR_EDGES.setdefault(spark, {}), _edges_key(sf_dir)
-    if key not in memo:
+
+    def build():
         eb = _directed_edges(spark, sf_dir)
         e = eb.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
             eb.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
-        memo[key] = e.localCheckpoint(eager=True)
-    return memo[key]
+        return e.localCheckpoint(eager=True)
+
+    return memo(spark, "pr_edges", sf_dir, _EDGE_TABLES, build)
 
 
 @q("pagerank_cust_supp", _pagerank_oracle(iters=5))
@@ -4450,15 +4410,6 @@ def zorder_key_events(spark, sf_dir):
     return ev.select("event_id", zorder_key(dims, bits=16).alias("zkey"))
 
 
-#: per-(process, sf_dir) staged events directory shared by ALL streaming
-#: suite queries.  Each query previously copied events.parquet into its
-#: own mkdtemp per INVOCATION (bench = 3 runs × 5 queries = 15 copies) —
-#: pure harness cost misread as streaming cost.  The staged dir is
-#: read-only to the file-stream source (each run gets a fresh memory
-#: sink + checkpoint), so sharing is safe; cleanup at process exit.
-_STREAM_STAGED: dict[str, str] = {}
-
-
 from contextlib import contextmanager
 
 
@@ -4481,15 +4432,20 @@ def _stream_shuffle(spark, n: str = "8"):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _staged_table(sf_dir: str, table: str) -> str:
-    key = f"{sf_dir}::{table}"
-    if key not in _STREAM_STAGED:
-        import atexit
+def _staged_table(spark, sf_dir: str, table: str) -> str:
+    """A staged copy of ``table``'s parquet files, shared by ALL
+    streaming suite queries of the session.  Each query previously
+    copied events.parquet into its own mkdtemp per INVOCATION (bench =
+    3 runs × 5 queries = 15 copies) — pure harness cost misread as
+    streaming cost.  The staged dir is read-only to the file-stream
+    source (each run gets a fresh memory sink + checkpoint), so sharing
+    is safe."""
+
+    def build():
         import os
         import shutil
-        import tempfile
 
-        staged = tempfile.mkdtemp(prefix="suite_stream_")
+        staged = memo_dir(spark, "suite_stream_")
         src = f"{sf_dir}/{table}.parquet"
         if os.path.isdir(src):  # Spark-written table: stage its data files
             for i, f in enumerate(sorted(os.listdir(src))):
@@ -4497,17 +4453,17 @@ def _staged_table(sf_dir: str, table: str) -> str:
                     shutil.copy(f"{src}/{f}", f"{staged}/part-{i:03d}.parquet")
         else:  # single-file fixture
             shutil.copy(src, f"{staged}/part-000.parquet")
-        atexit.register(shutil.rmtree, staged, ignore_errors=True)
-        _STREAM_STAGED[key] = staged
-    return _STREAM_STAGED[key]
+        return staged
+
+    return memo(spark, ("staged", table), sf_dir, [table], build)
 
 
-def _staged_events(sf_dir: str) -> str:
-    return _staged_table(sf_dir, "events")
+def _staged_events(spark, sf_dir: str) -> str:
+    return _staged_table(spark, sf_dir, "events")
 
 
-def _staged_docs(sf_dir: str) -> str:
-    return _staged_table(sf_dir, "documents")
+def _staged_docs(spark, sf_dir: str) -> str:
+    return _staged_table(spark, sf_dir, "documents")
 
 
 @q(
@@ -4535,7 +4491,9 @@ def svc_phase1_streaming(spark, sf_dir):
     name = f"svc_stream_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle(spark):
         q = run_to_memory(
-            stream_services_phase1(spark, _staged_events(sf_dir)), name, "complete"
+            stream_services_phase1(spark, _staged_events(spark, sf_dir)),
+            name,
+            "complete",
         )
         q.stop()
     return spark.table(name)
@@ -4561,7 +4519,7 @@ def stream_dedup_events(spark, sf_dir):
     name = f"sd_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle(spark):
         q = run_to_memory(
-            stream_dedup_keys(spark, _staged_events(sf_dir)), name, "append"
+            stream_dedup_keys(spark, _staged_events(spark, sf_dir)), name, "append"
         )
         q.stop()
     return spark.table(name)
@@ -4592,7 +4550,9 @@ def stream_windowed_counts_daily(spark, sf_dir):
     name = f"win_stream_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle(spark):
         q = run_to_memory(
-            stream_windowed_counts(spark, _staged_events(sf_dir)), name, "complete"
+            stream_windowed_counts(spark, _staged_events(spark, sf_dir)),
+            name,
+            "complete",
         )
         q.stop()
     return spark.table(name)
@@ -4612,10 +4572,6 @@ def recall_dhash_incremental_vs_full(spark, sf_dir):
     the full banded self-join restricted to batch-involving images.
     One store/banded core now serves text SimHash AND image dHash
     incrementally; drift in either layout breaks this literal row."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .operators.multimodal import dhash_images, synthetic_images
     from .operators.neardup import (
         banded_hamming_pairs,
@@ -4629,15 +4585,17 @@ def recall_dhash_incremental_vs_full(spark, sf_dir):
     ).filter(F.col("simhash").isNotNull())
     batch = fps.filter(F.col("doc_id") % 5 == 0)
     corpus = fps.filter(F.col("doc_id") % 5 != 0)
-    key = ("dhash_store", sf_dir)
-    if key not in _MINHASH_STORES:
-        path = tempfile.mkdtemp(prefix="suite_dhstore_")
+
+    def build():
+        path = memo_dir(spark, "suite_dhstore_")
         fingerprint_store_init(corpus, path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _MINHASH_STORES[key] = path
-    inc = fingerprint_neardup_incremental(
-        batch, _MINHASH_STORES[key], max_hamming=6
-    ).select("doc_a", "doc_b", "hamming")
+        return path
+
+    # synthetic images: no fixture table to stamp the store with
+    store = memo(spark, "dhash_store", sf_dir, [], build)
+    inc = fingerprint_neardup_incremental(batch, store, max_hamming=6).select(
+        "doc_a", "doc_b", "hamming"
+    )
     full = banded_hamming_pairs(fps, max_hamming=6)
     bids = batch.select(F.col("doc_id").alias("__bid"))
     full_b = (
@@ -4692,7 +4650,9 @@ def stream_ewma_events(spark, sf_dir):
     name = f"ewma_stream_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle(spark, "16"):
         qy = run_to_memory(
-            stream_ewma_enrich(stream_events_typed(spark, _staged_events(sf_dir))),
+            stream_ewma_enrich(
+                stream_events_typed(spark, _staged_events(spark, sf_dir))
+            ),
             name,
             "update",
         )
@@ -4732,7 +4692,7 @@ def stream_sliding_counts_2d(spark, sf_dir):
     with _stream_shuffle(spark):
         qy = run_to_memory(
             stream_windowed_counts(
-                spark, _staged_events(sf_dir), window="2 days", slide="1 day"
+                spark, _staged_events(spark, sf_dir), window="2 days", slide="1 day"
             ),
             name,
             "complete",
@@ -4773,7 +4733,9 @@ def stream_topk_types_daily(spark, sf_dir):
     name = f"topk_stream_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle(spark):
         qy = run_to_memory(
-            stream_windowed_counts(spark, _staged_events(sf_dir)), name, "complete"
+            stream_windowed_counts(spark, _staged_events(spark, sf_dir)),
+            name,
+            "complete",
         )
         qy.stop()
     t = spark.table(name)
@@ -4849,7 +4811,7 @@ def stream_band_join_attrib(spark, sf_dir):
     name = f"band_stream_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle(spark):
         q = run_to_memory(
-            stream_band_join(spark, _staged_events(sf_dir), band_seconds=86400),
+            stream_band_join(spark, _staged_events(spark, sf_dir), band_seconds=86400),
             name,
             "append",
         )
@@ -4889,7 +4851,9 @@ def stream_asof_enrich_clicks(spark, sf_dir):
     # more than it fears state-store count (measured 1.9s vs 2.8s)
     with _stream_shuffle(spark, "16"):
         q = run_to_memory(
-            stream_asof_enrich(stream_events_typed(spark, _staged_events(sf_dir))),
+            stream_asof_enrich(
+                stream_events_typed(spark, _staged_events(spark, sf_dir))
+            ),
             name,
             "update",
         )
@@ -4949,7 +4913,7 @@ def svc_phase2_streaming(spark, sf_dir):
     name = f"p2_stream_{uuid.uuid4().hex[:8]}"
     with _stream_shuffle(spark):
         q = run_to_memory(
-            stream_service_parents(spark, _staged_events(sf_dir), services),
+            stream_service_parents(spark, _staged_events(spark, sf_dir), services),
             name,
             "append",
         )
@@ -6192,19 +6156,13 @@ def ewma_events(spark, sf_dir):
     )
 
 
-#: per-(sf_dir, fmt) staged text-format copies of the fixtures — built
-#: once per process (same lifecycle as the streaming fixture staging)
-_TEXT_STAGED: dict = {}
-
-
 def _staged_textfile(spark, sf_dir: str, fmt: str) -> str:
-    key = (sf_dir, fmt)
-    if key not in _TEXT_STAGED:
-        import atexit
-        import shutil
-        import tempfile
+    """A staged text-format copy of a fixture, built once per session
+    memo (same lifecycle as the streaming fixture staging)."""
+    table = "documents" if fmt == "jsonl" else "orders"
 
-        d = tempfile.mkdtemp(prefix=f"sg_{fmt}_")
+    def build():
+        d = memo_dir(spark, f"sg_{fmt}_")
         if fmt == "jsonl":
             load_table(spark, sf_dir, "documents").write.mode("overwrite").json(d)
         elif fmt == "orc":
@@ -6215,9 +6173,9 @@ def _staged_textfile(spark, sf_dir: str, fmt: str) -> str:
             load_table(spark, sf_dir, "orders").select(
                 "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
             ).write.mode("overwrite").option("header", True).csv(d)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _TEXT_STAGED[key] = d
-    return _TEXT_STAGED[key]
+        return d
+
+    return memo(spark, ("text_staged", fmt), sf_dir, [table], build)
 
 
 @q(
@@ -7008,15 +6966,6 @@ def weighted_topk_docs(spark, sf_dir):
 _CLF_STEPS = 3
 _CLF_BUCKETS = 64
 
-#: per-sf_dir trained classifier model rows — the _IVF_CENTROIDS
-#: discipline: a static corpus trains ONCE per process and downstream
-#: CONSUMERS (calibration) serve the collected 65-row model, while the
-#: training query itself (train_classifier_docs) keeps training live so
-#: the bench's training cost stays honest.  Deterministic (fixed seed
-#: hashing + full-batch gradient), so memoized ≡ retrained.
-_CLF_MODELS: dict = {}
-
-
 def _clf_docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents").withColumn(
         "__lbl", F.when(F.col("lang") == "en", 1.0).otherwise(0.0)
@@ -7024,17 +6973,25 @@ def _clf_docs(spark, sf_dir):
 
 
 def _clf_model_rows(spark, sf_dir):
-    if sf_dir not in _CLF_MODELS:
+    """Trained classifier model rows: a static corpus trains ONCE per
+    session memo and downstream CONSUMERS (calibration) serve the
+    collected 65-row model, while the training query itself
+    (train_classifier_docs) keeps training live so the bench's training
+    cost stays honest.  Deterministic (fixed seed hashing + full-batch
+    gradient), so memoized ≡ retrained."""
+
+    def build():
         from .operators.text import train_linear_classifier
 
-        _CLF_MODELS[sf_dir] = train_linear_classifier(
+        return train_linear_classifier(
             _clf_docs(spark, sf_dir),
             "__lbl",
             n_buckets=_CLF_BUCKETS,
             steps=_CLF_STEPS,
             lr=1.0,
         ).collect()
-    return _CLF_MODELS[sf_dir]
+
+    return memo(spark, "clf_model", sf_dir, ["documents"], build)
 
 
 def _train_clf_sql(steps: int = _CLF_STEPS, nb: int = _CLF_BUCKETS) -> str:
@@ -7092,7 +7049,7 @@ def train_classifier_docs(spark, sf_dir):
     from .operators.text import train_linear_classifier
 
     docs = _clf_docs(spark, sf_dir)
-    # trains LIVE on every call (no _CLF_MODELS read): this query IS the
+    # trains LIVE on every call (no _clf_model_rows read): this query IS the
     # training benchmark; only consumers (calibration) serve the memo
     model = train_linear_classifier(
         docs, "__lbl", n_buckets=_CLF_BUCKETS, steps=_CLF_STEPS, lr=1.0
@@ -7154,7 +7111,7 @@ def classifier_calibration_docs(spark, sf_dir):
     from .operators.text import linear_classifier_score
 
     docs = _clf_docs(spark, sf_dir)
-    # model rows come from the per-process memo (_CLF_MODELS: trained on
+    # model rows come from the session memo (_clf_model_rows: trained on
     # this query's first call, served after; deterministic full-batch
     # gradient, so memoized ≡ retrained and the train→score composition
     # is unchanged — train_classifier_docs still prices training live)
@@ -7498,7 +7455,7 @@ def stream_session_window_events(spark, sf_dir):
     with _stream_shuffle(spark):
         qy = run_to_memory(
             stream_session_windows(
-                stream_events_typed(spark, _staged_events(sf_dir))
+                stream_events_typed(spark, _staged_events(spark, sf_dir))
             ),
             name,
             "complete",
@@ -7544,7 +7501,7 @@ def stream_session_watermark_events(spark, sf_dir):
     with _stream_shuffle(spark):
         qy = run_to_memory(
             stream_session_windows(
-                stream_events_typed(spark, _staged_events(sf_dir)),
+                stream_events_typed(spark, _staged_events(spark, sf_dir)),
                 watermark="1 hour",
             ),
             name,
@@ -7640,14 +7597,6 @@ def entity_clusters_parts(spark, sf_dir):
     )
 
 
-#: per-sf_dir standing ER clustering (built once per process, like the
-#: minhash band stores) — the fold-in queries price the FOLD, which is
-#: their production shape: a live system's standing assignments already
-#: exist when a batch arrives.  The full-recompute build cost is priced
-#: live by entity_clusters_parts.  Disclosed in bench.py's memoized list.
-_ER_STANDING: dict = {}
-
-
 def _er_standing_state(spark, sf_dir):
     """Shared incremental-ER fixture: (batch, clean, standing assignments).
 
@@ -7655,8 +7604,12 @@ def _er_standing_state(spark, sf_dir):
     (odd multiples of 7) and an arriving batch (even multiples), and
     clusters standing ∪ catalog with dedup_survivors — the min-label
     state both the batch fold-in query and its streaming twin start
-    from.  The assignments frame is localCheckpoint-memoized per sf_dir;
-    batch/clean are cheap scans rebuilt per call."""
+    from.  The assignments frame is localCheckpoint-memoized per session
+    (like the minhash band stores) — the fold-in queries price the FOLD,
+    which is their production shape: a live system's standing
+    assignments already exist when a batch arrives.  The full-recompute
+    build cost is priced live by entity_clusters_parts.  batch/clean are
+    cheap scans rebuilt per call."""
     from .operators.linkage import blocked_fuzzy_join
     from .operators.neardup import dedup_survivors
 
@@ -7683,7 +7636,8 @@ def _er_standing_state(spark, sf_dir):
         "p_brand",
         F.col("p_name").alias("cname"),
     )
-    if sf_dir not in _ER_STANDING:
+
+    def build():
         standing_edges = blocked_fuzzy_join(
             standing_dirty, clean,
             block_cols=["p_brand"], dirty_text="name", clean_text="cname",
@@ -7692,7 +7646,7 @@ def _er_standing_state(spark, sf_dir):
         standing_recs = standing_dirty.select("rid").unionByName(
             clean.select(F.col("crid").alias("rid"))
         )
-        _ER_STANDING[sf_dir] = (
+        return (
             dedup_survivors(
                 standing_recs,
                 standing_edges.select("rid", "crid"),
@@ -7701,7 +7655,8 @@ def _er_standing_state(spark, sf_dir):
             .select("rid", "cluster")
             .localCheckpoint(eager=True)
         )
-    return batch, clean, _ER_STANDING[sf_dir]
+
+    return batch, clean, memo(spark, "er_standing", sf_dir, ["part"], build)
 
 
 @q("entity_clusters_incr_parts", _ENTITY_CC_SQL)
@@ -7762,16 +7717,11 @@ def stream_entity_clusters_parts(spark, sf_dir):
     from .streaming.er_stream import run_stream_entity_clusters
 
     batch, clean, assignments = _er_standing_state(spark, sf_dir)
-    key = ("er_batch", sf_dir)
-    if key not in _STREAM_STAGED:
-        import atexit
-        import shutil
-        import tempfile
 
-        staged = tempfile.mkdtemp(prefix="suite_er_stream_")
+    def stage():
+        staged = memo_dir(spark, "suite_er_stream_")
         batch.repartition(4).write.mode("overwrite").parquet(staged)
-        atexit.register(shutil.rmtree, staged, ignore_errors=True)
-        _STREAM_STAGED[key] = staged
+        return staged
 
     def edge_fn(bdf):
         return blocked_fuzzy_join(
@@ -7782,7 +7732,7 @@ def stream_entity_clusters_parts(spark, sf_dir):
 
     final = run_stream_entity_clusters(
         spark,
-        _STREAM_STAGED[key],
+        memo(spark, "er_batch", sf_dir, ["part"], stage),
         "rid string, p_brand string, name string",
         assignments,
         edge_fn,
@@ -8681,7 +8631,7 @@ def stream_drift_psi_events(spark, sf_dir):
         q = run_to_memory(
             stream_drift_counts(
                 spark,
-                _staged_events(sf_dir),
+                _staged_events(spark, sf_dir),
                 split=datetime(2024, 1, 16),
                 now=PINNED_NOW,
             ),
@@ -10241,7 +10191,7 @@ def stream_welch_ttest_events(spark, sf_dir):
         sq = run_to_memory(
             stream_welch_sums(
                 spark,
-                _staged_events(sf_dir),
+                _staged_events(spark, sf_dir),
                 split=datetime(2024, 1, 16),
                 lower=datetime(2024, 1, 1),
                 now=PINNED_NOW,
@@ -11022,52 +10972,24 @@ def leadlag_corr_events(spark, sf_dir):
     )
 
 
-#: per-sf_dir incremental IVF index: centroids trained ONCE on the
-#: standing corpus (vec_id % 5 != 0), standing assignment persisted as a
-#: parquet store — the _MINHASH_STORES pattern for the ANN family.  The
-#: incremental query folds the delta batch in WITHOUT retraining or
-#: touching the standing lists.
-_IVF_INCR_STORES: dict = {}
-
-
 def _ivf_incr_store(spark, sf_dir: str):
-    if sf_dir not in _IVF_INCR_STORES:
-        import atexit
-        import shutil
-        import tempfile
+    """Incremental IVF index: centroids trained ONCE on the standing
+    corpus (vec_id % 5 != 0), standing assignment persisted as a parquet
+    store — the minhash band-store pattern for the ANN family.  The
+    incremental query folds the delta batch in WITHOUT retraining or
+    touching the standing lists."""
 
+    def build():
         from .operators.similarity import ivf_assign, ivf_train
 
         emb = load_table(spark, sf_dir, "embeddings")
         standing = emb.filter(F.col("vec_id") % 5 != 0)
         cents = ivf_train(standing)
-        path = tempfile.mkdtemp(prefix="suite_ivfstore_")
+        path = memo_dir(spark, "suite_ivfstore_")
         ivf_assign(standing, cents).write.mode("overwrite").parquet(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _IVF_INCR_STORES[sf_dir] = (cents, path)
-    return _IVF_INCR_STORES[sf_dir]
+        return cents, path
 
-
-def evict_ivf_stores() -> None:
-    """Drop the memoized IVF stores AND their parquet tempdirs now.
-
-    Cache-clearing tools (invariance sweep, sf1 cold-cache timing) must
-    call this instead of ``_IVF_INCR_STORES.clear()``: a bare clear
-    rebuilds a fresh mkdtemp per eviction and leaks the old directory
-    for the life of the process (the atexit rmtree only fires at exit —
-    and stays harmless afterwards, ignore_errors on a gone path)."""
-    import shutil
-
-    for _cents, path in _IVF_INCR_STORES.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _IVF_INCR_STORES.clear()
-    for _c, _b, path in _IVFPQ_INCR_STORES.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _IVFPQ_INCR_STORES.clear()
-    # the mutual_knn_ivf frozen-centroid memo is IVF-family state too
-    # (driver-side numpy, no tempdir) — cache-clearing tools expect one
-    # call to reset the whole family
-    _MUTUAL_IVF_CENTROIDS.clear()
+    return memo(spark, "ivf_incr_store", sf_dir, ["embeddings"], build)
 
 
 @q("embed_knn_ivf_incr", _KNN_SQL)
@@ -12044,7 +11966,7 @@ def stream_hll_distinct_events(spark, sf_dir):
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", 8)
-        .parquet(_staged_events(sf_dir))
+        .parquet(_staged_events(spark, sf_dir))
         .select("event_type", "user_id")
     )
     name = f"hll_stream_{uuid.uuid4().hex[:8]}"
@@ -12223,7 +12145,7 @@ def stream_quantile_sketch_events(spark, sf_dir):
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", 8)
-        .parquet(_staged_events(sf_dir))
+        .parquet(_staged_events(spark, sf_dir))
         .select("event_type", "event_id", "value")
     )
     name = f"kmins_stream_{uuid.uuid4().hex[:8]}"
@@ -12659,29 +12581,25 @@ JOIN sz sb ON sb.source = e.src_b
 """
 
 
-#: per-sf_dir distinct (source, shingle) set frame — the shared input of
-#: the KMV source-overlap family (overlap/containment estimates + both
-#: audit arms), checkpointed once per process like _SHINGLE_FRAMES: the
-#: frame is deterministic, three queries consume it identically, and at
-#: 100 TB it is built once per corpus snapshot.
-_KMV_SS_FRAMES: dict = {}
-
-
 def _kmv_sources_ss(spark, sf_dir):
     """The distinct (source, shingle) set frame the KMV source family
-    sketches and audits against, checkpointed + memoized per sf_dir."""
+    sketches and audits against (overlap/containment estimates + both
+    audit arms), checkpointed once per session memo: the frame is
+    deterministic, three queries consume it identically, and at 100 TB
+    it is built once per corpus snapshot."""
     from .operators.neardup import shingles
 
-    if sf_dir not in _KMV_SS_FRAMES:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        _KMV_SS_FRAMES[sf_dir] = (
+        return (
             shingles(docs)
             .join(docs.select("doc_id", "source"), "doc_id")
             .select("source", "shingle")
             .distinct()
             .localCheckpoint(eager=True)
         )
-    return _KMV_SS_FRAMES[sf_dir]
+
+    return memo(spark, "kmv_source_shingles", sf_dir, ["documents"], build)
 
 
 def _kmv_sources_audit_frame(spark, sf_dir, est, ss=None):
@@ -12813,7 +12731,7 @@ def stream_kmv_overlap_sources(spark, sf_dir):
         )
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", 8)
-        .parquet(_staged_docs(sf_dir))
+        .parquet(_staged_docs(spark, sf_dir))
         .select("source", "text")
     )
     # duplicates are harmless under the bucketed min (idempotent), so
@@ -13772,16 +13690,6 @@ def mutual_knn_lsh(spark, sf_dir):
     return _mutual_sampled_audit(spark, sf_dir, approx)
 
 
-#: per-sf_dir trained coarse centroids for mutual_knn_ivf: k-means is
-#: corpus-deterministic (bounded md5-free sample + fixed seed), so the
-#: production shape trains ONCE per ingest and every query batch probes
-#: the frozen matrix — the _IVF_INCR_STORES contract without the
-#: assignment store (the reciprocity kernel re-derives lists per run
-#: from the frozen centroids; only the train is worth memoizing).
-#: Driver-side numpy only — no tempdir, evicted with the IVF stores.
-_MUTUAL_IVF_CENTROIDS: dict = {}
-
-
 @q("mutual_knn_ivf", _MUTUAL_SAMPLED_AUDIT_SQL)
 def mutual_knn_ivf(spark, sf_dir):
     """RECIPROCAL BEST MATCH over the IVF candidate generator
@@ -13800,7 +13708,7 @@ def mutual_knn_ivf(spark, sf_dir):
     class lever; measured recall 100% at the check SF, floor-audited
     at 95 by the same sampled exact baseline and shared oracle as
     mutual_knn_lsh).  Centroids are trained ONCE per corpus and
-    reused across runs (_MUTUAL_IVF_CENTROIDS — the production
+    reused across runs (the session memo — the production
     train-per-ingest shape; save_centroids/load_centroids is the
     cross-process form); the train itself stays a bounded-sample
     collect (≤4096 rows) so even the cold run is corpus-size-free.
@@ -13810,16 +13718,21 @@ def mutual_knn_ivf(spark, sf_dir):
     from .operators.similarity import ivf_train, mutual_top1_pairs_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _MUTUAL_IVF_CENTROIDS:
-        # the corpus count only sizes the one-time train — inside the
-        # memo branch so warm runs pay zero extra jobs
+
+    def build():
+        # k-means is corpus-deterministic (bounded md5-free sample +
+        # fixed seed), so the frozen matrix stands in for a retrain; the
+        # reciprocity kernel re-derives lists per run from it, so only
+        # the train is worth memoizing.  The corpus count only sizes the
+        # one-time train — inside the build so warm runs pay zero extra
+        # jobs
         n = emb.count()
-        _MUTUAL_IVF_CENTROIDS[sf_dir] = ivf_train(
-            emb, n_centroids=max(16, n // 512)
-        )
-    approx = mutual_top1_pairs_ivf(
-        emb, nprobe=8, centroids=_MUTUAL_IVF_CENTROIDS[sf_dir]
-    ).select("vec_a", "vec_b")
+        return ivf_train(emb, n_centroids=max(16, n // 512))
+
+    cents = memo(spark, "mutual_ivf_centroids", sf_dir, ["embeddings"], build)
+    approx = mutual_top1_pairs_ivf(emb, nprobe=8, centroids=cents).select(
+        "vec_a", "vec_b"
+    )
     return _mutual_sampled_audit(spark, sf_dir, approx)
 
 
@@ -13846,7 +13759,7 @@ def stream_cms_heavy_hitters(spark, sf_dir):
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", 8)
-        .parquet(_staged_events(sf_dir))
+        .parquet(_staged_events(spark, sf_dir))
         .select("user_id")
     )
     name = f"cms_stream_{uuid.uuid4().hex[:8]}"

@@ -145,7 +145,25 @@ sf = {sf!r}
 con, qs, osql = duck_connect(sf), suite.queries(), suite.oracle_sql()
 for attempt in range(2):
     spark = get_spark(master="local[2]")
-    for name in ("pagerank_cust_supp", "bfs_khop_custsupp"):
+    for name in (
+        "pagerank_cust_supp",
+        "bfs_khop_custsupp",
+        "hits_cust_supp",
+        "jaccard_neardup_docs",
+        "rrf_fusion_docs",
+        "kmv_overlap_sources",
+        "entity_clusters_incr_parts",
+        "embed_knn_ivf",
+        "embed_knn_pq",
+        "embed_knn_ivfpq",
+        "embed_knn_ivfpq_incr",
+        "embed_knn_ivf_incr",
+        "mutual_knn_ivf",
+        "classifier_calibration_docs",
+        "minhash_incremental_docs",
+        "svc_phase1_streaming",
+        "csv_scan_orders",
+    ):
         df = qs[name](spark, sf)
         cur = con.execute(osql[name])
         want = normalize(cur.fetchall(), [d[0] for d in cur.description])
@@ -156,11 +174,13 @@ print("ok")
 
 
 def test_edge_memo_survives_session_restart(tmp_path):
-    """pagerank_cust_supp and bfs_khop_custsupp read the memoized
-    customer–supplier edges; after the session is stopped and created
-    again both must rebuild them in the new session and still match
-    their oracles, not read a checkpoint of the dead session.  Runs in
-    a subprocess so the shared test session is untouched."""
+    """One consumer of each kind of memoized artifact (checkpointed
+    edges, pair and shingle frames, centroids, codebooks, model rows,
+    band stores, staged fixtures) matches its oracle; after the session
+    is stopped and created again each must rebuild its artifact in the
+    new session and still match, not read a checkpoint of the dead
+    session.  Runs in a subprocess so the shared test session is
+    untouched."""
     import subprocess
     import sys
 

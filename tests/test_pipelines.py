@@ -2,7 +2,9 @@
 
 import datetime
 import os
+import shutil
 
+import pytest
 from conftest import SF_DIR
 
 from elastic_asset_etl_poc_spark.plans.assets import collect_pods, collect_services
@@ -341,6 +343,87 @@ def test_asset_collectors_see_appended_event_files(spark, tmp_path):
         spark.catalog.clearCache()
     assert early != fresh  # the held-out file changes the assets
     assert after == fresh
+
+
+def test_memo_rebuilds_after_table_rewrite(spark, tmp_path):
+    """The session memo stamps each artifact with the file identity of
+    its tables: after documents and embeddings are rewritten, the
+    memoized near-dup pairs and IVF centroids are rebuilt, and both
+    queries match their oracles on the new files."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from oracle_check import duck_connect, normalize
+
+    from elastic_asset_etl_poc_spark import suite
+    from elastic_asset_etl_poc_spark.sources.registry import memo_counts
+
+    for f in os.listdir(SF_DIR):
+        shutil.copyfile(os.path.join(SF_DIR, f), tmp_path / f)
+    sf = str(tmp_path)
+    qs = suite.queries()
+    oracles = {
+        "jaccard_neardup_docs": suite.oracle_sql()["jaccard_neardup_docs"],
+        # the suite's literal row states 5 query vectors (ids 0-4); on a
+        # rewritten corpus the count of those ids still present replaces it
+        "embed_knn_ivf": "SELECT count(*) AS n_queries, 10 AS k, "
+        "true AS recall_at_k_ge_060 FROM embeddings WHERE vec_id < 5",
+    }
+
+    def check():
+        con = duck_connect(sf)
+        built, served = memo_counts(spark)
+        for name, sql in oracles.items():
+            df = qs[name](spark, sf)
+            cur = con.execute(sql)
+            want = normalize(cur.fetchall(), [d[0] for d in cur.description])
+            assert normalize(df.collect(), df.columns) == want, name
+        # one build each (pairs, centroids), nothing served from before
+        assert memo_counts(spark) == (built + 2, served)
+
+    check()
+    for table, key in (("documents", "doc_id"), ("embeddings", "vec_id")):
+        path = tmp_path / f"{table}.parquet"
+        rows = pq.read_table(path)
+        even = pc.equal(pc.bit_wise_and(rows[key], 1), 0)
+        pq.write_table(rows.filter(even), path)
+    check()
+
+
+def test_memo_clear_releases_checkpoints_and_dirs(spark):
+    """clear(spark) frees a memoized checkpoint's blocks, removes the
+    memo's temp dirs, and makes the next call build, not serve."""
+    from elastic_asset_etl_poc_spark import suite
+    from elastic_asset_etl_poc_spark.sources.registry import clear, memo_counts
+
+    qs = suite.queries()
+    for _ in range(2):  # the cold call builds, the warm call serves
+        pairs = qs["jaccard_neardup_docs"](spark, SF_DIR)
+        qs["minhash_incremental_docs"](spark, SF_DIR)
+    store = suite._minhash_store(spark, SF_DIR)
+    rdd_id = pairs._jdf.queryExecution().analyzed().rdd().id()
+    jsc = spark.sparkContext._jsc
+    assert jsc.getPersistentRDDs().containsKey(rdd_id)
+    assert os.path.isdir(store)
+
+    clear(spark)
+    assert not jsc.getPersistentRDDs().containsKey(rdd_id)
+    assert not os.path.exists(store)
+    built, served = memo_counts(spark)
+    qs["jaccard_neardup_docs"](spark, SF_DIR)
+    assert memo_counts(spark) == (built + 1, served)
+
+
+def test_missing_table_path_leaves_no_reader_state(spark, tmp_path):
+    """A table whose path does not exist is read uncached: the reader
+    memo gains no entry, not even an empty one for the session."""
+    from pyspark.errors import AnalysisException
+
+    from elastic_asset_etl_poc_spark.sources import registry
+
+    session = spark.newSession()
+    with pytest.raises(AnalysisException):
+        registry.load_table(session, str(tmp_path), "orders")
+    assert session not in registry._RAW_FRAMES
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):

@@ -8,9 +8,9 @@ claim for all 200 queries, not a sampled one.
 
 Queries that are themselves seed-fixed but ENVIRONMENT-bound (streaming
 drains re-stage sources; memoized pair frames are built once per
-process) still run — the memo caches are cleared between partition
-settings where the suite exposes them, mirroring the scale-smoke
-cold-cache discipline.
+session) still run — the session memo is cleared between partition
+settings (``sources.registry.clear``), so both settings rebuild every
+memoized artifact, mirroring the scale-smoke cold-cache discipline.
 
 Usage: python3 tools/invariance_sweep.py [--out INVARIANCE_r10.md]
 """
@@ -45,20 +45,6 @@ def normalized(df):
     return sorted(out)
 
 
-def clear_memos():
-    """Reset the per-process memo caches the suite exposes, so both
-    partition settings rebuild their artifacts."""
-    from elastic_asset_etl_poc_spark import suite
-
-    for attr in ("_PAIR_FRAMES", "_SHINGLE_FRAMES", "_KMV_SS_FRAMES"):
-        cache = getattr(suite, attr, None)
-        if isinstance(cache, dict):
-            cache.clear()
-    # IVF stores own a parquet tempdir each — evict via the suite helper
-    # so the directory is removed now, not leaked until process exit
-    suite.evict_ivf_stores()
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default=None)
@@ -66,6 +52,7 @@ def main() -> None:
 
     import __spark_entry__ as e
     from elastic_asset_etl_poc_spark.session import get_spark
+    from elastic_asset_etl_poc_spark.sources.registry import clear
 
     spark = get_spark(app_name="invariance_sweep")
     qs = dict(sorted(e.queries().items()))
@@ -76,7 +63,7 @@ def main() -> None:
             runs = []
             for n in ("5", "32"):
                 spark.conf.set("spark.sql.shuffle.partitions", n)
-                clear_memos()
+                clear(spark)
                 runs.append(normalized(fn(spark, SF_DIR)))
             (ok if runs[0] == runs[1] else bad).append(name)
             if runs[0] != runs[1]:

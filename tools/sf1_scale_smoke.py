@@ -331,24 +331,25 @@ def slope_failures(results: dict) -> list:
     ]
     return out
 
-#: queries whose timing must include the shared-pair-frame build: the
-#: suite memoizes _shared_pairs per (sf_dir, kind) so serving is ~0.02s —
-#: clearing before every run keeps the slope assertion honest
+#: queries whose timing must include their memoized build: the suite
+#: memoizes e.g. the shared pair frames per session so serving is ~0.02s
+#: — clearing the session memo (sources.registry.clear) before every
+#: run keeps the slope assertion honest
 COLD_CACHES = {
     "jaccard_neardup_docs",
     "minhash_neardup_docs",
     "dedup_survivors_minhash",
     "cluster_split_docs",
-    # _SHINGLE_FRAMES consumers: clearing prices the shingle build
+    # shared shingle frame consumers: clearing prices the shingle build
     "rrf_fusion_docs",
     "mmr_rerank_docs",
-    # _IVF_INCR_STORES consumer: clearing prices train+standing assign
+    # incremental IVF store consumer: clearing prices train+standing assign
     "embed_knn_ivf_incr",
-    # _IVFPQ_INCR_STORES consumer (evict_ivf_stores clears it too):
-    # clearing prices both tiers' training + the standing assign
+    # incremental IVF-PQ store consumer: clearing prices both tiers'
+    # training + the standing assign
     "embed_knn_ivfpq_incr",
-    # _KMV_SS_FRAMES consumers: clearing prices the (source, shingle)
-    # set-frame build, the dominant cost of the KMV source family
+    # KMV (source, shingle) frame consumers: clearing prices the set-frame
+    # build, the dominant cost of the KMV source family
     # (kmv_incremental_sources builds its own doc-granularity frame)
     "kmv_overlap_sources",
     "stream_kmv_overlap_sources",
@@ -453,9 +454,12 @@ def _child_time(name: str, sf_dir: str, runs: int) -> None:
     like tools/solo_retime.py, then best-of-``runs`` the query at
     ``sf_dir``.  Prints ``CHILD_BEST <sec>`` for the parent."""
     import __spark_entry__ as e
-    from elastic_asset_etl_poc_spark import suite
     from elastic_asset_etl_poc_spark.session import get_spark
-    from elastic_asset_etl_poc_spark.sources.registry import TABLES, load_table
+    from elastic_asset_etl_poc_spark.sources.registry import (
+        TABLES,
+        clear,
+        load_table,
+    )
 
     spark = get_spark(app_name=f"sf1_scale_fresh_{name}")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -465,10 +469,7 @@ def _child_time(name: str, sf_dir: str, runs: int) -> None:
 
     def _cold():
         if name in COLD_CACHES:
-            suite._PAIR_FRAMES.clear()
-            suite._SHINGLE_FRAMES.clear()
-            suite._KMV_SS_FRAMES.clear()
-            suite.evict_ivf_stores()
+            clear(spark)
 
     # one UNTIMED warm execution first: the first run of a heavy query
     # in a fresh JVM pays 2-3× its steady state in JIT compilation
@@ -582,7 +583,7 @@ def main() -> None:
         # band audit below re-creates a session afterwards
         spark.stop()
 
-    from elastic_asset_etl_poc_spark import suite
+    from elastic_asset_etl_poc_spark.sources.registry import clear
 
     qs = e.queries()
     heavy = HEAVY if args.only is None else [
@@ -611,13 +612,7 @@ def main() -> None:
             best = None
             for _ in range(args.runs):
                 if name in COLD_CACHES:
-                    suite._PAIR_FRAMES.clear()
-                    suite._SHINGLE_FRAMES.clear()
-                    suite._KMV_SS_FRAMES.clear()
-                    # evict (rmtree + clear), not bare clear: each
-                    # rebuild mkdtemps a fresh IVF store and a bare
-                    # clear leaks the old dir until process exit
-                    suite.evict_ivf_stores()
+                    clear(spark)
                 t0 = time.time()
                 qs[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
