@@ -33,7 +33,7 @@ from ..operators.dedup import collapse_top1
 from ..operators.filters import exists_all, exists_any, time_window
 from ..operators.graph import group_collect_edges
 from ..functions.scalar import make_ean
-from ..sources.registry import union_scan
+from ..sources.registry import memo, union_scan
 from ..sources.signals import signals_view
 from .services import PINNED_NOW
 
@@ -43,29 +43,17 @@ COLLECT_LOOKBACK_DAYS = 10  # fixture-scale analog of `gte: now-1h`
 def _with_eans(df: DataFrame) -> DataFrame:
     """X1 EANs for every linkable entity on the row
     (lib/collectServices.ts:94-97)."""
-    return (
-        df.withColumn("service_ean", make_ean("service", F.col("`service.name`")))
-        .withColumn(
-            "container_ean",
-            F.when(
-                F.col("`container.id`").isNotNull(),
-                make_ean("container", F.col("`container.id`")),
-            ),
-        )
-        .withColumn(
-            "pod_ean",
-            F.when(
-                F.col("`kubernetes.pod.uid`").isNotNull(),
-                make_ean("k8s.pod", F.col("`kubernetes.pod.uid`")),
-            ),
-        )
-        .withColumn(
-            "node_ean",
-            F.when(
-                F.col("`kubernetes.node.name`").isNotNull(),
-                make_ean("k8s.node", F.col("`kubernetes.node.name`")),
-            ),
-        )
+
+    def ean(kind: str, col: str):
+        return F.when(F.col(f"`{col}`").isNotNull(), make_ean(kind, F.col(f"`{col}`")))
+
+    return df.withColumns(
+        {
+            "service_ean": make_ean("service", F.col("`service.name`")),
+            "container_ean": ean("container", "container.id"),
+            "pod_ean": ean("k8s.pod", "kubernetes.pod.uid"),
+            "node_ean": ean("k8s.node", "kubernetes.node.name"),
+        }
     )
 
 
@@ -81,16 +69,26 @@ def collect_services(
     Returns ``(services, containers)`` in SimpleAsset column layout.
     """
     window = (now - timedelta(days=lookback_days), now)
-    sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
-    sig = time_window(sig, "@timestamp", now, lookback_days, "d")
-    sig = sig.filter(F.col("`service.name`").isNotNull())  # must: exists (F4)
-    sig = exists_any(  # should, minimum_should_match: 1 (F5)
-        sig, "container.id", "kubernetes.pod.uid", "host.name", "host.hostname"
-    )
-    top = collapse_top1(sig, "service.name", "@timestamp", tiebreak="event.id")
-    if limit_groups:  # Q5 bug-compat switch
-        top = top.orderBy(F.col("`@timestamp`").desc()).limit(limit_groups)
-    top = _with_eans(top).cache()  # reused by both asset outputs
+
+    def build() -> DataFrame:
+        sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
+        sig = time_window(sig, "@timestamp", now, lookback_days, "d")
+        sig = sig.filter(F.col("`service.name`").isNotNull())  # must: exists (F4)
+        sig = exists_any(  # should, minimum_should_match: 1 (F5)
+            sig, "container.id", "kubernetes.pod.uid", "host.name", "host.hostname"
+        )
+        top = collapse_top1(sig, "service.name", "@timestamp", tiebreak="event.id")
+        if limit_groups:  # Q5 bug-compat switch
+            top = top.orderBy(F.col("`@timestamp`").desc()).limit(limit_groups)
+        return _with_eans(top)
+
+    # One cached top, reused by both asset outputs, is held per collector,
+    # session and sf_dir: a call for another window, or after the events
+    # files changed, releases the held frame, so ticks with an advancing
+    # ``now`` hold one frame.  cache() on a served frame is a no-op unless
+    # its cache was cleared (catalog.clearCache), which it then restores.
+    params = (window, limit_groups)
+    top = memo(spark, "assets.services_top", sf_dir, ["events"], build, params).cache()
 
     services = top.select(
         F.lit(now).alias("@timestamp"),
@@ -152,15 +150,22 @@ def collect_pods(
     signal kind, unioned by name.
     """
     window = (now - timedelta(days=lookback_days), now)
-    sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
-    logs = sig.filter(F.col("`metricset.name`").isin("click", "view", "error"))
-    apm = sig.filter(F.col("`metricset.name`").isin("purchase", "signup"))
-    both = union_scan(logs, apm)
 
-    both = time_window(both, "@timestamp", now, lookback_days, "d")
-    both = exists_all(both, "kubernetes.pod.uid", "kubernetes.node.name")  # F4 (must ×2)
-    top = collapse_top1(both, "kubernetes.pod.uid", "@timestamp", tiebreak="event.id")
-    top = _with_eans(top).cache()
+    def build() -> DataFrame:
+        sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
+        logs = sig.filter(F.col("`metricset.name`").isin("click", "view", "error"))
+        apm = sig.filter(F.col("`metricset.name`").isin("purchase", "signup"))
+        both = union_scan(logs, apm)
+
+        both = time_window(both, "@timestamp", now, lookback_days, "d")
+        # F4 (must ×2)
+        both = exists_all(both, "kubernetes.pod.uid", "kubernetes.node.name")
+        top = collapse_top1(
+            both, "kubernetes.pod.uid", "@timestamp", tiebreak="event.id"
+        )
+        return _with_eans(top)
+
+    top = memo(spark, "assets.pods_top", sf_dir, ["events"], build, window).cache()
 
     pods = top.select(
         F.lit(now).alias("@timestamp"),

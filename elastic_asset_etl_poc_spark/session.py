@@ -10,6 +10,16 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
     dynamic join-strategy switching replace hand-tuned shuffle counts.
   * ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; on a
     real cluster set it ~2-3× total cores and let AQE coalesce.
+  * Cached plans are coalesced too.  Spark's default keeps a ``.cache()``d
+    plan at the pre-AQE width: the asset collectors' cached top frames
+    (20 services, 40 pods) would hold 32 partitions each, and every stage
+    over them, the upsert batch's included, would run a task per empty
+    partition.  Allowing AQE to change a cached plan's output
+    partitioning sizes it by bytes like every uncached plan; a consumer
+    that could have reused the cached hash layout pays a shuffle instead.
+  * The driver heap defaults to half the host's RAM (``/proc/meminfo``
+    MemTotal), so a small host never gets a heap larger than its memory;
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
   * nanosAsLong: an events file written as TIMESTAMP(NANOS), which the
     vectorized Parquet reader rejects, is read as a ns long and converted
     to microsecond timestamps at the source boundary
@@ -28,6 +38,17 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+
+
+def default_driver_memory() -> str:
+    """Half the host's MemTotal as a JVM size (``"7500m"``), or Spark's
+    ``"1g"`` when ``/proc/meminfo`` is unreadable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "1g"
+    return f"{kb // 2 // 1024}m"
 
 
 def get_spark(
@@ -50,13 +71,19 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # ...and coalesce cached plans as well: by default a .cache()d plan
+        # keeps all shuffle.partitions, mostly empty at this scale, and
+        # every stage reading it pays a task per partition.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.shuffle.partitions", str(max(32, cpus)))
         # Local-mode heap: Spark's 1g default thrashes GC on shuffle-heavy
         # work long before this box's RAM matters (the sf1 smoke OOM'd the
-        # driver JVM at 1g).  Only honored at JVM launch — a pre-existing
-        # session (driver-owned harness) keeps its own setting.
+        # driver JVM at 1g).  Half the host's RAM by default, so the heap
+        # never exceeds the machine.  Only honored at JVM launch — a
+        # pre-existing session (driver-owned harness) keeps its own setting.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         # Dims (region/nation/customer at test SF) should broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

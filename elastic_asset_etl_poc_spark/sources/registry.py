@@ -150,7 +150,8 @@ class _Memo:
 
 
 #: per-session build-once artifacts of the query suite (checkpointed
-#: frames, trained centroids and codebooks, model rows, staged stores).
+#: frames, trained centroids and codebooks, model rows, staged stores)
+#: and the asset collectors' cached top frames.
 #: Weakly keyed on the live SparkSession like ``_RAW_FRAMES``: a local
 #: checkpoint lives in its session's block manager, so a session stopped
 #: and created again builds afresh and never reads a dead session's
@@ -168,27 +169,31 @@ def memo(
     sf_dir: str,
     tables: Sequence[str],
     build: Callable[[], Any],
+    params: Hashable = (),
 ) -> Any:
     """``build()`` once per session, ``kind``, ``sf_dir`` and file
     identity of ``tables``; later calls serve the stored value.
 
-    ``kind`` names the artifact and carries any build parameters.  When
-    one of ``tables`` is rewritten the next call rebuilds and releases
-    the superseded value.  A DataFrame the build returns, bare or in a
-    tuple, must be a local checkpoint: releasing frees its blocks.  A
-    directory it holds must come from :func:`memo_dir`."""
+    ``kind`` names the artifact; artifacts of different kinds are held
+    side by side.  ``params`` are build inputs that supersede rather
+    than add: a call whose ``params`` differ from the held entry's, like
+    a call after one of ``tables`` was rewritten, builds afresh and
+    releases the held value, so at most one value per ``kind`` and
+    ``sf_dir`` is held.  A DataFrame the build returns, bare or in a
+    tuple, must be a local checkpoint or ``.cache()``d: releasing frees
+    its blocks.  A directory it holds must come from :func:`memo_dir`."""
     state = _MEMOS.setdefault(spark, _Memo())
     key = (kind, sf_dir)
-    ident = tuple(table_identity(sf_dir, t) for t in tables)
+    stamp = (tuple(table_identity(sf_dir, t) for t in tables), params)
     held = state.entries.get(key)
     if held is not None:
-        if held[0] == ident:
+        if held[0] == stamp:
             state.served += 1
             return held[1]
         del state.entries[key]
         _release(state, held[1])
     value = build()
-    state.entries[key] = (ident, value)
+    state.entries[key] = (stamp, value)
     state.built += 1
     return value
 
@@ -212,7 +217,10 @@ def memo_counts(spark: SparkSession) -> tuple[int, int]:
 def _release(state: _Memo, value: Any) -> None:
     for part in value if isinstance(value, tuple) else (value,):
         if isinstance(part, DataFrame):
-            release_checkpoint(part)
+            if part.is_cached:
+                part.unpersist(blocking=False)
+            else:
+                release_checkpoint(part)
         elif isinstance(part, str) and part in state.dirs:
             state.dirs.remove(part)
             shutil.rmtree(part, ignore_errors=True)
@@ -225,7 +233,7 @@ def clear(spark: SparkSession) -> None:
     state = _MEMOS.get(spark)
     if state is None:
         return
-    for _ident, value in state.entries.values():
+    for _stamp, value in state.entries.values():
         _release(state, value)
     state.entries.clear()
     for path in state.dirs:

@@ -1,5 +1,9 @@
 """Catalog/env-switch (S3/S10) and error-observability (§2.11) tests."""
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from elastic_asset_etl_poc_spark.config import Catalog
@@ -166,3 +170,33 @@ def test_observed_metrics_ride_the_action(spark):
     assert got["n_rows"] == 100       # observation saw pre-filter rows
     assert got["n_nonnull"] == 90
     assert got["id_sum"] == sum(range(100))
+
+
+_DRIVER_MEM = """
+import sys
+sys.path.insert(0, {root!r})
+from elastic_asset_etl_poc_spark.session import get_spark
+spark = get_spark(master="local[1]")
+print(spark.sparkContext.getConf().get("spark.driver.memory"))
+spark.stop()
+"""
+
+
+def test_default_driver_heap_fits_the_host(tmp_path):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is sized from the
+    host: a fresh session's spark.driver.memory is at most MemTotal."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "driver_mem.py"
+    script.write_text(_DRIVER_MEM.format(root=root))
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DRIVER_MEM"}
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        capture_output=True, text=True, timeout=300, env=env, cwd=tmp_path,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    size = out.stdout.strip().splitlines()[-1].lower()
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    heap = int(size[:-1]) * units[size[-1]] if size[-1] in units else int(size)
+    with open("/proc/meminfo") as fh:
+        mem_kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    assert 0 < heap <= mem_kb * 1024

@@ -345,6 +345,43 @@ def test_asset_collectors_see_appended_event_files(spark, tmp_path):
     assert after == fresh
 
 
+def test_asset_collector_frames_are_sized_by_aqe(spark):
+    """AQE may coalesce the collectors' cached top frames: after a warm
+    call the asset frames hold at most defaultParallelism partitions,
+    not the pre-AQE ``spark.sql.shuffle.partitions`` (32)."""
+    for _ in range(2):  # the cold call caches the top frames
+        frames = [*collect_services(spark, SF_DIR), *collect_pods(spark, SF_DIR)]
+        for df in frames:
+            df.count()
+    width = spark.sparkContext.defaultParallelism
+    services, _, pods, _ = frames
+    assert services.rdd.getNumPartitions() <= width
+    assert pods.rdd.getNumPartitions() <= width
+
+
+def test_asset_collectors_hold_one_frame_per_window(spark):
+    """Ticks with an advancing ``now`` each cache a new top frame per
+    collector; the superseded one is released, so the persisted RDDs
+    stay flat over the ticks.  A call for the held window serves it."""
+    from elastic_asset_etl_poc_spark.plans.services import PINNED_NOW
+    from elastic_asset_etl_poc_spark.sources.registry import memo_counts
+
+    jsc = spark.sparkContext._jsc
+
+    def tick(now):
+        services = collect_services(spark, SF_DIR, now=now)
+        for df in (*services, *collect_pods(spark, SF_DIR, now=now)):
+            df.count()
+        return jsc.getPersistentRDDs().size()
+
+    nows = [PINNED_NOW + datetime.timedelta(minutes=m) for m in range(4)]
+    persisted = [tick(now) for now in nows]
+    assert persisted == [persisted[0]] * 4
+    built, served = memo_counts(spark)
+    assert tick(nows[-1]) == persisted[0]
+    assert memo_counts(spark) == (built, served + 2)
+
+
 def test_memo_rebuilds_after_table_rewrite(spark, tmp_path):
     """The session memo stamps each artifact with the file identity of
     its tables: after documents and embeddings are rewritten, the
