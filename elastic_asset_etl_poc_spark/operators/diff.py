@@ -86,7 +86,6 @@ def apply_cdc(
     keys: Sequence[str],
     op_col: str = "op",
     seq_col: str = "seq",
-    broadcast_changes: bool = True,
 ) -> DataFrame:
     """MERGE a CDC change stream into a base snapshot → the new snapshot.
 
@@ -111,9 +110,11 @@ def apply_cdc(
     smaller than the base) is compacted with ONE window shuffle on
     ``keys``; the base is never shuffled — superseded rows are removed
     with a broadcast anti-join on the compacted change KEYS and the
-    surviving changes are unioned on.  With ``broadcast_changes=False``
-    (change batch too big to broadcast) the anti-join falls back to a
-    shuffle join on keys, still one exchange of the base.
+    surviving changes are unioned on.  Contract: the change keys must
+    fit in a broadcast.  The hint is unconditional because the planner
+    cannot see that they do — the compacted frame's size estimate is
+    inflated by its lazy checkpoint — and no job runs before the join
+    that could observe the key count.
     """
     from pyspark.sql.window import Window
 
@@ -142,9 +143,7 @@ def apply_cdc(
         .localCheckpoint(eager=False)
     )
     value_cols = [c for c in base.columns]
-    touched = latest.select(*keys)
-    if broadcast_changes:
-        touched = F.broadcast(touched)
+    touched = F.broadcast(latest.select(*keys))
     untouched = base.join(touched, list(keys), "left_anti")
     upserts = latest.filter(F.col(op_col) != "D").select(*value_cols)
     return untouched.unionByName(upserts)
@@ -156,7 +155,6 @@ def incremental_rollup(
     touched_keys: DataFrame,
     keys: Sequence[str],
     agg_col: str,
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """Maintain a ``(keys..., n_rows, total)`` rollup incrementally:
     groups NOT in ``touched_keys`` pass through from ``old_rollup``
@@ -173,16 +171,17 @@ def incremental_rollup(
     hash-checks.  Groups that vanished entirely disappear (recompute
     yields no row); brand-new groups appear.
 
-    Scale shape: the touched-key set is diff-sized (broadcast by
-    default; ``broadcast_touched=False`` for a shuffle join when a
-    reorg touches everything) — the old rollup is pruned with a
-    map-side anti-join and ``new_base`` with a map-side semi-join, so
-    the only aggregation shuffle is over the touched slice, not
-    history.  On a base partitioned/bucketed by the group keys the
-    semi-join prunes at the scan.
+    Scale shape: the touched-key set is diff-sized and broadcast — the
+    old rollup is pruned with a map-side anti-join and ``new_base`` with
+    a map-side semi-join, so the only aggregation shuffle is over the
+    touched slice, not history.  On a base partitioned/bucketed by the
+    group keys the semi-join prunes at the scan.  Contract: the touched
+    keys must fit in a broadcast.  The hint is unconditional because
+    the planner cannot see that they do — a join-built key frame's
+    size estimate is inflated — and no job runs before the joins that
+    could observe the key count.
     """
-    t = touched_keys.select(*keys).distinct()
-    tb = F.broadcast(t) if broadcast_touched else t
+    tb = F.broadcast(touched_keys.select(*keys).distinct())
     untouched = old_rollup.join(tb, list(keys), "left_anti")
     recomputed = (
         new_base.join(tb, list(keys), "left_semi")

@@ -465,7 +465,6 @@ def kcore_membership(
     edges: DataFrame,
     k: int,
     max_rounds: int = 12,
-    max_broadcast_nodes: int = MAX_BROADCAST_NODES,
 ) -> DataFrame:
     """k-CORE decomposition (membership for fixed k): iteratively peel
     nodes of degree < k until the remaining subgraph is stable — the
@@ -498,11 +497,10 @@ def kcore_membership(
     node id; the survivor set broadcasts only while it FITS — the
     per-round survivor filter is SIZE-GATED on the node count the
     fixpoint agg already produced (no extra action): ≤
-    ``max_broadcast_nodes`` survivors ride a broadcast semi-join, a
+    ``MAX_BROADCAST_NODES`` survivors ride a broadcast semi-join, a
     larger core (a billion-node web graph) falls back to a shuffled
     semi-join instead of detonating the broadcast budget — the bloom
-    auto-sizing precedent.  Both paths are property-tested equal; the
-    default threshold is the module's ``MAX_BROADCAST_NODES``.
+    auto-sizing precedent.  Both paths are property-tested equal.
     """
     fp = _Fixpoint("kcore_membership", max_rounds)
     cur, _ = fp.checkpoint(edges.select("src", "dst"))
@@ -519,13 +517,14 @@ def kcore_membership(
         if not m["n_below"]:  # None (empty frame) or 0: stable
             fp.finish()
             return deg.select("node", F.col("__d").alias("core_degree"))
-        keep = deg.filter(F.col("__d") >= k).select("node")
         # size gate: survivors ≤ n, observed above
-        bc = F.broadcast if m["n"] <= max_broadcast_nodes else (lambda d: d)
+        keep = _broadcast_if_small(
+            deg.filter(F.col("__d") >= k).select("node"), m["n"]
+        )
         cur, _ = fp.checkpoint(
-            cur.join(bc(keep.select(F.col("node").alias("src"))), "src",
+            cur.join(keep.select(F.col("node").alias("src")), "src",
                      "left_semi")
-            .join(bc(keep.select(F.col("node").alias("dst"))), "dst",
+            .join(keep.select(F.col("node").alias("dst")), "dst",
                   "left_semi")
             .select("src", "dst")
         )

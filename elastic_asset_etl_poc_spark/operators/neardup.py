@@ -251,7 +251,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation, exact-Jaccard verified.
 
@@ -266,21 +265,16 @@ def minhash_lsh_pairs(
     At 100 TB this is the scale path: cost O(docs·hashes), no all-pairs
     shingle join.
 
-    Signature kernels (bit-identical integer math, switch freely):
-      * JVM: ``num_hashes`` min-aggregates in one hash-agg.  Above ~32
-        aggregates the generated method exceeds JIT limits and runs
-        interpreted (~3s/260k rows local) — fine on a cluster, slow on
-        one box.
-      * numpy (default when ``num_hashes ≥ 32``): ``collect_list`` the
-        base hashes per doc (same single shuffle), then one Arrow
-        ``mapInPandas`` computes all ``(a·x + b) mod p`` minima
-        vectorized.  ``vectorized=`` forces either path.
+    Signature kernel: ``collect_list`` the base hashes per doc (one
+    shuffle), then one Arrow ``mapInPandas`` computes all
+    ``(a·x + b) mod p`` minima vectorized — ``num_hashes`` JVM
+    min-aggregates would exceed the codegen method limit and run
+    interpreted.
 
-    Memory note: the numpy path materializes one row per doc holding all
+    Memory note: the kernel materializes one row per doc holding all
     its distinct shingle hashes — typical documents are 10³-10⁴ shingles
     (KBs); a pathological machine-generated doc with ≥10⁷ shingles should
-    be length-truncated upstream (quality filters do this anyway) or run
-    with ``vectorized=False``, which streams the aggregation.
+    be length-truncated upstream (quality filters do this anyway).
     """
     buckets, sh = _minhash_buckets(
         df,
@@ -289,7 +283,6 @@ def minhash_lsh_pairs(
         bands=bands,
         text_col=text_col,
         id_col=id_col,
-        vectorized=vectorized,
     )
     ca = buckets.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
     cb = buckets.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
@@ -332,7 +325,6 @@ def _minhash_buckets(
     bands: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-    vectorized: bool | None = None,
 ):
     """Shared MinHash signature + banded-bucket stage →
     (buckets(doc_id, band, bucket), sh(doc_id, shingle)) — the exact
@@ -348,57 +340,48 @@ def _minhash_buckets(
     )
 
     # Affine permutation family over one base hash: mh_i = min over shingles
-    # of pmod(a_i·x + b_i, p), x = xxhash64(shingle).  One row per
-    # (doc, shingle) with num_hashes cheap agg expressions — no ×num_hashes
-    # row blowup (the naive seed cross join is ~10× slower at 5k docs and
-    # catastrophically worse at 100 TB).  Constants from a fixed PRNG seed.
+    # of pmod(a_i·x + b_i, p), x = xxhash64(shingle).  One row per doc
+    # holding its base hashes — no ×num_hashes row blowup (the naive seed
+    # cross join is ~10× slower at 5k docs and catastrophically worse at
+    # 100 TB).  Constants from a fixed PRNG seed.
     import random
 
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
     rng = random.Random(0x5EED)
-    p = (1 << 31) - 1  # Mersenne prime; a·x + b < 2^62 keeps ANSI int64 happy
+    p = (1 << 31) - 1  # Mersenne prime
     coeffs = [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_hashes)]
     xed = sh.withColumn("x", F.pmod(F.xxhash64("shingle"), F.lit(p)))  # hash once
-    use_numpy = vectorized if vectorized is not None else num_hashes >= 32
-    if use_numpy:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+    A = np.array([a for a, _ in coeffs], dtype=np.int64)
+    B = np.array([b for _, b in coeffs], dtype=np.int64)
+    idtype = df.schema[id_col].dataType
+    sig_schema = T.StructType(
+        [T.StructField("doc_id", idtype)]
+        + [T.StructField(f"mh{i}", T.LongType()) for i in range(num_hashes)]
+    )
 
-        A = np.array([a for a, _ in coeffs], dtype=np.int64)
-        B = np.array([b for _, b in coeffs], dtype=np.int64)
-        idtype = df.schema[id_col].dataType
-        sig_schema = T.StructType(
-            [T.StructField("doc_id", idtype)]
-            + [T.StructField(f"mh{i}", T.LongType()) for i in range(num_hashes)]
-        )
+    def signatures(it):
+        for pdf in it:
+            m = len(pdf)
+            if m == 0:
+                continue
+            mh = np.empty((m, num_hashes), dtype=np.int64)
+            for i, xs in enumerate(pdf["xs"]):
+                x = np.asarray(xs, dtype=np.int64)
+                # a < p < 2^31 and x < p keep a·x + b < 2^62: no overflow
+                mh[i] = ((A[:, None] * x[None, :] + B[:, None]) % p).min(axis=1)
+            out = {"doc_id": pdf["doc_id"]}
+            for j in range(num_hashes):
+                out[f"mh{j}"] = mh[:, j]
+            yield pd.DataFrame(out)
 
-        def signatures(it):
-            for pdf in it:
-                m = len(pdf)
-                if m == 0:
-                    continue
-                mh = np.empty((m, num_hashes), dtype=np.int64)
-                for i, xs in enumerate(pdf["xs"]):
-                    x = np.asarray(xs, dtype=np.int64)
-                    # a < p < 2^31 and x < p keep a·x + b < 2^62: no overflow
-                    mh[i] = ((A[:, None] * x[None, :] + B[:, None]) % p).min(axis=1)
-                out = {"doc_id": pdf["doc_id"]}
-                for j in range(num_hashes):
-                    out[f"mh{j}"] = mh[:, j]
-                yield pd.DataFrame(out)
-
-        sig = (
-            xed.groupBy("doc_id")
-            .agg(F.collect_list("x").alias("xs"))
-            .mapInPandas(signatures, sig_schema)
-        )
-    else:
-        sig = xed.groupBy("doc_id").agg(
-            *[
-                F.min(F.pmod(F.lit(a) * F.col("x") + F.lit(b), F.lit(p))).alias(f"mh{i}")
-                for i, (a, b) in enumerate(coeffs)
-            ]
-        )
+    sig = (
+        xed.groupBy("doc_id")
+        .agg(F.collect_list("x").alias("xs"))
+        .mapInPandas(signatures, sig_schema)
+    )
     band_structs = F.array(
         *[
             F.struct(
@@ -453,77 +436,55 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 64,
-    vectorized: bool = True,
 ) -> DataFrame:
     """SimHash fingerprint per document → (doc_id, simhash).
 
     Each token occurrence hashes once (``xxhash64``); each of the 64 bit
     positions accumulates ±1 by that bit; the sign vector packs back into
-    an int64.
+    an int64 (bit 63 carries −2⁶³).
 
-    Kernels (bit-identical integer math):
-      * numpy (default): ``collect_list`` the token hashes per doc (one
-        hash-agg shuffle, no ×bits row blowup), then an Arrow
-        ``mapInPandas`` computes the vote matrix and packs the sign bits.
-      * JVM (``vectorized=False``): ``bits`` conditional-sum aggregates —
-        the same shuffle, but 64 wide aggregates exceed codegen method
-        limits and run interpreted locally (same hotspot as the MinHash
-        JVM path).  The numpy path holds one row per doc of token hashes
-        (see the memory note on :func:`minhash_lsh_pairs`); the JVM path
-        streams.
+    Kernel: ``collect_list`` the token hashes per doc (one hash-agg
+    shuffle, no ×bits row blowup), then an Arrow ``mapInPandas``
+    computes the vote matrix and packs the sign bits — ``bits`` JVM
+    conditional-sum aggregates would exceed the codegen method limit
+    and run interpreted.  It holds one row per doc of token hashes (see
+    the memory note on :func:`minhash_lsh_pairs`).
     """
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
     toks = F.explode(tokens(text_col))
     t = df.select(F.col(id_col).alias("doc_id"), toks.alias("tok")).withColumn(
         "h", F.xxhash64("tok")
     )
-    if vectorized:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        idtype = df.schema[id_col].dataType
-        schema = T.StructType(
-            [T.StructField("doc_id", idtype), T.StructField("simhash", T.LongType())]
-        )
-        # bit weights mirror the JVM packing: 1<<b, with bit 63 as -2^63
-        weights = np.array(
-            [(1 << b) if b < 63 else -(1 << 63) for b in range(bits)], dtype=np.int64
-        )
-        shifts = np.arange(bits, dtype=np.int64)
-
-        def fingerprints(it):
-            for pdf in it:
-                m = len(pdf)
-                if m == 0:
-                    continue
-                fps = np.empty(m, dtype=np.int64)
-                for i, hs in enumerate(pdf["hs"]):
-                    h = np.asarray(hs, dtype=np.int64)
-                    bvals = (h[:, None] >> shifts) & 1  # (n_tokens, bits)
-                    votes = (2 * bvals - 1).sum(axis=0)
-                    fps[i] = np.where(votes > 0, weights, 0).sum(dtype=np.int64)
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": fps})
-
-        return (
-            t.groupBy("doc_id")
-            .agg(F.collect_list("h").alias("hs"))
-            .mapInPandas(fingerprints, schema)
-        )
-    votes = t.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(bits)
-        ]
+    idtype = df.schema[id_col].dataType
+    schema = T.StructType(
+        [T.StructField("doc_id", idtype), T.StructField("simhash", T.LongType())]
     )
-    fingerprint = None
-    for b in range(bits):
-        bitval = F.when(
-            F.col(f"v{b}") > 0, F.lit(1 << b if b < 63 else -(1 << 63)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        fingerprint = bitval if fingerprint is None else fingerprint + bitval
-    return votes.select("doc_id", fingerprint.alias("simhash"))
+    weights = np.array(
+        [(1 << b) if b < 63 else -(1 << 63) for b in range(bits)], dtype=np.int64
+    )
+    shifts = np.arange(bits, dtype=np.int64)
+
+    def fingerprints(it):
+        for pdf in it:
+            m = len(pdf)
+            if m == 0:
+                continue
+            fps = np.empty(m, dtype=np.int64)
+            for i, hs in enumerate(pdf["hs"]):
+                h = np.asarray(hs, dtype=np.int64)
+                bvals = (h[:, None] >> shifts) & 1  # (n_tokens, bits)
+                votes = (2 * bvals - 1).sum(axis=0)
+                fps[i] = np.where(votes > 0, weights, 0).sum(dtype=np.int64)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": fps})
+
+    return (
+        t.groupBy("doc_id")
+        .agg(F.collect_list("h").alias("hs"))
+        .mapInPandas(fingerprints, schema)
+    )
 
 
 def simhash_neardup(

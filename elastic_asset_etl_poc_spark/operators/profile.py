@@ -132,7 +132,6 @@ def seasonal_anomalies(
     ts_col: str = "ts",
     key_col: str = "event_type",
     z_threshold: float = 2.0,
-    broadcast_baseline: bool = True,
 ) -> DataFrame:
     """Seasonal-baseline anomaly detection over an event stream →
     flagged ``(key, day, hour, n, z)`` cells.
@@ -151,12 +150,13 @@ def seasonal_anomalies(
 
     Scale shape: two hash aggregates (cells, then baselines over cells —
     the second input is |keys|·24 rows) and one join of the baseline
-    back onto cells — broadcast by default, which is right whenever
-    ``key_col`` is a low-cardinality type column.  For high-cardinality
-    keys (per-user baselines: |keys|·24 no longer fits an executor)
-    pass ``broadcast_baseline=False`` for a shuffle join on
-    ``(key, hour)`` instead.  No windows, no sort; both aggs take
-    map-side partials.
+    back onto cells.  The planner picks that join's strategy from the
+    baseline's size (``autoBroadcastJoinThreshold``; AQE re-plans from
+    the shuffled aggregates' real sizes): a low-cardinality type column
+    broadcasts it, high-cardinality keys
+    (per-user baselines: |keys|·24 no longer fits an executor) get a
+    shuffle join on ``(key, hour)``.  No windows, no sort; both aggs
+    take map-side partials.
     """
     cells = df.groupBy(
         F.col(key_col),
@@ -167,8 +167,6 @@ def seasonal_anomalies(
         F.avg("n").alias("__mu"),
         F.stddev_samp("n").alias("__sd"),
     )
-    if broadcast_baseline:
-        baseline = F.broadcast(baseline)
     j = cells.join(baseline, [key_col, "hour"])
     z = (F.col("n") - F.col("__mu")) / F.col("__sd")
     return (

@@ -158,7 +158,10 @@ def _asof_group(
                     "ts_us": [last_rts_us],
                     "is_left": [0],
                     "event_id": [-1],
-                    "value": [last_value],
+                    # float64 even for a NULL payload: an all-NA object
+                    # column would make the concat below pick its dtype
+                    # through pandas' deprecated all-NA rule
+                    "value": pd.Series([last_value], dtype="float64"),
                     "carried": [0],  # same-ts in-batch right overwrites it
                 }
             ),
@@ -198,8 +201,6 @@ def _asof_group(
         if len(lefts):
             lr = last_right[lefts]
             has = lr >= 0
-            rts = np.where(has, ts_us[np.maximum(lr, 0)], 0).astype("float64")
-            rts[~has] = np.nan  # → NaT → NULL
             rval = np.where(has, val[np.maximum(lr, 0)], np.nan)
             out_df = pd.DataFrame(
                 {
@@ -208,9 +209,10 @@ def _asof_group(
                     "ts": pd.to_datetime(
                         pd.Series(ts_us[lefts]), unit="us"
                     ),
+                    # int64 µs, exact past 2^53; no match → NaT → NULL
                     "right_ts_asof": pd.to_datetime(
-                        pd.Series(rts), unit="us"
-                    ),
+                        pd.Series(ts_us[np.maximum(lr, 0)]), unit="us"
+                    ).where(has),
                     "right_value_asof": rval,
                 }
             )

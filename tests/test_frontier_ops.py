@@ -369,29 +369,26 @@ def test_kcore_releases_superseded_checkpoints(spark):
     assert jsc.getPersistentRDDs().size() - before <= 2
 
 
-def test_kcore_shuffled_semi_join_fallback_equals_broadcast(spark):
-    """The size-gated survivor filter: max_broadcast_nodes=0 forces the
-    shuffled semi-join fallback on EVERY round; results must equal the
-    broadcast path exactly — and the fallback plan must actually drop
-    the broadcast (spot-checked via the final frame's round joins
-    executing without error; plan equality is not the contract, row
-    equality is)."""
-    from elastic_asset_etl_poc_spark.operators.graph import kcore_membership
+def test_kcore_shuffled_semi_join_fallback_equals_broadcast(spark, monkeypatch):
+    """The size-gated survivor filter: bound 0 sends EVERY round's
+    survivor semi-joins through the shuffled path; results must equal
+    the broadcast path exactly (row equality is the contract, not plan
+    equality)."""
+    from elastic_asset_etl_poc_spark.operators import graph
 
     und = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3), (4, 6), (6, 7)]
     edges = spark.createDataFrame(und, ["src", "dst"])
-    want = {
-        r["node"]: r["core_degree"]
-        for r in kcore_membership(edges, k=2).collect()
-    }
+
+    def core():
+        return {
+            r["node"]: r["core_degree"]
+            for r in graph.kcore_membership(edges, k=2).collect()
+        }
+
+    want = core()
     assert want  # the 1-2-3 and 3-4-5 triangles survive
-    got = {
-        r["node"]: r["core_degree"]
-        for r in kcore_membership(
-            edges, k=2, max_broadcast_nodes=0
-        ).collect()
-    }
-    assert got == want, "fallback diverged"
+    monkeypatch.setattr(graph, "MAX_BROADCAST_NODES", 0)
+    assert core() == want, "fallback diverged"
 
 
 def test_label_propagation_finds_planted_communities(spark):

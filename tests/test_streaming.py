@@ -386,6 +386,72 @@ def test_stream_asof_enrich_multi_batch_out_of_order(spark, tmp_path):
     assert got == want
 
 
+class _FakeGroupState:
+    """The slice of ``GroupState`` the pandas kernels touch, so a kernel
+    runs without a streaming query."""
+
+    def __init__(self, packet=None):
+        self.exists, self.get, self.updated = packet is not None, packet, None
+
+    def update(self, packet):
+        self.updated = packet
+
+
+def _asof_chunk(rows):
+    """One Arrow-shaped input chunk of ``(ts µs, is_left, event_id,
+    value)`` rows for ``_asof_group``."""
+    import pandas as pd
+
+    ts, is_left, eid, value = zip(*rows)
+    return pd.DataFrame(
+        {
+            "ts": pd.to_datetime(pd.Series(ts, dtype="int64"), unit="us"),
+            "is_left": list(is_left),
+            "event_id": list(eid),
+            "value": pd.Series(value, dtype="float64"),
+        }
+    )
+
+
+def test_asof_kernel_carried_null_payload_keeps_float_dtype():
+    """A carried packet whose payload is NULL joins the merge as a
+    float64 row: no all-NA object column reaches ``pd.concat`` (pandas
+    warns that it will change that concat's dtype)."""
+    import warnings
+
+    from elastic_asset_etl_poc_spark.streaming.stateful import _asof_group
+
+    state = _FakeGroupState((50, None))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        (out,) = _asof_group(
+            (7,), iter([_asof_chunk([(100, 1, 1, 1.5)])]), state
+        )
+    assert out["right_ts_asof"].iloc[0].value // 1000 == 50
+    assert out["right_value_asof"].isna().all()
+    assert state.updated == (50, None)
+
+
+def test_asof_kernel_timestamps_exact_past_2_53_us():
+    """``right_ts_asof`` stays int64 µs: a right row at 2^53 + 1 µs
+    comes back exact (a float64 round trip rounds it to 2^53), and a
+    left with no right before it gets NULL."""
+    import pandas as pd
+
+    from elastic_asset_etl_poc_spark.streaming.stateful import _asof_group
+
+    t = 2**53 + 1
+    rows = [(t - 10, 1, 1, None), (t, 0, 2, 4.0), (t + 1, 1, 3, None)]
+    (out,) = _asof_group((7,), iter([_asof_chunk(rows)]), _FakeGroupState())
+    got = {
+        r.event_id: (r.right_ts_asof, r.right_value_asof)
+        for r in out.itertuples()
+    }
+    assert pd.isna(got[1][0]) and pd.isna(got[1][1])
+    assert got[3] == (pd.Timestamp(t, unit="us"), 4.0)
+    assert got[3][0].value // 1000 == t
+
+
 def test_stateful_sessionize_multi_batch(spark, tmp_path):
     """Session state must carry across >=3 micro-batches: a gap inside a
     batch opens a new session, a small gap ACROSS a batch boundary must

@@ -14,6 +14,7 @@ from elastic_asset_etl_poc_spark.operators.text import (
     doc_fingerprint,
     lang_id,
     text_quality,
+    tokens,
 )
 from elastic_asset_etl_poc_spark.sources.registry import load_table
 
@@ -88,10 +89,27 @@ def test_minhash_matches_exact_on_fixture(spark):
 
 
 def test_simhash_vectorized_matches_jvm(spark):
+    """The numpy kernel equals a pure-Python SimHash over the same
+    Spark-side token hashes: ±1 votes per bit, sign bits packed into a
+    signed int64."""
+    from pyspark.sql import functions as F
+
     docs = load_table(spark, SF_DIR, "documents")
-    np_fps = sorted(map(tuple, simhash(docs, vectorized=True).collect()))
-    jvm_fps = sorted(map(tuple, simhash(docs, vectorized=False).collect()))
-    assert np_fps == jvm_fps
+    hashes = {}
+    toks = docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
+    for r in toks.select("doc_id", F.xxhash64("tok").alias("h")).collect():
+        hashes.setdefault(r.doc_id, []).append(r.h)
+    want = []
+    for doc_id, hs in hashes.items():
+        fp = sum(
+            1 << b
+            for b in range(64)
+            if sum(1 if (h >> b) & 1 else -1 for h in hs) > 0
+        )
+        want.append((doc_id, fp - (1 << 64) if fp >= 1 << 63 else fp))
+    got = sorted(map(tuple, simhash(docs).collect()))
+    assert len(got) > 1
+    assert got == sorted(want)
 
 
 def test_simhash_identical_and_near(spark):

@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
-"""Dump `.explain("formatted")` for named queries into plans/r17/.
+"""Dump `.explain("formatted")` for named queries into plans/<LABEL>/.
 
-Usage: python tools/dump_plans_r17.py before|after q1 q2 ...
-Writes plans/r17/<query>_<tag>.txt.  For queries whose build is eager
-(checkpoint/collect chains), the captured plan is the serving tail —
-noted in the file header.
+Usage: python tools/dump_plans.py LABEL before|after q1 q2 ...
+Writes plans/<LABEL>/<query>_<tag>.txt.  For queries whose build is
+eager (checkpoint/collect chains), the captured plan is the serving
+tail — noted in the file header.
 """
 from __future__ import annotations
 
@@ -17,16 +17,16 @@ sys.path.insert(0, HERE)
 
 def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_PURE_DECODE", "1")
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    label, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(HERE, "plans", "r17")
+    out_dir = os.path.join(HERE, "plans", label)
     os.makedirs(out_dir, exist_ok=True)
 
     import __spark_entry__ as e
     from elastic_asset_etl_poc_spark.session import get_spark
 
-    spark = get_spark(app_name="dump_plans_r17")
+    spark = get_spark(app_name=f"dump_plans_{label}")
     qs = e.queries()
     for n in names:
         df = qs[n](spark, sf_dir)
@@ -38,8 +38,8 @@ def main() -> None:
             fh.write(
                 f"# {n} — explain('formatted'), tag={tag}, sf_dir={sf_dir}\n"
                 "# NOTE: for eager-build queries (checkpoint/collect/stream"
-                " chains) this is the serving-tail plan; the build phase is"
-                " measured in OPTIMIZATION_r17.md.\n"
+                " chains) this is the serving-tail plan; the build phase"
+                " runs before it and is not shown.\n"
             )
             fh.write(plan)
         print("wrote", path)
