@@ -84,12 +84,12 @@ def date_math_lookback(now: datetime, amount: int, unit: str) -> tuple[Column, C
 
 def zorder_key(cols: list[Column], bits: int = 16) -> Column:
     """Z-order (Morton) key: interleave the low ``bits`` of each input
-    column into one clustering key.  Feed the result to
-    ``sinks.write_range_sorted`` and a range-partitioned sort on ONE
-    column yields files whose min/max footers are tight in EVERY
-    interleaved dimension — multi-dimensional scan pruning on plain
-    parquet (the Z-order layout Delta/Iceberg expose as OPTIMIZE
-    ZORDER BY, built from builtin bit arithmetic).
+    column into one clustering key.  A range-partitioned sort on that
+    ONE column (``repartitionByRange`` + ``sortWithinPartitions``)
+    yields files whose min/max footers are tight in EVERY interleaved
+    dimension — multi-dimensional scan pruning on plain parquet (the
+    Z-order layout Delta/Iceberg expose as OPTIMIZE ZORDER BY, built
+    from builtin bit arithmetic).
 
     Inputs must be non-negative integers already bucketed/ranked to
     ``bits`` de-facto range (values beyond it only lose locality above

@@ -1,17 +1,14 @@
 """Snapshot diff: keyed added/removed/changed between two frame versions.
 
 The data-versioning primitive an ingest pipeline needs around its stores
-(sinks.py upsert/manifest family): diff yesterday's snapshot against
+(``sinks.upsert_assets``): diff yesterday's snapshot against
 today's to drive incremental downstream work (re-embed only changed
 docs, re-index only changed assets) instead of full recomputes.
 
 Scale shape: each side collapses to ``(keys, 8-byte digest)`` BEFORE the
 full-outer join, so the shuffle carries key+hash only — never the row
-payload — and the join is one AQE-sized exchange.  ``digest=False``
-swaps the xxhash64 digest for a null-safe struct comparison (exact even
-under adversarial hash collisions) at the cost of shuffling the compared
-columns; the digest path is the 100-TB default (a 64-bit collision on a
-key that actually changed is ~2⁻⁶⁴ per changed key).
+payload — and the join is one AQE-sized exchange (a 64-bit collision on
+a key that actually changed is ~2⁻⁶⁴ per changed key).
 """
 
 from __future__ import annotations
@@ -33,7 +30,6 @@ def snapshot_diff(
     new: DataFrame,
     keys: Sequence[str],
     compare_cols: Sequence[str] | None = None,
-    digest: bool = True,
 ) -> DataFrame:
     """Return ``(keys..., change)`` where change ∈ added | removed |
     changed; unchanged keys are filtered out before the result
@@ -50,19 +46,16 @@ def snapshot_diff(
     compare_cols = list(compare_cols)
 
     def side(df: DataFrame, tag: str) -> DataFrame:
-        if digest:
-            fp = F.xxhash64(
-                *(
-                    F.coalesce(F.col(c).cast("string"), F.lit(_NULL))
-                    for c in compare_cols
-                ),
-                F.lit(_SEP),
-            )
-        else:
-            fp = F.struct(*[F.col(c) for c in compare_cols])
+        fp = F.xxhash64(
+            *(
+                F.coalesce(F.col(c).cast("string"), F.lit(_NULL))
+                for c in compare_cols
+            ),
+            F.lit(_SEP),
+        )
         return df.select(*keys, fp.alias(f"__fp_{tag}"))
 
-    # presence is tracked explicitly so a frame whose digest/struct is
+    # presence is tracked explicitly so a frame whose digest is
     # NULL-ish can never be mistaken for an absent key
     o = side(old, "old").withColumn("__in_old", F.lit(True))
     n = side(new, "new").withColumn("__in_new", F.lit(True))

@@ -106,21 +106,6 @@ def capped_sets(sh0: DataFrame, max_doc_freq: int | None = 10_000):
     return sh0.join(F.broadcast(hot), "shingle", "left_anti"), sh0
 
 
-def capped_shingles(
-    df: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_doc_freq: int | None = 10_000,
-):
-    """Text word-n-gram instantiation of :func:`capped_sets` (the lazy
-    frame so callers/tests can inspect the plan; ``jaccard_pairs``
-    materializes it with ``localCheckpoint``)."""
-    return capped_sets(
-        shingles(df, n=n, text_col=text_col, id_col=id_col), max_doc_freq
-    )
-
-
 def set_similarity_pairs(
     sh0: DataFrame,
     threshold: float,

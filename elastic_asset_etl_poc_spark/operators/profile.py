@@ -7,10 +7,10 @@ result unpivots to one row per column — no per-column scans.
 
 Scale posture: exact multi-column ``count(DISTINCT)`` plans through
 Spark's Expand (input rows × #distinct-aggs feed ONE shuffle) — fine for
-a profiling pass but the row multiplication is real at 100 TB, so
-``exact=False`` swaps in ``approx_count_distinct`` (HLL, map-side
-partials, no Expand) while the other stats stay exact.  min/max surface
-as strings so one schema covers heterogeneous column types.
+a profiling pass, but the row multiplication is real at 100 TB, where
+``approx_count_distinct`` (HLL, map-side partials, no Expand) is the
+replacement for the cardinality column.  min/max surface as strings so
+one schema covers heterogeneous column types.
 """
 
 from __future__ import annotations
@@ -19,20 +19,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_columns(
-    df: DataFrame, cols: list[str], exact: bool = True
-) -> DataFrame:
-    """Per-column profile → (col_name, n_nonnull, n_distinct, min_s, max_s).
-
-    ``exact=False`` uses ``approx_count_distinct`` for the cardinality
-    (the 100-TB configuration; everything else remains exact).
-    """
-    nd = F.count_distinct if exact else F.approx_count_distinct
+def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Per-column profile → (col_name, n_nonnull, n_distinct, min_s, max_s)."""
     aggs = []
     for c in cols:
         aggs += [
             F.count(F.col(c)).alias(f"__nn_{c}"),
-            nd(F.col(c)).alias(f"__nd_{c}"),
+            F.count_distinct(F.col(c)).alias(f"__nd_{c}"),
             F.min(F.col(c)).cast("string").alias(f"__mn_{c}"),
             F.max(F.col(c)).cast("string").alias(f"__mx_{c}"),
         ]

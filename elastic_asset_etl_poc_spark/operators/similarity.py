@@ -272,26 +272,6 @@ def ivf_train(
     return C
 
 
-def save_centroids(spark, centroids, path: str) -> None:
-    """Persist an :func:`ivf_train` centroid matrix as a tiny parquet
-    table (centroid_id, vector) — readable by any engine, so a static
-    corpus trains once per ingest instead of once per query batch."""
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(
-        rows, "centroid_id int, vector array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_centroids(spark, path: str):
-    """Load a :func:`save_centroids` matrix back as numpy (kc, d)."""
-    import numpy as np
-
-    rows = spark.read.parquet(path).orderBy("centroid_id").collect()
-    if not rows:
-        return np.empty((0, 0), dtype=np.float64)
-    return np.array([r.vector for r in rows], dtype=np.float64)
-
-
 def _ivf_idtype(df, id_col):
     return df.schema[id_col].dataType
 
@@ -992,37 +972,6 @@ def pq_topk(
     )
 
 
-def save_codebooks(spark, codebooks, path: str) -> None:
-    """Persist :func:`pq_train` codebooks as a tiny parquet table
-    (subspace, centroid_id, vector) — engine-portable, so a static
-    corpus trains once per ingest (the :func:`save_centroids` pattern
-    extended to the PQ tier)."""
-    rows = [
-        (j, c, [float(x) for x in codebooks[j][c]])
-        for j in range(codebooks.shape[0])
-        for c in range(codebooks.shape[1])
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, centroid_id int, vector array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_codebooks(spark, path: str):
-    """Load a :func:`save_codebooks` table back as numpy (m, ksub, dsub)."""
-    import numpy as np
-
-    rows = spark.read.parquet(path).orderBy("subspace", "centroid_id").collect()
-    if not rows:
-        return np.empty((0, 0, 0), dtype=np.float64)
-    m = rows[-1].subspace + 1
-    ksub = rows[-1].centroid_id + 1
-    dsub = len(rows[0].vector)
-    B = np.empty((m, ksub, dsub), dtype=np.float64)
-    for r in rows:
-        B[r.subspace][r.centroid_id] = r.vector
-    return B
-
-
 # ---------------------------------------------------------------------------
 # SQ8: int8 scalar quantization — the simplest ANN memory tier (4× smaller
 # than float32, 8× smaller than the double working set), and the only lossy
@@ -1579,85 +1528,6 @@ def mutual_top1_pairs_ivf(
         _group_best_kernel, out_schema
     )
     return _mutual_from_best(best)
-
-
-def pca_project(
-    embeddings: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PCA projection: center the corpus and project onto the top-k
-    principal components → (id, proj double[k]).
-
-    Distribution split: everything that TOUCHES DATA is aggregation —
-    the d×d covariance accumulates map-side into d²/2 running sums
-    (the embed_covariance shape) — while the eigen-decomposition runs
-    on the collected 64×64 matrix DRIVER-side (numpy.linalg.eigh; a
-    d×d eigenproblem is microseconds and independent of corpus size,
-    the textbook place for a bounded collect).  The projection itself
-    broadcasts the k×d component matrix back as literal arrays and
-    stays JVM-side (F.aggregate dot products, no Python UDF; see the
-    module note on higher-order functions and codegen).
-
-    Eigenvector SIGN is normalized (largest-|loading| coordinate made
-    positive, ties to the earlier dim) so the projection is
-    deterministic across LAPACK builds."""
-    import numpy as np
-
-    pe = embeddings.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(_as_double(F.col(vec_col))),
-    ).select("__id", (F.col("pos") + 1).alias("d"), F.col("col").alias("v"))
-    n = embeddings.count()
-    mu = pe.groupBy("d").agg((F.sum("v") / n).alias("m"))
-    a = pe.select(F.col("d").alias("di"), "__id", F.col("v").alias("va"))
-    b = pe.select(F.col("d").alias("dj"), "__id", F.col("v").alias("vb"))
-    xp = (
-        a.join(b, "__id")
-        .filter(F.col("di") <= F.col("dj"))
-        .groupBy("di", "dj")
-        .agg(F.sum(F.col("va") * F.col("vb")).alias("svv"))
-        .join(F.broadcast(mu.select(F.col("d").alias("di"), F.col("m").alias("ma"))), "di")
-        .join(F.broadcast(mu.select(F.col("d").alias("dj"), F.col("m").alias("mb"))), "dj")
-        .select(
-            "di",
-            "dj",
-            (F.col("svv") / n - F.col("ma") * F.col("mb")).alias("cov"),
-        )
-    )
-    rows = xp.collect()  # bounded: d*(d+1)/2 cells, corpus-independent
-    d = max(r["dj"] for r in rows)
-    cov = np.zeros((d, d))
-    for r in rows:
-        cov[r["di"] - 1, r["dj"] - 1] = r["cov"]
-        cov[r["dj"] - 1, r["di"] - 1] = r["cov"]
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T  # k x d
-    for i in range(comps.shape[0]):
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i, j] < 0:
-            comps[i] = -comps[i]
-    means = {r["d"]: r["m"] for r in mu.collect()}
-    mean_arr = F.array(*[F.lit(float(means[i + 1])) for i in range(d)])
-    v = _as_double(F.col(vec_col))
-    centered = F.zip_with(v, mean_arr, lambda x, m: x - m)
-    projs = [
-        F.aggregate(
-            F.zip_with(
-                centered,
-                F.array(*[F.lit(float(c)) for c in comps[i]]),
-                lambda x, w: x * w,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for i in range(comps.shape[0])
-    ]
-    return embeddings.select(
-        F.col(id_col), F.array(*projs).alias("proj")
-    )
 
 
 def ivfpq_train(

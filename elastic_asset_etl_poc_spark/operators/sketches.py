@@ -182,19 +182,6 @@ def hll_estimate_body_sql(reg_cte: str, p: int = 10) -> str:
 """
 
 
-def hll_oracle_sql(
-    key_expr: str, p: int = 10, src: str = "events", group_expr: str = "''"
-) -> str:
-    """The DuckDB restatement of hll_registers→hll_estimate as one CTE
-    chain — SAME md5 slice, SAME bin()-length rho, SAME integer-scaled
-    register sum, so the two engines agree to the bit."""
-    return (
-        hll_registers_sql(key_expr, p, src, group_expr)
-        + f""",
-hest AS ({hll_estimate_body_sql('hreg', p)})"""
-    )
-
-
 def cms_cells(
     df: DataFrame, key_col: str, d: int = 4, w: int = 2048
 ) -> DataFrame:

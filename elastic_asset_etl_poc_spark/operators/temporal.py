@@ -359,7 +359,7 @@ def scd2_history(
     island's start, and ``lead`` closes it with the next island's start.
     This is the CDC-events → slowly-changing-dimension reconstruction
     every warehouse ingest needs; the continuous form feeds micro-batches
-    through the same shape via foreachBatch (streaming/services_stream).
+    through the same shape from a ``foreachBatch`` sink.
 
     Scale posture: both windows and the aggregate share ONE exchange on
     ``key`` — the plan is shuffle-once regardless of history length; no

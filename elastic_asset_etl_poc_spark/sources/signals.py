@@ -33,7 +33,6 @@ Derived fields (k = props->'$.k', always present in the fixture):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .registry import load_table
 
@@ -111,14 +110,6 @@ def signals_view(spark: SparkSession, sf_dir: str, ts_range=None) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events", ts_range=ts_range)
     return ev.selectExpr(*signal_columns())
-
-
-def signals_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signals with oracle-friendly underscore column names."""
-    df = signals_view(spark, sf_dir)
-    return df.select(
-        *[F.col(f"`{dotted}`").alias(flat) for dotted, flat in SIGNAL_FIELDS]
-    )
 
 
 #: DuckDB CTE computing the identical signal view (underscore names).

@@ -173,12 +173,11 @@ def stream_session_windows(
     last-event-ts + gap and the merge test is overlap-inclusive; the
     batch oracle must therefore split only on strict ``diff > gap``).
 
-    This is the built-in sibling of ``stateful.stream_sessionize``
-    (applyInPandasWithState): same sessions, but the state lives in the
-    state store as mergeable window ranges and the whole operator is
-    JVM-side — the form to prefer whenever per-session logic is
-    expressible as aggregates.  Spark requires a watermark and only
-    append/complete output for session windows (update is rejected);
+    The state lives in the state store as mergeable window ranges and
+    the whole operator is JVM-side, with no Python state function — the
+    form to prefer whenever per-session logic is expressible as
+    aggregates.  Spark requires a watermark and only append/complete
+    output for session windows (update is rejected);
     complete mode re-emits the full session table each micro-batch, so
     an availableNow drain into the memory sink is batch-equivalent
     regardless of how many micro-batches the file source splits into.
@@ -262,54 +261,6 @@ def stream_signals_full(spark: SparkSession, source_dir: str) -> DataFrame:
         "kubernetes.pod.uid",
         "host.name",
         "host.hostname",
-    )
-
-
-def run_foreach_batch_upsert(
-    stream_assets: DataFrame, store_path: str, timeout: int = 120
-):
-    """Streaming → asset-store upsert via foreachBatch: each micro-batch
-    merges latest-per-EAN into the parquet store (sinks.upsert_assets),
-    giving the reference's poll-and-upsert loop with exactly-once batches.
-    """
-    from ..sinks import upsert_assets
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # an empty micro-batch is a no-op inside upsert_assets
-        upsert_assets(batch_df.sparkSession, store_path, batch_df)
-
-    query = (
-        stream_assets.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", store_path + "__ckpt")
-        .start()
-    )
-    query.awaitTermination(timeout)
-    return query
-
-
-def stream_dedup_documents(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "doc_id long, text string, ingest_ts timestamp",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: drop re-ingested documents within the
-    watermark horizon (``dropDuplicatesWithinWatermark`` keyed on the
-    content digest) — the continuous-ingest form of
-    operators.neardup.dedup_exact.  State per distinct digest is evicted
-    once the watermark passes, so state stays bounded by the dedup
-    horizon rather than corpus size.
-    """
-    docs = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(source_dir)
-    )
-    return (
-        docs.withColumn("text_md5", F.md5("text"))
-        .withWatermark("ingest_ts", watermark)
-        .dropDuplicatesWithinWatermark(["text_md5"])
     )
 
 

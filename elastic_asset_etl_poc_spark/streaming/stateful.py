@@ -1,5 +1,5 @@
-"""Custom stateful streaming operator: gap-based sessionization with
-``applyInPandasWithState`` (Arrow-batched per-group state).
+"""Custom stateful streaming operators: continuous as-of and EWMA
+enrichment with ``applyInPandasWithState`` (Arrow-batched per-group state).
 
 The DataFrame/SQL surface covers the reference's entire operator set
 (SURVEY.md §2.10); this module exists for the one class of semantics the
@@ -7,9 +7,9 @@ builtin stateful ops can't express — arbitrary per-key running state
 across micro-batches.  Pattern: group by key, feed Arrow batches + a
 GroupState handle to a pandas function, emit update rows.
 
-Scale posture: state is one small tuple per user (last_ts, counters) in
-the state store; batches arrive Arrow-vectorized; no per-row Python round
-trips outside the grouped batch.
+Scale posture: state is one small tuple per user (the latest right row,
+or the last k−1 values) in the state store; batches arrive
+Arrow-vectorized; no per-row Python round trips outside the grouped batch.
 """
 
 from __future__ import annotations
@@ -21,80 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_GAP_MINUTES = 30
-
-SESSION_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("n_sessions", T.LongType()),
-    ]
-)
-
-#: (last_event_ts_us, n_events, n_sessions)
-SESSION_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("n_sessions", T.LongType()),
-    ]
-)
-
-
-def _sessionize_group(
-    key: Tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        last_ts_us, n_events, n_sessions = state.get
-    else:
-        last_ts_us, n_events, n_sessions = None, 0, 0
-
-    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
-    for pdf in pdfs:
-        # normalize to µs explicitly — Arrow may deliver datetime64[ns],
-        # and a bare int64 cast would inflate every gap 1000×
-        ts_us = (
-            pdf["ts"].astype("datetime64[ns]").astype("int64").sort_values().to_numpy()
-            // 1000
-        )
-        if len(ts_us) == 0:
-            continue
-        # vectorized (r17, guide §4.2): a session starts where the gap
-        # to the previous timestamp exceeds gap_us — one np.diff per
-        # chunk replaces the per-row loop; identical counts (the
-        # chunk-local sort and the carried last_ts_us seam are the same)
-        starts = int(np.count_nonzero(np.diff(ts_us) > gap_us))
-        if last_ts_us is None or int(ts_us[0]) - last_ts_us > gap_us:
-            starts += 1
-        n_sessions += starts
-        n_events += len(ts_us)
-        last_ts_us = int(ts_us[-1])
-
-    state.update((last_ts_us, n_events, n_sessions))
-    yield pd.DataFrame(
-        [(user_id, n_events, n_sessions)],
-        columns=["user_id", "n_events", "n_sessions"],
-    )
-
-
-def stream_sessionize(events: DataFrame) -> DataFrame:
-    """Per-user running session counts over a streaming events frame.
-
-    Input needs columns ``user_id`` and timestamp ``ts``; emits one update
-    row per (user, micro-batch) with cumulative counters.
-    """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _sessionize_group,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 ASOF_OUTPUT_SCHEMA = T.StructType(
     [
@@ -273,121 +199,6 @@ def stream_asof_enrich(
         stateStructType=ASOF_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-CLOSED_SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-#: open session per key: (start_us, last_ts_us, n_events)
-CLOSED_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-
-def _closed_sessions_group(
-    key: Tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
-    out: list = []
-
-    if state.hasTimedOut:
-        # watermark passed last_event + gap: the session is final
-        start_us, last_us, n = state.get
-        out.append((user_id, start_us, last_us, n))
-        state.remove()
-    else:
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us, last_us, n = None, None, 0
-        arrays = [
-            pdf["ts"].astype("datetime64[ns]").astype("int64").to_numpy() // 1000
-            for pdf in pdfs
-        ]
-        ts_us = np.sort(np.concatenate(arrays)) if arrays else np.array([], dtype=np.int64)
-        for t in ts_us:
-            t = int(t)
-            if last_us is None:
-                start_us, last_us, n = t, t, 1
-            elif t > last_us:
-                if t - last_us > gap_us:
-                    out.append((user_id, start_us, last_us, n))  # close
-                    start_us, n = t, 0
-                last_us = t
-                n += 1
-            elif t >= start_us - gap_us:
-                # LATE but within the open session's horizon: merge it
-                # without REGRESSING last_us (a regressed end both
-                # corrupts the next gap check and can emit end < start);
-                # it may extend the session backward instead
-                start_us = min(start_us, t)
-                n += 1
-            # else: older than the open session's horizon — beyond what
-            # O(1) state can re-merge; dropped, the watermark contract
-        if last_us is not None:
-            state.update((start_us, last_us, n))
-            # fire when the EVENT-TIME watermark passes the gap deadline
-            state.setTimeoutTimestamp(last_us // 1000 + gap_us // 1000)
-
-    if out:
-        odf = pd.DataFrame(out, columns=["user_id", "s", "e", "n_events"])
-        yield pd.DataFrame(
-            {
-                "user_id": odf["user_id"],
-                "session_start": pd.to_datetime(odf["s"], unit="us"),
-                "session_end": pd.to_datetime(odf["e"], unit="us"),
-                "n_events": odf["n_events"],
-            }
-        )
-
-
-def stream_sessionize_closed(
-    events: DataFrame, watermark_delay: str = "1 minute"
-) -> DataFrame:
-    """CLOSED-session stream: emit one FINAL row per session once the
-    event-time watermark passes ``last_event + gap`` — the append-mode
-    complement of :func:`stream_sessionize`'s running counters.
-
-    Intra-batch gaps close sessions immediately; the trailing open
-    session per key parks in the state store with an
-    ``EventTimeTimeout`` at ``last_event + gap``, so state stays O(open
-    sessions) and every session eventually emits exactly once (when the
-    watermark — driven by ANY key's newer events — passes its deadline).
-    This is the standard sessionization-with-TTL layout; a batch rerun
-    of ``sessionize_events`` remains the ground truth the tests compare
-    against.
-
-    **Late-data policy**: an event older than the open session's last
-    timestamp but within its gap horizon merges into the session
-    (extending it backward if needed) WITHOUT regressing the session
-    end; an event older than ``session_start − gap`` is dropped — O(1)
-    state cannot re-open an already-emitted session, the same horizon
-    the watermark enforces across keys.
-    """
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _closed_sessions_group,
-            outputStructType=CLOSED_SESSION_SCHEMA,
-            stateStructType=CLOSED_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
 
 

@@ -978,8 +978,7 @@ def profile_orders(spark, sf_dir):
     """Ingest-hygiene data profile: per-column nonnull/distinct/min/max
     in ONE wide aggregate job unpivoted to a row per column (the oracle
     is the naive 4-scan UNION — same values, 4× the reads; the Spark
-    side reads once).  exact=False swaps HLL cardinality in at 100 TB
-    (operators/profile.py)."""
+    side reads once)."""
     from .operators.profile import profile_columns
 
     orders = load_table(spark, sf_dir, "orders")
@@ -4397,9 +4396,10 @@ FROM events
 )
 def zorder_key_events(spark, sf_dir):
     """Z-order (Morton) clustering key over (user_id, value-bucket):
-    the key write_range_sorted sorts on to get multi-dimensional
-    footer-level scan pruning.  Exact integer bit arithmetic — the
-    oracle interleaves with the identical shift/and/or expression."""
+    the key a range-partitioned sort orders on to get
+    multi-dimensional footer-level scan pruning.  Exact integer bit
+    arithmetic — the oracle interleaves with the identical shift/and/or
+    expression."""
     from .functions.scalar import zorder_key
 
     ev = load_table(spark, sf_dir, "events")
@@ -13709,8 +13709,7 @@ def mutual_knn_ivf(spark, sf_dir):
     at 95 by the same sampled exact baseline and shared oracle as
     mutual_knn_lsh).  Centroids are trained ONCE per corpus and
     reused across runs (the session memo — the production
-    train-per-ingest shape; save_centroids/load_centroids is the
-    cross-process form); the train itself stays a bounded-sample
+    train-per-ingest shape); the train itself stays a bounded-sample
     collect (≤4096 rows) so even the cold run is corpus-size-free.
     Scale shape: one map-side probe pass against the frozen broadcast
     matrix, per-list kernel tasks, the struct-min merge, and the

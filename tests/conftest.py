@@ -3,7 +3,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# import the package of THIS checkout, whichever directory it lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Pin CI to the pure-Python decode kernels: with Pillow present the
 # multimodal fast path changes feature rows / dHash pairs by IDCT

@@ -9,6 +9,8 @@ import pytest
 from elastic_asset_etl_poc_spark.config import Catalog
 from elastic_asset_etl_poc_spark.observability import run_and_print_plan_on_error
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_catalog_cross_cluster_switch(monkeypatch):
     local = Catalog(root="/data/local", remote_root="/data/remote", cross_cluster=False)
@@ -51,7 +53,7 @@ def test_cli_runs_end_to_end(tmp_path):
             "--read", "local", "--sf-dir", "/root/testdata/sf0.001",
             "--limit", "3", "--assets-out", str(tmp_path / "assets"),
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "Finished running ETL" in out.stdout
@@ -65,7 +67,7 @@ def test_cli_rejects_unknown_cluster():
 
     out = subprocess.run(
         [sys.executable, "-m", "elastic_asset_etl_poc_spark", "--read", "nope"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=REPO, timeout=120,
     )
     assert out.returncode == 2
     assert "unknown cluster name" in out.stderr

@@ -285,36 +285,6 @@ def test_pmi_hand_computed(spark):
     assert got[("p", "q")][0] == 1
 
 
-def test_pca_project_variances_match_eigenvalues(spark):
-    """Projected component variances must equal the top eigenvalues of
-    the corpus covariance, components must be uncorrelated, and PC1
-    must carry the planted dominant direction."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(0, 0.05, size=(400, 6))
-    base[:, 2] += rng.normal(0, 1.0, size=400)  # plant a dominant axis
-    rows = [(i, [float(x) for x in base[i]]) for i in range(400)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    from elastic_asset_etl_poc_spark.operators.similarity import pca_project
-
-    proj = np.array(
-        [r["proj"] for r in pca_project(df, k=3).orderBy("vec_id").collect()]
-    )
-    cov = np.cov(base.T, bias=True)
-    vals = np.sort(np.linalg.eigvalsh(cov))[::-1][:3]
-    got = proj.var(axis=0)
-    assert np.allclose(got, vals, rtol=1e-6)
-    # uncorrelated components
-    c = np.cov(proj.T, bias=True)
-    off = c - np.diag(np.diag(c))
-    assert np.abs(off).max() < 1e-9
-    # PC1 ~ the planted axis: projection correlates with dim 2
-    r = np.corrcoef(proj[:, 0], base[:, 2])[0, 1]
-    assert abs(r) > 0.95
-
-
 def test_kcore_hand_computed(spark):
     """Triangle {a,b,c} plus a pendant chain c-d-e: the 2-core is
     exactly the triangle (d's degree drops to 1 once e is peeled —

@@ -1,0 +1,114 @@
+"""Every top-level function and class of the package has a caller outside
+``tests/`` — a query, pipeline, sink, tool or benchmark — so library code
+that only its own tests exercise cannot accumulate again.
+
+Pure AST, no Spark.  A reference is a ``Name``, an ``Attribute``, an
+import alias or a string constant that spells the identifier (registries
+and ``__all__``); a docstring or comment mention is not a caller.  A
+def's references to itself (recursion) do not count.  The ``@q``-
+registered suite queries are skipped: ``SUITE`` reaches them by name.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "elastic_asset_etl_poc_spark"
+
+#: kept although only tests call them, each with its reason
+ALLOWED = {
+    "write_bulk_ndjson": (
+        "COVERAGE S8b: the reference's Elasticsearch bulk writer "
+        "(lib/es_client.ts:29-31) as an NDJSON export sink"
+    ),
+    "kmv_min_shared": (
+        "the exact min-shared-hash bound the sketch tests check "
+        "kmv_candidate_pairs against"
+    ),
+}
+
+_SKIP_DIRS = {"tests", "spark-warehouse", "_out", "__pycache__"}
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _is_suite_query(node) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "q"
+        for d in node.decorator_list
+    )
+
+
+def _package_defs() -> dict[str, list[str]]:
+    defs: dict[str, list[str]] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, _DEFS) and not _is_suite_query(node):
+                where = f"{path.relative_to(ROOT)}:{node.lineno}"
+                defs.setdefault(node.name, []).append(where)
+    return defs
+
+
+def _caller_files() -> list[Path]:
+    return [
+        p
+        for p in sorted(ROOT.rglob("*.py"))
+        if not any(
+            part in _SKIP_DIRS or part.startswith(".")
+            for part in p.relative_to(ROOT).parts[:-1]
+        )
+    ]
+
+
+def _referenced(names: set[str]) -> set[str]:
+    """The subset of ``names`` referenced from outside ``tests/``."""
+    seen: set[str] = set()
+    for path in _caller_files():
+        tree = ast.parse(path.read_text())
+        own = {
+            node.name: (node.lineno, node.end_lineno)
+            for node in tree.body
+            if isinstance(node, _DEFS)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                name = node.value
+            else:
+                continue
+            if name not in names:
+                continue
+            span = own.get(name)
+            line = getattr(node, "lineno", None)
+            if span and line is not None and span[0] <= line <= span[1]:
+                continue  # the def's own body
+            seen.add(name)
+    return seen
+
+
+def test_every_package_def_has_a_caller_outside_tests():
+    defs = _package_defs()
+    reached = _referenced(set(defs))
+    unreached = {
+        name: defs[name] for name in defs if name not in reached and name not in ALLOWED
+    }
+    assert not unreached, (
+        "package defs that only tests/ reaches — delete them with their "
+        "tests, or give them a caller: "
+        + ", ".join(f"{n} ({', '.join(w)})" for n, w in sorted(unreached.items()))
+    )
+
+
+def test_allowlist_is_exact():
+    """Each allowed name still exists and still has no caller outside
+    tests/ — an entry that gained a caller or lost its def goes."""
+    defs = _package_defs()
+    assert set(ALLOWED) <= set(defs), set(ALLOWED) - set(defs)
+    assert not _referenced(set(ALLOWED))
+    assert all(reason.strip() for reason in ALLOWED.values())

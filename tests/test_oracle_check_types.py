@@ -7,11 +7,12 @@ hash.  These tests pin the canonicalizers to (a) flag exactly that class
 and (b) stay quiet on the width/flavor differences the driver provably
 tolerates (26 int-width + 28 timestamp-flavor driver-green columns)."""
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from oracle_check import _duck_canonical_types, _spark_canonical_types
 

@@ -159,35 +159,6 @@ def test_upsert_assets_partition_scoped(spark, tmp_path):
     assert svc_stamps == {datetime.datetime(2024, 2, 1)}
 
 
-def test_upsert_assets_verify_detects_corruption(spark, tmp_path):
-    """upsert(verify=True) stamps + round-trip-verifies the manifest;
-    an injected corruption afterwards is caught by verify_manifest, and
-    the next verifying upsert would fail the same way if raced."""
-    import datetime
-    import os
-
-    from elastic_asset_etl_poc_spark.plans.assets import collect_services
-    from elastic_asset_etl_poc_spark.sinks import upsert_assets, verify_manifest
-
-    path = str(tmp_path / "assets_store")
-    services, containers = collect_services(spark, SF_DIR)
-    upsert_assets(spark, path, services.unionByName(containers), verify=True)
-    ok, diffs = verify_manifest(spark, path)
-    assert ok, diffs  # stamped and clean after the first upsert
-
-    s2, _ = collect_services(spark, SF_DIR, now=datetime.datetime(2024, 2, 1))
-    upsert_assets(spark, path, s2, verify=True)  # re-stamps over the rewrite
-    ok, diffs = verify_manifest(spark, path)
-    assert ok, diffs
-
-    # inject corruption: drop one data file from a partition directory
-    part = os.path.join(path, "asset.type=service")
-    victim = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-    os.remove(os.path.join(part, victim))
-    ok, diffs = verify_manifest(spark, path)
-    assert not ok and "n_rows" in diffs
-
-
 def test_upsert_assets_propagates_store_read_errors(spark, tmp_path):
     """A corrupt (but existing) store must raise, never be silently
     replaced by the new batch."""
@@ -290,11 +261,13 @@ def test_signals_view_matches_oracle_cte(spark):
     from elastic_asset_etl_poc_spark.sources.signals import (
         SIGNAL_FIELDS,
         SIGNALS_ORACLE_CTE,
-        signals_flat,
+        signals_view,
     )
 
     sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
-    got = signals_flat(spark, sf_dir)
+    got = signals_view(spark, sf_dir).selectExpr(
+        *[f"`{dotted}` AS {flat}" for dotted, flat in SIGNAL_FIELDS]
+    )
     assert got.columns == [flat for _, flat in SIGNAL_FIELDS]
     cur = duck_connect(sf_dir).execute(
         f"WITH {SIGNALS_ORACLE_CTE} SELECT * FROM signals"
@@ -463,104 +436,26 @@ def test_missing_table_path_leaves_no_reader_state(spark, tmp_path):
     assert session not in registry._RAW_FRAMES
 
 
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from elastic_asset_etl_poc_spark.sinks import compact_parquet
-    from elastic_asset_etl_poc_spark.sources.registry import load_table
-
-    ev = load_table(spark, SF_DIR, "events").select("event_id", "user_id", "value")
-    path = str(tmp_path / "small_files")
-    ev.repartition(32).write.mode("overwrite").parquet(path)  # shredded store
-    before = set(spark.read.parquet(path).inputFiles())
-    assert len(before) == 32
-    rows_before = sorted(
-        map(tuple, spark.read.parquet(path).collect())
-    )
-
-    n_files = compact_parquet(spark, path, target_file_bytes=64 << 20)
-    assert n_files < 32
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows_before
-
-
-def test_compact_parquet_partitioned_store(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from elastic_asset_etl_poc_spark.sinks import compact_parquet
-    from elastic_asset_etl_poc_spark.sources.registry import load_table
-
-    ev = load_table(spark, SF_DIR, "events").select("event_id", "event_type", "value")
-    path = str(tmp_path / "part_store")
-    ev.repartition(16).write.mode("overwrite").partitionBy("event_type").parquet(path)
-    n_before = len(spark.read.parquet(path).inputFiles())
-    total_before = spark.read.parquet(path).count()
-
-    compact_parquet(spark, path, target_file_bytes=64 << 20, partition_by=["event_type"])
-    back = spark.read.parquet(path)
-    assert len(back.inputFiles()) < n_before
-    assert back.count() == total_before
-    # partition layout survives: directory-level pruning still works
-    types = {r.event_type for r in back.select("event_type").distinct().collect()}
-    assert len(types) > 1
-
-
-def test_write_range_sorted_prunes_by_footer_stats(spark, tmp_path):
-    """Range-sorted layout: per-file min/max ranges on the sort column
-    are disjoint, so a point predicate overlaps exactly one file and a
-    filtered scan reads fewer rows than the corpus (footer-level skip)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from elastic_asset_etl_poc_spark.sinks import write_range_sorted
-    from elastic_asset_etl_poc_spark.sources.registry import load_table
-
-    orders = load_table(spark, SF_DIR, "orders")
-    path = str(tmp_path / "orders_sorted")
-    write_range_sorted(orders, path, ["o_custkey"], num_files=8)
-
-    ranges = []
-    for f in sorted(glob.glob(path + "/part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        lo = min(
-            md.row_group(i).column(md.schema.names.index("o_custkey")).statistics.min
-            for i in range(md.num_row_groups)
-        )
-        hi = max(
-            md.row_group(i).column(md.schema.names.index("o_custkey")).statistics.max
-            for i in range(md.num_row_groups)
-        )
-        ranges.append((lo, hi))
-    assert len(ranges) >= 2
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint (sorted layout) — pruning is possible
-    probe = ranges[0][1]  # a key inside the first file's range
-    overlapping = [r for r in ranges if r[0] <= probe <= r[1]]
-    assert len(overlapping) == 1
-
-    # and Spark actually reads it back correctly under the filter
-    got = spark.read.parquet(path).filter(f"o_custkey = {probe}").count()
-    want = orders.filter(f"o_custkey = {probe}").count()
-    assert got == want and want > 0
-
-
 def test_write_bulk_ndjson_roundtrip(spark, tmp_path):
     import glob
     import json
 
     from elastic_asset_etl_poc_spark.sinks import write_bulk_ndjson
 
+    def export(df, name, **kw):
+        out = str(tmp_path / name)
+        write_bulk_ndjson(df, out, **kw)
+        docs = []
+        for f in sorted(glob.glob(out + "/part-*")):
+            with open(f) as fh:
+                docs += [json.loads(l) for l in fh.read().splitlines() if l]
+        return docs[0::2], docs[1::2]  # (action lines, source lines)
+
     df = spark.createDataFrame(
         [(1, 'quo"te'), (2, "plain")], "doc_id long, text string"
     )
-    out = str(tmp_path / "bulk")
-    write_bulk_ndjson(df, out, index="docs-v1", id_col="doc_id")
-    lines = []
-    for f in sorted(glob.glob(out + "/part-*")):
-        with open(f) as fh:
-            lines += [l for l in fh.read().splitlines() if l]
-    assert len(lines) == 4  # action + source per doc
-    actions = [json.loads(l) for l in lines[0::2]]
-    sources = [json.loads(l) for l in lines[1::2]]
+    actions, sources = export(df, "bulk", index="docs-v1", id_col="doc_id")
+    assert len(actions) == len(sources) == 2  # action + source per doc
     assert {a["index"]["_index"] for a in actions} == {"docs-v1"}
     assert sorted(a["index"]["_id"] for a in actions) == ["1", "2"]
     by_id = {s["doc_id"]: s["text"] for s in sources}
@@ -569,129 +464,22 @@ def test_write_bulk_ndjson_roundtrip(spark, tmp_path):
     for a, s in zip(actions, sources):
         assert a["index"]["_id"] == str(s["doc_id"])
 
-
-def test_manifest_roundtrip_and_tamper_detection(spark, tmp_path):
-    import os
-
-    from elastic_asset_etl_poc_spark.sinks import verify_manifest, write_manifest
-
-    store = str(tmp_path / "manifested")
-    spark.range(100).selectExpr("id", "id * 2 AS v").repartition(4).write.parquet(
-        store
+    # the asset documents themselves: dotted names such as `asset.ean`
+    # are column names, not struct-field paths
+    services, _ = collect_services(spark, SF_DIR)
+    assets = enforce_asset_schema(services)
+    n = assets.count()
+    assert n > 0
+    actions, sources = export(assets, "bulk_assets", index="assets", id_col="asset.ean")
+    assert len(actions) == len(sources) == n
+    assert [a["index"]["_id"] for a in actions] == [s["asset.ean"] for s in sources]
+    assert all(set(s) <= set(ASSET_COLUMNS) for s in sources)
+    assert {s["asset.type"] for s in sources} == {"service"}
+    actions, sources = export(assets, "bulk_assets_noid", index="assets")
+    assert [a["index"] for a in actions] == [{"_index": "assets"}] * n
+    assert sorted(s["asset.ean"] for s in sources) == sorted(
+        r[0] for r in assets.select("`asset.ean`").collect()
     )
-    m = write_manifest(spark, store)
-    assert m["n_rows"] == 100 and m["n_files"] == 4
-    ok, diffs = verify_manifest(spark, store)
-    assert ok, diffs
-
-    # tamper: drop one data file — rows, hash, and file count all drift
-    victim = [f for f in os.listdir(store) if f.endswith(".parquet")][0]
-    os.remove(os.path.join(store, victim))
-    ok, diffs = verify_manifest(spark, store)
-    assert not ok
-    assert "n_rows" in diffs and "n_files" in diffs
-
-
-def test_manifest_content_hash_survives_compaction(spark, tmp_path):
-    """Compaction rewrites the file layout but not the data: rows and the
-    order-insensitive content hash survive unchanged, and compact_parquet
-    re-stamps the manifest's file inventory in the same swap — so the
-    carried sidecar verifies clean immediately, no false tamper alarm."""
-    import json
-    import os
-
-    from elastic_asset_etl_poc_spark.sinks import (
-        compact_parquet,
-        verify_manifest,
-        write_manifest,
-    )
-
-    store = str(tmp_path / "compactable")
-    spark.range(500).selectExpr("id", "id % 7 AS g").repartition(16).write.parquet(
-        store
-    )
-    before = write_manifest(spark, store)
-    assert before["n_files"] == 16
-
-    n_after = compact_parquet(spark, store, target_file_bytes=1 << 30)
-    assert n_after < 16
-
-    ok, diffs = verify_manifest(spark, store)
-    assert ok, diffs  # inventory re-stamped, data invariants held
-    with open(os.path.join(store, "_manifest.json")) as fh:
-        carried = json.load(fh)
-    assert carried["n_files"] == n_after
-    assert carried["n_rows"] == before["n_rows"]
-    assert carried["content_hash64"] == before["content_hash64"]
-
-
-def test_wds_shards_roundtrip_and_determinism(spark, tmp_path):
-    """WebDataset tar-shard export: every (payload, meta) sample survives
-    a tarfile read-back, shards split at rows_per_shard, the manifest
-    accounts for every row, and identical input produces byte-identical
-    shards (pinned mtimes)."""
-    import hashlib
-    import json
-    import os
-    import tarfile
-
-    from pyspark.sql import functions as F
-
-    from elastic_asset_etl_poc_spark.sinks import write_wds_shards
-
-    df = (
-        spark.range(57)
-        .select(
-            F.col("id").alias("media_id"),
-            F.encode(F.concat(F.lit("payload-"), F.col("id").cast("string")), "utf-8").alias("payload"),
-            (F.col("id") % 3).alias("label"),
-        )
-        .repartition(2, "media_id")
-        # pin within-partition order: shuffle fetch order is not
-        # contractually stable, and the determinism assertion below is
-        # about the SINK (pinned mtimes), not about shuffle internals
-        .sortWithinPartitions("media_id")
-    )
-
-    out1 = str(tmp_path / "wds1")
-    manifest = write_wds_shards(
-        df, out1, "media_id", "payload", meta_cols=["label"], rows_per_shard=10
-    ).collect()
-    assert sum(r.n_members for r in manifest) == 57
-    assert all(r.n_members <= 10 for r in manifest)
-    assert len(manifest) >= 6  # 57 rows / 10 per shard across 2 partitions
-
-    seen = {}
-    for r in manifest:
-        with tarfile.open(os.path.join(out1, r.shard)) as t:
-            names = t.getnames()
-            assert len(names) == 2 * r.n_members
-            for n in names:
-                if n.endswith(".bin"):
-                    key = n[: -len(".bin")]
-                    payload = t.extractfile(n).read()
-                    meta = json.loads(
-                        t.extractfile(f"{key}.json").read()
-                    )
-                    seen[int(key)] = (payload, meta["label"])
-    assert set(seen) == set(range(57))
-    for k, (payload, label) in seen.items():
-        assert payload == f"payload-{k}".encode()
-        assert label == k % 3
-
-    # determinism: same frame, second export, byte-identical shard files
-    out2 = str(tmp_path / "wds2")
-    write_wds_shards(
-        df, out2, "media_id", "payload", meta_cols=["label"], rows_per_shard=10
-    ).collect()
-
-    def digest(d):
-        return {
-            f: hashlib.md5(open(os.path.join(d, f), "rb").read()).hexdigest()
-            for f in sorted(os.listdir(d))
-        }
-
-    assert digest(out1) == digest(out2)
 
 
 def test_flagship_observations(spark):

@@ -105,12 +105,13 @@ def test_asof_nearest_single_shuffle(spark):
 def test_jaccard_cap_is_broadcast_anti_join(spark):
     """The hot-shingle cap must be a broadcast anti-join against the tiny
     hot set — not a window sort over the full posting list.  Inspect the
-    LAZY capped-shingle stage: jaccard_pairs materializes it with
-    localCheckpoint, which truncates the visible lineage."""
-    from elastic_asset_etl_poc_spark.operators.neardup import capped_shingles
+    LAZY capped-shingle stage, built as the suite's shared shingles
+    build it: jaccard_pairs materializes it with localCheckpoint, which
+    truncates the visible lineage."""
+    from elastic_asset_etl_poc_spark.operators.neardup import capped_sets, shingles
     from elastic_asset_etl_poc_spark.sources.registry import load_table
 
-    df, _ = capped_shingles(load_table(spark, SF_DIR, "documents"))
+    df, _ = capped_sets(shingles(load_table(spark, SF_DIR, "documents")))
     plan = fmt_plan(df)
     assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
     # no Window operator anywhere in the jaccard plan

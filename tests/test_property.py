@@ -289,7 +289,7 @@ def test_interval_join_equals_bruteforce_property(spark, lefts, rights, bucket):
 )
 def test_snapshot_diff_equals_dict_diff_property(spark, old, new):
     """Property: snapshot_diff classification equals a reference dict
-    diff for arbitrary keyed rows with NULLs, on both digest paths."""
+    diff for arbitrary keyed rows with NULLs."""
     from elastic_asset_etl_poc_spark.operators.diff import snapshot_diff
 
     def frame(d):
@@ -306,14 +306,11 @@ def test_snapshot_diff_equals_dict_diff_property(spark, old, new):
             want[k] = "removed"
         elif old[k] != new[k]:
             want[k] = "changed"
-    for digest in (True, False):
-        got = {
-            r["k"]: r["change"]
-            for r in snapshot_diff(
-                frame(old), frame(new), keys=["k"], digest=digest
-            ).collect()
-        }
-        assert got == want, f"digest={digest}"
+    got = {
+        r["k"]: r["change"]
+        for r in snapshot_diff(frame(old), frame(new), keys=["k"]).collect()
+    }
+    assert got == want
 
 
 @settings(max_examples=8, deadline=None)

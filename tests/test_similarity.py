@@ -226,30 +226,6 @@ def test_ivf_train_reuse_skips_training_jobs(spark):
     assert sorted(map(tuple, reused.collect())) == self_trained
 
 
-def test_ivf_centroids_parquet_roundtrip(spark, tmp_path):
-    """Centroids persist to parquet and round-trip bit-exactly, so a
-    static corpus trains once per ingest, not once per query batch."""
-    import numpy as np
-
-    from elastic_asset_etl_poc_spark.operators.similarity import (
-        ivf_topk,
-        ivf_train,
-        load_centroids,
-        save_centroids,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    C = ivf_train(emb)
-    path = str(tmp_path / "centroids")
-    save_centroids(spark, C, path)
-    C2 = load_centroids(spark, path)
-    assert C2.shape == C.shape and np.array_equal(C, C2)
-    q = emb.filter("vec_id < 2")
-    a = sorted(map(tuple, ivf_topk(emb, q, k=5, centroids=C).collect()))
-    b = sorted(map(tuple, ivf_topk(emb, q, k=5, centroids=C2).collect()))
-    assert a == b
-
-
 def test_cluster_assign_two_obvious_clusters(spark):
     from elastic_asset_etl_poc_spark.operators.similarity import (
         cluster_assign,
@@ -313,29 +289,6 @@ def test_pq_rejects_indivisible_dim(spark):
 
     with pytest.raises(ValueError, match="not divisible"):
         pq_train(_rand_emb(spark, n=10, d=10), m=4, ksub=4)
-
-
-def test_pq_codebooks_roundtrip(spark, tmp_path):
-    import numpy as np
-
-    from elastic_asset_etl_poc_spark.operators.similarity import (
-        load_codebooks,
-        pq_topk,
-        pq_train,
-        save_codebooks,
-    )
-
-    emb = _rand_emb(spark, n=40, d=16, seed=3)
-    B = pq_train(emb, m=4, ksub=8)
-    path = str(tmp_path / "books")
-    save_codebooks(spark, B, path)
-    B2 = load_codebooks(spark, path)
-    assert B2.shape == B.shape and np.allclose(B, B2)
-    # identical results through the persisted books (train jobs skipped)
-    q = emb.filter("vec_id < 2")
-    a = sorted(map(tuple, pq_topk(emb, q, k=5, codebooks=B).collect()))
-    b = sorted(map(tuple, pq_topk(emb, q, k=5, codebooks=B2).collect()))
-    assert a == b
 
 
 def test_sq8_codes_bounds_and_constant_dim(spark):

@@ -64,34 +64,6 @@ def test_stream_windowed_counts_total(spark, events_dir):
     }
 
 
-def test_stateful_sessionize_matches_batch(spark, events_dir):
-    from pyspark.sql import types as T
-    from elastic_asset_etl_poc_spark.streaming.stateful import stream_sessionize
-    from elastic_asset_etl_poc_spark.streaming.services_stream import (
-        EVENTS_STREAM_SCHEMA,
-    )
-    import __spark_entry__ as e
-
-    ev = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(events_dir)
-        .selectExpr("user_id", "CAST(ts AS TIMESTAMP) AS ts")
-    )
-    q = run_to_memory(stream_sessionize(ev), "sess_stream", "update")
-    try:
-        # update mode: keep the last emitted row per user
-        rows = spark.sql(
-            "SELECT user_id, last(n_events) AS n_events, last(n_sessions) AS n_sessions"
-            " FROM sess_stream GROUP BY user_id"
-        ).collect()
-    finally:
-        q.stop()
-    got = {r.user_id: (r.n_events, r.n_sessions) for r in rows}
-    batch = e.queries()["sessionize_events"](spark, SF_DIR).collect()
-    want = {r.user_id: (r.n_events, r.n_sessions) for r in batch}
-    assert got == want
-
-
 def test_stream_phase2_matches_batch(spark, events_dir):
     from pyspark.sql import functions as F
     from elastic_asset_etl_poc_spark.plans.services import (
@@ -126,63 +98,6 @@ def test_stream_phase2_matches_batch(spark, events_dir):
     ).count()
     assert got == want
     assert unknowns == 0
-
-
-def test_foreach_batch_upsert(spark, events_dir, tmp_path):
-    from pyspark.sql import functions as F
-    from elastic_asset_etl_poc_spark.schema import ASSET_COLUMNS
-    from elastic_asset_etl_poc_spark.streaming.services_stream import (
-        run_foreach_batch_upsert,
-        stream_signals_full,
-    )
-
-    sig = stream_signals_full(spark, events_dir)
-    assets = sig.select(
-        F.col("`@timestamp`").alias("@timestamp"),
-        F.concat(F.lit("service:"), F.col("`service.name`")).alias("asset.ean"),
-        F.lit("service").alias("asset.type"),
-        F.col("`service.name`").alias("asset.id"),
-        F.col("`service.name`").alias("asset.name"),
-        F.lit(None).cast("array<string>").alias("asset.parents"),
-        F.lit(None).cast("array<string>").alias("asset.children"),
-        F.lit(None).cast("array<string>").alias("asset.references"),
-        F.lit(None).cast("string").alias("cloud.provider"),
-        F.lit(None).cast("string").alias("orchestrator.cluster.name"),
-        F.lit(None).cast("string").alias("service.environment"),
-    )
-    store = str(tmp_path / "stream_assets")
-    q = run_foreach_batch_upsert(assets, store)
-    q.stop()
-    back = spark.read.parquet(store)
-    from elastic_asset_etl_poc_spark.sources.signals import signals_view
-
-    n_services = (
-        signals_view(spark, SF_DIR).select("`service.name`").distinct().count()
-    )
-    assert back.count() == n_services  # one latest row per service EAN
-    assert back.columns != [] and set(ASSET_COLUMNS) == set(back.columns)
-
-
-def test_stream_dedup_documents(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from elastic_asset_etl_poc_spark.streaming.services_stream import (
-        stream_dedup_documents,
-    )
-
-    src = str(tmp_path / "docs_stream")
-    base = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha beta")],
-        "doc_id long, text string",
-    ).withColumn("ingest_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
-    base.write.mode("overwrite").parquet(src)
-    q = run_to_memory(stream_dedup_documents(spark, src), "docs_dedup", "append")
-    try:
-        rows = spark.sql("SELECT doc_id FROM docs_dedup").collect()
-    finally:
-        q.stop()
-    kept = sorted(r.doc_id for r in rows)
-    assert len(kept) == 2  # the duplicated content survives exactly once
-    assert 2 in kept and (1 in kept or 3 in kept)
 
 
 def test_stream_band_join_matches_batch(spark, events_dir):
@@ -450,177 +365,6 @@ def test_asof_kernel_timestamps_exact_past_2_53_us():
     assert pd.isna(got[1][0]) and pd.isna(got[1][1])
     assert got[3] == (pd.Timestamp(t, unit="us"), 4.0)
     assert got[3][0].value // 1000 == t
-
-
-def test_stateful_sessionize_multi_batch(spark, tmp_path):
-    """Session state must carry across >=3 micro-batches: a gap inside a
-    batch opens a new session, a small gap ACROSS a batch boundary must
-    NOT, and a large gap across a boundary must."""
-    from pyspark.sql import functions as F
-    from elastic_asset_etl_poc_spark.streaming.services_stream import (
-        EVENTS_STREAM_SCHEMA_NS,
-        run_to_memory,
-    )
-    from elastic_asset_etl_poc_spark.streaming.stateful import stream_sessionize
-
-    M = 60_000_000_000  # 1 min in ns
-    base = 1_700_000_000_000_000_000
-
-    def ev(eid, minutes, uid):
-        return (eid, base + minutes * M, uid, "click", 1.0, None)
-
-    # user 7: b1 [0m, 5m] | b2 [10m (5m gap: same session), 60m (new)] |
-    #         b3 [200m (new)] -> 3 sessions, 5 events
-    # user 8: b1 [0m] | b3 [400m] -> 2 sessions, 2 events
-    batches = [
-        [ev(1, 0, 7), ev(2, 5, 7), ev(10, 0, 8)],
-        [ev(3, 10, 7), ev(4, 60, 7)],
-        [ev(5, 200, 7), ev(11, 400, 8)],
-    ]
-    src = str(tmp_path / "sess_multi_batch")
-    for i, b in enumerate(batches):
-        spark.createDataFrame(b, EVENTS_STREAM_SCHEMA_NS).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(src)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA_NS)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .selectExpr("user_id", "timestamp_micros(ts div 1000) AS ts")
-    )
-    q = run_to_memory(stream_sessionize(stream), "sess_multi", "update")
-    try:
-        n_batches = len(q.recentProgress)
-        rows = spark.sql(
-            "SELECT user_id, last(n_events) AS n_events, last(n_sessions)"
-            " AS n_sessions FROM sess_multi GROUP BY user_id"
-        ).collect()
-    finally:
-        q.stop()
-    assert n_batches >= 3
-    got = {r.user_id: (r.n_events, r.n_sessions) for r in rows}
-    assert got == {7: (5, 3), 8: (2, 2)}
-
-
-def test_stream_sessionize_closed_event_time_timeout(spark, tmp_path):
-    """Closed-session emission: intra-batch gaps close immediately; the
-    trailing open session parks with an EventTimeTimeout and emits once
-    ANOTHER key's later events push the watermark past its deadline."""
-    from pyspark.sql import functions as F
-    from elastic_asset_etl_poc_spark.streaming.services_stream import (
-        EVENTS_STREAM_SCHEMA_NS,
-        run_to_memory,
-    )
-    from elastic_asset_etl_poc_spark.streaming.stateful import (
-        stream_sessionize_closed,
-    )
-
-    M = 60_000_000_000  # 1 min in ns
-    base = 1_700_000_000_000_000_000
-
-    def ev(eid, minutes, uid):
-        return (eid, base + minutes * M, uid, "click", 1.0, None)
-
-    # user 7: events at 0m, 5m | 10m, then 100m (intra-batch gap >30m in
-    # batch 3 closes [0,10] immediately). The open [100m ...] session
-    # times out when user 9's event at 600m (batch 4) advances the
-    # watermark past 100m+30m+delay.
-    batches = [
-        [ev(1, 0, 7), ev(2, 5, 7)],
-        [ev(3, 10, 7)],
-        [ev(4, 100, 7)],
-        [ev(9, 600, 9)],
-    ]
-    src = str(tmp_path / "closed_sessions")
-    for i, b in enumerate(batches):
-        spark.createDataFrame(b, EVENTS_STREAM_SCHEMA_NS).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(src)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA_NS)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .selectExpr("user_id", "timestamp_micros(ts div 1000) AS ts")
-    )
-    q = run_to_memory(stream_sessionize_closed(stream), "closed_sess", "append")
-    try:
-        n_batches = len(q.recentProgress)
-        rows = spark.sql(
-            "SELECT * FROM closed_sess ORDER BY user_id, session_start"
-        ).collect()
-    finally:
-        q.stop()
-    assert n_batches >= 4
-    import datetime as dt
-
-    def t(minutes):
-        return dt.datetime.fromtimestamp(
-            (base // 1_000_000_000) + minutes * 60, dt.timezone.utc
-        ).replace(tzinfo=None)
-
-    got = [(r.user_id, r.session_start, r.session_end, r.n_events) for r in rows]
-    # session [0m..10m] closed by the intra-batch gap before 100m;
-    # session [100m..100m] closed by the event-time timeout.
-    assert got == [(7, t(0), t(10), 3), (7, t(100), t(100), 1)]
-
-
-def test_stream_sessionize_closed_late_event_no_regression(spark, tmp_path):
-    """A late-but-watermark-valid event must merge into the open session
-    without regressing its end: the next batch's gap check uses the true
-    max timestamp, and no session ever emits end < start."""
-    from elastic_asset_etl_poc_spark.streaming.services_stream import (
-        EVENTS_STREAM_SCHEMA_NS,
-        run_to_memory,
-    )
-    from elastic_asset_etl_poc_spark.streaming.stateful import (
-        stream_sessionize_closed,
-    )
-
-    M = 60_000_000_000
-    base = 1_700_000_000_000_000_000
-
-    def ev(eid, minutes, uid):
-        return (eid, base + minutes * M, uid, "click", 1.0, None)
-
-    # batch1: A @60m; batch2: LATE A @59m (within gap horizon, watermark
-    # still behind); batch3: A @89m — 89-60=29m < gap, so with a correct
-    # (non-regressed) state this CONTINUES the session; a regressed
-    # last_us=59m would falsely close it.  batch4: B @600m pushes the
-    # watermark so A's single session times out and emits.
-    batches = [
-        [ev(1, 60, 7)],
-        [ev(2, 59, 7)],
-        [ev(3, 89, 7)],
-        [ev(9, 600, 9)],
-    ]
-    src = str(tmp_path / "late_sessions")
-    for i, b in enumerate(batches):
-        spark.createDataFrame(b, EVENTS_STREAM_SCHEMA_NS).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(src)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA_NS)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .selectExpr("user_id", "timestamp_micros(ts div 1000) AS ts")
-    )
-    q = run_to_memory(stream_sessionize_closed(stream), "late_sess", "append")
-    try:
-        rows = spark.sql("SELECT * FROM late_sess WHERE user_id = 7").collect()
-    finally:
-        q.stop()
-    assert len(rows) == 1  # ONE merged session, not a false split
-    r = rows[0]
-    assert r.session_start <= r.session_end
-    got_minutes = (
-        (r.session_start.timestamp() - base / 1e9) / 60,
-        (r.session_end.timestamp() - base / 1e9) / 60,
-        r.n_events,
-    )
-    assert got_minutes == (59.0, 89.0, 3)
 
 
 def test_stream_file_sink_exactly_once_resume(spark, tmp_path):
