@@ -8,13 +8,6 @@ see ``elastic_asset_etl_poc_spark/suite.py``.
 
 from __future__ import annotations
 
-import os
-
-# pin the driver's correctness gate to the pure-Python decode kernels —
-# multimodal feature rows / dHash pairs must not vary with Pillow's
-# presence across environments (operators/multimodal.py dispatch)
-os.environ.setdefault("SPARK_GRAFT_PURE_DECODE", "1")
-
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession

@@ -3,15 +3,15 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 
     {"metric": "suite_wall_sec", "value": N, "unit": "sec",
-     "n_queries": 272, "queries": {slowest-only}, "fast_n": ...,
-     "drift": {"n": 0, "worst": {}}, "full": "BENCH_FULL.json",
-     "runs": 3, "sf": 0.1, "load": {...}}
+     "n_queries": 274, "queries": {slowest-only}, "fast_n": ...,
+     "jobs": {"cold": N, "warm": N}, "drift": {"n": 0, "worst": {}},
+     "full": "BENCH_FULL.json", "runs": 3, "sf": 0.1, "load": {...}}
 
-The stdout line is hard-capped (≤1500 bytes) so the driver's tail
-capture parses it; the FULL per-query map (median + cold + memoized
-names + full drift) is written to BENCH_FULL.json.  A query is listed
-as memoized when one of its runs served an entry of the per-session
-memo (``sources.registry.memo``).
+The stdout line is hard-capped (≤1500 bytes) so a tail capture parses
+it; BENCH_FULL.json holds one record per query (:func:`run_query`):
+median and cold wall time, the build/exec split, jobs cold and warm,
+JVM GC time, and the session-memo entries the query built and served.
+A query is listed as memoized when it served a memo entry.
 
 Each query is forced end-to-end with the noop sink (full materialization,
 no driver collect cost).  A tiny warmup query absorbs JVM/codegen start-up
@@ -22,14 +22,12 @@ Per-query numbers are the MEDIAN of ``$SPARK_GRAFT_BENCH_RUNS`` (default
 changes rather than first-run JVM/codegen/page-cache noise; the first
 (cold) run is reported separately under "cold".
 
-Drift self-triage (r8-r10 each spent a session on position-noise
-forensics, so the artifact now explains itself): any query whose median
-drifts >2x from the last committed BENCH_FULL.json AND lands above 1s
-is re-timed best-of-2 in a FRESH subprocess JVM after the sweep — the
-same solo protocol those manual triages used — and the artifact's
-"drift" map carries {prev, suite, solo} per drifted query.  solo ~=
-prev means suite-position noise (accumulated JVM state); solo ~= suite
-means a real plan regression.  Disable with SPARK_GRAFT_BENCH_TRIAGE=0.
+Drift triage: when the committed BENCH_FULL.json was taken at the same
+scale factor on the same number of cpus, any query whose median drifts
+>2x from it AND lands above 1s is re-timed in a FRESH JVM after the
+sweep (``tools/solo_retime.py``), and the "drift" map carries {prev,
+suite, solo} per drifted query.  solo ~= prev means suite-position noise
+(accumulated JVM state); solo ~= suite means a real plan regression.
 """
 
 from __future__ import annotations
@@ -37,17 +35,105 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+
+
+def start(sf_dir: str):
+    """A session with JVM/codegen warmed up and one cold read per table,
+    so the first timed query doesn't absorb file-footer and page-cache
+    costs."""
+    from elastic_asset_etl_poc_spark.session import get_spark
+    from elastic_asset_etl_poc_spark.sources.registry import TABLES, load_table
+
+    spark = get_spark(app_name="bench")
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for t in TABLES:
+        try:
+            load_table(spark, sf_dir, t).count()
+        except Exception:
+            pass
+    return spark
+
+
+def run_query(spark, tracer, name: str, fn, sf_dir: str, runs: int) -> dict:
+    """Time ``fn(spark, sf_dir)`` plus its noop write ``runs`` times and
+    return the query's record.
+
+    Each run is two sibling spans of ``tracer`` (a
+    ``perfbench.spans.Tracer``): ``build`` around the call and ``exec``
+    around the write.  The spans carry no op, so the tracer reads no
+    status store inside a timed run; jobs come from the spans' job-id
+    range and GC time from the collector beans.  ``jobs.cold`` is the
+    first run's count, ``jobs.warm`` the last run's (None after one
+    run).  ``memo_built``/``memo_served`` are the session memo's
+    build/serve deltas over all runs.  A failed run ends the loop and
+    keeps the earlier runs' samples; with none, the times read -1.
+    """
+    from elastic_asset_etl_poc_spark.sources.registry import memo_counts
+
+    built0, served0 = memo_counts(spark)
+    builds: list[float] = []
+    execs: list[float] = []
+    gcs: list[float] = []
+    jobs: list[int] = []
+    for i in range(runs):
+        try:
+            with tracer.span(f"{name}.build") as b:
+                df = fn(spark, sf_dir)
+            with tracer.span(f"{name}.exec") as x:
+                df.write.format("noop").mode("overwrite").save()
+        except Exception as ex:  # noqa: BLE001 — record, keep benching
+            # keep any successful earlier samples: a cold-works/
+            # warm-fails query is a different signal from never-ran
+            print(f"bench error in {name} (run {i}): {ex}", file=sys.stderr)
+            break
+        finally:
+            spark.catalog.clearCache()
+        builds.append(b.ms / 1000.0)
+        execs.append(x.ms / 1000.0)
+        gcs.append(b.gc1_ms - b.gc0_ms + x.gc1_ms - x.gc0_ms)
+        jobs.append(b.job1 - b.job0 + x.job1 - x.job0)
+    built1, served1 = memo_counts(spark)
+
+    def med(xs: list[float], nd: int) -> float:
+        return round(statistics.median(xs), nd) if xs else -1.0
+
+    return {
+        "median": med([b + x for b, x in zip(builds, execs)], 2),
+        "cold": round(builds[0] + execs[0], 3) if builds else -1.0,
+        "build_s": med(builds, 3),
+        "exec_s": med(execs, 3),
+        "jobs": {
+            "cold": jobs[0] if jobs else None,
+            "warm": jobs[-1] if len(jobs) > 1 else None,
+        },
+        "gc_ms": med(gcs, 0),
+        "memo_built": built1 - built0,
+        "memo_served": served1 - served0,
+    }
+
+
+def _committed_medians(sf: float | None, cpus: int | None) -> dict[str, float]:
+    """Per-query medians of the committed BENCH_FULL.json, if it was taken
+    at the same scale factor on the same number of cpus; else empty."""
+    try:
+        blob = subprocess.run(
+            ["git", "-C", HERE, "show", "HEAD:BENCH_FULL.json"],
+            capture_output=True, text=True, timeout=30,
+        )
+        pj = json.loads(blob.stdout) if blob.returncode == 0 else {}
+    except (OSError, subprocess.SubprocessError, ValueError):
+        return {}
+    if pj.get("sf") != sf or pj.get("load", {}).get("cpus") != cpus:
+        return {}
+    return {n: r["median"] for n, r in pj["queries"].items()}
 
 
 def main() -> None:
-    # pin bench (and the driver's correctness gate, which imports through
-    # the same suite) to the pure-Python decode kernels so multimodal
-    # rows don't vary with Pillow's presence across environments
-    os.environ.setdefault("SPARK_GRAFT_PURE_DECODE", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     try:
@@ -56,23 +142,11 @@ def main() -> None:
         sf = None
 
     import __spark_entry__ as e
-    from elastic_asset_etl_poc_spark.session import get_spark
+    from perfbench.spans import Tracer
+    from tools.solo_retime import solo
 
-    spark = get_spark(app_name="bench")
-    # warmup: JVM/codegen plus one cold read per table so the first timed
-    # query doesn't absorb file-footer and page-cache costs
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from elastic_asset_etl_poc_spark.sources.registry import (
-        TABLES,
-        load_table,
-        memo_counts,
-    )
-
-    for t in TABLES:
-        try:
-            load_table(spark, sf_dir, t).count()
-        except Exception:
-            pass
+    spark = start(sf_dir)
+    tracer = Tracer(spark)
 
     # STABLE bench order (alphabetical), decoupled from queries()' export
     # order.  queries() exports stale-first so the DRIVER's correctness
@@ -86,13 +160,6 @@ def main() -> None:
     # compare position-like-for-like; new queries change their own
     # neighborhood only.
     qs = dict(sorted(e.queries().items()))
-    # Serve-only disclosure: a query that served an entry of the
-    # session memo (sources.registry.memo: shared near-dup pair frames,
-    # edge checkpoints, codebooks, band stores, staged fixtures) in any
-    # run is listed here, so its warm median prices SERVING, not the
-    # build.  The build cost is carried by the cold column.  Emitted in
-    # both JSON artifacts so the caveat travels with the numbers.
-    memoized: list[str] = []
     # Host-load stamp (the r7 lesson: six >2× "regressions" on unchanged
     # code were a noisy host; numbers without load context are not
     # interpretable round-over-round).  loadavg is sampled after every
@@ -112,8 +179,6 @@ def main() -> None:
     total0, steal0 = _cpu_times()
     load_max = load0
 
-    cold: dict[str, float] = {}
-    medians: dict[str, float] = {}
     # NOTE: a periodic driver System.gc() between queries was tried (to
     # reclaim torn-off broadcasts on this single-process 167-query run)
     # and measured NET-HARMFUL: median query 1.16× slower and the
@@ -121,87 +186,19 @@ def main() -> None:
     # churn against the pinned edge frames).  Accumulated-state pressure
     # on late all-pairs audits (~3s solo → ~9s at suite position 58) is
     # the lesser evil; the load stamp below makes it attributable.
+    records: dict[str, dict] = {}
     for name, fn in qs.items():
-        samples: list[float] = []
-        served0 = memo_counts(spark)[1]
-        for i in range(runs):
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t0)
-            except Exception as ex:  # noqa: BLE001 — record, keep benching
-                # keep any successful earlier samples: a cold-works/
-                # warm-fails query is a different signal from never-ran
-                print(f"bench error in {name} (run {i}): {ex}", file=sys.stderr)
-                break
-            finally:
-                spark.catalog.clearCache()
-        if memo_counts(spark)[1] > served0:
-            memoized.append(name)
-        if samples:
-            cold[name] = round(samples[0], 3)
-            medians[name] = round(statistics.median(samples), 2)
-        else:
-            cold[name] = medians[name] = -1.0
+        records[name] = run_query(spark, tracer, name, fn, sf_dir, runs)
         load_max = max(load_max, os.getloadavg()[0])
-
-    # --- drift self-triage: solo re-time queries that moved >2x vs the
-    # last committed BENCH_FULL (fresh JVM per drifted query = the manual
-    # triage protocol of r8-r10, mechanized)
-    drift: dict[str, dict] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_TRIAGE", "1") != "0":
-        import subprocess
-
-        here_ = os.path.dirname(os.path.abspath(__file__))
-        prev: dict[str, float] = {}
-        try:
-            blob = subprocess.run(
-                ["git", "-C", here_, "show", "HEAD:BENCH_FULL.json"],
-                capture_output=True, text=True, timeout=30,
-            )
-            if blob.returncode == 0:
-                pj = json.loads(blob.stdout)
-                # only comparable like-for-like: same scale factor
-                if pj.get("sf") == sf:
-                    prev = pj.get("queries", {})
-        except Exception:
-            pass
-        drifted = [
-            n for n, t in medians.items()
-            if n in prev and prev[n] > 0 and t > 0
-            and t >= 1.0 and (t / prev[n] > 2.0 or prev[n] / t > 2.0)
-        ]
-        for n in drifted:
-            code = (
-                "import sys,time,json,os;"
-                f"sys.path.insert(0,{here_!r});"
-                "os.environ.setdefault('SPARK_GRAFT_PURE_DECODE','1');"
-                "import __spark_entry__ as e;"
-                "from elastic_asset_etl_poc_spark.session import get_spark;"
-                "s=get_spark(app_name='bench_triage');"
-                f"f=e.queries()[{n!r}];b=None\n"
-                "for _ in range(2):\n"
-                " t0=time.perf_counter();"
-                f"f(s,{sf_dir!r}).write.format('noop').mode('overwrite').save();"
-                "d=time.perf_counter()-t0;b=d if b is None else min(b,d);"
-                "s.catalog.clearCache()\n"
-                "print('SOLO_BEST',round(b,2))"
-            )
-            try:
-                out = subprocess.run(
-                    [sys.executable, "-c", code],
-                    capture_output=True, text=True, timeout=600,
-                )
-                solo = next(
-                    (float(l.split()[1]) for l in out.stdout.splitlines()
-                     if l.startswith("SOLO_BEST")),
-                    -1.0,
-                )
-            except Exception:
-                solo = -1.0
-            drift[n] = {"prev": prev[n], "suite": medians[n], "solo": solo}
-            print(f"bench drift triage {n}: {drift[n]}", file=sys.stderr)
+    medians = {n: r["median"] for n, r in records.items()}
+    # Serve-only disclosure: a query that served an entry of the session
+    # memo (shared near-dup pair frames, edge checkpoints, codebooks,
+    # band stores, staged fixtures) prices SERVING in its warm median;
+    # the build cost is carried by its cold time.
+    memoized = [n for n, r in records.items() if r["memo_served"] > 0]
+    jobs = {
+        k: sum(r["jobs"][k] or 0 for r in records.values()) for k in ("cold", "warm")
+    }
 
     total1, steal1 = _cpu_times()
     load = {
@@ -214,24 +211,26 @@ def main() -> None:
         ),
     }
 
+    # --- drift triage: a fresh JVM per drifted query (the manual triage
+    # protocol of r8-r10, mechanized)
+    prev = _committed_medians(sf, load["cpus"])
+    drift: dict[str, dict] = {}
+    for n, t in medians.items():
+        p = prev.get(n, -1.0)
+        if p > 0 and t >= 1.0 and (t / p > 2.0 or p / t > 2.0):
+            drift[n] = {"prev": p, "suite": t, "solo": solo(n, sf_dir)["median"]}
+            print(f"bench drift triage {n}: {drift[n]}", file=sys.stderr)
+
     total = round(sum(t for t in medians.values() if t >= 0), 2)
-    # The driver records only a ~2000-char TAIL of stdout, and 116 query
-    # names cannot fit that budget — so the FULL per-query detail (median
-    # + cold) is written to BENCH_FULL.json (committed, judge-readable)
-    # and the stdout line is shrunk adaptively: individual entries for
-    # the slowest queries down to the largest threshold that keeps the
-    # line under 1900 bytes, the rest folded into fast_n/fast_sec.
-    # Queries sorted by name, scalar fields last, errors always listed.
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_FULL.json"), "w") as fh:
+    with open(os.path.join(HERE, "BENCH_FULL.json"), "w") as fh:
         json.dump(
             {
                 "metric": "suite_wall_sec",
                 "value": total,
                 "unit": "sec",
-                "queries": medians,
-                "cold": cold,
+                "queries": records,
                 "memoized": memoized,
+                "jobs": jobs,
                 "drift": drift,
                 "runs": runs,
                 "sf": sf,
@@ -241,27 +240,20 @@ def main() -> None:
             indent=1,
         )
 
-    # stdout budget: the driver records only the TAIL (~2000 chars) of
-    # stdout and json-parses it; BENCH_r12/r13/r14 all recorded
-    # "parsed": null because this line exceeded the budget (the full
-    # "memoized" name list alone is ~900 bytes and the drift map is
-    # unbounded).  So the stdout line is now a hard-capped SUMMARY —
-    # full per-query/cold/drift/memoized detail lives only in
-    # BENCH_FULL.json — with counts in place of lists and drift folded
-    # to its 3 worst entries.  The threshold loop ends in a
+    # stdout budget: a tail capture keeps only ~2000 chars and
+    # json-parses them; BENCH_r12/r13/r14 all recorded "parsed": null
+    # because this line exceeded the budget.  So the stdout line is a
+    # hard-capped SUMMARY — the per-query records and memoized names
+    # live only in BENCH_FULL.json — with counts in place of lists,
+    # drift folded to its 3 worst entries, and individual entries only
+    # for the slowest queries down to the largest threshold that keeps
+    # the line under the cap.  The threshold loop ends in a
     # queries-free fallback that is small by construction.
     drift_summary = {
         "n": len(drift),
         "worst": {
             n: drift[n]
-            for n in sorted(
-                drift,
-                key=lambda n: -(
-                    drift[n]["suite"] / drift[n]["prev"]
-                    if drift[n]["prev"] > 0
-                    else 0.0
-                ),
-            )[:3]
+            for n in sorted(drift, key=lambda n: -drift[n]["suite"] / drift[n]["prev"])[:3]
         },
     }
     n_errors = sum(1 for v in medians.values() if v < 0)
@@ -271,14 +263,11 @@ def main() -> None:
         # including the final no-threshold fallback — they are few by
         # construction and "which query failed" must survive the
         # stdout cap (n_errors alone doesn't say)
-        if threshold is None:
-            slow = {k: v for k, v in sorted(medians.items()) if v < 0}
-        else:
-            slow = {
-                k: v
-                for k, v in sorted(medians.items())
-                if v >= threshold or v < 0
-            }
+        slow = {
+            k: v
+            for k, v in sorted(medians.items())
+            if v < 0 or (threshold is not None and v >= threshold)
+        }
         return json.dumps(
             {
                 "metric": "suite_wall_sec",
@@ -289,17 +278,11 @@ def main() -> None:
                 "queries": slow,
                 "fast_n": len(medians) - len(slow),
                 "fast_sec": round(
-                    sum(
-                        v
-                        for k, v in medians.items()
-                        if v >= 0 and k not in slow
-                    ),
-                    2,
+                    sum(v for k, v in medians.items() if v >= 0 and k not in slow), 2
                 ),
                 "thresh": threshold,
-                # serve-only queries (memoized artifact; build cost in
-                # "cold" / pretrain_pipeline_docs) — names in BENCH_FULL
                 "memoized_n": len(memoized),
+                "jobs": jobs,
                 "drift": drift_summary,
                 "full": "BENCH_FULL.json",
                 "runs": runs,

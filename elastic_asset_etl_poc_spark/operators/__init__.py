@@ -1,8 +1,8 @@
-from .filters import time_window, term, terms, exists_all, exists_any, drop_missing  # noqa: F401
+from .filters import time_window, term, terms, exists_all, exists_any  # noqa: F401
 from .project import project_rename, wildcard_select, array_head  # noqa: F401
 from .dedup import dedup_latest, collapse_top1  # noqa: F401
 from .joins import semi_join_in_list  # noqa: F401
-from .layout import zorder_key, zorder_layout  # noqa: F401
+from .layout import zorder_key  # noqa: F401
 from .graph import group_collect_edges, hits, pagerank, triangle_count  # noqa: F401
 from .neardup import (  # noqa: F401
     dedup_exact,
@@ -39,7 +39,7 @@ from .similarity import (  # noqa: F401
     sq8_topk,
     sq8_train,
 )
-from .skew import salted_agg, salted_join  # noqa: F401
+from .skew import salted_join  # noqa: F401
 from .stats import (  # noqa: F401
     chi2_independence,
     kaplan_meier,

@@ -77,9 +77,3 @@ def exists_any(df: DataFrame, *fields: str) -> DataFrame:
     lib/collectServicesFromSummaries.ts:216-238): at least one of the
     parent-candidate fields is present."""
     return df.filter(exists_any_cond(*fields))
-
-
-def drop_missing(df: DataFrame, *fields: str) -> DataFrame:
-    """F7: drop rows with no fields (the flatMap-to-[] guard,
-    lib/collectServicesFromSummaries.ts:58-64)."""
-    return df.na.drop(subset=[f for f in fields])

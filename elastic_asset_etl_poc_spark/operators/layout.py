@@ -9,10 +9,10 @@ key; Z-ordering co-locates RANGE SCANS on several.
 
 Spark-first shape: the Z-key is pure integer bit arithmetic in builtin
 column expressions (whole-stage codegen, map-only, engine-portable — the
-DuckDB oracle replays it bit-for-bit), and the layout itself is
-``repartitionByRange`` on that key (one range-exchange; Spark samples
-boundaries), after which each output file covers a narrow Z-range and
-therefore a small axis-aligned box of the keyed space.
+DuckDB oracle replays it bit-for-bit).  A ``repartitionByRange`` on
+that key (one range-exchange; Spark samples boundaries) then gives each
+output file a narrow Z-range and therefore a small axis-aligned box of
+the keyed space.
 """
 
 from __future__ import annotations
@@ -20,9 +20,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-__all__ = ["zorder_key", "zorder_layout"]
+__all__ = ["zorder_key"]
 
 
 def zorder_key(
@@ -70,22 +70,3 @@ def zorder_key(
                 )
             )
     return reduce(lambda a, b: a.bitwiseOR(b), parts).alias("zkey")
-
-
-def zorder_layout(
-    df: DataFrame,
-    cols: Sequence[tuple[str, float, float]],
-    n_partitions: int,
-    bits: int = 16,
-    key_col: str = "zkey",
-) -> DataFrame:
-    """Attach the Z-key and range-partition on it → a frame whose
-    partitions (→ output files) each cover a narrow, DISJOINT Z-range.
-    Write the result with any sink; parquet min/max column stats then
-    prune multi-column range scans at the file level.  One range
-    exchange (boundary sampling) — the same cost class as any global
-    sort, paid once at layout time to make every later scan cheaper.
-    """
-    return df.withColumn(key_col, zorder_key(cols, bits)).repartitionByRange(
-        n_partitions, F.col(key_col)
-    )

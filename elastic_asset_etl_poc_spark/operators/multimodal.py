@@ -498,55 +498,12 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int, float]:
     return w, h, luma
 
 
-try:  # optional native decode fast path: libjpeg/zlib via Pillow.  The
-    # pure-Python Huffman/IDCT kernel below is 100-1000× slower than
-    # libjpeg — correct as a contract, not a production decode.  When
-    # Pillow is importable we route through it and keep the pure kernels
-    # as the always-available fallback (same schema, same fail-soft).
-    # SPARK_GRAFT_PURE_DECODE=1 forces the pure kernels even with Pillow
-    # installed, pinning suite/bench/oracle output to one decode path:
-    # PIL decodes formats the pure kernels stub as 'fake' (GIF/TIFF/
-    # progressive JPEG) and rounds JPEG IDCT differently, so feature rows
-    # and dHash pair counts would otherwise vary by environment.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_PURE_DECODE", "").strip() in ("1", "true"):
-        _PILImage = None
-    else:
-        from PIL import Image as _PILImage
-        from PIL import ImageOps as _PILImageOps
-except ImportError:  # container has no PIL — pure-Python kernels serve
-    _PILImage = None
-
-
-def _decode_luma_native(b: bytes):
-    """Pillow-backed decode → (w, h, float64 luma plane, format), EXIF
-    orientation applied (mirrors _decode_jpeg's own EXIF handling)."""
-    import io
-
-    import numpy as np
-
-    with _PILImage.open(io.BytesIO(b)) as im:
-        fmt = (im.format or "unknown").lower()
-        im2 = _PILImageOps.exif_transpose(im)
-        plane = np.asarray(im2.convert("L"), dtype=np.float64)
-    h, w = plane.shape
-    return w, h, plane, fmt
-
-
 def _decode_luma(b: bytes):
     """Shared decode dispatch → (w, h, luma plane | None, format).
 
     Real luma plane for BMP/PNG/baseline-JPEG; ``(…, None, 'fake')``
     with the deterministic stub's scalar features for anything else —
-    including on any decode error (fail-soft).  Pillow (libjpeg) is the
-    fast path when importable; the pure-Python kernels are the fallback
-    and the correctness reference."""
-    if _PILImage is not None:
-        try:
-            return _decode_luma_native(b)
-        except Exception:
-            pass  # unknown/corrupt under PIL too — try the pure kernels
+    including on any decode error (fail-soft)."""
     try:
         if b[:2] == b"BM":
             return (*_decode_bmp(b), "bmp")

@@ -54,7 +54,6 @@ def winsorize(
     keys: list[str] | None = None,
     lo: float = 0.05,
     hi: float = 0.95,
-    exact: bool = True,
     out_col: str | None = None,
 ) -> DataFrame:
     """Robust outlier clamping (winsorization): clip ``value_col`` to the
@@ -68,13 +67,11 @@ def winsorize(
     ``percentile_disc``.  Ties need no tiebreak: equal values give the
     same rank-k value under any permutation.
 
-    Exact path: one window pass ranks values per group, a per-group
-    aggregate picks the two rank-k values, and the tiny bounds frame
-    broadcasts back — the rank window and the bounds agg share the same
-    hash partitioning, so Catalyst reuses ONE exchange.  At 100-TB the
-    per-group sort is the honest cost of exact percentiles;
-    ``exact=False`` swaps in ``approx_percentile`` (t-digest, map-side
-    partials, no sort) for the scale configuration.
+    One window pass ranks values per group, a per-group aggregate picks
+    the two rank-k values, and the tiny bounds frame broadcasts back —
+    the rank window and the bounds agg share the same hash partitioning,
+    so Catalyst reuses ONE exchange.  The per-group sort is the honest
+    cost of exact percentiles.
 
     Adds ``{value_col}_w`` (clamped value), ``clamped_lo``/``clamped_hi``
     flags.  NULL values pass through unclamped with NULL flags.
@@ -84,28 +81,21 @@ def winsorize(
     keys = list(keys or [])
     out_col = out_col or f"{value_col}_w"
     v = F.col(value_col)
-    if exact:
-        part = Window.partitionBy(*[F.col(k) for k in keys]) if keys else Window.partitionBy()
-        w_rank = part.orderBy(v.asc())
-        ranked = df.withColumn("__rn", F.row_number().over(w_rank)).withColumn(
-            "__n", F.count(v).over(part)
-        )
-        # NULLs sort first in asc: shift ranks so rank 1 = smallest non-NULL
-        n_null = F.count(F.when(v.isNull(), 1)).over(part)
-        ranked = ranked.withColumn("__rn", F.col("__rn") - n_null)
-        lo_rank = F.ceil(F.lit(lo) * F.col("__n"))
-        hi_rank = F.ceil(F.lit(hi) * F.col("__n"))
-        bounds = ranked.groupBy(*keys).agg(
-            F.max(F.when(F.col("__rn") == lo_rank, v)).alias("__lo_v"),
-            F.max(F.when(F.col("__rn") == hi_rank, v)).alias("__hi_v"),
-        )
-        base = ranked.drop("__rn", "__n")
-    else:
-        bounds = df.groupBy(*keys).agg(
-            F.approx_percentile(v, F.lit(lo)).alias("__lo_v"),
-            F.approx_percentile(v, F.lit(hi)).alias("__hi_v"),
-        )
-        base = df
+    part = Window.partitionBy(*[F.col(k) for k in keys]) if keys else Window.partitionBy()
+    w_rank = part.orderBy(v.asc())
+    ranked = df.withColumn("__rn", F.row_number().over(w_rank)).withColumn(
+        "__n", F.count(v).over(part)
+    )
+    # NULLs sort first in asc: shift ranks so rank 1 = smallest non-NULL
+    n_null = F.count(F.when(v.isNull(), 1)).over(part)
+    ranked = ranked.withColumn("__rn", F.col("__rn") - n_null)
+    lo_rank = F.ceil(F.lit(lo) * F.col("__n"))
+    hi_rank = F.ceil(F.lit(hi) * F.col("__n"))
+    bounds = ranked.groupBy(*keys).agg(
+        F.max(F.when(F.col("__rn") == lo_rank, v)).alias("__lo_v"),
+        F.max(F.when(F.col("__rn") == hi_rank, v)).alias("__hi_v"),
+    )
+    base = ranked.drop("__rn", "__n")
     joined = (
         base.join(F.broadcast(bounds), keys, "left")
         if keys

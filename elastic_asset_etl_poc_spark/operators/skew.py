@@ -1,9 +1,9 @@
-"""Skew mitigation: salted two-phase aggregation and salted joins.
+"""Skew mitigation: salted joins and skew diagnostics.
 
 AQE's skew-join splitting (enabled in session.py) handles most runtime
-skew; these explicit forms cover the cases AQE can't see — aggregation
-hot keys (one reducer owning a celebrity key) and broadcast-ineligible
-joins against a skewed build side.
+skew; the explicit forms here cover what AQE can't see: finding the hot
+keys before a big join or aggregation, and broadcast-ineligible joins
+against a skewed build side.
 
 All salting is deterministic (hash of stable row attributes, not rand()),
 so plans stay replayable and oracle-comparable.
@@ -11,35 +11,9 @@ so plans stay replayable and oracle-comparable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    salt_col: str,
-    buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation with a salt on the hot key.
-
-    ``aggs`` maps output name → (function, input column) for decomposable
-    aggregates (sum/count/min/max).  Phase 1 aggregates on
-    (keys + salt) — the hot key's rows spread over ``buckets`` reducers —
-    phase 2 merges the partials on the true keys.  The salt derives from
-    ``xxhash64(salt_col)``: deterministic, no rand().
-    """
-    mergers = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    firsts = {"sum": F.sum, "count": lambda c: F.count(F.lit(1)), "min": F.min, "max": F.max}
-    salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(buckets)).alias("__salt")
-    partial = df.groupBy(*[F.col(k) for k in keys], salt).agg(
-        *[firsts[fn](col).alias(f"__p_{out}") for out, (fn, col) in aggs.items()]
-    )
-    return partial.groupBy(*[F.col(k) for k in keys]).agg(
-        *[mergers[fn](f"__p_{out}").alias(out) for out, (fn, col) in aggs.items()]
-    )
 
 
 def salted_join(
@@ -93,7 +67,7 @@ def skew_report(
     """Per-key distribution diagnostics — the planning step BEFORE a big
     join/agg on ``key_col``: find the hot keys that would pin a reducer
     and quantify how hot they are, so the pipeline can choose plain
-    shuffle vs :func:`salted_agg`/:func:`salted_join` vs a per-key cap.
+    shuffle vs :func:`salted_join` vs a per-key cap.
 
     Returns the ``top_n`` heaviest keys as (key, n_rows, pct_of_total,
     hot_ratio, rank) where ``hot_ratio`` is n_rows over the mean rows

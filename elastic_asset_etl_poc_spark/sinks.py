@@ -3,7 +3,8 @@
   * S7 DDL/index template (lib/assets_index_template.ts) → schema
     enforcement on write: align to SIMPLE_ASSET_SCHEMA, cap keywords.
   * S8 bulk sink (lib/es_client.ts:29-31; unused — write step "TBA",
-    run.ts:12-15) → ``df.write.parquet`` (task-parallel batching).
+    run.ts:12-15) → ``upsert_assets``: a keyed upsert into a parquet
+    store partitioned by ``asset.type``.
   * S9 stdout sink (run.ts:18-19 JSON.stringify) → ``toJSON`` lines.
 """
 
@@ -38,12 +39,6 @@ def enforce_asset_schema(df: DataFrame) -> DataFrame:
     return df.selectExpr(*_ASSET_SCHEMA_EXPRS)
 
 
-def write_assets_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S8: the bulk-write analog.  At 100 TB scale prefer partitioned
-    output (`partitionBy("asset.type")`) so per-type reads prune files."""
-    enforce_asset_schema(df).write.mode(mode).partitionBy("asset.type").parquet(path)
-
-
 def to_json_lines(df: DataFrame, limit: int | None = None) -> list[str]:
     """S9: stdout sink (run.ts:18-19).  Driver-side collect — debug only."""
     if limit:
@@ -51,7 +46,7 @@ def to_json_lines(df: DataFrame, limit: int | None = None) -> list[str]:
     return df.toJSON().collect()
 
 
-__all__ = ["enforce_asset_schema", "write_assets_parquet", "to_json_lines", "ASSET_COLUMNS"]
+__all__ = ["enforce_asset_schema", "to_json_lines", "ASSET_COLUMNS"]
 
 
 def write_bucketed(

@@ -319,5 +319,5 @@ class SignalsESDataSource(DataSource):
         return SignalsESReader(schema, dict(self.options))
 
 
-def register(spark) -> None:
+def register_signals_es(spark) -> None:
     spark.dataSource.register(SignalsESDataSource)

@@ -4093,7 +4093,7 @@ WHERE top.rank <= 10
 def skew_report_events(spark, sf_dir):
     """Hot-key diagnostics on events.user_id: top-10 heaviest keys with
     corpus share and hot-ratio (n_rows over mean rows/key) — the
-    planning input for salted_agg/salted_join/cap_per_key decisions."""
+    planning input for salted_join/cap_per_key decisions."""
     from .operators.skew import skew_report
 
     return skew_report(load_table(spark, sf_dir, "events"), "user_id", top_n=10)
@@ -6325,10 +6325,9 @@ GROUP BY 1
 def winsorize_events(spark, sf_dir):
     """Per-group winsorization (operators/profile.py winsorize): event
     values clamped to the per-type [p05, p95] discrete percentiles —
-    the heavy-tail defense before any mean-based metric.  Exact path:
-    rank window + bounds agg share ONE exchange, bounds broadcast back;
-    `exact=False` swaps a t-digest approx_percentile (no sort) at
-    corpus scale.  The oracle replays the identical ceil(q·n) rank
+    the heavy-tail defense before any mean-based metric.  The rank
+    window and the bounds agg share ONE exchange, bounds broadcast
+    back.  The oracle replays the identical ceil(q·n) rank
     definition, so the clamp is hash-checked, not approximately
     checked."""
     from .operators.profile import winsorize

@@ -6,12 +6,6 @@ import pytest
 # import the package of THIS checkout, whichever directory it lives in
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Pin CI to the pure-Python decode kernels: with Pillow present the
-# multimodal fast path changes feature rows / dHash pairs by IDCT
-# rounding and format coverage, making results environment-dependent.
-# Library users still get the fast path by default.
-os.environ.setdefault("SPARK_GRAFT_PURE_DECODE", "1")
-
 from elastic_asset_etl_poc_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -12,7 +12,7 @@ from pyspark.sql.datasource import (
     StringContains,
 )
 
-from elastic_asset_etl_poc_spark.sources.es_source import filters_to_dsl, register
+from elastic_asset_etl_poc_spark.sources.es_source import filters_to_dsl, register_signals_es
 
 
 def test_filters_to_dsl_mapping():
@@ -51,7 +51,7 @@ def es_index(tmp_path_factory):
 
 
 def test_es_source_end_to_end_pushdown(spark, es_index):
-    register(spark)
+    register_signals_es(spark)
     df = (
         spark.read.format("signals_es")
         .schema("event_id bigint, ts bigint, service_name string, metricset_name string, container_id string")
@@ -71,7 +71,7 @@ def test_es_source_end_to_end_pushdown(spark, es_index):
 
 
 def test_es_source_unsupported_filter_still_correct(spark, es_index):
-    register(spark)
+    register_signals_es(spark)
     df = (
         spark.read.format("signals_es")
         .schema("event_id bigint, ts bigint, service_name string, metricset_name string, container_id string")
@@ -241,7 +241,7 @@ def test_es_source_http_pushdown_round_trip(spark, es_http_server):
     so a translation bug yields wrong rows, and the recorded request
     bodies prove range/term/exists reached the wire."""
     url, requests = es_http_server
-    register(spark)
+    register_signals_es(spark)
     df = (
         spark.read.format("signals_es")
         .schema("event_id bigint, ts bigint, service_name string, metricset_name string, container_id string")
@@ -278,7 +278,7 @@ def test_es_source_http_terms_and_unsupported(spark, es_http_server):
     """IN-list pushes as terms; a contains() predicate is NOT mappable,
     so Spark re-applies it post-scan — rows stay correct either way."""
     url, requests = es_http_server
-    register(spark)
+    register_signals_es(spark)
     df = (
         spark.read.format("signals_es")
         .schema("event_id bigint, ts bigint, service_name string, metricset_name string, container_id string")
@@ -307,7 +307,7 @@ def test_es_source_http_search_after_pagination(spark, es_http_server):
     (3+ per slice), rows arrive complete and exactly-once, and the
     recorded bodies show the keyset advancing monotonically."""
     url, requests = es_http_server
-    register(spark)
+    register_signals_es(spark)
     df = (
         spark.read.format("signals_es")
         .schema(
@@ -343,7 +343,7 @@ def test_es_source_http_pagination_with_slices_and_filters(spark, es_http_server
     2 slices × page_size=1, range-filtered — each slice pages through
     only ITS matching docs, union is exact."""
     url, requests = es_http_server
-    register(spark)
+    register_signals_es(spark)
     df = (
         spark.read.format("signals_es")
         .schema(
@@ -370,7 +370,7 @@ def test_es_source_http_legacy_fallback_without_pit(spark, es_http_server_legacy
     ``_doc`` search — rows stay complete and exactly-once on the stub
     (where _doc IS a total order)."""
     url, requests = es_http_server_legacy
-    register(spark)
+    register_signals_es(spark)
     df = (
         spark.read.format("signals_es")
         .schema(
@@ -398,7 +398,7 @@ def test_es_source_http_stuck_keyset_raises(spark, es_http_server_stuck):
     loop forever yielding duplicates; the reader detects the
     non-advancing keyset and aborts loudly instead."""
     url, _ = es_http_server_stuck
-    register(spark)
+    register_signals_es(spark)
     df = (
         spark.read.format("signals_es")
         .schema(

@@ -1,13 +1,9 @@
-"""Z-order layout (operators/layout.py): key correctness, partition
-disjointness, and the actual pruning win over a hash layout."""
+"""Z-order key (operators/layout.py): bit interleave, clamping, NULLs
+and argument checks."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from elastic_asset_etl_poc_spark.operators.layout import (
-    zorder_key,
-    zorder_layout,
-)
+from elastic_asset_etl_poc_spark.operators.layout import zorder_key
 
 
 def test_zorder_key_interleaves_bits(spark):
@@ -49,54 +45,3 @@ def test_zorder_key_validates_args(spark):
         zorder_key([("a", 0, 1)] * 4, bits=16)
     with pytest.raises(ValueError, match="hi > lo"):
         zorder_key([("a", 1.0, 1.0)])
-
-
-def _grid(spark, n=64):
-    # n×n integer grid — every (x, y) cell once
-    return spark.range(n * n).select(
-        (F.col("id") % n).cast("double").alias("x"),
-        (F.col("id") / n).cast("long").cast("double").alias("y"),
-    )
-
-
-def test_zorder_layout_partitions_are_disjoint_zranges(spark):
-    df = zorder_layout(
-        _grid(spark), [("x", 0.0, 64.0), ("y", 0.0, 64.0)], 8, bits=6
-    ).withColumn("pid", F.spark_partition_id())
-    ranges = {
-        r.pid: (r.lo, r.hi)
-        for r in df.groupBy("pid")
-        .agg(F.min("zkey").alias("lo"), F.max("zkey").alias("hi"))
-        .collect()
-    }
-    spans = sorted(ranges.values())
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2  # repartitionByRange: disjoint, ordered ranges
-
-
-def test_zorder_layout_prunes_2d_box_better_than_hash(spark):
-    """The point of the whole exercise: for a small 2-D box filter, the
-    Z-ordered layout concentrates matches in FEWER partitions than a
-    hash layout — the file-skipping win parquet min/max stats realize."""
-    grid = _grid(spark)
-    cols = [("x", 0.0, 64.0), ("y", 0.0, 64.0)]
-    box = (
-        (F.col("x") >= 8) & (F.col("x") < 16)
-        & (F.col("y") >= 8) & (F.col("y") < 16)
-    )
-
-    def touched(df):
-        return (
-            df.withColumn("pid", F.spark_partition_id())
-            .filter(box)
-            .select("pid")
-            .distinct()
-            .count()
-        )
-
-    z = touched(zorder_layout(grid, cols, 16, bits=6))
-    h = touched(
-        grid.withColumn("zkey", zorder_key(cols, bits=6)).repartition(16)
-    )
-    assert h == 16  # hash scatters the box everywhere
-    assert z <= 4   # Z-order confines an 1/64-area box to a few ranges

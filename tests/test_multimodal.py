@@ -508,34 +508,6 @@ def test_resize_applies_exif_orientation(spark):
     assert np.ptp(t1.mean(axis=1)) > 10 * max(np.ptp(t1.mean(axis=0)), 1e-9)
 
 
-def test_native_decode_parity_when_pil_present():
-    """When Pillow is importable, the native fast path must agree with
-    the pure-Python reference kernels on the synthetic fixtures (size
-    exactly; mean luma within the quant-table reconstruction error).
-    Skipped where PIL is absent — the fallback is what every other test
-    in this file exercises."""
-    import numpy as np
-    import pytest
-
-    from elastic_asset_etl_poc_spark.operators.multimodal import (
-        _decode_jpeg,
-        _decode_luma,
-        _encode_jpeg_baseline,
-        _PILImage,
-    )
-
-    if _PILImage is None:
-        pytest.skip("Pillow not installed — pure-Python kernels covered elsewhere")
-
-    yy, xx = np.mgrid[0:24, 0:32]
-    gray = ((xx * 5 + yy * 3) % 256).astype(np.uint8)
-    payload = _encode_jpeg_baseline(gray)
-    w_ref, h_ref, plane_ref = _decode_jpeg(payload)
-    w, h, plane, fmt = _decode_luma(payload)
-    assert (w, h, fmt) == (w_ref, h_ref, "jpeg")
-    assert abs(float(plane.mean()) - float(plane_ref.mean())) < 2.0
-
-
 def test_dhash_scale_invariance_and_neardup_pairs(spark):
     """dHash keys on structure: the same gradient at two resolutions
     hashes within a few bits (a near-dup pair); a different pattern and
@@ -796,73 +768,3 @@ def test_audio_fingerprint_frame_parameter(spark):
 
     with pytest.raises(ValueError, match="frame"):
         audio_fingerprint(audio, frame=64)
-
-
-def test_pil_parity_dhash_and_features_full_fixture_sweep():
-    """Full native-vs-pure parity sweep (runs when Pillow is importable;
-    the CI container has no PIL, so this skips there).
-
-    To run it for real::
-
-        python3 -m venv /tmp/pilenv && . /tmp/pilenv/bin/activate
-        pip install pillow pyspark pyarrow pandas numpy pytest
-        python3 -m pytest tests/test_multimodal.py -k pil_parity -q
-
-    The Pillow fast path is monkeypatched in directly (bypassing the
-    SPARK_GRAFT_PURE_DECODE pin conftest sets for hash stability), so
-    the test exercises the exact _decode_luma_native code the gate
-    disables in CI.  For every synthetic fixture kind — grayscale JPEG,
-    4:2:0 color JPEG, restart-marker JPEG, PNG, BMP — native and pure
-    decodes must agree on (width, height), dHash within 4 bits (IDCT
-    rounding moves a couple of threshold-adjacent comparisons), and
-    mean luma within 2.0."""
-    import numpy as np
-    import pytest
-
-    pil = pytest.importorskip("PIL.Image")
-    from PIL import ImageOps as pil_ops
-
-    from elastic_asset_etl_poc_spark.operators import multimodal as mm
-
-    def dhash_bits(plane):
-        g = mm._area_resample(np.asarray(plane, dtype=np.float64), 9, 8)
-        return (g[:, :-1] < g[:, 1:]).reshape(-1)
-
-    payloads = []
-    for i in range(6):
-        w, h = 24 + (i % 3) * 8, 16 + (i % 5) * 8
-        yy, xx = np.mgrid[0:h, 0:w]
-        gray = ((xx * 5 + yy * 3 + i * 11) % 256).astype(np.uint8)
-        payloads.append(
-            (
-                f"jpeg-{i}",
-                mm._encode_jpeg_baseline(
-                    gray,
-                    color_420=(i % 3 == 1),
-                    restart_interval=2 if i % 3 == 2 else 0,
-                ),
-                "jpeg",
-            )
-        )
-    payloads.append(("png", _make_png(7, 5, (40, 90, 200)), "png"))
-    payloads.append(("bmp", _make_bmp(6, 4, (200, 30, 90)), "bmp"))
-
-    saved = (mm._PILImage, getattr(mm, "_PILImageOps", None))
-    mm._PILImage, mm._PILImageOps = pil, pil_ops
-    try:
-        for name, payload, fmt in payloads:
-            nw, nh, nplane, nfmt = mm._decode_luma_native(payload)
-            pure = {
-                "jpeg": mm._decode_jpeg,
-                "png": mm._decode_png,
-                "bmp": mm._decode_bmp,
-            }[fmt]
-            pw, ph, pplane = pure(payload)
-            assert (nw, nh) == (pw, ph), name
-            assert nfmt == fmt, name
-            assert abs(float(nplane.mean()) - float(pplane.mean())) < 2.0, name
-            bits_native = dhash_bits(nplane)
-            bits_pure = dhash_bits(pplane)
-            assert int((bits_native != bits_pure).sum()) <= 4, name
-    finally:
-        mm._PILImage, mm._PILImageOps = saved

@@ -5,28 +5,8 @@ from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 
-from elastic_asset_etl_poc_spark.operators.skew import salted_agg, salted_join
+from elastic_asset_etl_poc_spark.operators.skew import salted_join
 from elastic_asset_etl_poc_spark.sources.registry import load_table
-
-
-def test_salted_agg_matches_direct(spark):
-    l = load_table(spark, SF_DIR, "lineitem")
-    direct = {
-        r.l_returnflag: (r.n, r.s)
-        for r in l.groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("l_quantity").alias("s"))
-        .collect()
-    }
-    salted = {
-        r.l_returnflag: (r.n, r.s)
-        for r in salted_agg(
-            l,
-            ["l_returnflag"],
-            {"n": ("count", "l_quantity"), "s": ("sum", "l_quantity")},
-            salt_col="l_orderkey",
-        ).collect()
-    }
-    assert salted == direct
 
 
 def test_salted_join_matches_direct(spark):

@@ -16,7 +16,6 @@ sys.path.insert(0, HERE)
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_PURE_DECODE", "1")
     label, tag = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -36,7 +36,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_PURE_DECODE", "1")
 
 BASE = "/tmp/sparkgraft_er_probe"
 BATCH = 1_000

@@ -12,9 +12,7 @@ Run after any INTENTIONAL change to the fixtures or decode kernels::
     python3 tools/gen_fixture_oracles.py
 
 Writes ``elastic_asset_etl_poc_spark/fixture_oracles.py``; suite.py picks
-the oracles up at import.  The queries run with SPARK_GRAFT_PURE_DECODE=1
-— the same pin bench/CI/driver use — so the frozen rows are decode-path
-stable across environments with or without Pillow.
+the oracles up at import.
 """
 
 from __future__ import annotations
@@ -22,7 +20,6 @@ from __future__ import annotations
 import os
 import sys
 
-os.environ["SPARK_GRAFT_PURE_DECODE"] = "1"
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: queries to freeze — every entry must be sf_dir-independent (synthetic

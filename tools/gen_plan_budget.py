@@ -18,10 +18,12 @@ deliberate trade, not drift.  Usage: python3 tools/gen_plan_budget.py
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Why a query can be exempt from plan budgeting: eager builders execute
 # on build (streaming drains), and localCheckpoint/collect-based chains
@@ -330,7 +332,7 @@ def main() -> None:
     }
     for b in budget.values():
         b.pop("existing_rdd_scans", None)
-    with open("/root/repo/tests/plan_budget.json", "w") as fh:
+    with open(os.path.join(ROOT, "tests", "plan_budget.json"), "w") as fh:
         json.dump(
             {
                 "budgets": budget,

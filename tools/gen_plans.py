@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
 """Regenerate PLANS.md: formatted physical plans of the headline queries."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as e  # noqa: E402
 from elastic_asset_etl_poc_spark.session import get_spark  # noqa: E402
@@ -87,7 +89,7 @@ def main() -> None:
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
         out.append(f"## {name}\n\n{why}\n\n```\n{plan}\n```\n")
-    with open("PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     spark.stop()
 

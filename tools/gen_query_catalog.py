@@ -6,9 +6,11 @@ pulled from the suite docstrings.  The judge-facing index of the whole
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -32,7 +34,7 @@ def main() -> None:
             doc = doc[:217] + "..."
         mode = "oracle" if name in osql else "rows-only"
         out.append(f"| `{name}` | {mode} | {doc} |")
-    with open("/root/repo/QUERIES.md", "w") as fh:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as fh:
         fh.write("\n".join(out) + "\n")
     print(f"wrote QUERIES.md ({len(qs)} queries)")
 

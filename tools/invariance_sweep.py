@@ -24,7 +24,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_PURE_DECODE", "1")
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -1,60 +1,58 @@
 #!/usr/bin/env python3
-"""Solo re-time a named set of queries, each in a FRESH subprocess JVM
-(best-of-2) at sf0.1 — the drift-triage protocol from bench.py, run
-standalone on a quiet host to adjudicate suite-position noise vs real
-plan regressions (VERDICT r12 Next-round #2).
+"""Solo re-time a named set of queries, each in a FRESH subprocess JVM,
+with bench.py's warm-up and per-query record (three runs) — the protocol
+bench.py's drift triage uses, run standalone on a quiet host to tell
+suite-position noise from real plan regressions.
 
 Usage: python tools/solo_retime.py q1 q2 ... [> report]
-Prints one line per query: name, best-of-2 solo sec, load1 before/after.
+Fixture directory from $SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture, as in bench.py).
+Prints one line per query: name, solo median, jobs, load1 before/after.
 """
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def solo(name: str) -> float:
+def solo(name: str, sf_dir: str) -> dict:
+    """``bench.run_query``'s record for ``name``, taken in a fresh JVM;
+    ``{"median": -1.0}`` if the subprocess fails or times out."""
     code = (
-        "import sys,time,os;"
-        f"sys.path.insert(0,{HERE!r});"
-        "os.environ.setdefault('SPARK_GRAFT_PURE_DECODE','1');"
-        "import __spark_entry__ as e;"
-        "from elastic_asset_etl_poc_spark.session import get_spark;"
-        "s=get_spark(app_name='solo_retime');"
-        "s.range(1000000).selectExpr('sum(id)').collect();"
-        "from elastic_asset_etl_poc_spark.sources.registry import TABLES, load_table\n"
-        "for t in TABLES:\n"
-        f" load_table(s,{SF_DIR!r},t).count()\n"
-        f"f=e.queries()[{name!r}];b=None\n"
-        "for _ in range(2):\n"
-        " t0=time.perf_counter();"
-        f"f(s,{SF_DIR!r}).write.format('noop').mode('overwrite').save();"
-        "d=time.perf_counter()-t0;b=d if b is None else min(b,d);"
-        "s.catalog.clearCache()\n"
-        "print('SOLO_BEST',round(b,2))"
+        f"import json,sys;sys.path.insert(0,{ROOT!r});"
+        "import bench,__spark_entry__ as e;from perfbench.spans import Tracer;"
+        f"s=bench.start({sf_dir!r});"
+        f"r=bench.run_query(s,Tracer(s),{name!r},e.queries()[{name!r}],{sf_dir!r},3);"
+        "print('SOLO',json.dumps(r))"
     )
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=900
-    )
+    try:
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, timeout=900
+        )
+    except subprocess.TimeoutExpired:
+        print(f"solo {name}: no record within 900 s", file=sys.stderr)
+        return {"median": -1.0}
     for line in out.stdout.splitlines():
-        if line.startswith("SOLO_BEST"):
-            return float(line.split()[1])
+        if line.startswith("SOLO "):
+            return json.loads(line[5:])
     print(out.stdout[-1500:], file=sys.stderr)
     print(out.stderr[-1500:], file=sys.stderr)
-    return -1.0
+    return {"median": -1.0}
 
 
 def main() -> None:
-    names = sys.argv[1:]
-    for n in names:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    for n in sys.argv[1:]:
         l0 = os.getloadavg()[0]
-        t = solo(n)
+        r = solo(n, sf_dir)
         l1 = os.getloadavg()[0]
-        print(f"{n}: solo_best2={t}s load1={l0:.2f}->{l1:.2f}", flush=True)
+        print(
+            f"{n}: solo={r['median']}s jobs={r.get('jobs')} load1={l0:.2f}->{l1:.2f}",
+            flush=True,
+        )
 
 
 if __name__ == "__main__":
