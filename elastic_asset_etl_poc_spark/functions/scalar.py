@@ -108,6 +108,35 @@ def zorder_key(cols: list[Column], bits: int = 16) -> Column:
     return z
 
 
+def zorder_key_scaled(
+    cols: list[tuple[str, float, float]], bits: int = 16
+) -> Column:
+    """:func:`zorder_key` over raw numeric columns ``[(name, lo, hi), ...]``.
+
+    Each column is linearly scaled to an integer rank in ``[0, 2^bits)``
+    against its CALLER-PROVIDED [lo, hi] bounds (clamped — out-of-range
+    values saturate at the edge cells; at scale the bounds come from
+    table statistics and need only be approximate, since clamping merely
+    coarsens the edge cells), then the ranks interleave.  NULLs rank 0
+    (they cluster in the first cells, mirroring NULLS FIRST).  Exact
+    integer/IEEE arithmetic throughout — bit-identical across engines.
+    """
+    top = (1 << bits) - 1
+    ranks: list[Column] = []
+    for name, lo, hi in cols:
+        if not hi > lo:
+            raise ValueError(f"bounds for {name} must satisfy hi > lo")
+        scaled = F.floor(
+            (F.col(name).cast("double") - F.lit(float(lo)))
+            / F.lit(float(hi) - float(lo))
+            * F.lit(float(top))
+        ).cast("long")
+        ranks.append(
+            F.coalesce(F.least(F.greatest(scaled, F.lit(0)), F.lit(top)), F.lit(0))
+        )
+    return zorder_key(ranks, bits=bits)
+
+
 def canonicalize_url(
     url: Column,
     strip_params: tuple = ("utm_", "fbclid", "gclid", "msclkid"),

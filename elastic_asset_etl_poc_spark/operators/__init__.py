@@ -2,7 +2,6 @@ from .filters import time_window, term, terms, exists_all, exists_any  # noqa: F
 from .project import project_rename, wildcard_select, array_head  # noqa: F401
 from .dedup import dedup_latest, collapse_top1  # noqa: F401
 from .joins import semi_join_in_list  # noqa: F401
-from .layout import zorder_key  # noqa: F401
 from .graph import group_collect_edges, hits, pagerank, triangle_count  # noqa: F401
 from .neardup import (  # noqa: F401
     dedup_exact,

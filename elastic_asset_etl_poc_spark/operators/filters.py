@@ -23,7 +23,6 @@ def time_window(
     now: datetime,
     amount: int,
     unit: str = "m",
-    closed_hi: bool = True,
 ) -> DataFrame:
     """F1: range filter with date math (``gte: now-10m``).
 
@@ -34,8 +33,7 @@ def time_window(
     """
     lo, hi = date_math_lookback(now, amount, unit)
     c = F.col(f"`{ts_col}`")
-    cond = (c >= lo) & (c <= hi) if closed_hi else (c >= lo)
-    return df.filter(cond)
+    return df.filter((c >= lo) & (c <= hi))
 
 
 def term(df: DataFrame, field: str, value) -> DataFrame:

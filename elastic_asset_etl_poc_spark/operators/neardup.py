@@ -1023,73 +1023,16 @@ def minhash_neardup_incremental(
     return out
 
 
-def simhash_store_init(
-    docs: DataFrame,
-    store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Materialize the corpus's SimHash fingerprints to parquet —
-    (doc_id, simhash): 8 bytes per document, the Hamming-family analog
-    of :func:`minhash_store_init`.  Fingerprinting (tokenize + weighted
-    bit voting) is the expensive stage; the store makes it
-    once-per-document forever."""
-    simhash(docs, text_col=text_col, id_col=id_col).write.mode(
-        "overwrite"
-    ).parquet(store_path)
-
-
-def simhash_neardup_incremental(
-    batch: DataFrame,
-    store_path: str,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    update_store: bool = False,
-) -> DataFrame:
-    """Incremental SimHash near-dup: fingerprint ONLY the batch, then
-    run the banded Hamming core over (stored ∪ batch) fingerprints and
-    keep pairs involving a batch doc → (doc_a, doc_b, hamming).
-
-    Unlike the MinHash store (where candidate verification needs corpus
-    shingles), the fingerprint IS the comparison object — the store
-    holds everything needed, 8 bytes/doc, so the daily-batch cost is
-    O(batch) fingerprinting plus a banded join over fingerprint rows
-    (~1% of corpus bytes).  The pre-collapse hot-bucket bound of
-    :func:`banded_hamming_pairs` applies unchanged.
-    ``update_store=True`` appends the batch fingerprints (daily ingest);
-    leave False for replayable audits.
-    """
-    spark = batch.sparkSession
-    bf = simhash(batch, text_col=text_col, id_col=id_col).localCheckpoint(
-        eager=True
-    )
-    store = spark.read.parquet(store_path)
-    pairs = banded_hamming_pairs(
-        store.unionByName(bf), max_hamming=max_hamming
-    )
-    bids = bf.select(F.col("doc_id").alias("__bid"))
-    batch_involving = (
-        pairs.join(bids, pairs["doc_a"] == bids["__bid"], "left_semi")
-        .unionByName(
-            pairs.join(bids, pairs["doc_b"] == bids["__bid"], "left_semi")
-        )
-        .distinct()
-    )
-    if update_store:
-        bf.write.mode("append").parquet(store_path)
-    return batch_involving
-
-
 def fingerprint_store_init(
     fps: DataFrame, store_path: str
 ) -> None:
-    """Materialize an arbitrary int64 Hamming-fingerprint frame
-    ``(doc_id, simhash)`` to parquet — the modality-agnostic store
-    behind :func:`simhash_store_init`: any producer that emits 64-bit
-    perceptual fingerprints (text SimHash, image dHash, audio
-    subband fingerprints) maintains near-dup incrementally through the
-    same 8-bytes-per-item store and banded core."""
+    """Materialize an int64 Hamming-fingerprint frame ``(doc_id,
+    simhash)`` to parquet — 8 bytes per item, the Hamming-family analog
+    of :func:`minhash_store_init`.  Fingerprinting is the expensive
+    stage; the store makes it once-per-item forever.  Modality-agnostic:
+    any producer that emits 64-bit fingerprints (text :func:`simhash`,
+    image dHash, audio subband fingerprints) maintains near-dup
+    incrementally through the same store and banded core."""
     fps.write.mode("overwrite").parquet(store_path)
 
 

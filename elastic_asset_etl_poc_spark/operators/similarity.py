@@ -1,23 +1,32 @@
 """Similarity search over embedding columns (``array<float>``).
 
 Brute-force cosine top-k as the exact baseline, a banded random-hyperplane
-LSH variant as the scale path, and all-pairs near-dup kernels (exact
-blocked + LSH-bucketed).  Dot products in the top-k operators run
-JVM-side via ``zip_with``/``aggregate`` higher-order functions; the
-all-pairs kernels use Arrow-batched numpy matmul (BLAS) — measured 10×+
-faster than interpreted folds for O(N²·d) work.
+LSH variant as the scale path, IVF / PQ / IVF-PQ / SQ8 ANN tiers, and
+all-pairs near-dup kernels (exact blocked + LSH-bucketed).  Dot products
+in the top-k operators run JVM-side via ``zip_with``/``aggregate``
+higher-order functions; the all-pairs kernels use Arrow-batched numpy
+matmul (BLAS) — measured 10×+ faster than interpreted folds for O(N²·d)
+work.
+
+Train once, serve many: the trained artifacts — IVF centroids
+(:func:`ivf_train`), PQ codebooks (:func:`pq_train`), IVF-PQ residual
+codebooks (:func:`ivfpq_train`) — are plain numpy arrays, and every
+operator that uses one (:func:`ivf_topk`, :func:`pq_topk`,
+:func:`ivfpq_topk`, :func:`mutual_top1_pairs_ivf`,
+:func:`cluster_assign`) takes it as a required argument.  No serving
+operator trains: the count+collect train jobs run once per corpus (the
+suite memoizes them per session), never per query batch.
 
 Higher-order-function note (r15, from the bloom forensics): HOFs are
 ``CodegenFallback`` expressions and a stage containing one is NOT
 wrapped in WholeStageCodegen — so the ``_dot``/``_norm`` folds here
 run interpreted, not codegen'd.  That is a deliberate, bounded cost:
 every HOF site in this module sits in an exact/audit arm or a
-query-sized frame (brute-force baselines, recall audits, PCA
-projection of a 64-dim corpus), while the O(N²)/serving hot paths are
-the Arrow-batched numpy kernels precisely because per-element JVM
-folds — codegen'd or not — lose to BLAS by 10×+ there.  A predicate
-on a corpus-sized SHUFFLE stage must not use HOFs (that was the bloom
-bug, operators/bloom.py); a bounded scoring arm may.
+query-sized frame (brute-force baselines, recall audits), while the
+O(N²)/serving hot paths are the Arrow-batched numpy kernels precisely
+because per-element JVM folds — codegen'd or not — lose to BLAS by 10×+
+there.  A predicate on a corpus-sized SHUFFLE stage must not use HOFs
+(that was the bloom bug, operators/bloom.py); a bounded scoring arm may.
 
 Scale posture:
   * top-k: the query side is always the small side — broadcast it.
@@ -28,7 +37,8 @@ Scale posture:
     driver materialization (the round-1 collect()-based form was a
     driver OOM at scale).  :func:`cosine_pairs_lsh` is the true 100 TB
     path: banded sign-LSH buckets bound the candidate set, the same
-    numpy kernel runs per bucket, recall is tunable via (planes, bands).
+    block-pair kernel (:func:`_pair_kernel`) runs per bucket, recall is
+    tunable via (planes, bands).
 """
 
 from __future__ import annotations
@@ -52,6 +62,21 @@ def _dot(a, b):
 
 def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _matrix(vectors):
+    """An iterable of vector cells (one Arrow column) → (n, d) float64."""
+    import numpy as np
+
+    return np.array([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _unit(m):
+    """Row-wise L2 normalization; zero rows stay zero instead of NaN."""
+    import numpy as np
+
+    n = np.linalg.norm(m, axis=1, keepdims=True)
+    return m / np.where(n == 0, 1.0, n)
 
 
 def cosine_topk(
@@ -83,6 +108,30 @@ def cosine_topk(
     return (
         scored.select("query_id", "neighbor_id", cos)
         .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank")
+    )
+
+
+def _exact_cos(cand: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos) over candidate rows that carry the
+    neighbor vector ``ev`` and the query vector ``qv``."""
+    cos = _dot(F.col("ev"), F.col("qv")) / (_norm(F.col("ev")) * _norm(F.col("qv")))
+    return cand.select("query_id", "neighbor_id", cos.alias("cos"))
+
+
+def _rank_topk(scored: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """Per-query top ``k`` of (query_id, neighbor_id, score) rows by
+    (score DESC, neighbor_id ASC), so ties are deterministic →
+    (query_id, neighbor_id, rank).  The approximate operators share it;
+    :func:`cosine_topk`, the exact arm the recall audits compare them
+    against, keeps its own window so a fault here cannot pass an audit
+    by breaking both arms alike."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank")
     )
@@ -138,9 +187,7 @@ def _banded_signatures(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            vecs = _matrix(pdf[vec_col])
             if H is None:
                 H = rng.standard_normal((total_planes, vecs.shape[1]))
             bits = (vecs @ H.T >= 0).astype(np.int64)  # (n, total_planes)
@@ -205,16 +252,29 @@ def lsh_topk(
         .select("query_id", "neighbor_id", "ev", "qv")
         .distinct()  # a pair found by several bands scores once
     )
-    cos = (_dot(F.col("ev"), F.col("qv")) / (_norm(F.col("ev")) * _norm(F.col("qv")))).alias(
-        "cos"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.select("query_id", "neighbor_id", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(_exact_cos(cand), k)
+
+
+def _train_sample(embeddings, max_train_sample, id_col, vec_col):
+    """The bounded deterministic training sample every trainer shares →
+    (n, d) float64 UNIT rows, or an empty (0, 0) array for an empty
+    corpus.  A cheap ``count()`` sizes ``mod = ceil(N / max_train_sample)``
+    and rows with ``xxhash64(id) % mod == 0`` are collected — O(sample)
+    on the driver (the broadcast-build-side discipline), NEVER O(N),
+    regardless of corpus size."""
+    import numpy as np
+
+    sample = embeddings.select(id_col, vec_col)
+    n_total = sample.count()  # distributed aggregate — cheap at any scale
+    mod = -(-max(n_total, 1) // max_train_sample)  # ceil div
+    if mod > 1:
+        sample = sample.filter(
+            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(mod)) == 0
+        )
+    rows = sample.collect()  # ≈ max_train_sample rows — bounded, never O(N)
+    if not rows:
+        return np.empty((0, 0), dtype=np.float64)
+    return _unit(_matrix(r[1] for r in rows))
 
 
 def ivf_train(
@@ -228,11 +288,8 @@ def ivf_train(
 ):
     """Train an IVF coarse quantizer → centroid matrix (kc, d) float64.
 
-    Spherical k-means on a BOUNDED deterministic sample: a cheap
-    ``count()`` sizes ``mod = ceil(N / max_train_sample)`` and rows with
-    ``xxhash64(id) % mod == 0`` are collected — O(sample) on the driver
-    (the broadcast-build-side discipline), NEVER O(N), regardless of
-    corpus size.  Returns an empty (0, 0) array for an empty corpus.
+    Spherical k-means on the bounded sample of :func:`_train_sample`.
+    Returns an empty (0, 0) array for an empty corpus.
 
     The returned numpy array is plain data: persist it with ``np.save``
     (or a one-row parquet) and hand it to :func:`ivf_topk` — a static
@@ -241,22 +298,9 @@ def ivf_train(
     """
     import numpy as np
 
-    sample = embeddings.select(id_col, vec_col)
-    n_total = sample.count()  # distributed aggregate — cheap at any scale
-    mod = -(-max(n_total, 1) // max_train_sample)  # ceil div
-    if mod > 1:
-        sample = sample.filter(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(mod)) == 0
-        )
-    rows = sample.collect()  # ≈ max_train_sample rows — bounded, never O(N)
-    if not rows:
-        return np.empty((0, 0), dtype=np.float64)
-
-    def _unit(m):  # zero vectors stay zero instead of dividing to NaN
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        return m / np.where(n == 0, 1.0, n)
-
-    S = _unit(np.array([np.asarray(r[1], dtype=np.float64) for r in rows]))
+    S = _train_sample(embeddings, max_train_sample, id_col, vec_col)
+    if not len(S):
+        return S
     rng = np.random.default_rng(seed)
     kc = min(n_centroids, len(S))
     C = S[rng.choice(len(S), size=kc, replace=False)]
@@ -272,8 +316,50 @@ def ivf_train(
     return C
 
 
-def _ivf_idtype(df, id_col):
-    return df.schema[id_col].dataType
+def _nearest_centroid(
+    embeddings: DataFrame,
+    centroids,
+    id_col: str,
+    vec_col: str,
+    cid_col: str,
+    out_id: str,
+    with_vec: bool,
+) -> DataFrame:
+    """The one nearest-centroid kernel: every vector maps to its nearest
+    (cosine) centroid via one Arrow numpy matmul against the broadcast
+    centroid matrix — map-side, no shuffle, no driver action.  Returns
+    ``(cid_col, out_id[, __v])``; a zero vector's norm counts as 1, so
+    it assigns deterministically instead of through NaN."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    idtype = embeddings.schema[id_col].dataType
+    bc = embeddings.sparkSession.sparkContext.broadcast(
+        np.asarray(centroids, dtype=np.float64)
+    )
+    fields = [
+        T.StructField(cid_col, T.IntegerType()),
+        T.StructField(out_id, idtype),
+    ]
+    if with_vec:
+        fields.append(T.StructField("__v", T.ArrayType(T.DoubleType())))
+
+    def assign_nearest(it):
+        Cm = bc.value
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            vecs = _matrix(pdf[vec_col])
+            cid = np.argmax(_unit(vecs) @ Cm.T, axis=1).astype(np.int32)
+            cols = {cid_col: cid, out_id: pdf[id_col]}
+            if with_vec:
+                cols["__v"] = list(vecs)
+            yield pd.DataFrame(cols)
+
+    return embeddings.select(id_col, vec_col).mapInPandas(
+        assign_nearest, T.StructType(fields)
+    )
 
 
 def ivf_assign(
@@ -284,44 +370,13 @@ def ivf_assign(
     out_id: str = "neighbor_id",
 ) -> DataFrame:
     """IVF list assignment: every vector maps to its nearest coarse
-    centroid via one Arrow numpy matmul against the broadcast centroid
-    matrix — map-side, no shuffle.  Returns ``(centroid, out_id, __v)``,
-    the inverted-file STORE layout (parquet-persistable, so a standing
-    index can be maintained incrementally: assigning a new batch against
-    FROZEN centroids is this same stateless map over just the delta —
-    no retrain, no touch of the standing lists)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    C = np.asarray(centroids, dtype=np.float64)
-    idtype = _ivf_idtype(embeddings, id_col)
-    bc = embeddings.sparkSession.sparkContext.broadcast(C)
-    schema = T.StructType(
-        [
-            T.StructField("centroid", T.IntegerType()),
-            T.StructField(out_id, idtype),
-            T.StructField("__v", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def assign_nearest(it):
-        Cm = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            n = np.linalg.norm(vecs, axis=1, keepdims=True)
-            vn = vecs / np.where(n == 0, 1.0, n)
-            cid = np.argmax(vn @ Cm.T, axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {"centroid": cid, out_id: pdf[id_col], "__v": list(vecs)}
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        assign_nearest, schema
+    centroid (:func:`_nearest_centroid`).  Returns ``(centroid, out_id,
+    __v)``, the inverted-file STORE layout (parquet-persistable, so a
+    standing index can be maintained incrementally: assigning a new
+    batch against FROZEN centroids is this same stateless map over just
+    the delta — no retrain, no touch of the standing lists)."""
+    return _nearest_centroid(
+        embeddings, centroids, id_col, vec_col, "centroid", out_id, True
     )
 
 
@@ -344,13 +399,13 @@ def ivf_probe(
     import pandas as pd
     from pyspark.sql import types as T
 
-    C = np.asarray(centroids, dtype=np.float64)
-    idtype = _ivf_idtype(queries, id_col)
-    bc = queries.sparkSession.sparkContext.broadcast(C)
+    bc = queries.sparkSession.sparkContext.broadcast(
+        np.asarray(centroids, dtype=np.float64)
+    )
     schema = T.StructType(
         [
             T.StructField("centroid", T.IntegerType()),
-            T.StructField("query_id", idtype),
+            T.StructField("query_id", queries.schema[id_col].dataType),
             T.StructField("__v", T.ArrayType(T.DoubleType())),
         ]
     )
@@ -360,12 +415,10 @@ def ivf_probe(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            n = np.linalg.norm(vecs, axis=1, keepdims=True)
-            vn = vecs / np.where(n == 0, 1.0, n)
-            order = np.argsort(-(vn @ Cm.T), axis=1)[:, : min(nprobe, len(Cm))]
+            vecs = _matrix(pdf[vec_col])
+            order = np.argsort(-(_unit(vecs) @ Cm.T), axis=1)[
+                :, : min(nprobe, len(Cm))
+            ]
             nq, probes = order.shape
             yield pd.DataFrame(
                 {
@@ -382,72 +435,40 @@ def ivf_probe(
     cand = e.join(F.broadcast(q), "centroid").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    cos = (
-        _dot(F.col("ev"), F.col("qv"))
-        / (_norm(F.col("ev")) * _norm(F.col("qv")))
-    ).alias("cos")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.select("query_id", "neighbor_id", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(_exact_cos(cand), k)
 
 
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
+    centroids,
     k: int = 10,
-    n_centroids: int = 16,
     nprobe: int = 8,
-    max_train_sample: int = 4096,
-    kmeans_iters: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 0x1BF,
-    centroids=None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN → (query_id, neighbor_id, rank).
 
-    The classic coarse-quantizer layout (FAISS-style IVF-Flat), now
-    composed from the reusable stages:
+    The classic coarse-quantizer layout (FAISS-style IVF-Flat), composed
+    from the reusable stages over a ``centroids`` matrix trained once by
+    :func:`ivf_train`:
 
-    1. **train** — :func:`ivf_train` (bounded-sample spherical k-means);
-       pass a pre-trained ``centroids`` matrix to skip this stage — a
-       static corpus should train once and reuse, not re-run the
-       count+collect jobs per query batch;
-    2. **assign** — :func:`ivf_assign` (map-side, no shuffle; also the
+    1. **assign** — :func:`ivf_assign` (map-side, no shuffle; also the
        incremental-add primitive for a persisted store);
-    3. **probe** — :func:`ivf_probe`.
+    2. **probe** — :func:`ivf_probe`.
 
     Raising ``nprobe`` trades compute for recall without re-training.
     Complements :func:`lsh_topk`: IVF adapts its partitions to the data
     distribution (clustered corpora probe few dense lists), while LSH is
     data-independent.  On the UNclustered random fixtures recall@10 is
     0.86 at (16 centroids, nprobe=8) — the structureless worst case;
-    clustered real corpora concentrate neighbors in few lists.
+    clustered real corpora concentrate neighbors in few lists.  An empty
+    ``centroids`` (an empty training corpus) gives an empty result.
     """
-    import numpy as np
     from pyspark.sql import types as T
 
-    idtype = _ivf_idtype(embeddings, id_col)
-    C = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else ivf_train(
-            embeddings,
-            n_centroids=n_centroids,
-            max_train_sample=max_train_sample,
-            kmeans_iters=kmeans_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            seed=seed,
-        )
-    )
-    if len(C) == 0:
+    if len(centroids) == 0:
+        idtype = embeddings.schema[id_col].dataType
         return embeddings.sparkSession.createDataFrame(
             [],
             T.StructType(
@@ -458,9 +479,10 @@ def ivf_topk(
                 ]
             ),
         )
-    store = ivf_assign(embeddings, C, id_col=id_col, vec_col=vec_col)
+    store = ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col)
     return ivf_probe(
-        store, queries, C, k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col
+        store, queries, centroids, k=k, nprobe=nprobe, id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -479,10 +501,12 @@ def cosine_pairs(
     1. every vector hashes to one of ``blocks`` blocks (deterministic
        ``xxhash64`` of its id);
     2. each row replicates to the ``blocks`` block-pairs it participates
-       in (an explode — replication factor = ``blocks``);
+       in (:func:`_replicate_block_pairs` — replication factor =
+       ``blocks``);
     3. one Arrow ``applyInPandas`` task per unordered block-pair runs the
        numpy matmul (BLAS) for its (N/blocks)² cell of the similarity
-       matrix and emits pairs ≥ threshold.
+       matrix and emits pairs ≥ threshold (:func:`_pair_kernel`, the
+       kernel the LSH path runs per bucket).
 
     Total compute is the same O(N²·d) as the exact problem demands, but
     it is spread over blocks·(blocks+1)/2 independent tasks and per-task
@@ -492,62 +516,64 @@ def cosine_pairs(
 
     Id-type-agnostic: output pair columns inherit ``id_col``'s type.
     """
-    import numpy as np
-    import pandas as pd
+    e = embeddings.select(
+        F.col(id_col).alias("__id"),
+        _as_double(F.col(vec_col)).alias("__v"),
+        F.lit(blocks).alias("__nblk"),
+    )
+    return (
+        _replicate_block_pairs(e, [])
+        .groupBy("__bi", "__bj")
+        .applyInPandas(
+            lambda key, pdf: _pair_kernel(key, pdf, threshold),
+            _pair_schema(embeddings.schema[id_col].dataType),
+        )
+    )
+
+
+def _pair_schema(idtype, a: str = "vec_a", b: str = "vec_b"):
     from pyspark.sql import types as T
 
-    idtype = embeddings.schema[id_col].dataType
-    out_schema = T.StructType(
+    return T.StructType(
         [
-            T.StructField("vec_a", idtype),
-            T.StructField("vec_b", idtype),
+            T.StructField(a, idtype),
+            T.StructField(b, idtype),
             T.StructField("cos", T.DoubleType()),
         ]
     )
 
-    e = embeddings.select(
-        F.col(id_col).alias("__id"),
-        _as_double(F.col(vec_col)).alias("__v"),
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(blocks)).alias("__blk"),
-    )
-    # row in block b participates in pairs {min(b,x), max(b,x)} for every
-    # block x — each pair struct is distinct, so exactly `blocks` copies
+
+def _replicate_block_pairs(sized: DataFrame, keys: list[str]) -> DataFrame:
+    """The block-pair replication step shared by every pair kernel.
+
+    Input: (*keys, __id, __v, __nblk) — ``__nblk`` is the row's block
+    count within its ``keys`` group.  Each row hashes to block ``__blk =
+    xxhash64(id) mod __nblk`` and replicates to the ``__nblk`` unordered
+    block pairs {min(__blk, x), max(__blk, x)} it participates in, so a
+    ``groupBy(*keys, __bi, __bj)`` covers every within-group pair exactly
+    once and a row with ``__nblk = 1`` stays a single copy.  Output:
+    (*keys, __id, __v, __blk, __bi, __bj).
+    """
+    blk = F.pmod(F.xxhash64(F.col("__id").cast("string")), F.col("__nblk"))
     pair_structs = F.transform(
-        F.sequence(F.lit(0), F.lit(blocks - 1)),
+        F.sequence(F.lit(0), F.col("__nblk") - 1),
         lambda x: F.struct(
             F.least(F.col("__blk"), x).alias("bi"),
             F.greatest(F.col("__blk"), x).alias("bj"),
         ),
     )
-    replicated = e.select(
-        "__id", "__v", "__blk", F.explode(pair_structs).alias("__pair")
-    ).select("__id", "__v", "__blk", F.col("__pair.bi").alias("__bi"), F.col("__pair.bj").alias("__bj"))
-
-    def block_pair(key, pdf):
-        bi, bj = key
-        ids = pdf["__id"].to_numpy()
-        m = np.array([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        if bi == bj:
-            sims = m @ m.T
-            # all-pairs within the block: upper triangle by id
-            mask = (sims >= threshold) & (ids[:, None] < ids[None, :])
-            ai, bz = np.nonzero(mask)
-            va, vb, cs = ids[ai], ids[bz], sims[ai, bz]
-        else:
-            a_idx = np.nonzero(pdf["__blk"].to_numpy() == bi)[0]
-            b_idx = np.nonzero(pdf["__blk"].to_numpy() == bj)[0]
-            if len(a_idx) == 0 or len(b_idx) == 0:
-                return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
-            sims = m[a_idx] @ m[b_idx].T
-            ai, bz = np.nonzero(sims >= threshold)
-            xa, xb = ids[a_idx][ai], ids[b_idx][bz]
-            # ids are unique across blocks, so min/max orders each pair
-            va, vb = np.minimum(xa, xb), np.maximum(xa, xb)
-            cs = sims[ai, bz]
-        return pd.DataFrame({"vec_a": va, "vec_b": vb, "cos": np.round(cs, 4)})
-
-    return replicated.groupBy("__bi", "__bj").applyInPandas(block_pair, out_schema)
+    return (
+        sized.withColumn("__blk", blk.cast("int"))
+        .select(*keys, "__id", "__v", "__blk", F.explode(pair_structs).alias("__p"))
+        .select(
+            *keys,
+            "__id",
+            "__v",
+            "__blk",
+            F.col("__p.bi").alias("__bi"),
+            F.col("__p.bj").alias("__bj"),
+        )
+    )
 
 
 def _bounded_bucket_groups(
@@ -566,10 +592,10 @@ def _bounded_bucket_groups(
     ride through Arrow either), left-join the (tiny) over-cap list back —
     declared as a plain join so AQE broadcasts it when small — and
     replicate each member of an over-cap bucket to the
-    ``nblk = ceil(count / max_bucket)`` block-pairs it participates in,
-    exactly the :func:`cosine_pairs` decomposition but *within* a bucket.
-    Buckets at or under the cap keep nblk = 1 and degenerate to the
-    original single-group plan.
+    ``nblk = ceil(count / max_bucket)`` block-pairs it participates in
+    (:func:`_replicate_block_pairs`, the :func:`cosine_pairs`
+    decomposition but *within* a bucket).  Buckets at or under the cap
+    keep nblk = 1 and degenerate to the original single-group plan.
 
     Why not re-hash over-cap buckets with extra planes?  Two reasons:
     (1) a bucket that is hot because its members are genuinely
@@ -590,37 +616,47 @@ def _bounded_bucket_groups(
         "bucket",
         F.ceil(F.col("__cnt") / max_bucket).cast("int").alias("__nblk"),
     )
-    sized = (
-        banded.join(hot, ["band", "bucket"], "left")
-        .withColumn("__nblk", F.coalesce(F.col("__nblk"), F.lit(1)))
-        .withColumn(
-            "__blk",
-            F.pmod(F.xxhash64(F.col("__id").cast("string")), F.col("__nblk")).cast(
-                "int"
-            ),
-        )
+    sized = banded.join(hot, ["band", "bucket"], "left").withColumn(
+        "__nblk", F.coalesce(F.col("__nblk"), F.lit(1))
     )
-    # member of block b joins pair-tasks {min(b,x), max(b,x)} for every
-    # block x — nblk distinct structs, so replication factor = nblk (= 1
-    # for every bucket at or under the cap)
-    pair_structs = F.transform(
-        F.sequence(F.lit(0), F.col("__nblk") - 1),
-        lambda x: F.struct(
-            F.least(F.col("__blk"), x).alias("bi"),
-            F.greatest(F.col("__blk"), x).alias("bj"),
-        ),
-    )
-    return sized.select(
-        "band", "bucket", "__id", "__v", "__blk", F.explode(pair_structs).alias("__p")
-    ).select(
-        "band",
-        "bucket",
-        "__id",
-        "__v",
-        "__blk",
-        F.col("__p.bi").alias("__bi"),
-        F.col("__p.bj").alias("__bj"),
-    )
+    return _replicate_block_pairs(sized, ["band", "bucket"])
+
+
+def _pair_kernel(key, pdf, threshold: float):
+    """Exact cosine pairs ≥ ``threshold`` of one block-pair task →
+    (vec_a, vec_b, cos) with vec_a < vec_b, cos rounded to 4 dp.  The
+    group key ends in (__bi, __bj): a diagonal task (bi == bj) scores
+    its block's upper triangle by id, an off-diagonal one the block-bi ×
+    block-bj rectangle.  Shared by :func:`cosine_pairs` (one group per
+    block pair of the corpus) and :func:`cosine_pairs_lsh` (one per
+    block pair of a (band, bucket))."""
+    import numpy as np
+    import pandas as pd
+
+    bi, bj = key[-2:]
+    ids = pdf["__id"].to_numpy()
+    if len(ids) < 2:
+        return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
+    m = _matrix(pdf["__v"])
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    if bi == bj:
+        sims = m @ m.T
+        mask = (sims >= threshold) & (ids[:, None] < ids[None, :])
+        ai, bz = np.nonzero(mask)
+        va, vb, cs = ids[ai], ids[bz], sims[ai, bz]
+    else:
+        blks = pdf["__blk"].to_numpy()
+        a_idx = np.nonzero(blks == bi)[0]
+        b_idx = np.nonzero(blks == bj)[0]
+        if len(a_idx) == 0 or len(b_idx) == 0:
+            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
+        sims = m[a_idx] @ m[b_idx].T
+        ai, bz = np.nonzero(sims >= threshold)
+        xa, xb = ids[a_idx][ai], ids[b_idx][bz]
+        # ids are unique within a group, so min/max orders each pair
+        va, vb = np.minimum(xa, xb), np.maximum(xa, xb)
+        cs = sims[ai, bz]
+    return pd.DataFrame({"vec_a": va, "vec_b": vb, "cos": np.round(cs, 4)})
 
 
 def cosine_pairs_lsh(
@@ -661,19 +697,27 @@ def cosine_pairs_lsh(
     really do exist) — but it is spread across ceil(hot/cap)² bounded
     tasks instead of one unbounded one.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    idtype = embeddings.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_a", idtype),
-            T.StructField("vec_b", idtype),
-            T.StructField("cos", T.DoubleType()),
-        ]
+    # Dedup on the PAIR KEY, not the (pair, cos) tuple: the same pair's
+    # dot product in two different-shaped bucket matmuls may differ by an
+    # ulp (BLAS accumulation order), which round(4) can amplify into two
+    # "distinct" rows at a .xxxx5 boundary.  min() is a deterministic
+    # pick among the (at most ulp-apart) duplicates.
+    return (
+        _lsh_groups(embeddings, id_col, vec_col, planes, bands, seed, max_bucket)
+        .groupBy("band", "bucket", "__bi", "__bj")
+        .applyInPandas(
+            lambda key, pdf: _pair_kernel(key, pdf, threshold),
+            _pair_schema(embeddings.schema[id_col].dataType),
+        )
+        .groupBy("vec_a", "vec_b")
+        .agg(F.min("cos").alias("cos"))
     )
-    banded = _banded_signatures(embeddings, id_col, vec_col, planes, bands, seed)
+
+
+def _lsh_groups(embeddings, id_col, vec_col, planes, bands, seed, max_bucket):
+    """Banded signatures replicated into bounded (band, bucket, __bi,
+    __bj) groups; the bucket sizes come from the payload-free signature
+    pass, so only the matmul, not the id/vector transfer, runs twice."""
     counts = (
         _banded_signatures(
             embeddings, id_col, vec_col, planes, bands, seed, with_payload=False
@@ -681,44 +725,10 @@ def cosine_pairs_lsh(
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    replicated = _bounded_bucket_groups(banded, max_bucket, counts)
-
-    def bucket_pairs(key, pdf):
-        _, _, bi, bj = key
-        ids = pdf["__id"].to_numpy()
-        if len(ids) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
-        m = np.array([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        if bi == bj:
-            sims = m @ m.T
-            mask = (sims >= threshold) & (ids[:, None] < ids[None, :])
-            ai, bz = np.nonzero(mask)
-            va, vb, cs = ids[ai], ids[bz], sims[ai, bz]
-        else:
-            blks = pdf["__blk"].to_numpy()
-            a_idx = np.nonzero(blks == bi)[0]
-            b_idx = np.nonzero(blks == bj)[0]
-            if len(a_idx) == 0 or len(b_idx) == 0:
-                return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
-            sims = m[a_idx] @ m[b_idx].T
-            ai, bz = np.nonzero(sims >= threshold)
-            xa, xb = ids[a_idx][ai], ids[b_idx][bz]
-            # ids are unique within a bucket, so min/max orders each pair
-            va, vb = np.minimum(xa, xb), np.maximum(xa, xb)
-            cs = sims[ai, bz]
-        return pd.DataFrame({"vec_a": va, "vec_b": vb, "cos": np.round(cs, 4)})
-
-    # Dedup on the PAIR KEY, not the (pair, cos) tuple: the same pair's
-    # dot product in two different-shaped bucket matmuls may differ by an
-    # ulp (BLAS accumulation order), which round(4) can amplify into two
-    # "distinct" rows at a .xxxx5 boundary.  min() is a deterministic
-    # pick among the (at most ulp-apart) duplicates.
-    return (
-        replicated.groupBy("band", "bucket", "__bi", "__bj")
-        .applyInPandas(bucket_pairs, out_schema)
-        .groupBy("vec_a", "vec_b")
-        .agg(F.min("cos").alias("cos"))
+    return _bounded_bucket_groups(
+        _banded_signatures(embeddings, id_col, vec_col, planes, bands, seed),
+        max_bucket,
+        counts,
     )
 
 
@@ -734,38 +744,26 @@ def cluster_assign(
     The corpus-organization step after :func:`ivf_train`: topic-cluster
     the whole embedding table for mixture reporting, per-cluster
     sampling rates, or semantic dedup blocking.  Pure map-side work —
-    the centroid matrix broadcasts, each Arrow batch does one numpy
-    matmul + argmax; no shuffle, no driver action, linear in corpus
-    size.  Cosine assignment (rows L2-normalized; zero vectors keep
-    norm 1 so they assign deterministically instead of NaN).
+    the same kernel as :func:`ivf_assign` (:func:`_nearest_centroid`)
+    without the vector payload; no shuffle, no driver action, linear in
+    corpus size.  An empty ``centroids`` gives an empty frame.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    idtype = embeddings.schema[id_col].dataType
-    schema = T.StructType(
-        [T.StructField(id_col, idtype), T.StructField(out_col, T.IntegerType())]
-    )
-    C = np.asarray(centroids, dtype=np.float64)
-    if C.size == 0:
-        return embeddings.sparkSession.createDataFrame([], schema)
-    bc = embeddings.sparkSession.sparkContext.broadcast(C)
-
-    def assign(it):
-        Cm = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            n = np.linalg.norm(vecs, axis=1, keepdims=True)
-            vn = vecs / np.where(n == 0, 1.0, n)
-            cid = np.argmax(vn @ Cm.T, axis=1).astype(np.int32)
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: cid})
-
-    return embeddings.select(id_col, vec_col).mapInPandas(assign, schema)
+    if np.size(centroids) == 0:
+        return embeddings.sparkSession.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    T.StructField(id_col, embeddings.schema[id_col].dataType),
+                    T.StructField(out_col, T.IntegerType()),
+                ]
+            ),
+        )
+    return _nearest_centroid(
+        embeddings, centroids, id_col, vec_col, out_col, id_col, False
+    ).select(id_col, out_col)
 
 
 def pq_train(
@@ -784,30 +782,21 @@ def pq_train(
     per-subspace centroids, so a d-float vector stores as ``m`` small
     codes (64 d × 4 B → 8 B at m=8: 32× memory).
 
-    Training mirrors :func:`ivf_train`'s bounded-sample discipline: a
-    deterministic ``xxhash64 % mod`` sample (never O(N) on the driver),
-    then standard L2 k-means per subspace with a per-subspace seeded
-    init.  Vectors are L2-normalized FIRST, so asymmetric-distance
-    inner products approximate cosine.  ``ksub`` capped at the sample
-    size; with ``ksub == n`` distinct training rows the quantizer is
-    lossless over that corpus (each subvector its own centroid) — the
-    property the exact-machinery audit pins.
+    Training uses :func:`ivf_train`'s bounded sample
+    (:func:`_train_sample`, never O(N) on the driver), then standard L2
+    k-means per subspace with a per-subspace seeded init.  Vectors are
+    L2-normalized FIRST, so asymmetric-distance inner products
+    approximate cosine.  ``ksub`` capped at the sample size; with
+    ``ksub == n`` distinct training rows the quantizer is lossless over
+    that corpus (each subvector its own centroid) — the property the
+    exact-machinery audit pins.  Returns an empty (0, 0, 0) array for an
+    empty corpus.
     """
     import numpy as np
 
-    sample = embeddings.select(id_col, vec_col)
-    n_total = sample.count()
-    mod = -(-max(n_total, 1) // max_train_sample)
-    if mod > 1:
-        sample = sample.filter(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(mod)) == 0
-        )
-    rows = sample.collect()
-    if not rows:
+    S = _train_sample(embeddings, max_train_sample, id_col, vec_col)
+    if not len(S):
         return np.empty((0, 0, 0), dtype=np.float64)
-    S = np.array([np.asarray(r[1], dtype=np.float64) for r in rows])
-    nrm = np.linalg.norm(S, axis=1, keepdims=True)
-    S = S / np.where(nrm == 0, 1.0, nrm)
     return _pq_kmeans(S, m, ksub, kmeans_iters, seed)
 
 
@@ -840,23 +829,32 @@ def _pq_kmeans(S, m: int, ksub: int, kmeans_iters: int, seed: int):
     return books
 
 
+def _pq_codes(V, B):
+    """PQ encode: (n, m, d/m) subvectors → (n, m) codes, per subspace the
+    argmin ||v_sub − c||² against the (m, ksub, d/m) codebooks."""
+    import numpy as np
+
+    codes = np.empty(V.shape[:2], dtype=np.int64)
+    for j in range(V.shape[1]):
+        d2 = ((V[:, j, None, :] - B[None, j]) ** 2).sum(axis=2)
+        codes[:, j] = np.argmin(d2, axis=1)
+    return codes
+
+
 def pq_topk(
     embeddings: DataFrame,
     queries: DataFrame,
+    codebooks,
     k: int = 10,
-    m: int = 8,
-    ksub: int = 32,
-    codebooks=None,
-    max_train_sample: int = 4096,
-    kmeans_iters: int = 10,
+    refine: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 0x9C7,
-    refine: int = 0,
 ) -> DataFrame:
     """Product-quantization ANN → (query_id, neighbor_id, rank): the
     asymmetric-distance (ADC) scan over PQ codes — the memory tier below
     IVF-Flat, for corpora whose raw vectors don't fit the cluster.
+    ``codebooks`` come from :func:`pq_train` (a static corpus trains
+    once, like :func:`ivf_topk`'s centroids).
 
     Plan shape: queries (the tiny side by contract, like
     :func:`cosine_topk`) collect to the driver and become per-query
@@ -866,8 +864,7 @@ def pq_topk(
     the per-partition top rows per query — table-gather adds, no
     per-pair float math on the full corpus, and the shuffle after the
     scan carries ≤ partitions × nq × max(refine, 1)·k rows into the
-    global top-k window.  Pass a pre-trained ``codebooks`` to skip the
-    train jobs (static corpus trains once, like :func:`ivf_topk`).
+    global top-k window.
 
     ``refine > 0`` adds the standard exact re-rank (FAISS refine
     layout): the ADC scan keeps ``refine × k`` candidates per query and
@@ -883,20 +880,7 @@ def pq_topk(
     from pyspark.sql import types as T
 
     idtype = embeddings.schema[id_col].dataType
-    B = (
-        np.asarray(codebooks, dtype=np.float64)
-        if codebooks is not None
-        else pq_train(
-            embeddings,
-            m=m,
-            ksub=ksub,
-            max_train_sample=max_train_sample,
-            kmeans_iters=kmeans_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            seed=seed,
-        )
-    )
+    B = np.asarray(codebooks, dtype=np.float64)
     out_schema = T.StructType(
         [
             T.StructField("query_id", idtype),
@@ -910,9 +894,7 @@ def pq_topk(
             "query_id", "neighbor_id", F.lit(1).alias("rank")
         ).filter(F.lit(False))
     mm, kc, dsub = B.shape
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Q = Q / np.where(qn == 0, 1.0, qn)
+    Q = _unit(_matrix(r[1] for r in qrows))
     # per-query ADC tables: T[q, j, c] = q_sub_j · codebook[j][c]
     tabs = np.einsum("qjd,jcd->qjc", Q.reshape(len(Q), mm, dsub), B)
     qids = [r[0] for r in qrows]
@@ -930,14 +912,8 @@ def pq_topk(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            vn = np.linalg.norm(V, axis=1, keepdims=True)
-            V = (V / np.where(vn == 0, 1.0, vn)).reshape(len(V), mm, dsub)
-            # encode: per subspace argmin ||v_sub − c||²
-            codes = np.empty((len(V), mm), dtype=np.int64)
-            for j in range(mm):
-                d2 = ((V[:, j, None, :] - Bm[None, j]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
+            V = _unit(_matrix(pdf[vec_col])).reshape(-1, mm, dsub)
+            codes = _pq_codes(V, Bm)
             ids = pdf[id_col].to_numpy()
             flat = V.reshape(len(V), -1)
             out_q, out_n, out_s = [], [], []
@@ -962,14 +938,7 @@ def pq_topk(
         .mapInPandas(scan, out_schema)
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(cand, k, "__score")
 
 
 # ---------------------------------------------------------------------------
@@ -1078,18 +1047,7 @@ def sq8_topk(
         .crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    cos = _dot(F.col("ev"), F.col("qv")) / (
-        _norm(F.col("ev")) * _norm(F.col("qv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(_exact_cos(scored), k)
 
 
 def mutual_top1_pairs(
@@ -1311,29 +1269,13 @@ def mutual_top1_pairs_lsh(
     precision is exact on the emitted pairs (every cosine computed).
     Returns (vec_a, vec_b, cos), vec_a < vec_b.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    idtype = embeddings.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("node", idtype),
-            T.StructField("other", idtype),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-    banded = _banded_signatures(embeddings, id_col, vec_col, planes, bands, seed)
-    counts = (
-        _banded_signatures(
-            embeddings, id_col, vec_col, planes, bands, seed, with_payload=False
+    best = (
+        _lsh_groups(embeddings, id_col, vec_col, planes, bands, seed, max_bucket)
+        .groupBy("band", "bucket", "__bi", "__bj")
+        .applyInPandas(
+            _group_best_kernel,
+            _pair_schema(embeddings.schema[id_col].dataType, "node", "other"),
         )
-        .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    replicated = _bounded_bucket_groups(banded, max_bucket, counts)
-    best = replicated.groupBy("band", "bucket", "__bi", "__bj").applyInPandas(
-        _group_best_kernel, out_schema
     )
     return _mutual_from_best(best)
 
@@ -1354,12 +1296,9 @@ def _group_best_kernel(key, pdf):
     empty = pd.DataFrame({"node": [], "other": [], "cos": []})
     if len(ids) < 2:
         return empty
-    m = np.array([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
-    # zero-norm guard (cosine_best_match's np.where form): a zero
-    # embedding must contribute cos 0 rows, not NaNs that poison the
-    # struct-min merge downstream
-    nrm = np.linalg.norm(m, axis=1, keepdims=True)
-    m /= np.where(nrm == 0, 1.0, nrm)
+    # zero-norm guard: a zero embedding must contribute cos 0 rows, not
+    # NaNs that poison the struct-min merge downstream
+    m = _unit(_matrix(pdf["__v"]))
     order = np.argsort(ids, kind="stable")
     ids_s, m_s = ids[order], m[order]
     if bi == bj:
@@ -1397,15 +1336,11 @@ def _group_best_kernel(key, pdf):
 
 def mutual_top1_pairs_ivf(
     embeddings: DataFrame,
+    centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = 16,
     nprobe: int = 8,
-    max_train_sample: int = 4096,
-    kmeans_iters: int = 10,
-    seed: int = 0x1BF,
     max_bucket: int = 4096,
-    centroids=None,
 ) -> DataFrame:
     """RECIPROCAL BEST MATCH over the IVF candidate generator — the
     data-ADAPTIVE sibling of :func:`mutual_top1_pairs_lsh` (coarse
@@ -1420,50 +1355,20 @@ def mutual_top1_pairs_ivf(
     recall follows the co-probe probability (audited by the suite's
     sampled exact baseline, the mutual_knn_lsh pattern).
 
-    Scale levers: ``n_centroids`` grows with N (bounded list
-    occupancy → compute ~ N·nprobe·list_size), ``nprobe`` trades
-    compute for recall without retraining; pass pre-trained
-    ``centroids`` to skip the bounded-sample k-means (ivf_train).
+    Scale levers: the centroid count of :func:`ivf_train` grows with N
+    (bounded list occupancy → compute ~ N·nprobe·list_size), ``nprobe``
+    trades compute for recall without retraining.  An empty
+    ``centroids`` gives an empty result.
     Returns (vec_a, vec_b, cos), vec_a < vec_b."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     idtype = embeddings.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("node", idtype),
-            T.StructField("other", idtype),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-    C = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else ivf_train(
-            embeddings,
-            n_centroids=n_centroids,
-            max_train_sample=max_train_sample,
-            kmeans_iters=kmeans_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            seed=seed,
-        )
-    )
-    if len(C) == 0:
-        return embeddings.sparkSession.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("vec_a", idtype),
-                    T.StructField("vec_b", idtype),
-                    T.StructField("cos", T.DoubleType()),
-                ]
-            ),
-        )
-    cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = C / np.where(cn == 0, 1.0, cn)
-    npb = min(nprobe, len(C))
+    if len(centroids) == 0:
+        return embeddings.sparkSession.createDataFrame([], _pair_schema(idtype))
+    Cn = _unit(np.asarray(centroids, dtype=np.float64))
+    npb = min(nprobe, len(Cn))
     list_schema = T.StructType(
         [
             T.StructField("band", T.IntegerType()),
@@ -1484,12 +1389,8 @@ def mutual_top1_pairs_ivf(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            E = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            en = np.linalg.norm(E, axis=1, keepdims=True)
-            En = E / np.where(en == 0, 1.0, en)
-            sims = En @ Cn.T
+            E = _matrix(pdf[vec_col])
+            sims = _unit(E) @ Cn.T
             # top-npb lists per vector; order within the probe set is
             # irrelevant (membership only)
             top = np.argpartition(-sims, npb - 1, axis=1)[:, :npb]
@@ -1523,9 +1424,10 @@ def mutual_top1_pairs_ivf(
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    replicated = _bounded_bucket_groups(lists, max_bucket, counts)
-    best = replicated.groupBy("band", "bucket", "__bi", "__bj").applyInPandas(
-        _group_best_kernel, out_schema
+    best = (
+        _bounded_bucket_groups(lists, max_bucket, counts)
+        .groupBy("band", "bucket", "__bi", "__bj")
+        .applyInPandas(_group_best_kernel, _pair_schema(idtype, "node", "other"))
     )
     return _mutual_from_best(best)
 
@@ -1550,26 +1452,16 @@ def ivfpq_train(
     distribution — the reason production ANN composes the two tiers
     rather than running PQ flat.
 
-    Same bounded-sample discipline as :func:`ivf_train`/:func:`pq_train`
-    (deterministic xxhash64 % mod sample, never O(N) on the driver);
-    the per-subspace k-means is the SAME `_pq_kmeans` pq_train uses.
+    Same bounded sample as :func:`ivf_train`/:func:`pq_train`
+    (:func:`_train_sample`, never O(N) on the driver); the per-subspace
+    k-means is the SAME `_pq_kmeans` pq_train uses.
     """
     import numpy as np
 
     C = np.asarray(centroids, dtype=np.float64)
-    sample = embeddings.select(id_col, vec_col)
-    n_total = sample.count()
-    mod = -(-max(n_total, 1) // max_train_sample)
-    if mod > 1:
-        sample = sample.filter(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(mod)) == 0
-        )
-    rows = sample.collect()
-    if not rows or C.size == 0:
+    S = _train_sample(embeddings, max_train_sample, id_col, vec_col)
+    if not len(S) or C.size == 0:
         return np.empty((0, 0, 0), dtype=np.float64)
-    S = np.array([np.asarray(r[1], dtype=np.float64) for r in rows])
-    nrm = np.linalg.norm(S, axis=1, keepdims=True)
-    S = S / np.where(nrm == 0, 1.0, nrm)
     R = S - C[np.argmax(S @ C.T, axis=1)]
     return _pq_kmeans(R, m, ksub, kmeans_iters, seed)
 
@@ -1611,7 +1503,7 @@ def ivfpq_probe(
 
     C = np.asarray(centroids, dtype=np.float64)
     B = np.asarray(codebooks, dtype=np.float64)
-    idtype = _ivf_idtype(queries, id_col)
+    idtype = queries.schema[id_col].dataType
     out_schema = T.StructType(
         [
             T.StructField("query_id", idtype),
@@ -1626,9 +1518,7 @@ def ivfpq_probe(
             "query_id", "neighbor_id", F.lit(1).alias("rank")
         ).filter(F.lit(False))
     mm, kc_sub, dsub = B.shape
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Q = Q / np.where(qn == 0, 1.0, qn)
+    Q = _unit(_matrix(r[1] for r in qrows))
     qids = [r[0] for r in qrows]
     qc = Q @ C.T                                    # (nq, kc) list offsets
     order = np.argsort(-qc, axis=1)[:, : min(nprobe, len(C))]
@@ -1650,17 +1540,9 @@ def ivfpq_probe(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            V = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
-            )
-            vn = np.linalg.norm(V, axis=1, keepdims=True)
-            Vu = V / np.where(vn == 0, 1.0, vn)
+            Vu = _unit(_matrix(pdf["__v"]))
             cid = pdf["centroid"].to_numpy()
-            R = (Vu - Cm[cid]).reshape(len(Vu), mm, dsub)
-            codes = np.empty((len(Vu), mm), dtype=np.int64)
-            for j in range(mm):
-                d2 = ((R[:, j, None, :] - Bm[None, j]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
+            codes = _pq_codes((Vu - Cm[cid]).reshape(len(Vu), mm, dsub), Bm)
             ids = pdf["neighbor_id"].to_numpy()
             out_q, out_n, out_s = [], [], []
             for qi in range(len(Tq)):
@@ -1683,36 +1565,23 @@ def ivfpq_probe(
     cand = store.select("centroid", "neighbor_id", "__v").mapInPandas(
         scan, out_schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(cand, k, "__score")
 
 
 def ivfpq_topk(
     embeddings: DataFrame,
     queries: DataFrame,
+    centroids,
+    codebooks,
     k: int = 10,
-    n_centroids: int = 16,
     nprobe: int = 8,
-    m: int = 8,
-    ksub: int = 32,
     refine: int = 8,
-    max_train_sample: int = 4096,
-    kmeans_iters: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 0x1BF,
-    centroids=None,
-    codebooks=None,
 ) -> DataFrame:
     """IVF-PQ ANN → (query_id, neighbor_id, rank): the PRODUCTION
     composition of the two certified tiers — IVF's coarse pruning
-    (probe nprobe of n_centroids lists) over PQ's 32×-compressed
+    (probe nprobe of the centroid lists) over PQ's 32×-compressed
     residual codes, with exact re-rank of the refine×k sliver.  This
     is the FAISS IVFPQ + refine layout: IVF alone still ships raw
     vectors through its probe join; PQ alone still scans every row;
@@ -1720,60 +1589,18 @@ def ivfpq_topk(
     vector until the final sliver.
 
     Stages (each reusable/persistable like its parents):
-    1. coarse — :func:`ivf_train` / pass ``centroids``;
-    2. residual books — :func:`ivfpq_train` / pass ``codebooks``;
+    1. coarse — ``centroids`` from :func:`ivf_train`;
+    2. residual books — ``codebooks`` from :func:`ivfpq_train`;
     3. assign — :func:`ivf_assign` (the same store layout as IVF-Flat,
        so a standing IVF store upgrades to IVF-PQ without re-assign);
-    4. serve — :func:`ivfpq_probe` (one map pass, broadcast tables).
+    4. serve — :func:`ivfpq_probe` (one map pass, broadcast tables;
+       empty centroids or codebooks give an empty result).
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    idtype = _ivf_idtype(embeddings, id_col)
-    C = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else ivf_train(
-            embeddings,
-            n_centroids=n_centroids,
-            max_train_sample=max_train_sample,
-            kmeans_iters=kmeans_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            seed=seed,
-        )
-    )
-    if len(C) == 0:
-        return embeddings.sparkSession.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("query_id", idtype),
-                    T.StructField("neighbor_id", idtype),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
-        )
-    B = (
-        np.asarray(codebooks, dtype=np.float64)
-        if codebooks is not None
-        else ivfpq_train(
-            embeddings,
-            C,
-            m=m,
-            ksub=ksub,
-            max_train_sample=max_train_sample,
-            kmeans_iters=kmeans_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-    )
-    store = ivf_assign(embeddings, C, id_col=id_col, vec_col=vec_col)
     return ivfpq_probe(
-        store,
+        ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col),
         queries,
-        C,
-        B,
+        centroids,
+        codebooks,
         k=k,
         nprobe=nprobe,
         refine=refine,

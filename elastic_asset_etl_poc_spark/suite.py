@@ -800,17 +800,18 @@ SELECT CAST(1 AS BOOLEAN) AS sets_equal
 )
 def recall_simhash_incremental_vs_full(spark, sf_dir):
     """Hash-checked equivalence audit for the incremental SimHash store
-    (neardup.simhash_neardup_incremental): the batch-probe path over a
-    staged fingerprint store must emit EXACTLY the full self-join's
-    pairs restricted to batch-involving docs — stated as a literal
-    boolean row so any drift in store layout, banding, or the
-    pre-collapse bound breaks the driver hash (SimHash itself is
-    xxhash64-based, so this in-plan equality IS its oracle)."""
+    (neardup.fingerprint_neardup_incremental over simhash fingerprints):
+    the batch-probe path over a staged fingerprint store must emit
+    EXACTLY the full self-join's pairs restricted to batch-involving
+    docs — stated as a literal boolean row so any drift in store
+    layout, banding, or the pre-collapse bound breaks the driver hash
+    (SimHash itself is xxhash64-based, so this in-plan equality IS its
+    oracle)."""
     from .operators.neardup import (
         banded_hamming_pairs,
+        fingerprint_neardup_incremental,
+        fingerprint_store_init,
         simhash,
-        simhash_neardup_incremental,
-        simhash_store_init,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -819,13 +820,13 @@ def recall_simhash_incremental_vs_full(spark, sf_dir):
 
     def build():
         path = memo_dir(spark, "suite_shstore_")
-        simhash_store_init(corpus, path)
+        fingerprint_store_init(simhash(corpus), path)
         return path
 
     store = memo(spark, "simhash_store", sf_dir, ["documents"], build)
-    inc = simhash_neardup_incremental(batch, store, max_hamming=3).select(
-        "doc_a", "doc_b", "hamming"
-    )
+    inc = fingerprint_neardup_incremental(
+        simhash(batch), store, max_hamming=3
+    ).select("doc_a", "doc_b", "hamming")
     full = banded_hamming_pairs(simhash(docs), max_hamming=3)
     bids = batch.select(F.col("doc_id").alias("__bid"))
     full_b = (
@@ -2822,7 +2823,7 @@ def recall_pq_lossless_vs_exact(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = cosine_topk(emb, queries, k=10).select("query_id", "neighbor_id")
     approx = pq_topk(
-        emb, queries, k=10, ksub=512, max_train_sample=512, refine=0,
+        emb, queries, k=10, refine=0,
         codebooks=_pq_books(
             spark, sf_dir, slice_below=500, ksub=512, max_train_sample=512
         ),
@@ -6787,7 +6788,7 @@ _Z_COLS = [("user_id", 0.0, 2048.0), ("value", 0.0, 512.0)]
 
 
 def _zorder_sql() -> str:
-    """DuckDB twin of operators/layout.py zorder_key: identical
+    """DuckDB twin of functions.scalar.zorder_key_scaled: identical
     clamp-scale-interleave integer arithmetic, terms summed (disjoint
     bit positions make + equivalent to |)."""
     d = len(_Z_COLS)
@@ -6808,18 +6809,20 @@ def _zorder_sql() -> str:
 
 @q("zorder_events", _zorder_sql())
 def zorder_events(spark, sf_dir):
-    """Z-order (Morton) clustering key (operators/layout.py): the
-    storage-layout lever — interleaved-bit key over (user_id, value) so
-    range-partitioned files each cover a narrow box of the 2-D space
-    and parquet min/max stats prune multi-column range scans at the
-    file level (Delta/Iceberg ZORDER BY analog).  Pure integer bit
-    arithmetic, map-only, bit-identical in the oracle; the layout
-    itself (repartitionByRange + partition-disjointness + pruning win
-    vs hash layout) is pytest-certified in tests/test_layout.py."""
-    from .operators.layout import zorder_key
+    """Z-order (Morton) clustering key (functions.scalar.zorder_key_scaled):
+    the storage-layout lever — interleaved-bit key over (user_id, value)
+    bounds-scaled ranks, so range-partitioned files each cover a narrow
+    box of the 2-D space and parquet min/max stats prune multi-column
+    range scans at the file level (Delta/Iceberg ZORDER BY analog).
+    Pure integer bit arithmetic, map-only, bit-identical in the oracle;
+    the scaling, clamping and NULL ranks are pytest-certified in
+    tests/test_layout.py."""
+    from .functions.scalar import zorder_key_scaled
 
     events = load_table(spark, sf_dir, "events")
-    return events.select("event_id", zorder_key(_Z_COLS, bits=_Z_BITS))
+    return events.select(
+        "event_id", zorder_key_scaled(_Z_COLS, bits=_Z_BITS).alias("zkey")
+    )
 
 
 @q(

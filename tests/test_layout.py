@@ -1,9 +1,9 @@
-"""Z-order key (operators/layout.py): bit interleave, clamping, NULLs
-and argument checks."""
+"""Bounds-scaled Z-order key (functions.scalar.zorder_key_scaled): bit
+interleave, clamping, NULLs and argument checks."""
 
 import pytest
 
-from elastic_asset_etl_poc_spark.operators.layout import zorder_key
+from elastic_asset_etl_poc_spark.functions.scalar import zorder_key_scaled
 
 
 def test_zorder_key_interleaves_bits(spark):
@@ -17,7 +17,9 @@ def test_zorder_key_interleaves_bits(spark):
     out = [
         r.zkey
         for r in df.select(
-            zorder_key([("x", 0.0, 3.0), ("y", 0.0, 3.0)], bits=2)
+            zorder_key_scaled(
+                [("x", 0.0, 3.0), ("y", 0.0, 3.0)], bits=2
+            ).alias("zkey")
         ).collect()
     ]
     assert out == [7, 10, 0, 15]
@@ -30,7 +32,9 @@ def test_zorder_key_clamps_and_nulls_rank_zero(spark):
     out = [
         r.zkey
         for r in df.select(
-            zorder_key([("x", 0.0, 3.0), ("y", 0.0, 3.0)], bits=2)
+            zorder_key_scaled(
+                [("x", 0.0, 3.0), ("y", 0.0, 3.0)], bits=2
+            ).alias("zkey")
         ).collect()
     ]
     # x clamps to rank 0, y saturates to rank 3 (bits at odd positions);
@@ -40,8 +44,8 @@ def test_zorder_key_clamps_and_nulls_rank_zero(spark):
 
 def test_zorder_key_validates_args(spark):
     with pytest.raises(ValueError, match="at least one"):
-        zorder_key([])
-    with pytest.raises(ValueError, match="63-bit"):
-        zorder_key([("a", 0, 1)] * 4, bits=16)
+        zorder_key_scaled([])
+    with pytest.raises(ValueError, match=r"bits must be in \[1, 15\]"):
+        zorder_key_scaled([("a", 0, 1)] * 4, bits=16)
     with pytest.raises(ValueError, match="hi > lo"):
-        zorder_key([("a", 1.0, 1.0)])
+        zorder_key_scaled([("a", 1.0, 1.0)])

@@ -133,3 +133,13 @@ def test_allowlist_is_exact():
     assert set(ALLOWED) <= set(defs), set(ALLOWED) - set(defs)
     assert not _referenced(set(ALLOWED))
     assert all(reason.strip() for reason in ALLOWED.values())
+
+
+def test_package_def_names_are_unique():
+    """No two top-level package defs share a name: the caller gate above
+    matches defs by bare name, so a second def of a name would count as
+    reached through the first one's callers and could sit dead behind it."""
+    shared = {n: w for n, w in _package_defs().items() if len(w) > 1}
+    assert not shared, "package defs sharing a name: " + ", ".join(
+        f"{n} ({', '.join(w)})" for n, w in sorted(shared.items())
+    )

@@ -62,16 +62,17 @@ def test_lsh_topk_recall_vs_bruteforce(spark):
 def test_ivf_topk_recall_floor_and_nprobe_monotonic(spark):
     """IVF on the structureless random fixtures: recall floor at the
     default nprobe, and more probes never hurt recall."""
-    from elastic_asset_etl_poc_spark.operators.similarity import ivf_topk
+    from elastic_asset_etl_poc_spark.operators.similarity import ivf_topk, ivf_train
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter("vec_id < 5")
     bf = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, q, k=10).collect()}
+    C = ivf_train(emb)
 
     def recall(nprobe):
         ann = {
             (r.query_id, r.neighbor_id)
-            for r in ivf_topk(emb, q, k=10, nprobe=nprobe).collect()
+            for r in ivf_topk(emb, q, C, k=10, nprobe=nprobe).collect()
         }
         return len(ann & bf) / len(bf)
 
@@ -131,12 +132,13 @@ def test_cosine_pairs_lsh_recall_and_precision(spark):
 def test_ivf_train_sample_bounded(spark):
     """The k-means train sample must stay ~max_train_sample regardless of
     corpus size (never an O(N) driver collect)."""
-    from elastic_asset_etl_poc_spark.operators.similarity import ivf_topk
+    from elastic_asset_etl_poc_spark.operators.similarity import ivf_topk, ivf_train
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter("vec_id < 2")
     # tiny cap: still trains (centroids capped at sample size) and answers
-    out = ivf_topk(emb, q, k=5, max_train_sample=8, nprobe=16).collect()
+    C = ivf_train(emb, max_train_sample=8)
+    out = ivf_topk(emb, q, C, k=5, nprobe=16).collect()
     assert len(out) > 0
     per_q = {}
     for r in out:
@@ -196,9 +198,10 @@ def test_cosine_pairs_lsh_hot_bucket_bounded(spark):
 
 
 def test_ivf_train_reuse_skips_training_jobs(spark):
-    """A static corpus trains once: passing pre-trained centroids to
-    ivf_topk must produce the identical result while running NO driver
-    actions (count/collect) during plan construction."""
+    """A static corpus trains once: ivf_topk over the pre-trained
+    centroids must give the same answer as over the same centroids
+    trained again, and run NO driver actions (count/collect) during
+    plan construction."""
     from pyspark.sql import DataFrame
 
     from elastic_asset_etl_poc_spark.operators.similarity import ivf_topk, ivf_train
@@ -208,7 +211,7 @@ def test_ivf_train_reuse_skips_training_jobs(spark):
     C = ivf_train(emb)
     assert C.ndim == 2 and C.shape[0] == 16
 
-    self_trained = sorted(map(tuple, ivf_topk(emb, q, k=5).collect()))
+    self_trained = sorted(map(tuple, ivf_topk(emb, q, ivf_train(emb), k=5).collect()))
 
     forbidden = {}
     for name in ("collect", "first", "toPandas", "head", "take", "count"):
@@ -255,26 +258,36 @@ def _rand_emb(spark, n=60, d=16, seed=7):
 
 
 def test_pq_lossless_when_ksub_covers_corpus(spark):
-    from elastic_asset_etl_poc_spark.operators.similarity import cosine_topk, pq_topk
+    from elastic_asset_etl_poc_spark.operators.similarity import (
+        cosine_topk,
+        pq_topk,
+        pq_train,
+    )
 
     emb = _rand_emb(spark)
     q = emb.filter("vec_id < 3")
     exact = {(r.query_id, r.neighbor_id, r.rank) for r in cosine_topk(emb, q, k=5).collect()}
+    B = pq_train(emb, m=4, ksub=64, max_train_sample=64)
     pq = {(r.query_id, r.neighbor_id, r.rank) for r in
-          pq_topk(emb, q, k=5, m=4, ksub=64, max_train_sample=64).collect()}
+          pq_topk(emb, q, B, k=5).collect()}
     assert pq == exact  # one centroid per training point -> lossless ADC
 
 
 def test_pq_refine_recovers_recall(spark):
-    from elastic_asset_etl_poc_spark.operators.similarity import cosine_topk, pq_topk
+    from elastic_asset_etl_poc_spark.operators.similarity import (
+        cosine_topk,
+        pq_topk,
+        pq_train,
+    )
 
     emb = _rand_emb(spark, n=120, d=16, seed=11)
     q = emb.filter("vec_id < 3")
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, q, k=5).collect()}
+    B = pq_train(emb, m=4, ksub=8)
 
     def recall(refine):
         got = {(r.query_id, r.neighbor_id) for r in
-               pq_topk(emb, q, k=5, m=4, ksub=8, refine=refine).collect()}
+               pq_topk(emb, q, B, k=5, refine=refine).collect()}
         return len(got & exact) / len(exact)
 
     r0, r8 = recall(0), recall(8)
@@ -557,6 +570,7 @@ def test_mutual_ivf_recovers_clustered_mutual_pairs(spark):
     import math
 
     from elastic_asset_etl_poc_spark.operators.similarity import (
+        ivf_train,
         mutual_top1_pairs,
         mutual_top1_pairs_ivf,
     )
@@ -571,12 +585,11 @@ def test_mutual_ivf_recovers_clustered_mutual_pairs(spark):
         (r.vec_a, r.vec_b) for r in mutual_top1_pairs(emb).collect()
     }
     assert exact
+    C = ivf_train(emb, n_centroids=8)
     for kw in (dict(), dict(max_bucket=8)):
         approx = {
             (r.vec_a, r.vec_b)
-            for r in mutual_top1_pairs_ivf(
-                emb, n_centroids=8, nprobe=4, **kw
-            ).collect()
+            for r in mutual_top1_pairs_ivf(emb, C, nprobe=4, **kw).collect()
         }
         assert approx == exact, kw
 
@@ -590,6 +603,7 @@ def test_mutual_kernels_survive_zero_vectors(spark):
     import math
 
     from elastic_asset_etl_poc_spark.operators.similarity import (
+        ivf_train,
         mutual_top1_pairs_ivf,
         mutual_top1_pairs_lsh,
     )
@@ -606,7 +620,9 @@ def test_mutual_kernels_survive_zero_vectors(spark):
     expected = {(2 * c, 2 * c + 1) for c in range(6)}
     for pairs in (
         mutual_top1_pairs_lsh(emb).collect(),
-        mutual_top1_pairs_ivf(emb, n_centroids=4, nprobe=4).collect(),
+        mutual_top1_pairs_ivf(
+            emb, ivf_train(emb, n_centroids=4), nprobe=4
+        ).collect(),
     ):
         got = {(r.vec_a, r.vec_b) for r in pairs}
         assert not any(math.isnan(r.cos) for r in pairs)
@@ -621,7 +637,9 @@ def test_ivfpq_lossless_full_probe_equals_exact(spark):
     encode/table/offset path with no refine to mask it."""
     from elastic_asset_etl_poc_spark.operators.similarity import (
         cosine_topk,
+        ivf_train,
         ivfpq_topk,
+        ivfpq_train,
     )
 
     emb = _rand_emb(spark)
@@ -630,12 +648,11 @@ def test_ivfpq_lossless_full_probe_equals_exact(spark):
         (r.query_id, r.neighbor_id, r.rank)
         for r in cosine_topk(emb, q, k=5).collect()
     }
+    C = ivf_train(emb, n_centroids=4, max_train_sample=64)
+    B = ivfpq_train(emb, C, m=4, ksub=64, max_train_sample=64)
     got = {
         (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(
-            emb, q, k=5, n_centroids=4, nprobe=4, m=4, ksub=64,
-            max_train_sample=64, refine=0,
-        ).collect()
+        for r in ivfpq_topk(emb, q, C, B, k=5, nprobe=4, refine=0).collect()
     }
     assert got == exact
 
@@ -647,7 +664,11 @@ def test_ivfpq_prunes_unprobed_lists(spark):
     rather than scanning everything."""
     import math
 
-    from elastic_asset_etl_poc_spark.operators.similarity import ivfpq_topk
+    from elastic_asset_etl_poc_spark.operators.similarity import (
+        ivf_train,
+        ivfpq_topk,
+        ivfpq_train,
+    )
 
     rows = []
     for i in range(20):
@@ -656,10 +677,9 @@ def test_ivfpq_prunes_unprobed_lists(spark):
         rows.append((100 + i, [-1.0, 0.0, a, 0.0]))      # cluster B (opposed)
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = emb.filter("vec_id = 0")
-    got = ivfpq_topk(
-        emb, q, k=5, n_centroids=2, nprobe=1, m=4, ksub=16, refine=0,
-        max_train_sample=64,
-    ).collect()
+    C = ivf_train(emb, n_centroids=2, max_train_sample=64)
+    B = ivfpq_train(emb, C, m=4, ksub=16, max_train_sample=64)
+    got = ivfpq_topk(emb, q, C, B, k=5, nprobe=1, refine=0).collect()
     assert len(got) == 5
     assert all(r.neighbor_id < 100 for r in got)
 
@@ -710,7 +730,9 @@ def test_ivfpq_incremental_fold_equals_full(spark):
 def test_ivfpq_refine_recovers_recall_and_empty_edges(spark):
     from elastic_asset_etl_poc_spark.operators.similarity import (
         cosine_topk,
+        ivf_train,
         ivfpq_topk,
+        ivfpq_train,
     )
 
     emb = _rand_emb(spark, n=120, d=16, seed=11)
@@ -719,13 +741,14 @@ def test_ivfpq_refine_recovers_recall_and_empty_edges(spark):
         (r.query_id, r.neighbor_id)
         for r in cosine_topk(emb, q, k=5).collect()
     }
+    C = ivf_train(emb, n_centroids=4)
+    B = ivfpq_train(emb, C, m=4, ksub=8)
 
     def recall(refine):
         got = {
             (r.query_id, r.neighbor_id)
             for r in ivfpq_topk(
-                emb, q, k=5, n_centroids=4, nprobe=4, m=4, ksub=8,
-                refine=refine,
+                emb, q, C, B, k=5, nprobe=4, refine=refine
             ).collect()
         }
         return len(got & exact) / len(exact)
@@ -735,5 +758,8 @@ def test_ivfpq_refine_recovers_recall_and_empty_edges(spark):
     assert r8 >= 0.8  # full probe: only the PQ tier is lossy here
     # empty query set and empty corpus both yield empty frames
     none_q = emb.filter("vec_id < 0")
-    assert ivfpq_topk(emb, none_q, k=5, m=4).count() == 0
-    assert ivfpq_topk(none_q, none_q, k=5, m=4).count() == 0
+    C = ivf_train(emb)
+    assert ivfpq_topk(emb, none_q, C, ivfpq_train(emb, C, m=4), k=5).count() == 0
+    C0 = ivf_train(none_q)
+    B0 = ivfpq_train(none_q, C0, m=4)
+    assert ivfpq_topk(none_q, none_q, C0, B0, k=5).count() == 0

@@ -570,8 +570,9 @@ def test_minhash_incremental_store_lifecycle(spark, tmp_path):
 
 def test_simhash_incremental_store_lifecycle(spark, tmp_path):
     from elastic_asset_etl_poc_spark.operators.neardup import (
-        simhash_neardup_incremental,
-        simhash_store_init,
+        fingerprint_neardup_incremental,
+        fingerprint_store_init,
+        simhash,
     )
 
     corpus = spark.createDataFrame(
@@ -586,9 +587,11 @@ def test_simhash_incremental_store_lifecycle(spark, tmp_path):
         "doc_id long, text string",
     )
     store = str(tmp_path / "sh_store")
-    simhash_store_init(corpus, store)
+    fingerprint_store_init(simhash(corpus), store)
     p1 = {(r.doc_a, r.doc_b): r.hamming for r in
-          simhash_neardup_incremental(batch1, store, max_hamming=3, update_store=True).collect()}
+          fingerprint_neardup_incremental(
+              simhash(batch1), store, max_hamming=3, update_store=True
+          ).collect()}
     assert p1 == {(1, 10): 0}  # identical text -> hamming 0 vs corpus only
     # second batch duplicating batch1's doc is found through the UPDATED store
     batch2 = spark.createDataFrame(
@@ -596,7 +599,9 @@ def test_simhash_incremental_store_lifecycle(spark, tmp_path):
         "doc_id long, text string",
     )
     p2 = {(r.doc_a, r.doc_b) for r in
-          simhash_neardup_incremental(batch2, store, max_hamming=3).collect()}
+          fingerprint_neardup_incremental(
+              simhash(batch2), store, max_hamming=3
+          ).collect()}
     assert p2 == {(1, 20), (10, 20)}
 
 

@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
 """Regenerate QUERIES.md: every driver-visible query, its check mode
 (oracle hash vs rows-only with the reason), and its one-line story,
-pulled from the suite docstrings.  The judge-facing index of the whole
-`queries()` surface."""
+pulled from the suite docstrings.  The index of the whole `queries()`
+surface.  Rows are sorted by query name, not in the driver's
+stale-first `queries()` order (which moves as the suite grows), so a
+regeneration on an unchanged tree rewrites the file byte for byte."""
 
 from __future__ import annotations
 
@@ -26,7 +28,7 @@ def main() -> None:
         "| query | check | summary |",
         "|---|---|---|",
     ]
-    for name in qs:
+    for name in sorted(qs):
         fn = suite.queries()[name]
         doc = (fn.__doc__ or "").strip().split("\n\n")[0]
         doc = " ".join(line.strip() for line in doc.splitlines())
