@@ -25,7 +25,7 @@ changes rather than first-run JVM/codegen/page-cache noise; the first
 Drift triage: when the committed BENCH_FULL.json was taken at the same
 scale factor on the same number of cpus, any query whose median drifts
 >2x from it AND lands above 1s is re-timed in a FRESH JVM after the
-sweep (``tools/solo_retime.py``), and the "drift" map carries {prev,
+sweep (``tools/ab.py``'s ``solo``), and the "drift" map carries {prev,
 suite, solo} per drifted query.  solo ~= prev means suite-position noise
 (accumulated JVM state); solo ~= suite means a real plan regression.
 """
@@ -143,7 +143,7 @@ def main() -> None:
 
     import __spark_entry__ as e
     from perfbench.spans import Tracer
-    from tools.solo_retime import solo
+    from tools.ab import solo
 
     spark = start(sf_dir)
     tracer = Tracer(spark)

@@ -39,30 +39,39 @@ PARENT_CASCADE: list[tuple[str, str]] = [
 ]
 
 
-def find_parent(col=F.col) -> Column:
+def _parent_struct(ptype: str, parent_id: str) -> str:
+    return (
+        f"named_struct('parent_type', '{ptype}', 'parent_id', {parent_id}, "
+        f"'parent_ean', concat('{ptype}', ':', {parent_id}))"
+    )
+
+
+#: :func:`find_parent` as SQL text, for ``selectExpr`` callers that take
+#: its fields (``({FIND_PARENT_SQL}).parent_ean``).  Built from
+#: ``PARENT_CASCADE`` only, never from caller values.
+FIND_PARENT_SQL = (
+    "CASE "
+    + " ".join(
+        f"WHEN `{field}` IS NOT NULL THEN {_parent_struct(ptype, f'`{field}`')}"
+        for field, ptype in PARENT_CASCADE
+    )
+    + " ELSE "
+    + _parent_struct("unknown", "''")
+    + " END"
+)
+
+
+def find_parent() -> Column:
     """X2: priority-coalesce parent derivation as a struct column.
 
-    Returns ``struct(parent_type, parent_id, parent_ean)``; the chained
-    ``when`` evaluates the cascade exactly once per row, JVM-side — the
+    Returns ``struct(parent_type, parent_id, parent_ean)``; the CASE
+    evaluates the cascade exactly once per row, JVM-side — the
     declarative equivalent of the reference's if/else ladder
-    (lib/collectServicesFromSummaries.ts:121-154).
+    (lib/collectServicesFromSummaries.ts:121-154).  One expression
+    parsed from :data:`FIND_PARENT_SQL`: one JVM call, where a chained
+    ``when`` of Column objects costs dozens.
     """
-    expr = None
-    for field, ptype in PARENT_CASCADE:
-        c = col(f"`{field}`")
-        branch = F.struct(
-            F.lit(ptype).alias("parent_type"),
-            c.alias("parent_id"),
-            make_ean(ptype, c).alias("parent_ean"),
-        )
-        expr = F.when(c.isNotNull(), branch) if expr is None else expr.when(c.isNotNull(), branch)
-    return expr.otherwise(
-        F.struct(
-            F.lit("unknown").alias("parent_type"),
-            F.lit("").alias("parent_id"),
-            F.lit("unknown:").alias("parent_ean"),
-        )
-    )
+    return F.expr(FIND_PARENT_SQL)
 
 
 def date_math_lookback(now: datetime, amount: int, unit: str) -> tuple[Column, Column]:

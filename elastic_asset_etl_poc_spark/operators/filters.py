@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import date_math_lookback
@@ -63,15 +63,9 @@ def exists_all(df: DataFrame, *fields: str) -> DataFrame:
     return df.filter(cond)
 
 
-def exists_any_cond(*fields: str) -> Column:
-    cond = F.lit(False)
-    for f in fields:
-        cond = cond | F.col(f"`{f}`").isNotNull()
-    return cond
-
-
 def exists_any(df: DataFrame, *fields: str) -> DataFrame:
     """F5: disjunction of exists (``should`` + ``minimum_should_match: 1``,
     lib/collectServicesFromSummaries.ts:216-238): at least one of the
-    parent-candidate fields is present."""
-    return df.filter(exists_any_cond(*fields))
+    parent-candidate fields is present.  One SQL predicate, one JVM
+    call."""
+    return df.filter(" OR ".join(f"`{f}` IS NOT NULL" for f in fields))

@@ -17,8 +17,9 @@ from pyspark.sql import functions as F
 
 def project_rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     """P1/P3: projection + rename (hit → typed row,
-    lib/collectServicesFromSummaries.ts:58-70)."""
-    return df.select(*[F.col(f"`{src}`").alias(dst) for src, dst in mapping.items()])
+    lib/collectServicesFromSummaries.ts:58-70).  One ``selectExpr``: one
+    JVM call, not two per column."""
+    return df.selectExpr(*[f"`{src}` AS `{dst}`" for src, dst in mapping.items()])
 
 
 def wildcard_select(df: DataFrame, *patterns: str, extra: list[str] | None = None) -> DataFrame:

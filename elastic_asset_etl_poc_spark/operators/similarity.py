@@ -637,8 +637,7 @@ def _pair_kernel(key, pdf, threshold: float):
     ids = pdf["__id"].to_numpy()
     if len(ids) < 2:
         return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
-    m = _matrix(pdf["__v"])
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    m = _unit(_matrix(pdf["__v"]))  # a zero vector scores cos 0, not NaN
     if bi == bj:
         sims = m @ m.T
         mask = (sims >= threshold) & (ids[:, None] < ids[None, :])

@@ -12,6 +12,15 @@ accumulation = group-and-collect hash aggregation (one shuffle); the
 (nodes get their cluster parent from the newest row, lib/collectPods.ts:98-110)
 = top-1 window per node.  Linear, spillable, deterministic.
 
+Each collector holds its finished frames in the session memo
+(``sources.registry.memo``): the collapsed top and both asset frames,
+all ``.cache()``d, per session, ``sf_dir`` and window.  A call for the
+held window over unchanged events files is served — it builds no plan
+and runs no Spark job, and the asset frames it returns read as
+in-memory relations.  A call for another window (an advancing ``now``),
+or after the events files changed, builds afresh and releases the three
+held frames, so a collector holds one window at a time.
+
 Deviations (documented, deliberate):
   * ``@timestamp`` is stamped with the caller's pinned ``now`` instead of
     wall-clock ``new Date()`` (X3) — determinism rule SURVEY.md §5.5.
@@ -57,6 +66,14 @@ def _with_eans(df: DataFrame) -> DataFrame:
     )
 
 
+def _held(spark: SparkSession, kind: str, sf_dir: str, build, params) -> list[DataFrame]:
+    """The collector's memoized ``(top, assets, assets)`` frames.  cache()
+    on a served frame is a no-op unless its cache was cleared
+    (catalog.clearCache), which it then restores; ``top`` first, so the
+    asset frames' restored caches read it."""
+    return [df.cache() for df in memo(spark, kind, sf_dir, ["events"], build, params)]
+
+
 def collect_services(
     spark: SparkSession,
     sf_dir: str,
@@ -70,7 +87,7 @@ def collect_services(
     """
     window = (now - timedelta(days=lookback_days), now)
 
-    def build() -> DataFrame:
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
         sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
         sig = time_window(sig, "@timestamp", now, lookback_days, "d")
         sig = sig.filter(F.col("`service.name`").isNotNull())  # must: exists (F4)
@@ -80,59 +97,55 @@ def collect_services(
         top = collapse_top1(sig, "service.name", "@timestamp", tiebreak="event.id")
         if limit_groups:  # Q5 bug-compat switch
             top = top.orderBy(F.col("`@timestamp`").desc()).limit(limit_groups)
-        return _with_eans(top)
-
-    # One cached top, reused by both asset outputs, is held per collector,
-    # session and sf_dir: a call for another window, or after the events
-    # files changed, releases the held frame, so ticks with an advancing
-    # ``now`` hold one frame.  cache() on a served frame is a no-op unless
-    # its cache was cleared (catalog.clearCache), which it then restores.
-    params = (window, limit_groups)
-    top = memo(spark, "assets.services_top", sf_dir, ["events"], build, params).cache()
-
-    services = top.select(
-        F.lit(now).alias("@timestamp"),
-        F.col("service_ean").alias("asset.ean"),
-        F.lit("service").alias("asset.type"),
-        F.col("`service.name`").alias("asset.id"),
-        F.col("`service.name`").alias("asset.name"),
-        # parents = [container ean] only when present (lib/collectServices.ts:107-109)
-        F.when(
-            F.col("container_ean").isNotNull(), F.array(F.col("container_ean"))
-        ).alias("asset.parents"),
-        F.lit(None).cast("array<string>").alias("asset.children"),
-        # references = [pod?, node?] in cascade order (lib/collectServices.ts:115-121)
-        F.array_compact(F.array(F.col("pod_ean"), F.col("node_ean"))).alias(
-            "asset.references"
-        ),
-        F.col("`cloud.provider`").alias("cloud.provider"),
-        F.lit(None).cast("string").alias("orchestrator.cluster.name"),
-        F.col("`service.environment`").alias("service.environment"),
-    )
-
-    containers = (
-        group_collect_edges(
-            top.filter(F.col("container_ean").isNotNull()),
-            owner_cols=["container_ean", "container.id"],
-            edge_cols={
-                "asset.children": "service_ean",
-                "asset.parents": "pod_ean",
-                "asset.references": "node_ean",
-            },
-        )
-        .select(
+        top = _with_eans(top).cache()
+        services = top.select(
             F.lit(now).alias("@timestamp"),
-            F.col("container_ean").alias("asset.ean"),
-            F.lit("container").alias("asset.type"),
-            F.col("`container.id`").alias("asset.id"),
-            F.lit(None).cast("string").alias("asset.name"),
-            F.col("`asset.parents`"),
-            F.col("`asset.children`"),
-            F.col("`asset.references`"),
-            F.lit(None).cast("string").alias("cloud.provider"),
+            F.col("service_ean").alias("asset.ean"),
+            F.lit("service").alias("asset.type"),
+            F.col("`service.name`").alias("asset.id"),
+            F.col("`service.name`").alias("asset.name"),
+            # parents = [container ean] only when present (lib/collectServices.ts:107-109)
+            F.when(
+                F.col("container_ean").isNotNull(), F.array(F.col("container_ean"))
+            ).alias("asset.parents"),
+            F.lit(None).cast("array<string>").alias("asset.children"),
+            # references = [pod?, node?] in cascade order (lib/collectServices.ts:115-121)
+            F.array_compact(F.array(F.col("pod_ean"), F.col("node_ean"))).alias(
+                "asset.references"
+            ),
+            F.col("`cloud.provider`").alias("cloud.provider"),
             F.lit(None).cast("string").alias("orchestrator.cluster.name"),
-            F.lit(None).cast("string").alias("service.environment"),
+            F.col("`service.environment`").alias("service.environment"),
         )
+
+        containers = (
+            group_collect_edges(
+                top.filter(F.col("container_ean").isNotNull()),
+                owner_cols=["container_ean", "container.id"],
+                edge_cols={
+                    "asset.children": "service_ean",
+                    "asset.parents": "pod_ean",
+                    "asset.references": "node_ean",
+                },
+            )
+            .select(
+                F.lit(now).alias("@timestamp"),
+                F.col("container_ean").alias("asset.ean"),
+                F.lit("container").alias("asset.type"),
+                F.col("`container.id`").alias("asset.id"),
+                F.lit(None).cast("string").alias("asset.name"),
+                F.col("`asset.parents`"),
+                F.col("`asset.children`"),
+                F.col("`asset.references`"),
+                F.lit(None).cast("string").alias("cloud.provider"),
+                F.lit(None).cast("string").alias("orchestrator.cluster.name"),
+                F.lit(None).cast("string").alias("service.environment"),
+            )
+        )
+        return top, services.cache(), containers.cache()
+
+    _, services, containers = _held(
+        spark, "assets.services_top", sf_dir, build, (window, limit_groups)
     )
     return services, containers
 
@@ -151,7 +164,7 @@ def collect_pods(
     """
     window = (now - timedelta(days=lookback_days), now)
 
-    def build() -> DataFrame:
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
         sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
         logs = sig.filter(F.col("`metricset.name`").isin("click", "view", "error"))
         apm = sig.filter(F.col("`metricset.name`").isin("purchase", "signup"))
@@ -163,60 +176,60 @@ def collect_pods(
         top = collapse_top1(
             both, "kubernetes.pod.uid", "@timestamp", tiebreak="event.id"
         )
-        return _with_eans(top)
-
-    top = memo(spark, "assets.pods_top", sf_dir, ["events"], build, window).cache()
-
-    pods = top.select(
-        F.lit(now).alias("@timestamp"),
-        F.col("pod_ean").alias("asset.ean"),
-        F.lit("k8s.pod").alias("asset.type"),
-        F.col("`kubernetes.pod.uid`").alias("asset.id"),
-        F.lit(None).cast("string").alias("asset.name"),
-        F.array(F.col("node_ean")).alias("asset.parents"),  # lib/collectPods.ts:77
-        F.lit(None).cast("array<string>").alias("asset.children"),
-        F.lit(None).cast("array<string>").alias("asset.references"),
-        F.col("`cloud.provider`").alias("cloud.provider"),
-        F.col("`orchestrator.cluster.name`").alias("orchestrator.cluster.name"),
-        F.lit(None).cast("string").alias("service.environment"),
-    )
-
-    # The node's cluster parent comes from the row that *creates* the node —
-    # the newest pod row for that node (find-or-create in desc sort order,
-    # lib/collectPods.ts:98-110).  Window top-1 per node reproduces it.
-    newest_per_node = collapse_top1(
-        top, "kubernetes.node.name", "@timestamp", tiebreak="event.id"
-    ).select(
-        F.col("`kubernetes.node.name`").alias("__node"),
-        F.col("`orchestrator.cluster.name`").alias("__cluster"),
-    )
-
-    node_children = group_collect_edges(
-        top,
-        owner_cols=["node_ean", "kubernetes.node.name"],
-        edge_cols={"asset.children": "pod_ean"},
-    )
-    nodes = (
-        node_children.join(
-            newest_per_node,
-            node_children["`kubernetes.node.name`"] == newest_per_node["__node"],
-            "left",
-        )
-        .select(
+        top = _with_eans(top).cache()
+        pods = top.select(
             F.lit(now).alias("@timestamp"),
-            F.col("node_ean").alias("asset.ean"),
-            F.lit("k8s.node").alias("asset.type"),
-            F.col("`kubernetes.node.name`").alias("asset.id"),
+            F.col("pod_ean").alias("asset.ean"),
+            F.lit("k8s.pod").alias("asset.type"),
+            F.col("`kubernetes.pod.uid`").alias("asset.id"),
             F.lit(None).cast("string").alias("asset.name"),
-            F.when(
-                F.col("__cluster").isNotNull(),
-                F.array(make_ean("k8s.cluster", F.col("__cluster"))),
-            ).alias("asset.parents"),
-            F.col("`asset.children`"),
+            F.array(F.col("node_ean")).alias("asset.parents"),  # lib/collectPods.ts:77
+            F.lit(None).cast("array<string>").alias("asset.children"),
             F.lit(None).cast("array<string>").alias("asset.references"),
-            F.lit(None).cast("string").alias("cloud.provider"),
-            F.lit(None).cast("string").alias("orchestrator.cluster.name"),
+            F.col("`cloud.provider`").alias("cloud.provider"),
+            F.col("`orchestrator.cluster.name`").alias("orchestrator.cluster.name"),
             F.lit(None).cast("string").alias("service.environment"),
         )
-    )
+
+        # The node's cluster parent comes from the row that *creates* the node —
+        # the newest pod row for that node (find-or-create in desc sort order,
+        # lib/collectPods.ts:98-110).  Window top-1 per node reproduces it.
+        newest_per_node = collapse_top1(
+            top, "kubernetes.node.name", "@timestamp", tiebreak="event.id"
+        ).select(
+            F.col("`kubernetes.node.name`").alias("__node"),
+            F.col("`orchestrator.cluster.name`").alias("__cluster"),
+        )
+
+        node_children = group_collect_edges(
+            top,
+            owner_cols=["node_ean", "kubernetes.node.name"],
+            edge_cols={"asset.children": "pod_ean"},
+        )
+        nodes = (
+            node_children.join(
+                newest_per_node,
+                node_children["`kubernetes.node.name`"] == newest_per_node["__node"],
+                "left",
+            )
+            .select(
+                F.lit(now).alias("@timestamp"),
+                F.col("node_ean").alias("asset.ean"),
+                F.lit("k8s.node").alias("asset.type"),
+                F.col("`kubernetes.node.name`").alias("asset.id"),
+                F.lit(None).cast("string").alias("asset.name"),
+                F.when(
+                    F.col("__cluster").isNotNull(),
+                    F.array(make_ean("k8s.cluster", F.col("__cluster"))),
+                ).alias("asset.parents"),
+                F.col("`asset.children`"),
+                F.lit(None).cast("array<string>").alias("asset.references"),
+                F.lit(None).cast("string").alias("cloud.provider"),
+                F.lit(None).cast("string").alias("orchestrator.cluster.name"),
+                F.lit(None).cast("string").alias("service.environment"),
+            )
+        )
+        return top, pods.cache(), nodes.cache()
+
+    _, pods, nodes = _held(spark, "assets.pods_top", sf_dir, build, window)
     return pods, nodes

@@ -31,7 +31,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalar import find_parent
+from ..functions.scalar import FIND_PARENT_SQL
 from ..operators.dedup import dedup_latest
 from ..operators.filters import exists_any, term, time_window
 from ..operators.joins import semi_join_in_list
@@ -86,18 +86,18 @@ def batch_search_for_service_parents(
     sig = exists_any(
         sig, "container.id", "kubernetes.pod.uid", "host.name", "host.hostname"
     )
-    parent = find_parent()
-    return sig.select(
-        F.col("`event.id`").alias("event_id"),
-        F.col("`@timestamp`").alias("ts"),
-        F.col("`service.name`").alias("name"),
-        F.col("`container.id`").alias("container_id"),
-        F.col("`kubernetes.pod.uid`").alias("pod_uid"),
-        F.col("`host.name`").alias("host_name"),
-        F.col("`host.hostname`").alias("host_hostname"),
-        parent.getField("parent_type").alias("parent_type"),
-        parent.getField("parent_id").alias("parent_id"),
-        parent.getField("parent_ean").alias("parent_ean"),
+    parent = f"({FIND_PARENT_SQL})"
+    return sig.selectExpr(
+        "`event.id` AS event_id",
+        "`@timestamp` AS ts",
+        "`service.name` AS name",
+        "`container.id` AS container_id",
+        "`kubernetes.pod.uid` AS pod_uid",
+        "`host.name` AS host_name",
+        "`host.hostname` AS host_hostname",
+        f"{parent}.parent_type AS parent_type",
+        f"{parent}.parent_id AS parent_id",
+        f"{parent}.parent_ean AS parent_ean",
     )
 
 

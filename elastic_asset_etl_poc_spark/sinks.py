@@ -98,6 +98,13 @@ def upsert_assets(spark, path: str, new_assets: DataFrame) -> None:
       * both checkpoints are released after the write, so a long-lived
         upsert loop holds no blocks between calls.
 
+    An upsert of the collectors' cached asset frames onto an existing
+    store runs 4 Spark jobs: the batch checkpoint (it reads the four
+    in-memory relations), the checkpoint of the touched store
+    partitions (read with the declared ``SIMPLE_ASSET_SCHEMA``, so no
+    schema-inference job reads the footers first), the ``asset.ean``
+    shuffle of the dedup window and the write.
+
     On a real deployment this maps 1:1 onto MERGE INTO against an
     Iceberg/Delta table keyed on asset.ean; the parquet-path form here
     is per-partition atomic (Spark commit protocol) but not
@@ -128,11 +135,14 @@ def upsert_assets(spark, path: str, new_assets: DataFrame) -> None:
         if fs.exists(hpath):
             # Partition-pruned read of just the touched types, checkpointed
             # so the overwrite below does not read the files it replaces
-            # (Spark refuses a same-path read+overwrite otherwise).
+            # (Spark refuses a same-path read+overwrite otherwise).  The
+            # declared schema spares the schema-inference job that reads
+            # the store's footers; a corrupt file raises in the checkpoint
+            # job instead, still before anything is written.
             existing, _ = checkpoint(
-                spark.read.parquet(path).filter(
-                    F.col("`asset.type`").isin(seen["types"])
-                )
+                spark.read.schema(SIMPLE_ASSET_SCHEMA)
+                .parquet(path)
+                .filter(F.col("`asset.type`").isin(seen["types"]))
             )
             live.append(existing)
             batch = existing.unionByName(batch)

@@ -228,15 +228,13 @@ def stream_service_parents(
     micro-batch, so the stream never shuffles; the J1 pattern, live).
     """
     from ..functions.scalar import find_parent
+    from ..operators.filters import exists_any
     from ..operators.joins import semi_join_in_list
 
     sig = stream_signals_full(spark, source_dir)
     sig = semi_join_in_list(sig, services, "service.name", "name")
-    sig = sig.filter(
-        F.col("`container.id`").isNotNull()
-        | F.col("`kubernetes.pod.uid`").isNotNull()
-        | F.col("`host.name`").isNotNull()
-        | F.col("`host.hostname`").isNotNull()
+    sig = exists_any(
+        sig, "container.id", "kubernetes.pod.uid", "host.name", "host.hostname"
     )
     parent = find_parent()
     return sig.select(

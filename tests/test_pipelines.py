@@ -355,6 +355,71 @@ def test_asset_collectors_hold_one_frame_per_window(spark):
     assert memo_counts(spark) == (built, served + 2)
 
 
+def _jobs_in(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_asset_tick_job_counts(spark, tmp_path):
+    """The collectors memoize their finished asset frames: a warm
+    collector call runs no Spark job and returns the held, cached
+    frames, and a warm upsert of the four onto an existing store runs
+    at most 4 jobs (batch checkpoint, store-partition checkpoint, the
+    dedup shuffle and the write; 9 when the memo held only the collapsed
+    tops and the store read inferred its schema)."""
+    from elastic_asset_etl_poc_spark.sinks import upsert_assets
+
+    def union(frames):
+        out = frames[0]
+        for df in frames[1:]:
+            out = out.unionByName(df)
+        return out
+
+    path = str(tmp_path / "assets_store")
+    cold = [*collect_services(spark, SF_DIR), *collect_pods(spark, SF_DIR)]
+    upsert_assets(spark, path, union(cold))  # materializes the frames
+    warm: list = []
+
+    def collect():
+        warm.extend([*collect_services(spark, SF_DIR), *collect_pods(spark, SF_DIR)])
+
+    assert _jobs_in(spark, "warm_collectors", collect) == 0
+    assert all(df.storageLevel.useMemory for df in warm)
+    n = _jobs_in(spark, "warm_upsert", lambda: upsert_assets(spark, path, union(warm)))
+    assert n <= 4, n
+
+
+def test_upsert_store_read_with_declared_schema(spark, tmp_path):
+    """The upsert reads its store with the declared asset schema: after
+    two upserts, that read equals a read that infers the schema, rows and
+    column types both."""
+    from elastic_asset_etl_poc_spark.schema import SIMPLE_ASSET_SCHEMA
+    from elastic_asset_etl_poc_spark.sinks import upsert_assets
+
+    services, containers = collect_services(spark, SF_DIR)
+    pods, nodes = collect_pods(spark, SF_DIR)
+    path = str(tmp_path / "assets_store")
+    upsert_assets(spark, path, services.unionByName(containers))
+    upsert_assets(spark, path, pods.unionByName(nodes).unionByName(services))
+    declared = spark.read.schema(SIMPLE_ASSET_SCHEMA).parquet(path)
+    inferred = spark.read.parquet(path)
+    assert sorted(declared.dtypes) == sorted(inferred.dtypes)
+    cols = sorted(inferred.columns)
+
+    def rows(df):
+        return sorted(map(repr, df.select(*[f"`{c}`" for c in cols]).collect()))
+
+    assert rows(declared) == rows(inferred)
+    assert len(rows(inferred)) == sum(
+        df.count() for df in (services, containers, pods, nodes)
+    )
+
+
 def test_memo_rebuilds_after_table_rewrite(spark, tmp_path):
     """The session memo stamps each artifact with the file identity of
     its tables: after documents and embeddings are rewritten, the

@@ -629,6 +629,29 @@ def test_mutual_kernels_survive_zero_vectors(spark):
         assert expected <= got | {(100, 101)} and got <= expected | {(100, 101)}
 
 
+def test_cosine_pairs_scores_zero_vectors_at_zero(spark):
+    """The exact all-pairs kernel guards zero norms as the argmax kernel
+    does: at threshold -2 every pair is emitted, and each pair with a
+    zero vector scores cos 0 (unguarded normalization made those NaN,
+    which no threshold keeps)."""
+    import math
+
+    rows = [(100, [0.0, 0.0, 0.0, 0.0]), (101, [0.0, 0.0, 0.0, 0.0])]
+    for c in range(6):
+        base = [
+            math.cos(c * 0.7), math.sin(c * 0.7),
+            math.cos(c * 1.9), math.sin(c * 1.9),
+        ]
+        rows.append((2 * c, base))
+        rows.append((2 * c + 1, [x * 1.01 + 0.001 for x in base]))
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(3)
+    ids = sorted(r[0] for r in rows)
+    got = {(r.vec_a, r.vec_b): r.cos for r in cosine_pairs(emb, -2.0).collect()}
+    assert sorted(got) == [(a, b) for a in ids for b in ids if a < b]
+    assert not any(math.isnan(c) for c in got.values())
+    assert all(c == 0.0 for (a, b), c in got.items() if {a, b} & {100, 101})
+
+
 def test_ivfpq_lossless_full_probe_equals_exact(spark):
     """ksub >= corpus makes the RESIDUAL quantizer lossless and
     nprobe = n_centroids probes every list, so pure-ADC IVF-PQ must

@@ -26,7 +26,7 @@ Usage::
     python3 tools/sf1_scale_smoke.py --fresh-jvm --only q1 q2 ...
 
 ``--fresh-jvm`` times every (query, sf) arm in its OWN subprocess JVM
-(the solo_retime pattern): a long in-process sweep accumulates heap/GC
+(as `tools/ab.py`'s `solo` does): a long in-process sweep accumulates heap/GC
 pressure that inflates the sf1 arm of late-position queries (SCALE_r13
 measured 7.4x in-sweep vs 2.9x fresh on the same code), so the gate was
 adjudicating instead of measuring.  Fresh-process slopes make the ≤5.0
@@ -450,7 +450,7 @@ def _build_scaled(spark, dst: str, copies: int) -> None:
 
 def _child_time(name: str, sf_dir: str, runs: int) -> None:
     """Fresh-JVM timing arm: warm the JVM and the table scans exactly
-    like tools/solo_retime.py, then best-of-``runs`` the query at
+    like tools/ab.py's solo(), then best-of-``runs`` the query at
     ``sf_dir``.  Prints ``CHILD_BEST <sec>`` for the parent."""
     import __spark_entry__ as e
     from elastic_asset_etl_poc_spark.session import get_spark
