@@ -21,6 +21,12 @@ in-memory relations.  A call for another window (an advancing ``now``),
 or after the events files changed, builds afresh and releases the three
 held frames, so a collector holds one window at a time.
 
+A build reads the tick's cached signal window
+(:func:`plans.services.signal_window`) rather than the events files, so
+both collectors and both phases of the live pipeline share one events
+scan and one ``props`` parse per window; each collector filters its own
+lookback on top of it.
+
 Deviations (documented, deliberate):
   * ``@timestamp`` is stamped with the caller's pinned ``now`` instead of
     wall-clock ``new Date()`` (X3) — determinism rule SURVEY.md §5.5.
@@ -43,10 +49,7 @@ from ..operators.filters import exists_all, exists_any, time_window
 from ..operators.graph import group_collect_edges
 from ..functions.scalar import make_ean
 from ..sources.registry import memo, union_scan
-from ..sources.signals import signals_view
-from .services import PINNED_NOW
-
-COLLECT_LOOKBACK_DAYS = 10  # fixture-scale analog of `gte: now-1h`
+from .services import COLLECT_LOOKBACK_DAYS, PINNED_NOW, signal_window
 
 
 def _with_eans(df: DataFrame) -> DataFrame:
@@ -66,12 +69,17 @@ def _with_eans(df: DataFrame) -> DataFrame:
     )
 
 
-def _held(spark: SparkSession, kind: str, sf_dir: str, build, params) -> list[DataFrame]:
+def _held(
+    spark: SparkSession, kind: str, sf_dir: str, build, params, now, lookback_days
+) -> list[DataFrame]:
     """The collector's memoized ``(top, assets, assets)`` frames.  cache()
     on a served frame is a no-op unless its cache was cleared
-    (catalog.clearCache), which it then restores; ``top`` first, so the
-    asset frames' restored caches read it."""
-    return [df.cache() for df in memo(spark, kind, sf_dir, ["events"], build, params)]
+    (catalog.clearCache), which it then restores: the signal window
+    first, then ``top``, so each restored cache reads the one before."""
+    frames = memo(spark, kind, sf_dir, ["events"], build, params)
+    if not frames[0].storageLevel.useMemory:  # cleared since it was built
+        signal_window(spark, sf_dir, now, lookback_days)
+    return [df.cache() for df in frames]
 
 
 def collect_services(
@@ -88,7 +96,7 @@ def collect_services(
     window = (now - timedelta(days=lookback_days), now)
 
     def build() -> tuple[DataFrame, DataFrame, DataFrame]:
-        sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
+        sig = signal_window(spark, sf_dir, now, lookback_days)
         sig = time_window(sig, "@timestamp", now, lookback_days, "d")
         sig = sig.filter(F.col("`service.name`").isNotNull())  # must: exists (F4)
         sig = exists_any(  # should, minimum_should_match: 1 (F5)
@@ -145,7 +153,8 @@ def collect_services(
         return top, services.cache(), containers.cache()
 
     _, services, containers = _held(
-        spark, "assets.services_top", sf_dir, build, (window, limit_groups)
+        spark, "assets.services_top", sf_dir, build, (window, limit_groups),
+        now, lookback_days,
     )
     return services, containers
 
@@ -165,7 +174,7 @@ def collect_pods(
     window = (now - timedelta(days=lookback_days), now)
 
     def build() -> tuple[DataFrame, DataFrame, DataFrame]:
-        sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
+        sig = signal_window(spark, sf_dir, now, lookback_days)
         logs = sig.filter(F.col("`metricset.name`").isin("click", "view", "error"))
         apm = sig.filter(F.col("`metricset.name`").isin("purchase", "signup"))
         both = union_scan(logs, apm)
@@ -231,5 +240,7 @@ def collect_pods(
         )
         return top, pods.cache(), nodes.cache()
 
-    _, pods, nodes = _held(spark, "assets.pods_top", sf_dir, build, window)
+    _, pods, nodes = _held(
+        spark, "assets.pods_top", sf_dir, build, window, now, lookback_days
+    )
     return pods, nodes

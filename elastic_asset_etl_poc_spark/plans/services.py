@@ -19,6 +19,15 @@ phase 2 as a semi-join build side, so the (at scale, 100 TB) signal scan
 never shuffles.  Keyset pagination (O4) has no analog — a partitioned scan
 replaces sequential page recursion.
 
+One signal scan per tick: both phases, and the asset collectors of
+``plans/assets.py``, read :func:`signal_window` — the signals of the
+``SIGNAL_SPAN_DAYS`` up to ``now``, scanned, parsed (``from_json`` of
+``props``) and ``.cache()``d once in the session memo
+(``sources.registry.memo``), keyed on the window and the events files'
+identity.  Each reader filters its own lookback on top, so its rows are
+those of a direct scan.  A tick over the held window parses no events; a
+tick with a new ``now`` fills the new window once and releases the old.
+
 Fixture parameterization: lookbacks are day-scale (the fixture spans one
 month) but the operators are the same F1 date-math windows; ``now`` is
 always explicit (determinism rule, SURVEY.md §5.5).
@@ -36,6 +45,7 @@ from ..operators.dedup import dedup_latest
 from ..operators.filters import exists_any, term, time_window
 from ..operators.joins import semi_join_in_list
 from ..operators.project import project_rename
+from ..sources.registry import memo
 from ..sources.signals import SERVICE_SUMMARY_EVENT, signals_view
 
 #: Pinned "now" for deterministic fixture runs: just past max(events.ts)
@@ -44,6 +54,31 @@ PINNED_NOW = datetime(2024, 1, 31, 0, 0, 0)
 
 PHASE1_LOOKBACK_DAYS = 15
 PHASE2_LOOKBACK_DAYS = 20
+COLLECT_LOOKBACK_DAYS = 10  # fixture-scale analog of the collectors' `gte: now-1h`
+
+#: Days of signals one cached window holds: every lookback of a tick.
+SIGNAL_SPAN_DAYS = max(PHASE1_LOOKBACK_DAYS, PHASE2_LOOKBACK_DAYS, COLLECT_LOOKBACK_DAYS)
+
+
+def signal_window(
+    spark: SparkSession, sf_dir: str, now: datetime, lookback_days: int
+) -> DataFrame:
+    """The signal documents of the ``max(lookback_days, SIGNAL_SPAN_DAYS)``
+    days up to ``now``, ``.cache()``d.
+
+    Held in the session memo per ``sf_dir``, window and events files'
+    identity, so a tick's readers share one scan and one ``props`` parse:
+    Catalyst pushes the window's time range into that fill scan.  A call
+    for another window builds afresh and releases the held one.  cache()
+    on a served frame restores its cache after ``catalog.clearCache``."""
+    days = max(lookback_days, SIGNAL_SPAN_DAYS)
+    window = (now - timedelta(days=days), now)
+
+    def build() -> DataFrame:
+        sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
+        return time_window(sig, "@timestamp", now, days, "d").cache()
+
+    return memo(spark, "signals.window", sf_dir, ["events"], build, window).cache()
 
 
 def batch_search_for_services(
@@ -54,11 +89,11 @@ def batch_search_for_services(
 ) -> DataFrame:
     """Phase 1 → distinct services ``(name, environment, last_seen)``.
 
-    Scan→filter→project→hash-agg; single shuffle (the dedup groupBy).
-    Catalyst pushes the time range + term filter into the parquet scan.
+    Window→filter→project→hash-agg; single shuffle (the dedup groupBy).
+    The time range reaches the parquet scan that fills the signal window;
+    the term filter prunes the window's cached batches.
     """
-    window = (now - timedelta(days=lookback_days), now)
-    sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
+    sig = signal_window(spark, sf_dir, now, lookback_days)
     sig = time_window(sig, "@timestamp", now, lookback_days, "d")
     sig = term(sig, "metricset.name", SERVICE_SUMMARY_EVENT)
     rows = project_rename(
@@ -78,9 +113,10 @@ def batch_search_for_service_parents(
     lookback_days: int = PHASE2_LOOKBACK_DAYS,
 ) -> DataFrame:
     """Phase 2 → one row per signal doc for a known service, with its
-    parent derived by the X2 cascade.  No dedup (Q3)."""
-    window = (now - timedelta(days=lookback_days), now)
-    sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
+    parent derived by the X2 cascade.  No dedup (Q3).  Reads the same
+    signal window as phase 1, so the broadcast build side and the probe
+    side share one scan."""
+    sig = signal_window(spark, sf_dir, now, lookback_days)
     sig = time_window(sig, "@timestamp", now, lookback_days, "d")
     sig = semi_join_in_list(sig, services, "service.name", "name")
     sig = exists_any(

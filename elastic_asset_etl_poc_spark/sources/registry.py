@@ -20,6 +20,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 import os
 import shutil
+import stat
 import tempfile
 from typing import Any
 import weakref
@@ -54,7 +55,7 @@ def _ns_epoch(dt: datetime) -> int:
 #: analyzed handle is metadata-only — the same thing registering the
 #: table in a catalog once per session does in production: NO rows are
 #: cached, every action still scans the parquet input.  Stamped with the
-#: resolved path's (mtime_ns, size) so a rewritten fixture invalidates
+#: resolved path's ``_stamp`` so a rewritten fixture invalidates
 #: (and refreshes the caches Spark holds over that path), and scoped
 #: per live SparkSession via a WeakKeyDictionary so a new session
 #: (fresh JVM, different confs) never sees another session's plans —
@@ -105,12 +106,35 @@ def _read_raw(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     return df
 
 
-def _stamp(path: str) -> tuple[int, int] | None:
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _stamp(path: str) -> tuple | None:
+    """A file's (mtime_ns, size); a directory's sorted (relative name,
+    mtime_ns, size) of every data file under it, since a part file
+    rewritten in place changes neither the directory's mtime nor its
+    size.  Names Spark's file listing skips (``.`` first, or ``_`` first
+    and no ``=``) are skipped too.  None when the path is unreadable."""
     try:
         st = os.stat(path)
     except OSError:
         return None
-    return st.st_mtime_ns, st.st_size
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_mtime_ns, st.st_size
+    files = []
+    for dirpath, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for name in names:
+            if _hidden(name):
+                continue
+            full = os.path.join(dirpath, name)
+            try:
+                fst = os.stat(full)
+            except OSError:  # removed while listing
+                continue
+            files.append((os.path.relpath(full, path), fst.st_mtime_ns, fst.st_size))
+    return tuple(sorted(files))
 
 
 def _table_path(sf_dir: str, table: str) -> tuple[str, str]:
@@ -130,12 +154,13 @@ def _table_path(sf_dir: str, table: str) -> tuple[str, str]:
 
 def table_identity(sf_dir: str, table: str) -> tuple | None:
     """The file identity ``load_table`` memoizes a table's reader on:
-    (path, format, mtime_ns, size), or None when the path is unreadable.
-    A memo of anything derived from the table keys on it too, so a
-    rewritten table is never served from an old build."""
+    (path, format, stamp) with the ``_stamp`` of the path, or None when
+    the path is unreadable.  A memo of anything derived from the table
+    keys on it too, so a rewritten table is never served from an old
+    build."""
     path, fmt = _table_path(sf_dir, table)
     stamp = _stamp(path)
-    return None if stamp is None else (path, fmt, *stamp)
+    return None if stamp is None else (path, fmt, stamp)
 
 
 @dataclass

@@ -394,6 +394,116 @@ def test_warm_asset_tick_job_counts(spark, tmp_path):
     assert n <= 4, n
 
 
+def _file_scans(plan) -> int:
+    """Parquet/ORC/... file scans an executed plan runs, AQE stages
+    opened.  A cached relation's fill plan is not a child of its
+    in-memory scan, so a read of a filled cache counts none."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _file_scans(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _file_scans(plan.plan())
+    kids = plan.children()
+    own = int(name == "FileSourceScanExec")
+    return own + sum(_file_scans(kids.apply(i)) for i in range(kids.size()))
+
+
+def test_warm_phase_pair_reads_the_cached_signal_window(spark):
+    """Both phase frames read the tick's cached signal window: their
+    executed plans run no events file scan (a direct read runs 1 in
+    phase 1 and 2 in phase 2, whose broadcast side re-runs phase 1)."""
+    for _ in range(2):  # the cold pair fills the window
+        frames = collect_services_from_summaries(spark, SF_DIR)
+        for df in frames:
+            df.collect()
+    plans = [df._jdf.queryExecution().executedPlan() for df in frames]
+    assert [_file_scans(p) for p in plans] == [0, 0]
+
+
+def test_cold_tick_scans_events_once(spark):
+    """A cold tick over a fresh memo (both phase frames and the four
+    asset frames) reads each events row once: its first job fills the
+    signal window, and every later read is of the window's cached
+    batches, which the input metrics count as one record each.  With a
+    scan per reader the tick read the events file 6 times."""
+    import pyarrow.parquet as pq
+    from perfbench.spans import Tracer
+
+    from elastic_asset_etl_poc_spark.sources.registry import clear
+
+    meta = pq.ParquetFile(os.path.join(SF_DIR, "events.parquet")).metadata
+    assert meta.num_row_groups == 1  # so no time range prunes the scan
+    clear(spark)
+    tracer = Tracer(spark)
+    with tracer.span("tick", op="tick") as span:
+        for df in collect_services_from_summaries(spark, SF_DIR):
+            df.write.format("noop").mode("overwrite").save()
+        for df in (*collect_services(spark, SF_DIR), *collect_pods(spark, SF_DIR)):
+            df.count()
+    rows = tracer.figures(span)["input_rows"]
+    assert meta.num_rows <= rows < 2 * meta.num_rows, rows
+
+
+def test_signal_window_held_once_over_advancing_ticks(spark):
+    """Ticks with an advancing ``now`` through the phase pipeline and
+    both collectors each fill a new signal window and release the
+    superseded one, so the persisted RDDs stay flat over the ticks."""
+    from elastic_asset_etl_poc_spark.plans.services import PINNED_NOW
+
+    jsc = spark.sparkContext._jsc
+
+    def tick(now):
+        for df in collect_services_from_summaries(spark, SF_DIR, now=now):
+            df.write.format("noop").mode("overwrite").save()
+        for df in (
+            *collect_services(spark, SF_DIR, now=now),
+            *collect_pods(spark, SF_DIR, now=now),
+        ):
+            df.count()
+        return jsc.getPersistentRDDs().size()
+
+    persisted = [tick(PINNED_NOW + datetime.timedelta(minutes=m)) for m in range(4)]
+    assert persisted == [persisted[0]] * 4
+
+
+def test_table_rewritten_in_place_is_read_afresh(spark, tmp_path):
+    """A directory table is stamped by its data files: a part file
+    rewritten in place, under the same name and with the directory's
+    mtime and size unchanged, reaches the collectors and the phase
+    pipeline, whose rows then equal a fresh session's over the new
+    files."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    d = tmp_path / "events.parquet"
+    d.mkdir()
+    part = d / "part-0.parquet"
+    pq.write_table(events.slice(0, events.num_rows // 2), str(part))
+    sf = str(tmp_path)
+
+    def rows(session):
+        frames = [
+            *collect_services_from_summaries(session, sf),
+            *collect_services(session, sf),
+            *collect_pods(session, sf),
+        ]
+        return [sorted(map(repr, df.collect())) for df in frames]
+
+    before = rows(spark)
+    dir_stat = os.stat(d)
+    pq.write_table(events, str(part))  # in place: all rows
+    assert os.stat(d).st_mtime_ns == dir_stat.st_mtime_ns
+    assert os.stat(d).st_size == dir_stat.st_size
+    try:
+        after = rows(spark)
+        spark.catalog.clearCache()  # the cache is shared by all sessions
+        fresh = rows(spark.newSession())
+    finally:
+        spark.catalog.clearCache()
+    assert before != fresh
+    assert after == fresh
+
+
 def test_upsert_store_read_with_declared_schema(spark, tmp_path):
     """The upsert reads its store with the declared asset schema: after
     two upserts, that read equals a read that infers the schema, rows and

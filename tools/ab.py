@@ -8,8 +8,10 @@ Usage::
 Runs ``perfbench/run.py --workload W --seed S --seconds 36 --trace 0`` in
 each checkout once per seed, one run at a time; on odd seeds the change
 runs first, on even seeds the parent.  Each run's last stdout line (the
-perfbench JSON) is echoed to stderr as it lands.  At the end it prints
-whether every run was correct and, for each end-to-end metric of
+perfbench JSON) is echoed to stderr as it lands, after the host load
+(1-minute load average at its start and end) that its summary line
+records.  At the end it prints whether every run was correct, each
+side's median start and end load, and, for each end-to-end metric of
 ``BENCHMARK.json``, the change's win count and both sides' medians and
 interquartile ranges.  A gain counts only when the change wins at least
 nine of every ten pairs and its median beats the parent's by more than
@@ -26,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -59,19 +62,27 @@ def solo(name: str, sf_dir: str) -> dict:
     return {"median": -1.0}
 
 
+#: the host load a perfbench summary line records: ``load 1.23->4.56``
+LOAD = re.compile(r" load (\d+(?:\.\d+)?)->(\d+(?:\.\d+)?)")
+
+
 def perfbench(checkout: str, workload: str, seed: int) -> dict:
-    """The last stdout line of one perfbench run in ``checkout``; a run
-    that prints no JSON counts as incorrect with no metrics."""
+    """The last stdout line of one perfbench run in ``checkout``, with
+    ``load``: the (start, end) host load of its summary line, or None.
+    A run that prints no JSON counts as incorrect with no metrics."""
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", "36", "--trace", "0"],
         cwd=checkout, capture_output=True, text=True,
     )
     try:
-        return json.loads(out.stdout.strip().splitlines()[-1])
+        run = json.loads(out.stdout.strip().splitlines()[-1])
     except (IndexError, ValueError):
         print(out.stderr[-1500:], file=sys.stderr)
-        return {"correct": False, "metrics": {}}
+        run = {"correct": False, "metrics": {}}
+    m = LOAD.search(out.stdout)
+    run["load"] = (float(m[1]), float(m[2])) if m else None
+    return run
 
 
 def seed_range(text: str) -> list[int]:
@@ -87,6 +98,11 @@ def iqr(xs: list[float]) -> float:
 def report(runs: dict, seeds: list[int], metrics: list[dict]) -> None:
     ok = all(r["correct"] for r in runs.values())
     print(f"all correct: {ok} ({len(runs)} runs, {len(seeds)} pairs)")
+    for side in ("parent", "change"):
+        loads = [runs[side, s]["load"] for s in seeds if runs[side, s]["load"]]
+        if loads:
+            start, end = (statistics.median(x) for x in zip(*loads))
+            print(f"{side} median load {start:.2f}->{end:.2f}")
     print(f"{'metric':<15}{'wins':>8}{'parent':>12}{'change':>12}"
           f"{'parent IQR':>12}{'change IQR':>12}  gain")
     for m in metrics:
@@ -122,7 +138,9 @@ def main() -> int:
         order = ("change", "parent") if s % 2 else ("parent", "change")
         for side in order:
             runs[side, s] = perfbench(dirs[side], args.workload, s)
-            print(f"{side} seed {s}: {json.dumps(runs[side, s])}", file=sys.stderr, flush=True)
+            run = runs[side, s]
+            load = "load {:.2f}->{:.2f}".format(*run["load"]) if run["load"] else "load ?"
+            print(f"{side} seed {s}: {load} {json.dumps(run)}", file=sys.stderr, flush=True)
     report(runs, args.seeds, metrics)
     return 0
 
