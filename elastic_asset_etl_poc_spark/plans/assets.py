@@ -75,7 +75,8 @@ def _held(
     """The collector's memoized ``(top, assets, assets)`` frames.  cache()
     on a served frame is a no-op unless its cache was cleared
     (catalog.clearCache), which it then restores: the signal window
-    first, then ``top``, so each restored cache reads the one before."""
+    first, then ``top``, so each restored cache reads the one before and
+    a served call holds the same cached frames as a built one."""
     frames = memo(spark, kind, sf_dir, ["events"], build, params)
     if not frames[0].storageLevel.useMemory:  # cleared since it was built
         signal_window(spark, sf_dir, now, lookback_days)

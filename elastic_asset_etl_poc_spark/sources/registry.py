@@ -106,35 +106,39 @@ def _read_raw(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     return df
 
 
-def _hidden(name: str) -> bool:
-    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+def _data_files(path: str, rel: str = "") -> list[tuple[str, int, int]]:
+    """(relative name, mtime_ns, size) of every data file under ``path``.
+    Names Spark's file listing skips (``.`` first, or ``_`` first and no
+    ``=``) are skipped too.  One ``scandir`` per directory and one stat
+    per file."""
+    files = []
+    with os.scandir(path) as entries:
+        for entry in entries:
+            name = entry.name
+            if name.startswith(".") or (name.startswith("_") and "=" not in name):
+                continue
+            try:
+                if entry.is_dir():
+                    files += _data_files(entry.path, f"{rel}{name}/")
+                else:
+                    st = entry.stat()
+                    files.append((rel + name, st.st_mtime_ns, st.st_size))
+            except OSError:  # removed while listing
+                continue
+    return files
 
 
 def _stamp(path: str) -> tuple | None:
-    """A file's (mtime_ns, size); a directory's sorted (relative name,
-    mtime_ns, size) of every data file under it, since a part file
-    rewritten in place changes neither the directory's mtime nor its
-    size.  Names Spark's file listing skips (``.`` first, or ``_`` first
-    and no ``=``) are skipped too.  None when the path is unreadable."""
+    """A file's (mtime_ns, size); a directory's sorted :func:`_data_files`,
+    since a part file rewritten in place changes neither the directory's
+    mtime nor its size.  None when the path is unreadable."""
     try:
         st = os.stat(path)
+        if stat.S_ISDIR(st.st_mode):
+            return tuple(sorted(_data_files(path)))
     except OSError:
         return None
-    if not stat.S_ISDIR(st.st_mode):
-        return st.st_mtime_ns, st.st_size
-    files = []
-    for dirpath, dirs, names in os.walk(path):
-        dirs[:] = [d for d in dirs if not _hidden(d)]
-        for name in names:
-            if _hidden(name):
-                continue
-            full = os.path.join(dirpath, name)
-            try:
-                fst = os.stat(full)
-            except OSError:  # removed while listing
-                continue
-            files.append((os.path.relpath(full, path), fst.st_mtime_ns, fst.st_size))
-    return tuple(sorted(files))
+    return st.st_mtime_ns, st.st_size
 
 
 def _table_path(sf_dir: str, table: str) -> tuple[str, str]:
