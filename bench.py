@@ -218,7 +218,7 @@ def main() -> None:
     for n, t in medians.items():
         p = prev.get(n, -1.0)
         if p > 0 and t >= 1.0 and (t / p > 2.0 or p / t > 2.0):
-            drift[n] = {"prev": p, "suite": t, "solo": solo(n, sf_dir)["median"]}
+            drift[n] = {"prev": p, "suite": t, "solo": solo(HERE, n, sf_dir)["median"]}
             print(f"bench drift triage {n}: {drift[n]}", file=sys.stderr)
 
     total = round(sum(t for t in medians.values() if t >= 0), 2)

@@ -18,14 +18,16 @@ all ``.cache()``d, per session, ``sf_dir`` and window.  A call for the
 held window over unchanged events files is served — it builds no plan
 and runs no Spark job, and the asset frames it returns read as
 in-memory relations.  A call for another window (an advancing ``now``),
-or after the events files changed, builds afresh and releases the three
-held frames, so a collector holds one window at a time.
+after the events files changed, or after ``catalog.clearCache`` dropped
+the held caches, builds afresh and releases the three held frames, so a
+collector holds one window at a time.
 
 A build reads the tick's cached signal window
 (:func:`plans.services.signal_window`) rather than the events files, so
 both collectors and both phases of the live pipeline share one events
-scan and one ``props`` parse per window; each collector filters its own
-lookback on top of it.
+scan and one ``props`` parse per window (a build after a cache clear
+rebuilds the window first); each collector filters its own lookback on
+top of it.
 
 Deviations (documented, deliberate):
   * ``@timestamp`` is stamped with the caller's pinned ``now`` instead of
@@ -69,36 +71,21 @@ def _with_eans(df: DataFrame) -> DataFrame:
     )
 
 
-def _held(
-    spark: SparkSession, kind: str, sf_dir: str, build, params, now, lookback_days
-) -> list[DataFrame]:
-    """The collector's memoized ``(top, assets, assets)`` frames.  cache()
-    on a served frame is a no-op unless its cache was cleared
-    (catalog.clearCache), which it then restores: the signal window
-    first, then ``top``, so each restored cache reads the one before and
-    a served call holds the same cached frames as a built one."""
-    frames = memo(spark, kind, sf_dir, ["events"], build, params)
-    if not frames[0].storageLevel.useMemory:  # cleared since it was built
-        signal_window(spark, sf_dir, now, lookback_days)
-    return [df.cache() for df in frames]
-
-
 def collect_services(
     spark: SparkSession,
     sf_dir: str,
     now: datetime = PINNED_NOW,
-    lookback_days: int = COLLECT_LOOKBACK_DAYS,
     limit_groups: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Service + container assets (lib/collectServices.ts).
 
     Returns ``(services, containers)`` in SimpleAsset column layout.
     """
-    window = (now - timedelta(days=lookback_days), now)
+    window = (now - timedelta(days=COLLECT_LOOKBACK_DAYS), now)
 
     def build() -> tuple[DataFrame, DataFrame, DataFrame]:
-        sig = signal_window(spark, sf_dir, now, lookback_days)
-        sig = time_window(sig, "@timestamp", now, lookback_days, "d")
+        sig = signal_window(spark, sf_dir, now)
+        sig = time_window(sig, "@timestamp", now, COLLECT_LOOKBACK_DAYS, "d")
         sig = sig.filter(F.col("`service.name`").isNotNull())  # must: exists (F4)
         sig = exists_any(  # should, minimum_should_match: 1 (F5)
             sig, "container.id", "kubernetes.pod.uid", "host.name", "host.hostname"
@@ -153,9 +140,8 @@ def collect_services(
         )
         return top, services.cache(), containers.cache()
 
-    _, services, containers = _held(
-        spark, "assets.services_top", sf_dir, build, (window, limit_groups),
-        now, lookback_days,
+    _, services, containers = memo(
+        spark, "assets.services_top", sf_dir, ["events"], build, (window, limit_groups)
     )
     return services, containers
 
@@ -164,7 +150,6 @@ def collect_pods(
     spark: SparkSession,
     sf_dir: str,
     now: datetime = PINNED_NOW,
-    lookback_days: int = COLLECT_LOOKBACK_DAYS,
 ) -> tuple[DataFrame, DataFrame]:
     """Pod + node assets (lib/collectPods.ts).
 
@@ -172,15 +157,15 @@ def collect_pods(
     lib/collectPods.ts:13) — modeled as two logical signal streams split by
     signal kind, unioned by name.
     """
-    window = (now - timedelta(days=lookback_days), now)
+    window = (now - timedelta(days=COLLECT_LOOKBACK_DAYS), now)
 
     def build() -> tuple[DataFrame, DataFrame, DataFrame]:
-        sig = signal_window(spark, sf_dir, now, lookback_days)
+        sig = signal_window(spark, sf_dir, now)
         logs = sig.filter(F.col("`metricset.name`").isin("click", "view", "error"))
         apm = sig.filter(F.col("`metricset.name`").isin("purchase", "signup"))
         both = union_scan(logs, apm)
 
-        both = time_window(both, "@timestamp", now, lookback_days, "d")
+        both = time_window(both, "@timestamp", now, COLLECT_LOOKBACK_DAYS, "d")
         # F4 (must ×2)
         both = exists_all(both, "kubernetes.pod.uid", "kubernetes.node.name")
         top = collapse_top1(
@@ -241,7 +226,5 @@ def collect_pods(
         )
         return top, pods.cache(), nodes.cache()
 
-    _, pods, nodes = _held(
-        spark, "assets.pods_top", sf_dir, build, window, now, lookback_days
-    )
+    _, pods, nodes = memo(spark, "assets.pods_top", sf_dir, ["events"], build, window)
     return pods, nodes

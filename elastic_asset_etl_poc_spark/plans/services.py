@@ -28,9 +28,9 @@ identity.  Each reader filters its own lookback on top, so its rows are
 those of a direct scan.  A tick over the held window parses no events; a
 tick with a new ``now`` fills the new window once and releases the old.
 
-Fixture parameterization: lookbacks are day-scale (the fixture spans one
-month) but the operators are the same F1 date-math windows; ``now`` is
-always explicit (determinism rule, SURVEY.md §5.5).
+Fixture parameterization: the lookbacks are fixed, like the reference's
+``now-10m``/``now-15m``/``now-1h``, but day-scale (the fixture spans one
+month); ``now`` is always explicit (determinism rule, SURVEY.md §5.5).
 """
 
 from __future__ import annotations
@@ -60,32 +60,28 @@ COLLECT_LOOKBACK_DAYS = 10  # fixture-scale analog of the collectors' `gte: now-
 SIGNAL_SPAN_DAYS = max(PHASE1_LOOKBACK_DAYS, PHASE2_LOOKBACK_DAYS, COLLECT_LOOKBACK_DAYS)
 
 
-def signal_window(
-    spark: SparkSession, sf_dir: str, now: datetime, lookback_days: int
-) -> DataFrame:
-    """The signal documents of the ``max(lookback_days, SIGNAL_SPAN_DAYS)``
-    days up to ``now``, ``.cache()``d.
+def signal_window(spark: SparkSession, sf_dir: str, now: datetime) -> DataFrame:
+    """The signal documents of the ``SIGNAL_SPAN_DAYS`` up to ``now``,
+    ``.cache()``d.
 
     Held in the session memo per ``sf_dir``, window and events files'
     identity, so a tick's readers share one scan and one ``props`` parse:
     Catalyst pushes the window's time range into that fill scan.  A call
-    for another window builds afresh and releases the held one.  cache()
-    on a served frame restores its cache after ``catalog.clearCache``."""
-    days = max(lookback_days, SIGNAL_SPAN_DAYS)
-    window = (now - timedelta(days=days), now)
+    for another window builds afresh and releases the held one; so does
+    a call after ``catalog.clearCache`` dropped the window's cache."""
+    window = (now - timedelta(days=SIGNAL_SPAN_DAYS), now)
 
     def build() -> DataFrame:
         sig = signals_view(spark, sf_dir, ts_range=window)  # scan-level pruning
-        return time_window(sig, "@timestamp", now, days, "d").cache()
+        return time_window(sig, "@timestamp", now, SIGNAL_SPAN_DAYS, "d").cache()
 
-    return memo(spark, "signals.window", sf_dir, ["events"], build, window).cache()
+    return memo(spark, "signals.window", sf_dir, ["events"], build, window)
 
 
 def batch_search_for_services(
     spark: SparkSession,
     sf_dir: str,
     now: datetime = PINNED_NOW,
-    lookback_days: int = PHASE1_LOOKBACK_DAYS,
 ) -> DataFrame:
     """Phase 1 → distinct services ``(name, environment, last_seen)``.
 
@@ -93,8 +89,8 @@ def batch_search_for_services(
     The time range reaches the parquet scan that fills the signal window;
     the term filter prunes the window's cached batches.
     """
-    sig = signal_window(spark, sf_dir, now, lookback_days)
-    sig = time_window(sig, "@timestamp", now, lookback_days, "d")
+    sig = signal_window(spark, sf_dir, now)
+    sig = time_window(sig, "@timestamp", now, PHASE1_LOOKBACK_DAYS, "d")
     sig = term(sig, "metricset.name", SERVICE_SUMMARY_EVENT)
     rows = project_rename(
         sig,
@@ -110,14 +106,13 @@ def batch_search_for_service_parents(
     sf_dir: str,
     services: DataFrame,
     now: datetime = PINNED_NOW,
-    lookback_days: int = PHASE2_LOOKBACK_DAYS,
 ) -> DataFrame:
     """Phase 2 → one row per signal doc for a known service, with its
     parent derived by the X2 cascade.  No dedup (Q3).  Reads the same
     signal window as phase 1, so the broadcast build side and the probe
     side share one scan."""
-    sig = signal_window(spark, sf_dir, now, lookback_days)
-    sig = time_window(sig, "@timestamp", now, lookback_days, "d")
+    sig = signal_window(spark, sf_dir, now)
+    sig = time_window(sig, "@timestamp", now, PHASE2_LOOKBACK_DAYS, "d")
     sig = semi_join_in_list(sig, services, "service.name", "name")
     sig = exists_any(
         sig, "container.id", "kubernetes.pod.uid", "host.name", "host.hostname"

@@ -85,9 +85,9 @@ def _read_raw(spark: SparkSession, path: str, fmt: str) -> DataFrame:
         if held[0] == stamp:
             return held[1]
         # the files changed under this session: a cached frame over the
-        # path (the asset plans cache their collapsed top frames) still
-        # matches a fresh read's plan by the file index's root paths and
-        # would serve the old rows, so refresh the path's caches first
+        # path (the signal window, the collectors' frames) still matches
+        # a fresh read's plan by the file index's root paths and would
+        # serve the old rows, so refresh the path's caches first
         spark.catalog.refreshByPath(path)
     if fmt == "parquet":
         df = spark.read.parquet(path)
@@ -179,8 +179,8 @@ class _Memo:
 
 
 #: per-session build-once artifacts of the query suite (checkpointed
-#: frames, trained centroids and codebooks, model rows, staged stores)
-#: and the asset collectors' cached top frames.
+#: frames, trained centroids and codebooks, model rows, staged stores),
+#: the tick's cached signal window and the asset collectors' cached frames.
 #: Weakly keyed on the live SparkSession like ``_RAW_FRAMES``: a local
 #: checkpoint lives in its session's block manager, so a session stopped
 #: and created again builds afresh and never reads a dead session's
@@ -210,13 +210,19 @@ def memo(
     releases the held value, so at most one value per ``kind`` and
     ``sf_dir`` is held.  A DataFrame the build returns, bare or in a
     tuple, must be a local checkpoint or ``.cache()``d: releasing frees
-    its blocks.  A directory it holds must come from :func:`memo_dir`."""
+    its blocks.  A directory it holds must come from :func:`memo_dir`.
+
+    A ``.cache()``d frame whose cache is gone (``catalog.clearCache``,
+    an unpersist) makes its entry stale, like a rewritten table: the
+    call releases it and builds again, so a served value's cached
+    frames are still cached and ``memo_counts`` counts a recomputation
+    as a build.  Local checkpoints and memo dirs are not checked."""
     state = _MEMOS.setdefault(spark, _Memo())
     key = (kind, sf_dir)
     stamp = (tuple(table_identity(sf_dir, t) for t in tables), params)
     held = state.entries.get(key)
     if held is not None:
-        if held[0] == stamp:
+        if held[0] == stamp and not _dropped(held[1]):
             state.served += 1
             return held[1]
         del state.entries[key]
@@ -241,6 +247,16 @@ def memo_counts(spark: SparkSession) -> tuple[int, int]:
     counters only: no Spark job."""
     state = _MEMOS.get(spark)
     return (0, 0) if state is None else (state.built, state.served)
+
+
+def _dropped(value: Any) -> bool:
+    """Whether a ``.cache()``d frame of a memo value lost its cache."""
+    return any(
+        isinstance(part, DataFrame)
+        and part.is_cached
+        and not part._jdf.storageLevel().useMemory()
+        for part in (value if isinstance(value, tuple) else (value,))
+    )
 
 
 def _release(state: _Memo, value: Any) -> None:

@@ -143,3 +143,68 @@ def test_package_def_names_are_unique():
     assert not shared, "package defs sharing a name: " + ", ".join(
         f"{n} ({', '.join(w)})" for n, w in sorted(shared.items())
     )
+
+
+#: defaulted parameters of the tick's plans that no caller outside tests/
+#: passes, kept each with its reason
+UNSET_OPTIONS = {
+    "limit_groups": (
+        "COVERAGE O3: the reference's 1000-group collapse truncation (Q5), "
+        "an opt-in the default leaves off"
+    ),
+}
+
+
+def _defaulted_params(fn: ast.FunctionDef) -> dict[str, int | None]:
+    """A def's defaulted parameters: name → positional index, or None for
+    keyword-only ones."""
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    out: dict[str, int | None] = {
+        a.arg: i
+        for i, a in enumerate(positional)
+        if i >= len(positional) - len(args.defaults)
+    }
+    out.update(
+        {a.arg: None for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None}
+    )
+    return out
+
+
+def test_plan_options_are_passed_outside_tests():
+    """Every defaulted parameter of a top-level def in ``plans/`` is passed,
+    by keyword or by position, from some call outside ``tests/``: an
+    option no caller sets is a code path nothing runs."""
+    options: dict[str, dict[str, int | None]] = {}
+    for path in sorted((PKG / "plans").glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                options[node.name] = _defaulted_params(node)
+    passed: set[tuple[str, str]] = set()
+    for path in _caller_files():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name not in options:
+                continue
+            starred = any(isinstance(a, ast.Starred) for a in node.args)
+            keywords = {k.arg for k in node.keywords}
+            for param, index in options[name].items():
+                if (
+                    param in keywords
+                    or None in keywords  # **kwargs
+                    or (index is not None and (starred or index < len(node.args)))
+                ):
+                    passed.add((name, param))
+    unset = sorted(
+        f"{fn}({param})"
+        for fn, params in options.items()
+        for param in params
+        if (fn, param) not in passed and param not in UNSET_OPTIONS
+    )
+    assert not unset, "plan options no caller outside tests/ sets: " + ", ".join(unset)
+    kept = {p for fn, params in options.items() for p in params if (fn, p) not in passed}
+    assert set(UNSET_OPTIONS) <= kept, set(UNSET_OPTIONS) - kept  # exact allowlist
+    assert all(reason.strip() for reason in UNSET_OPTIONS.values())

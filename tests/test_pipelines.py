@@ -335,7 +335,9 @@ def test_asset_collector_frames_are_sized_by_aqe(spark):
 def test_asset_collectors_hold_one_frame_per_window(spark):
     """Ticks with an advancing ``now`` each cache a new top frame per
     collector; the superseded one is released, so the persisted RDDs
-    stay flat over the ticks.  A call for the held window serves it."""
+    stay flat over the ticks.  A call for the held window serves it.
+    The ticks start after a cache clear while the memo holds the first
+    window, so the count does not depend on what earlier tests left."""
     from elastic_asset_etl_poc_spark.plans.services import PINNED_NOW
     from elastic_asset_etl_poc_spark.sources.registry import memo_counts
 
@@ -348,6 +350,8 @@ def test_asset_collectors_hold_one_frame_per_window(spark):
         return jsc.getPersistentRDDs().size()
 
     nows = [PINNED_NOW + datetime.timedelta(minutes=m) for m in range(4)]
+    tick(nows[0])
+    spark.catalog.clearCache()
     persisted = [tick(now) for now in nows]
     assert persisted == [persisted[0]] * 4
     built, served = memo_counts(spark)
@@ -596,6 +600,42 @@ def test_memo_clear_releases_checkpoints_and_dirs(spark):
     built, served = memo_counts(spark)
     qs["jaccard_neardup_docs"](spark, SF_DIR)
     assert memo_counts(spark) == (built + 1, served)
+
+
+def test_memo_rebuilds_a_frame_whose_cache_was_dropped(spark):
+    """A memo entry whose ``.cache()``d frame lost its cache to
+    ``catalog.clearCache`` is stale: the next call builds again and
+    returns a cached frame, rather than serve a frame every action would
+    recompute."""
+    from elastic_asset_etl_poc_spark.sources.registry import memo, memo_counts
+
+    def build():
+        return spark.range(10).selectExpr("id * 7 AS v").cache()
+
+    memo(spark, "test.dropped_cache", SF_DIR, [], build).count()
+    assert memo(spark, "test.dropped_cache", SF_DIR, [], build).storageLevel.useMemory
+    spark.catalog.clearCache()
+    built, served = memo_counts(spark)
+    df = memo(spark, "test.dropped_cache", SF_DIR, [], build)
+    assert memo_counts(spark) == (built + 1, served)
+    assert df.storageLevel.useMemory
+
+
+def test_collectors_rebuild_after_cache_clear(spark):
+    """After ``catalog.clearCache`` the collectors' held frames are
+    rebuilt, not served uncached: the next ``collect_services`` +
+    ``collect_pods`` call builds at least both collectors' entries and
+    returns cached frames."""
+    from elastic_asset_etl_poc_spark.sources.registry import memo_counts
+
+    for _ in range(2):
+        for df in (*collect_services(spark, SF_DIR), *collect_pods(spark, SF_DIR)):
+            df.count()
+    spark.catalog.clearCache()
+    built, _ = memo_counts(spark)
+    frames = [*collect_services(spark, SF_DIR), *collect_pods(spark, SF_DIR)]
+    assert memo_counts(spark)[0] >= built + 2
+    assert all(df.storageLevel.useMemory for df in frames)
 
 
 def test_missing_table_path_leaves_no_reader_state(spark, tmp_path):
