@@ -165,9 +165,8 @@ def _defaulted_params(fn: ast.FunctionDef) -> dict[str, int | None]:
         for i, a in enumerate(positional)
         if i >= len(positional) - len(args.defaults)
     }
-    out.update(
-        {a.arg: None for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None}
-    )
+    kwonly = zip(args.kwonlyargs, args.kw_defaults)
+    out.update({a.arg: None for a, d in kwonly if d is not None})
     return out
 
 
@@ -205,6 +204,6 @@ def test_plan_options_are_passed_outside_tests():
         if (fn, param) not in passed and param not in UNSET_OPTIONS
     )
     assert not unset, "plan options no caller outside tests/ sets: " + ", ".join(unset)
-    kept = {p for fn, params in options.items() for p in params if (fn, p) not in passed}
+    kept = {p for fn, ps in options.items() for p in ps if (fn, p) not in passed}
     assert set(UNSET_OPTIONS) <= kept, set(UNSET_OPTIONS) - kept  # exact allowlist
     assert all(reason.strip() for reason in UNSET_OPTIONS.values())

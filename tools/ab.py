@@ -6,17 +6,18 @@ Usage::
     python3 tools/ab.py PARENT_DIR CHANGE_DIR --workload asset_etl --seeds 801-810
     python3 tools/ab.py PARENT_DIR CHANGE_DIR --queries q1,q2 --sf SF_DIR
 
-With ``--workload``, runs ``perfbench/run.py --workload W --seed S --seconds 36 --trace 0`` in
-each checkout once per seed, one run at a time; on odd seeds the change
-runs first, on even seeds the parent.  Each run's last stdout line (the
-perfbench JSON) is echoed to stderr as it lands, after the host load
-(1-minute load average at its start and end) that its summary line
-records.  At the end it prints whether every run was correct, each
-side's median start and end load, and, for each end-to-end metric of
-``BENCHMARK.json``, the change's win count and both sides' medians and
-interquartile ranges.  A gain counts only when the change wins at least
-nine of every ten pairs and its median beats the parent's by more than
-the parent's IQR; the last column says whether it does.
+With ``--workload``, runs ``perfbench/run.py --workload W --seed S
+--seconds 36 --trace 0`` in each checkout once per seed, one run at a
+time; on odd seeds the change runs first, on even seeds the parent. Each
+run's last stdout line (the perfbench JSON) is echoed to stderr as it
+lands, after the host load (1-minute load average at its start and end)
+that its summary line records. At the end it prints whether every run
+was correct, each side's median start and end load, and, for each
+end-to-end metric of ``BENCHMARK.json``, the change's win count and both
+sides' medians and interquartile ranges. A gain counts only when the
+change wins at least nine of every ten pairs and its median beats the
+parent's by more than the parent's IQR; the last column says whether it
+does.
 
 At least 10 seeds are required.  Use seeds not used while writing the
 change, and keep the host otherwise idle.
